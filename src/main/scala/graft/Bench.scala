@@ -80,19 +80,6 @@ object Bench {
       // VariantType comparison (Spark 4 native dynamic type vs the
       // JSON-string tier — SURVEY §7.4 "benchmark both")
       "col_variant_object_state" -> expr("variant_get(parse_json(props), '$.k', 'string')"),
-      // variant-NATIVE dynamic tier (VariantKernel): parse once, chain
-      // ops on the binary encoding, render once — vs the string tier
-      // re-parsing at every operator (col_ / mito_ equivalents above)
-      "var_encode_json_state" ->
-        graft.functions.v_render(graft.functions.v_parse(col("props"))),
-      "var_nested_collate_map_state" ->
-        graft.functions.v_collate(graft.functions.v_parse(col("props")), lit("k")),
-      "var_chain_state" -> {
-        import graft.functions._
-        val v = v_parse(col("props"))
-        v_render(v_with(v_drop(v_with(v, v_parse(lit("""{"seen": true, "tmp": 1}"""))),
-          Seq("tmp")), v_parse(lit("""{"done": true}"""))))
-      },
       "col_chain_state" -> {
         import graft.functions._
         json_with(json_drop(json_with(col("props"),

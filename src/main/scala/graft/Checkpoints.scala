@@ -90,27 +90,6 @@ object Checkpoints {
     def cp: DataFrame = Checkpoints.cp(df)
   }
 
-  private val activePersists =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[DataFrame, java.lang.Boolean]())
-
-  /** Tracked EAGER persist — the materialize-once tool for a static
-    * table an iterative loop joins on every round. Unlike a
-    * checkpoint, the cache keeps the child plan's output partitioning
-    * (a checkpoint's LogicalRDD reports UnknownPartitioning, so every
-    * round's join re-shuffled the full edge table — q218's plan paid
-    * one edge exchange per pagerank round); a table persisted already
-    * hash-partitioned by its join key never moves again, the 100 TB
-    * bucketed-table pattern in-process. Lineage is kept, so use it on
-    * SHALLOW plans (e.g. over an already-checkpointed base); released
-    * by [[releaseAll]] like any checkpoint. */
-  def persist(df: DataFrame): DataFrame = {
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df.count() // materialize now: every round must read the cache
-    activePersists.add(df)
-    df
-  }
-
   private def rddsOf(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
 
@@ -121,7 +100,6 @@ object Checkpoints {
     * with NO other checkpoint in its plan — releasing a df whose plan
     * embeds a still-needed shared checkpoint would kill that too. */
   def release(df: DataFrame): Unit = {
-    if (activePersists.remove(df)) df.unpersist(blocking = false)
     rddsOf(df).foreach { r =>
       if (active.remove(r)) r.unpersist(blocking = false)
     }
@@ -135,10 +113,6 @@ object Checkpoints {
     val it = active.iterator()
     while (it.hasNext) {
       val r = it.next(); it.remove(); r.unpersist(blocking = false)
-    }
-    val ip = activePersists.iterator()
-    while (ip.hasNext) {
-      val d = ip.next(); ip.remove(); d.unpersist(blocking = false)
     }
   }
 }

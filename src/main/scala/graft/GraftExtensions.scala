@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.graft.Shim
 import org.apache.spark.sql.types._
 
 /** SQL registration of the engine's function surface, so every operator
@@ -31,7 +32,6 @@ object GraftFunctions {
   private val M = Class.forName("graft.expressions.MimeKernel")
   private val H = Class.forName("graft.expressions.HttpKernel")
   private val X = Class.forName("graft.expressions.XmlKernel")
-  private val V = Class.forName("graft.expressions.VariantKernel")
 
   private val Str  = StringType
   private val Bin  = BinaryType
@@ -40,6 +40,9 @@ object GraftFunctions {
   private def si(cls: Class[_], dt: DataType, method: String,
       inTypes: Seq[DataType])(exprs: Seq[Expression]): Expression =
     StaticInvoke(cls, dt, method, exprs.toIndexedSeq, inTypes)
+
+  private def cols(f: Seq[Column] => Column): Seq[Expression] => Expression =
+    exprs => Shim.resolvedExpression(f(exprs.map(Shim.column)))
 
   /** name -> expression builder, shared by both registration paths. */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -109,18 +112,19 @@ object GraftFunctions {
     // crypto additions
     "base64_std"        -> si(C, Str, "base64Std", Seq(Bin)) _,
     "base64_decode"     -> si(C, Bin, "base64Decode", Seq(Str)) _,
-    // variant-native dynamic tier (v_parse = builtin parse_json)
-    "v_render"          -> si(V, Str, "render", Seq(VariantType)) _,
-    "v_get"             -> si(V, VariantType, "getPath", Seq(VariantType, Str)) _,
-    "v_has"             -> si(V, BooleanType, "hasPath", Seq(VariantType, Str)) _,
-    "v_collate"         -> si(V, Str, "collate", Seq(VariantType, Str)) _,
-    "v_with"            -> si(V, VariantType, "withAll", Seq(VariantType, VariantType)) _,
-    "v_with_update"     -> si(V, VariantType, "withUpdate", Seq(VariantType, VariantType)) _,
-    "v_with_replace"    -> si(V, VariantType, "withReplace", Seq(VariantType, VariantType)) _,
-    "v_keys"            -> si(V, Str, "keysOf", Seq(VariantType)) _,
-    "v_values"          -> si(V, Str, "valuesOf", Seq(VariantType)) _,
-    "v_size"            -> si(V, LongType, "sizeOf", Seq(VariantType)) _,
-    "v_drop"            -> si(V, VariantType, "dropPaths", Seq(VariantType, ArrS)) _,
+    // variant entry points (v_parse = builtin parse_json), built from
+    // the graft.functions Column forms so both surfaces stay in step
+    "v_render"          -> cols(c => functions.v_render(c(0))),
+    "v_get"             -> cols(c => functions.v_get(c(0), c(1))),
+    "v_has"             -> cols(c => functions.v_has(c(0), c(1))),
+    "v_collate"         -> cols(c => functions.v_collate(c(0), c(1))),
+    "v_with"            -> cols(c => functions.v_with(c(0), c(1))),
+    "v_with_update"     -> cols(c => functions.v_with_update(c(0), c(1))),
+    "v_with_replace"    -> cols(c => functions.v_with_replace(c(0), c(1))),
+    "v_keys"            -> cols(c => functions.v_keys(c(0))),
+    "v_values"          -> cols(c => functions.v_values(c(0))),
+    "v_size"            -> cols(c => functions.v_size(c(0))),
+    "v_drop"            -> cols(c => functions.v_drop(c(0), c(1))),
     "decode_xml"        -> si(X, Str, "decodeXml", Seq(Str)) _,
     "decode_xml_hinted" -> si(X, Str, "decodeXmlHinted", Seq(Str, Str)) _,
     // url/query
@@ -135,8 +139,8 @@ object GraftFunctions {
 
   private def celBuilder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(org.apache.spark.sql.catalyst.expressions.Literal(p: org.apache.spark.unsafe.types.UTF8String, StringType), state) =>
-      org.apache.spark.sql.graft.Shim.resolvedExpression(
-        graft.cel.Cel.auto(p.toString, org.apache.spark.sql.graft.Shim.column(state)))
+      Shim.resolvedExpression(
+        graft.cel.Cel.auto(p.toString, Shim.column(state)))
     case _ => throw new IllegalArgumentException(
       "cel(program, state): program must be a STRING literal")
   }
@@ -144,6 +148,6 @@ object GraftFunctions {
   /** Register everything on a live session. */
   def register(spark: SparkSession): Unit =
     builders.foreach { case (name, b) =>
-      org.apache.spark.sql.graft.Shim.registerFunction(spark, name, b)
+      Shim.registerFunction(spark, name, b)
     }
 }

@@ -44,8 +44,9 @@ object Eval {
     * the typed key at the surfaces where the type is observable: keys()/
     * values() ordering and element type, comprehension iteration, and
     * CEL equality (`{1:"a"} != {"1":"a"}`). Values that cross a JSON
-    * boundary (encode_json, the with-family ops) degrade to string keys,
-    * as the JSON value universe requires. Not a case class: the arity-1
+    * boundary (encode_json, a rendered result) degrade to string keys,
+    * as the JSON value universe requires; the collections ops work on V
+    * and keep the tag ([[Collections]]). Not a case class: the arity-1
     * unapply keeps the tag out of the 60+ existing match sites. */
   final class VMap(val v: VectorMap[String, V], val intKeys: Set[String]) extends V {
     protected def writeReplace(): Object = new VMapProxy(v.toVector, intKeys)
@@ -213,12 +214,13 @@ object Eval {
     }
   }
 
-  /** State/globals leaf parse — IDENTICAL in both tiers (VOps
-    * .fromJsonText delegates here): parse failures are VErr, and a
-    * top-level error OBJECT promotes to VErr so rendered error values
-    * stay in-band across a render->parse round trip (the same
-    * convention as Functions.jv at the JSON boundary). */
-  private[cel] def stateLeafV(s: String): V = parseV(s) match {
+  /** Document leaf parse — IDENTICAL in both CEL tiers (VOps
+    * .fromJsonText delegates here) and the json_* and v_* kernels
+    * (JsonKernel): parse failures are VErr, and a top-level error OBJECT
+    * promotes to VErr so rendered error values stay in-band across a
+    * render->parse round trip (the same convention as Functions.jv at
+    * the JSON boundary). */
+  def stateLeafV(s: String): V = parseV(s) match {
     case m: VMap if m.v.size == 1 =>
       m.v.get(JsonAlgebra.ErrorKey) match {
         case Some(VString(msg)) => VErr(msg)

@@ -10,8 +10,10 @@ import scala.jdk.CollectionConverters._
 
 /** Function/method bindings for the CEL front-end: CEL core conversions
   * plus the reference's extension libraries, routed through the SAME
-  * kernels as the Column API (StringKernel/TimeKernel/CryptoKernel/
-  * JsonAlgebra) so both tiers share one semantics implementation.
+  * kernels as the Column API (StringKernel/TimeKernel/CryptoKernel, and
+  * [[Collections]] for the collections library, which the json_* and v_*
+  * Column functions also call) so every tier shares one semantics
+  * implementation.
   */
 private[cel] object Functions {
   import Eval._
@@ -27,7 +29,6 @@ private[cel] object Functions {
     case other => Left(VErr(s"no such overload: bytes from $other"))
   }
 
-  private def vj(v: V) = Eval.toJson(v)
   private def jv(n: com.fasterxml.jackson.databind.JsonNode): V = {
     val out = Eval.fromJson(n)
     if (JsonAlgebra.isError(n)) VErr(n.get(JsonAlgebra.ErrorKey).asText()) else out
@@ -246,11 +247,11 @@ private[cel] object Functions {
       case Vector(VString(s), VString(re)) => matchesRe(s, re)
       case _ => VErr("no such overload: matches")
     }
-    case "max" => extremum(vs.head, 1)
-    case "min" => extremum(vs.head, -1)
-    case "zip" => method2("zip", vs(0), Vector(vs(1)))
-    case "keys" => method2("keys", vs.head, Vector.empty)
-    case "values" => method2("values", vs.head, Vector.empty)
+    case "max" => Collections.max(vs.head)
+    case "min" => Collections.min(vs.head)
+    case "zip" => Collections.zip(vs(0), vs(1))
+    case "keys" => Collections.keys(vs.head)
+    case "values" => Collections.values(vs.head)
     // r16: the direct streaming serializer (render-identical to
     // JsonAlgebra.render(toJson(v)) — goldens + oracle pin it; see
     // Eval.renderV) replaces the build-tree-then-render path: one
@@ -337,46 +338,19 @@ private[cel] object Functions {
       case VMap(m) => VInt(m.size.toLong)
       case other => VErr(s"no such overload: size($other)")
     }
-    // ---- collections (via the JsonAlgebra kernel) ----
-    case "collate" =>
-      val paths = args.head match {
-        case VString(p) => Seq(p)
-        case VList(ps) => ps.map { case VString(p) => p; case o => return VErr(s"bad path $o") }
-        case o => return VErr(s"invalid parameter type for collate: $o")
-      }
-      jv(JsonAlgebra.collate(vj(t), paths))
-    case "drop" =>
-      val paths = args.head match {
-        case VString(p) => Seq(p)
-        case VList(ps) => ps.map { case VString(p) => p; case o => return VErr(s"bad path $o") }
-        case o => return VErr(s"invalid parameter type for drop: $o")
-      }
-      jv(JsonAlgebra.dropFields(vj(t), paths))
-    case "drop_empty" => jv(JsonAlgebra.dropEmpty(vj(t)))
-    case "flatten" => jv(JsonAlgebra.flattenDeep(vj(t)))
-    case "with" => jv(JsonAlgebra.withAll(vj(t), vj(args.head)))
-    case "with_update" => jv(JsonAlgebra.withUpdate(vj(t), vj(args.head)))
-    case "with_replace" => jv(JsonAlgebra.withReplace(vj(t), vj(args.head)))
-    case "zip" => (t, args.head) match {
-      case (VList(ks), VList(vs2)) =>
-        if (ks.length != vs2.length)
-          VErr(s"zip: size(keys) != size(vals): ${ks.length} != ${vs2.length}")
-        else VMap(VectorMap.from(ks.zip(vs2).map {
-          case (VString(k), v) => k -> v
-          case (k, v) => JsonAlgebra.render(vj(k)) -> v
-        }))
-      case _ => VErr("no such overload: zip")
-    }
-    case "keys" => t match {
-      case vm: Eval.VMap => VList(Eval.typedKeys(vm).map(_._2))
-      case _ => VErr("no such overload: keys")
-    }
-    case "values" => t match {
-      case vm: Eval.VMap => VList(Eval.typedKeys(vm).map { case (k, _) => vm.v(k) })
-      case _ => VErr("no such overload: values")
-    }
-    case "min" => extremum(t, -1)
-    case "max" => extremum(t, 1)
+    // ---- collections (graft.cel.Collections, shared with json_* and v_*) ----
+    case "collate" => pathsArg(args.head, "collate").fold(identity, Collections.collate(t, _))
+    case "drop" => pathsArg(args.head, "drop").fold(identity, Collections.drop(t, _))
+    case "drop_empty" => Collections.dropEmpty(t)
+    case "flatten" => Collections.flatten(t)
+    case "with" => Collections.withAll(t, args.head)
+    case "with_update" => Collections.withUpdate(t, args.head)
+    case "with_replace" => Collections.withReplace(t, args.head)
+    case "zip" => Collections.zip(t, args.head)
+    case "keys" => Collections.keys(t)
+    case "values" => Collections.values(t)
+    case "min" => Collections.min(t)
+    case "max" => Collections.max(t)
 
     // ---- cel-go STANDARD env (not the mito libs): string predicates,
     // ---- matches, and the timestamp/duration accessors — available in
@@ -418,7 +392,7 @@ private[cel] object Functions {
     // the distinction collapses and the two are the same operation.
     case "send_to" | "send_refval_to" => args match {
       case Vector(VString(name)) =>
-        graft.streaming.Channels.send(name, JsonAlgebra.render(vj(t)))
+        graft.streaming.Channels.send(name, Eval.renderV(t))
         t
       case _ => VErr("no such overload")
     }
@@ -617,16 +591,11 @@ private[cel] object Functions {
     case _ => VErr(s"no such overload on $t")
   }
 
-  private def extremum(t: V, want: Int): V = t match {
-    case VList(xs) if xs.nonEmpty =>
-      var best = xs.head
-      for (x <- xs.tail) Eval.compareV(x, best) match {
-        case Some(c) => if (c == want) best = x
-        case None => return VErr("no such overload")
-      }
-      best
-    case VList(_) => VErr("no such overload")
-    case _ => VErr("no such overload")
+  /** collate/drop path argument: one path or a list of paths. */
+  private def pathsArg(a: V, fn: String): Either[VErr, Seq[String]] = a match {
+    case VString(p) => Right(Seq(p))
+    case VList(ps) => Right(ps.map { case VString(p) => p; case o => return Left(VErr(s"bad path $o")) })
+    case o => Left(VErr(s"invalid parameter type for $fn: $o"))
   }
 
   // ---- regexp (named registry from env) ----

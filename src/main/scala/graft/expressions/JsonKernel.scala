@@ -1,98 +1,103 @@
 package graft.expressions
 
+import graft.cel.{Collections, Eval}
+import graft.cel.Eval.{V, VErr, VList, VMap, VString}
 import graft.values.JsonAlgebra
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** JVM kernel for the dynamic-document (JSON) operator tier.
+import scala.collection.immutable.VectorMap
+
+/** JVM kernel for the dynamic-document (JSON) operator tier: the json_*
+  * functions, and the v_* functions after builtin `to_json`.
   *
   * Standalone Scala object => the compiler emits a `JsonKernel` class with
   * static forwarders, which Catalyst's `StaticInvoke` can call from
   * whole-stage-generated code (no UDF serialization, no codegen fallback).
   *
-  * All methods are total: CEL error values (reference lib/errors.go) are
-  * returned in-band as `{"__error__": msg}` documents, never thrown, so
-  * the CEL error-absorption semantics survive distribution.
+  * Every kernel is the path of a one-op CEL program: parse to a CEL
+  * value ([[Eval.stateLeafV]], so an in-band `{"__error__": msg}`
+  * document is an error value and propagates unchanged), the shared
+  * operator ([[graft.cel.Collections]]), one Go-faithful render
+  * ([[Eval.renderV]]). All methods are total: CEL error values
+  * (reference lib/errors.go) are returned in-band, never thrown, so the
+  * CEL error-absorption semantics survive distribution.
   */
 object JsonKernel {
-  import JsonAlgebra._
+  private def doc(u: UTF8String): V = Eval.stateLeafV(u.toString)
+  private def out(v: V): UTF8String = UTF8String.fromString(Eval.renderV(v))
 
-  private def str(u: UTF8String): String = u.toString
-  private def out(n: com.fasterxml.jackson.databind.JsonNode): UTF8String =
-    UTF8String.fromString(render(n))
-
-  private def paths(a: ArrayData): Seq[String] = {
-    val n = a.numElements()
-    (0 until n).map(i => a.getUTF8String(i).toString)
+  private def op1(json: UTF8String)(f: V => V): UTF8String = doc(json) match {
+    case e: VErr => out(e)
+    case x => out(f(x))
   }
 
+  private def op2(a: UTF8String, b: UTF8String)(f: (V, V) => V): UTF8String =
+    (doc(a), doc(b)) match {
+      case (e: VErr, _) => out(e)
+      case (_, e: VErr) => out(e)
+      case (x, y) => out(f(x, y))
+    }
+
+  private def paths(a: ArrayData): Seq[String] =
+    (0 until a.numElements()).map(a.getUTF8String(_).toString)
+
   def collate(json: UTF8String, path: UTF8String): UTF8String =
-    out(JsonAlgebra.collate(parse(str(json)), Seq(str(path))))
+    op1(json)(Collections.collate(_, Seq(path.toString)))
 
   def collateMulti(json: UTF8String, ps: ArrayData): UTF8String =
-    out(JsonAlgebra.collate(parse(str(json)), paths(ps)))
+    op1(json)(Collections.collate(_, paths(ps)))
 
   def dropPath(json: UTF8String, path: UTF8String): UTF8String =
-    out(JsonAlgebra.dropFields(parse(str(json)), Seq(str(path))))
+    op1(json)(Collections.drop(_, Seq(path.toString)))
 
   def dropPaths(json: UTF8String, ps: ArrayData): UTF8String =
-    out(JsonAlgebra.dropFields(parse(str(json)), paths(ps)))
+    op1(json)(Collections.drop(_, paths(ps)))
 
-  def dropEmpty(json: UTF8String): UTF8String =
-    out(JsonAlgebra.dropEmpty(parse(str(json))))
+  def dropEmpty(json: UTF8String): UTF8String = op1(json)(Collections.dropEmpty)
 
-  def flattenDeep(json: UTF8String): UTF8String =
-    out(JsonAlgebra.flattenDeep(parse(str(json))))
+  def flattenDeep(json: UTF8String): UTF8String = op1(json)(Collections.flatten)
 
   def withAll(dst: UTF8String, src: UTF8String): UTF8String =
-    out(JsonAlgebra.withAll(parse(str(dst)), parse(str(src))))
+    op2(dst, src)(Collections.withAll)
 
   def withUpdate(dst: UTF8String, src: UTF8String): UTF8String =
-    out(JsonAlgebra.withUpdate(parse(str(dst)), parse(str(src))))
+    op2(dst, src)(Collections.withUpdate)
 
   def withReplace(dst: UTF8String, src: UTF8String): UTF8String =
-    out(JsonAlgebra.withReplace(parse(str(dst)), parse(str(src))))
+    op2(dst, src)(Collections.withReplace)
 
-  def keysSorted(json: UTF8String): UTF8String =
-    out(JsonAlgebra.keysSorted(parse(str(json))))
+  def keysSorted(json: UTF8String): UTF8String = op1(json)(Collections.keys)
 
-  def valuesSorted(json: UTF8String): UTF8String =
-    out(JsonAlgebra.valuesSorted(parse(str(json))))
+  def valuesSorted(json: UTF8String): UTF8String = op1(json)(Collections.values)
 
   def zip(keys: UTF8String, vals: UTF8String): UTF8String =
-    out(JsonAlgebra.zipLists(parse(str(keys)), parse(str(vals))))
+    op2(keys, vals)(Collections.zip)
 
-  def minList(json: UTF8String): UTF8String =
-    out(JsonAlgebra.minList(parse(str(json))))
+  def minList(json: UTF8String): UTF8String = op1(json)(Collections.min)
 
-  def maxList(json: UTF8String): UTF8String =
-    out(JsonAlgebra.maxList(parse(str(json))))
+  def maxList(json: UTF8String): UTF8String = op1(json)(Collections.max)
 
   /** Canonical form: parse + sorted-key render (mito encode_json parity
     * for already-dynamic documents; typed columns use to_json). */
-  def normalize(json: UTF8String): UTF8String = out(parse(str(json)))
+  def normalize(json: UTF8String): UTF8String = out(doc(json))
 
   def decodeStream(s: UTF8String): UTF8String =
-    out(JsonAlgebra.decodeJsonStream(str(s)))
+    UTF8String.fromString(JsonAlgebra.render(JsonAlgebra.decodeJsonStream(s.toString)))
 
-  def isError(json: UTF8String): Boolean =
-    JsonAlgebra.isError(parse(str(json)))
+  def isError(json: UTF8String): Boolean = doc(json).isInstanceOf[VErr]
 
   /** CEL try(e): weaken an error value to its message string (JSON-encoded);
     * pass non-errors through. Reference lib/try.go:116-134. */
-  def tryWeaken(json: UTF8String): UTF8String = {
-    val n = parse(str(json))
-    if (JsonAlgebra.isError(n)) out(n.get(JsonAlgebra.ErrorKey)) else UTF8String.fromString(render(n))
+  def tryWeaken(json: UTF8String): UTF8String = doc(json) match {
+    case VErr(m) => out(VString(m))
+    case x => out(x)
   }
 
   /** CEL try(e, label): weaken an error value to {label: msg}. */
-  def tryWeakenLabeled(json: UTF8String, label: UTF8String): UTF8String = {
-    val n = parse(str(json))
-    if (JsonAlgebra.isError(n)) {
-      val o = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance.objectNode()
-      o.set[com.fasterxml.jackson.databind.JsonNode](str(label), n.get(JsonAlgebra.ErrorKey))
-      out(o)
-    } else UTF8String.fromString(render(n))
+  def tryWeakenLabeled(json: UTF8String, label: UTF8String): UTF8String = doc(json) match {
+    case VErr(m) => out(VMap(VectorMap(label.toString -> VString(m))))
+    case x => out(x)
   }
 
   /** debug(tag, expr) pass-through logger — reference lib/debug.go:70-91
@@ -102,92 +107,44 @@ object JsonKernel {
     value
   }
 
-  // ---------------------------------------------------------------------
-  // CEL-lowering kernels (graft.cel.Lowering): operate on Go-rendered
-  // JSON documents, reproducing Eval's Select/Index/encode_json/
-  // constructor semantics including error texts for scalar operands.
-  // ---------------------------------------------------------------------
-
-  /** V-style repr of a scalar JSON node for Eval-parity error texts
-    * ("no such field: f on VInt(5)"). */
-  private def vRepr(n: com.fasterxml.jackson.databind.JsonNode): String =
-    if (n == null || n.isNull) "VNull"
-    else if (n.isTextual) s"VString(${n.textValue()})"
-    else if (n.isIntegralNumber) s"VInt(${n.longValue()})"
-    else if (n.isNumber) s"VDouble(${n.doubleValue()})"
-    else if (n.isBoolean) s"VBool(${n.booleanValue()})"
-    else render(n)
-
-  /** CEL Select (Eval.scala Ast.Select): field of an object document. */
-  def selectField(json: UTF8String, field: UTF8String): UTF8String = {
-    val n = parse(str(json))
-    val f = str(field)
-    if (JsonAlgebra.isError(n)) return out(n)
-    if (n.isObject) {
-      if (n.has(f)) out(n.get(f)) else out(JsonAlgebra.error(s"no such key: $f"))
-    } else if (n.isNull) out(JsonAlgebra.error(s"no such key: $f"))
-    else out(JsonAlgebra.error(s"no such field: $f on ${vRepr(n)}"))
-  }
-
-  /** CEL Index with an int literal (Eval.scala Ast.Index). */
-  def indexAt(json: UTF8String, idx: Long): UTF8String = {
-    val n = parse(str(json))
-    if (JsonAlgebra.isError(n)) return out(n)
-    if (n.isArray) {
-      if (idx >= 0 && idx < n.size()) out(n.get(idx.toInt))
-      else out(JsonAlgebra.error(s"index out of range: $idx"))
-    } else if (n.isObject) {
-      val k = idx.toString
-      if (n.has(k)) out(n.get(k)) else out(JsonAlgebra.error(s"no such key: $idx"))
-    } else out(JsonAlgebra.error(s"no such overload: (${vRepr(n)})[VInt($idx)]"))
-  }
-
-  /** encode_json: the rendered document becomes a JSON STRING value. */
-  def quoteJson(json: UTF8String): UTF8String = {
-    val n = parse(str(json))
-    if (JsonAlgebra.isError(n)) return out(n)
-    out(com.fasterxml.jackson.databind.node.JsonNodeFactory.instance
-      .textNode(render(n)))
-  }
-
-  /** Build an object from literal keys + rendered-JSON values (CEL map
-    * constructor; first error value in entry order propagates). */
-  def objectFromPairs(keys: ArrayData, vals: ArrayData): UTF8String = {
-    val o = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance.objectNode()
-    val n = keys.numElements()
-    var i = 0
-    while (i < n) {
-      val v = parse(str(vals.getUTF8String(i)))
-      if (JsonAlgebra.isError(v)) return out(v)
-      o.set[com.fasterxml.jackson.databind.JsonNode](str(keys.getUTF8String(i)), v)
-      i += 1
-    }
-    out(o)
-  }
-
-  /** Build a list from rendered-JSON elements (CEL list constructor). */
-  def listFromParts(vals: ArrayData): UTF8String = {
-    val a = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance.arrayNode()
-    val n = vals.numElements()
-    var i = 0
-    while (i < n) {
-      val v = parse(str(vals.getUTF8String(i)))
-      if (JsonAlgebra.isError(v)) return out(v)
-      a.add(v)
-      i += 1
-    }
-    out(a)
-  }
-
   /** Split a JSON array document into one JSON string per element
     * (feeds explode() — row-granularity fan-out of a batch document). */
-  def elements(json: UTF8String): ArrayData = {
-    val n = parse(str(json))
-    if (n.isArray) {
-      val it = n.elements()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
-      while (it.hasNext) buf += UTF8String.fromString(render(it.next()))
-      new GenericArrayData(buf.toArray[Any])
-    } else new GenericArrayData(Array[Any](out(JsonAlgebra.error("no such overload"))))
+  def elements(json: UTF8String): ArrayData = doc(json) match {
+    case VList(xs) => new GenericArrayData(xs.map(out(_): Any).toArray)
+    case _ => new GenericArrayData(Array[Any](out(VErr("no such overload"))))
+  }
+
+  // ---------------------------------------------------------------------
+  // v_get / v_has / v_size (after to_json): a dotted path (backslash
+  // escapes as in collate) walks map keys; a missing key or a non-map
+  // step is an in-band "no such key" error.
+  // ---------------------------------------------------------------------
+  private def segments(path: String): List[String] = {
+    val (dot, escaped) = Collections.pathSepIndex(path)
+    if (dot < 0) List(Collections.unescape(path))
+    else {
+      val head = path.substring(0, dot)
+      (if (escaped) Collections.unescape(head) else head) :: segments(path.substring(dot + 1))
+    }
+  }
+
+  private def walk(x: V, path: UTF8String): V =
+    segments(path.toString).foldLeft(x) {
+      case (e: VErr, _) => e
+      case (VMap(m), k) => m.getOrElse(k, VErr(s"no such key: $k"))
+      case (_, k) => VErr(s"no such key: $k")
+    }
+
+  def getPath(json: UTF8String, path: UTF8String): UTF8String = out(walk(doc(json), path))
+
+  def hasPath(json: UTF8String, path: UTF8String): Boolean =
+    !walk(doc(json), path).isInstanceOf[VErr]
+
+  /** CEL size of a map, list or string; -1 for anything else. */
+  def size(json: UTF8String): Long = doc(json) match {
+    case VMap(m) => m.size.toLong
+    case VList(xs) => xs.length.toLong
+    case VString(s) => s.codePointCount(0, s.length).toLong
+    case _ => -1L
   }
 }

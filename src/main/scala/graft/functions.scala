@@ -14,9 +14,10 @@ import java.util.regex.Pattern
   *   1. direct `org.apache.spark.sql.functions` mappings (codegen'd);
   *   2. kernel calls via Catalyst `StaticInvoke` — still whole-stage
   *      codegen, no UDF boxing (graft.expressions.*Kernel);
-  *   3. dynamic-document (`json_*`) operators over JSON-encoded variant
-  *      documents ([[graft.values.JsonAlgebra]]) with exact reference
-  *      semantics incl. in-band error values.
+  *   3. dynamic-document operators (`json_*` over JSON text, `v_*` over
+  *      VariantType through to_json/parse_json) — the CEL collections
+  *      library itself ([[graft.cel.Collections]]) behind JsonKernel,
+  *      with exact reference semantics incl. in-band error values.
   */
 object functions {
 
@@ -286,40 +287,36 @@ object functions {
       (windowSecs * 1000000L).cast(LongType), burst.cast(LongType), now)
 
   // =====================================================================
-  // Variant-native dynamic tier (Spark 4 VariantType): parse once,
-  // operate on the binary encoding, render once. Same semantics as the
-  // json_* string tier (VariantSpec asserts parity); preferred at scale
-  // because chained operators skip the per-op Jackson re-parse and the
-  // parquet scan can shred/push down variant columns.
+  // VariantType entry points (Spark 4): a variant document enters the
+  // json_* kernels through builtin to_json and a variant result leaves
+  // through parse_json, so v_* and json_* share one implementation.
   // =====================================================================
-  private val V = Class.forName("graft.expressions.VariantKernel")
-  private val Var = VariantType
-
   /** JSON text -> variant (builtin parse_json; vectorized). */
   def v_parse(json: Column): Column = F.parse_json(json)
-  /** Variant -> Go-render JSON text (sorted keys — free in the key-sorted
-    * variant encoding). */
-  def v_render(x: Column): Column = call(V, Str, "render", Seq(Var), x)
+  /** Variant -> Go-render JSON text (sorted keys). */
+  def v_render(x: Column): Column = json_normalize(F.to_json(x))
   /** Dotted-path subtree; missing key = in-band error variant. */
   def v_get(x: Column, path: Column): Column =
-    call(V, Var, "getPath", Seq(Var, Str), x, path)
+    F.parse_json(call(J, Str, "getPath", Seq(Str, Str), F.to_json(x), path))
   def v_has(x: Column, path: Column): Column =
-    call(V, BooleanType, "hasPath", Seq(Var, Str), x, path)
+    call(J, BooleanType, "hasPath", Seq(Str, Str), F.to_json(x), path)
   /** collate over a variant doc -> rendered JSON list. */
-  def v_collate(x: Column, path: Column): Column =
-    call(V, Str, "collate", Seq(Var, Str), x, path)
+  def v_collate(x: Column, path: Column): Column = json_collate(F.to_json(x), path)
   def v_with(dst: Column, src: Column): Column =
-    call(V, Var, "withAll", Seq(Var, Var), dst, src)
+    F.parse_json(json_with(F.to_json(dst), F.to_json(src)))
   def v_with_update(dst: Column, src: Column): Column =
-    call(V, Var, "withUpdate", Seq(Var, Var), dst, src)
+    F.parse_json(json_with_update(F.to_json(dst), F.to_json(src)))
   def v_with_replace(dst: Column, src: Column): Column =
-    call(V, Var, "withReplace", Seq(Var, Var), dst, src)
-  def v_keys(x: Column): Column = call(V, Str, "keysOf", Seq(Var), x)
-  def v_values(x: Column): Column = call(V, Str, "valuesOf", Seq(Var), x)
+    F.parse_json(json_with_replace(F.to_json(dst), F.to_json(src)))
+  def v_keys(x: Column): Column = json_keys(F.to_json(x))
+  def v_values(x: Column): Column = json_values(F.to_json(x))
   /** CEL size (-1 = no such overload). */
-  def v_size(x: Column): Column = call(V, LongType, "sizeOf", Seq(Var), x)
+  def v_size(x: Column): Column = call(J, LongType, "size", Seq(Str), F.to_json(x))
   def v_drop(x: Column, paths: Seq[String]): Column =
-    call(V, Var, "dropPaths", Seq(Var, ArrS), x, F.array(paths.map(F.lit): _*))
+    v_drop(x, F.array(paths.map(F.lit): _*))
+  /** v_drop over an array<string> column of paths (the SQL form). */
+  private[graft] def v_drop(x: Column, paths: Column): Column =
+    F.parse_json(call(J, Str, "dropPaths", Seq(Str, ArrS), F.to_json(x), paths))
 
   // =====================================================================
   // LLM-pipeline operators (dedup / similarity / text analysis /

@@ -77,8 +77,8 @@ private[graft] object DedupQueries {
         .union(pairs.select(col("doc_b").as("s"), col("doc_a").as("d")))
         .cp
       val deg = und.groupBy(col("s")).agg(count(lit(1)).as("deg"))
-      // r16 tried-and-REVERTED: persisting edges/nodes via
-      // Checkpoints.persist so the cache keeps their hash(s)/hash(v)
+      // r16 tried-and-REVERTED: an eager tracked persist of edges/nodes
+      // (MEMORY_AND_DISK + count) so the cache keeps their hash(s)/hash(v)
       // partitioning (a checkpoint's LogicalRDD reports
       // UnknownPartitioning, so each round re-shuffles the edge table
       // into the rank join — guide §2.4). The plan evidence was real

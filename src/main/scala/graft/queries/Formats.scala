@@ -155,8 +155,8 @@ object Formats {
         .select(col("event_id"), decode_xml_xsd(xml, xsd).as("decoded"))
     },
 
-    // variant-native dynamic tier under the gate: parse once, chain ops
-    // on the binary encoding, render once (same outputs as the string
+    // the VariantType entry points under the gate: v_* reach the json_*
+    // kernels through to_json/parse_json (same outputs as the string
     // tier's q20/q21/q46 shapes)
     "q68_variant_tier" -> { (s, dir) =>
       val v = v_parse(col("props"))

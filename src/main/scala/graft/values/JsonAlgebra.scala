@@ -6,14 +6,16 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNo
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-/** Dynamic-document value algebra: the semantics kernel for the CEL
-  * collections library of the reference engine, re-expressed over JSON
-  * trees (the reference's value universe is exactly the JSON universe,
-  * see /root/reference/mito.go:171-184 and lib/types.go:51-63).
+/** Jackson-tree JSON codec with Go `encoding/json` output forms: parse,
+  * the sorted-key compact and indented renders, and the float/key-order
+  * rules every render path shares (the CEL value render, Eval.renderV,
+  * delegates its number and key forms here).
   *
-  * Pure Scala, no Spark dependency — wrapped by Catalyst expressions in
-  * [[graft.expressions]]. Every function documents the reference
-  * implementation it matches (file:line in /root/reference).
+  * Pure Scala, no Spark dependency. The collections library is not here:
+  * it operates on CEL values ([[graft.cel.Collections]]), and the json_*
+  * Column functions parse to those values. The tree form serves the
+  * callers that need a Jackson tree (MIME/XML decoders, the HTTP source,
+  * the CLI's pretty printer).
   *
   * Error values (CEL errors-as-data, lib/errors.go) are encoded as
   * `{"__error__": "<msg>"}` objects so they flow through data exactly
@@ -30,8 +32,8 @@ object JsonAlgebra {
     catch { case NonFatal(e) => error(s"failed to parse JSON: ${e.getMessage}") }
 
   /** Go `json.Marshal` prints a whole float64 without a fractional part
-    * (`-5.0` → `-5`). Every render path — tree, streaming V, variant —
-    * must share this predicate so the three tiers stay byte-identical. */
+    * (`-5.0` → `-5`). Both render paths — tree and streaming V — share
+    * this predicate so they stay byte-identical. */
   @inline def wholeDouble(d: Double): Boolean =
     d == d.floor && !d.isInfinite && math.abs(d) < 1e15
 
@@ -39,8 +41,7 @@ object JsonAlgebra {
     * order. Java's String.compareTo compares UTF-16 units, which ranks
     * U+E000..U+FFFF ABOVE supplementary characters (their surrogates
     * start at 0xD800) — the opposite of Go. Every key sort (render,
-    * keys(), values(), format_query) shares this ordering; the variant
-    * tier is already byte-ordered by its encoding. */
+    * keys(), values(), format_query) shares this ordering. */
   val goOrder: Ordering[String] = new Ordering[String] {
     def compare(a: String, b: String): Int = {
       var i = 0; var j = 0
@@ -64,15 +65,6 @@ object JsonAlgebra {
     if (d.isNaN || d.isInfinite) "\"" + d + "\"" // Jackson's quoted non-numeric form
     else goForm(java.lang.Double.toString(d), {
       val abs = math.abs(d); abs >= 1e-6 && abs < 1e21
-    })
-
-  /** float32 form (Go marshals float32 with 32-bit shortest digits and
-    * compares the notation boundary IN float32 — 1e-6f widened to
-    * double is < 1e-6, so the branch must not be taken in doubles). */
-  def goFloat32(f: Float): String =
-    if (f.isNaN || f.isInfinite) "\"" + f + "\""
-    else goForm(java.lang.Float.toString(f), {
-      val abs = math.abs(f); abs >= 1e-6f && abs < 1e21f
     })
 
   private def goForm(s: String, plain: Boolean): String = {
@@ -174,269 +166,6 @@ object JsonAlgebra {
   def isError(n: JsonNode): Boolean =
     n != null && n.isObject && n.size() == 1 && n.has(ErrorKey)
 
-  private def arr(elems: Iterable[JsonNode]): ArrayNode = {
-    val a = nf.arrayNode()
-    elems.foreach(a.add)
-    a
-  }
-
-  // ---------------------------------------------------------------------
-  // flatten — deep flatten. Reference: lib/collections.go:560-583.
-  // A list whose elements are ALL lists recurses into each; a list with
-  // any non-list element contributes its elements as-is (one level).
-  // ---------------------------------------------------------------------
-  def flattenDeep(v: JsonNode): JsonNode = v match {
-    case l: ArrayNode =>
-      val dst = nf.arrayNode()
-      def parts(value: ArrayNode): Unit = {
-        val elems = value.elements().asScala.toSeq
-        if (elems.exists(!_.isArray)) elems.foreach(dst.add)
-        else elems.foreach(e => parts(e.asInstanceOf[ArrayNode]))
-      }
-      parts(l)
-      dst
-    case _ => error("no such overload")
-  }
-
-  // ---------------------------------------------------------------------
-  // with / with_update / with_replace — map merges.
-  // Reference: lib/collections.go:585-649.
-  // ---------------------------------------------------------------------
-  private def merge(dst: JsonNode, src: JsonNode)(keep: (ObjectNode, String) => Boolean): JsonNode =
-    (dst, src) match {
-      case (d: ObjectNode, s: ObjectNode) =>
-        val out = d.deepCopy[ObjectNode]()
-        s.properties().asScala.foreach { e =>
-          if (keep(out, e.getKey)) out.set[JsonNode](e.getKey, e.getValue)
-        }
-        out
-      case (_: ObjectNode, _) => error("unsupported src type")
-      case _                  => error("no such overload")
-    }
-
-  /** right side wins (upsert). collections.go:585-594 */
-  def withAll(dst: JsonNode, src: JsonNode): JsonNode = merge(dst, src)((_, _) => true)
-  /** only add missing keys. collections.go:596-608 */
-  def withUpdate(dst: JsonNode, src: JsonNode): JsonNode = merge(dst, src)((o, k) => !o.has(k))
-  /** only overwrite existing keys. collections.go:610-622 */
-  def withReplace(dst: JsonNode, src: JsonNode): JsonNode = merge(dst, src)((o, k) => o.has(k))
-
-  // ---------------------------------------------------------------------
-  // drop_empty — recursively remove zero-size lists/maps (empty strings
-  // are kept). Reference: lib/collections.go:652-744.
-  // ---------------------------------------------------------------------
-  def dropEmpty(v: JsonNode): JsonNode = v match {
-    case l: ArrayNode =>
-      arr(l.elements().asScala.flatMap(keepNonEmpty).toSeq)
-    case o: ObjectNode =>
-      val out = nf.objectNode()
-      o.properties().asScala.foreach { e =>
-        keepNonEmpty(e.getValue).foreach(out.set[JsonNode](e.getKey, _))
-      }
-      out
-    case other => other
-  }
-
-  private def keepNonEmpty(v: JsonNode): Option[JsonNode] =
-    if (v.isArray || v.isObject) {
-      if (v.size() == 0) None
-      else {
-        val res = dropEmpty(v)
-        if (res.size() == 0) None else Some(res)
-      }
-    } else Some(v)
-
-  // ---------------------------------------------------------------------
-  // dotted-path handling with backslash escapes.
-  // Reference: lib/collections.go:1118-1131 (pathSepIndex).
-  // ---------------------------------------------------------------------
-  /** Returns (offset of first unescaped '.', sawEscape). */
-  def pathSepIndex(s: String): (Int, Boolean) = {
-    var off = 0
-    var escaped = false
-    while (true) {
-      val idx = s.indexOf('.', off)
-      if (idx == -1) return (-1, escaped)
-      off = idx
-      if (idx == 0 || s.charAt(off - 1) != '\\') return (off, escaped)
-      off += 1
-      escaped = true
-    }
-    (-1, escaped) // unreachable
-  }
-
-  def unescape(s: String): String = s.replace("\\.", ".")
-
-  // ---------------------------------------------------------------------
-  // drop — remove field(s) at dotted path(s), recursing through lists.
-  // Reference: lib/collections.go:753-831 (+hasFieldPath :833-883).
-  // ---------------------------------------------------------------------
-  def dropFields(obj: JsonNode, paths: Seq[String]): JsonNode =
-    paths.foldLeft(obj)((o, p) => if (isError(o)) o else dropFieldPath(o, p))
-
-  def dropFieldPath(argIn: JsonNode, path: String): JsonNode =
-    try {
-      if (!hasFieldPath(argIn, path)) argIn
-      else argIn match {
-        case l: ArrayNode =>
-          arr(l.elements().asScala.map(dropFieldPath(_, path)).toSeq)
-        case o: ObjectNode =>
-          val (dotIdx, escaped) = pathSepIndex(path)
-          if (dotIdx == 0 || dotIdx == path.length - 1)
-            error(s"invalid parameter path for drop: $path")
-          else if (dotIdx < 0) {
-            val key = unescape(path)
-            val out = nf.objectNode()
-            o.properties().asScala.foreach { e =>
-              if (e.getKey != key) out.set[JsonNode](e.getKey, e.getValue)
-            }
-            out
-          } else {
-            val head = if (escaped) unescape(path.substring(0, dotIdx)) else path.substring(0, dotIdx)
-            val tail = path.substring(dotIdx + 1)
-            val out  = nf.objectNode()
-            o.properties().asScala.foreach { e =>
-              if (e.getKey == head) out.set[JsonNode](head, dropFieldPath(e.getValue, tail))
-              else out.set[JsonNode](e.getKey, e.getValue)
-            }
-            out
-          }
-        case other => other
-      }
-    } catch { case PathError(e) => e }
-
-  private case class PathException(err: ObjectNode) extends RuntimeException
-  private object PathError {
-    def unapply(t: Throwable): Option[ObjectNode] = t match {
-      case PathException(e) => Some(e)
-      case _                => None
-    }
-  }
-
-  def hasFieldPath(arg: JsonNode, path: String): Boolean = arg match {
-    case l: ArrayNode => l.elements().asScala.exists(hasFieldPath(_, path))
-    case o: ObjectNode =>
-      val (dotIdx, escaped) = pathSepIndex(path)
-      if (dotIdx == 0 || dotIdx == path.length - 1)
-        throw PathException(error(s"invalid parameter path for drop: $path"))
-      else if (dotIdx < 0) o.has(unescape(path))
-      else {
-        val head = if (escaped) unescape(path.substring(0, dotIdx)) else path.substring(0, dotIdx)
-        val tail = path.substring(dotIdx + 1)
-        o.has(head) && hasFieldPath(o.get(head), tail)
-      }
-    case _ => false
-  }
-
-  // ---------------------------------------------------------------------
-  // collate — extract values at dotted path(s), descending through
-  // lists, flattening one level when the leaf is a list.
-  // Reference: lib/collections.go:885-971.
-  // ---------------------------------------------------------------------
-  def collate(arg: JsonNode, paths: Seq[String]): JsonNode =
-    try arr(paths.flatMap(collatePath(arg, _)))
-    catch { case PathError(e) => e }
-
-  private def collatePath(arg: JsonNode, path: String): Seq[JsonNode] = arg match {
-    case l: ArrayNode =>
-      l.elements().asScala.toSeq.flatMap(collatePath(_, path))
-    case o: ObjectNode =>
-      val (dotIdx, escaped) = pathSepIndex(path)
-      if (dotIdx == 0 || dotIdx == path.length - 1)
-        throw PathException(error(s"invalid parameter path for drop: $path"))
-      else if (dotIdx < 0) {
-        val key = unescape(path)
-        o.get(key) match {
-          case null          => Nil
-          case a: ArrayNode  => a.elements().asScala.toSeq
-          case v             => Seq(v)
-        }
-      } else {
-        val head = if (escaped) unescape(path.substring(0, dotIdx)) else path.substring(0, dotIdx)
-        val tail = path.substring(dotIdx + 1)
-        o.get(head) match {
-          case null => Nil
-          case v    => collatePath(v, tail)
-        }
-      }
-    case other =>
-      if (path.isEmpty) Seq(other) else Nil
-  }
-
-  // ---------------------------------------------------------------------
-  // min / max over comparable lists. Reference: collections.go:973-1003.
-  // CEL compare: numbers compare cross-type; strings/bools compare within
-  // type; mixed kinds -> error ("no such overload").
-  // ---------------------------------------------------------------------
-  def minList(v: JsonNode): JsonNode = extremum(v, -1)
-  def maxList(v: JsonNode): JsonNode = extremum(v, 1)
-
-  private def extremum(v: JsonNode, want: Int): JsonNode = v match {
-    case l: ArrayNode =>
-      val elems = l.elements().asScala.toSeq
-      var best: JsonNode = null
-      for (e <- elems) {
-        compareNodes(e, best) match {
-          case None if best != null => return error("no such overload")
-          case c =>
-            if (best == null || c.contains(want)) best = e
-            else if (c.isEmpty) return error("no such overload")
-        }
-      }
-      if (best == null) error("no such overload") else best
-    case _ => error("no such overload")
-  }
-
-  /** CEL three-way compare; None when incomparable. -1, 0, 1. */
-  def compareNodes(a: JsonNode, b: JsonNode): Option[Int] = {
-    if (b == null) return Some(0)
-    (a, b) match {
-      case _ if a.isNumber && b.isNumber =>
-        Some(java.lang.Double.compare(a.doubleValue(), b.doubleValue()))
-      case _ if a.isTextual && b.isTextual => Some(a.textValue().compareTo(b.textValue()).sign)
-      case _ if a.isBoolean && b.isBoolean =>
-        Some(java.lang.Boolean.compare(a.booleanValue(), b.booleanValue()))
-      case _ => None
-    }
-  }
-
-  // ---------------------------------------------------------------------
-  // zip — map from equal-length key/value lists. collections.go:1005-1023.
-  // ---------------------------------------------------------------------
-  def zipLists(keys: JsonNode, vals: JsonNode): JsonNode = (keys, vals) match {
-    case (k: ArrayNode, v: ArrayNode) =>
-      if (k.size() != v.size())
-        error(s"zip: size(keys) != size(vals): ${k.size()} != ${v.size()}")
-      else {
-        val out = nf.objectNode()
-        var i = 0
-        while (i < k.size()) {
-          val key = k.get(i)
-          val ks  = if (key.isTextual) key.textValue() else render(key)
-          out.set[JsonNode](ks, v.get(i))
-          i += 1
-        }
-        out
-      }
-    case _ => error("no such overload")
-  }
-
-  // ---------------------------------------------------------------------
-  // keys / values — sorted by key when comparable. collections.go:1025-1096.
-  // JSON object keys are always strings -> always sortable.
-  // ---------------------------------------------------------------------
-  def keysSorted(v: JsonNode): JsonNode = v match {
-    case o: ObjectNode =>
-      arr(o.properties().asScala.toSeq.map(_.getKey).sorted(goOrder).map(k => new TextNode(k): JsonNode))
-    case _ => error("no such overload")
-  }
-
-  def valuesSorted(v: JsonNode): JsonNode = v match {
-    case o: ObjectNode =>
-      arr(o.properties().asScala.toSeq.sortBy(_.getKey)(goOrder).map(_.getValue))
-    case _ => error("no such overload")
-  }
-
   // ---------------------------------------------------------------------
   // decode_json_stream — concatenated JSON values -> list.
   // Reference: lib/json.go:268-289.
@@ -444,7 +173,8 @@ object JsonAlgebra {
   def decodeJsonStream(s: String): JsonNode =
     try {
       val p   = mapper.createParser(s)
-      val it  = mapper.readValues(p, classOf[JsonNode])
-      arr(it.asScala.toSeq)
+      val out = nf.arrayNode()
+      mapper.readValues(p, classOf[JsonNode]).forEachRemaining(n => out.add(n))
+      out
     } catch { case NonFatal(e) => error(s"failed to decode JSON stream: ${e.getMessage}") }
 }

@@ -117,6 +117,23 @@ class CelSpec extends SparkSpec {
     assert(run("""{"b":2,"a":1}.keys()""") == """["a","b"]""")
   }
 
+  test("collections ops keep CEL values: no JSON round trip per op") {
+    // bytes stay bytes: the base64 text of a JSON round trip had size 4
+    assert(run("""{"b": b"hi"}.with({"c": 1}).b.size()""") == "2")
+    // timestamps stay timestamps through drop/with
+    assert(run("""{"t": timestamp("2024-03-05T07:08:09Z"), "x": 1}.drop("x").t.getFullYear()""") ==
+      "2024")
+    // a whole double stays a double (the JSON form collapsed it to an int)
+    assert(run("""type({"a": 2.0}.with({"b": 1}).a) == double""") == "true")
+    // int-typed map keys survive the with family and drop_empty
+    assert(run("""{1: "a"}.with({2: "b"}).keys()""") == "[1,2]")
+    assert(run("""{1: "a", 2: []}.drop_empty() == {1: "a"}""") == "true")
+    // inside a program a map with an __error__ key is a map, not an error
+    // value: only the document boundary (state, json_* inputs) promotes it
+    assert(run("""is_error({"__error__": "m"}.drop_empty())""") == "false")
+    assert(run("""{"__error__": "m"}.drop("x")""") == """{"__error__":"m"}""")
+  }
+
   test("strings, crypto, json, time libraries") {
     assert(run("'Hello'.to_upper()") == "\"HELLO\"")
     assert(run("'cheese'.count('e')") == "3")

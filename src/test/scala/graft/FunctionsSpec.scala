@@ -92,6 +92,35 @@ class FunctionsSpec extends SparkSpec {
     assert(evalOn("""[1,"a"]""", c => is_error(json_max(c))) == true)
   }
 
+  // --- one core: json_* behave like the one-op CEL program ---
+  test("json_* error texts are the CEL collections texts") {
+    assert(evalStr("[1]", json_keys) == """{"__error__":"no such overload: keys"}""")
+    assert(evalStr("[1]", json_values) == """{"__error__":"no such overload: values"}""")
+    assert(evalStr("1", c => json_zip(c, lit("[1]"))) == """{"__error__":"no such overload: zip"}""")
+    assert(evalStr("1", json_flatten_deep) == """{"__error__":"no such overload"}""")
+    assert(evalStr("[1]", c => json_with(c, lit("{}"))) == """{"__error__":"no such overload"}""")
+    assert(evalStr("{}", c => json_with(c, lit("[1]"))) == """{"__error__":"unsupported src type"}""")
+  }
+
+  test("json_* integers beyond 64 bits wrap like the CEL parse") {
+    // Go-like int64 wraparound (Eval.parseV): 2^64 + 1 -> 1
+    assert(evalStr("""{"n":18446744073709551617}""", json_normalize) == """{"n":1}""")
+    assert(evalStr("""{"n":18446744073709551617}""", json_normalize) ==
+      graft.cel.Cel.evalOnce("state", """{"n":18446744073709551617}"""))
+  }
+
+  test("an in-band error document passed to json_* propagates unchanged") {
+    val err = """{"__error__":"boom"}"""
+    assert(evalStr(err, c => json_with(c, lit("""{"a":1}"""))) == err)
+    assert(evalStr("""{"a":1}""", c => json_with(c, lit(err))) == err)
+    assert(evalStr(err, json_drop_empty) == err)
+    assert(evalStr(err, json_keys) == err)
+    // unparseable text is an error value too, and also propagates
+    val bad = evalStr("not json", c => json_with(c, lit("""{"a":1}""")))
+    assert(evalOn(bad, is_error) == true)
+    assert(evalStr(bad, c => try_(c)).startsWith("\"failed to parse JSON: "))
+  }
+
   // --- json stream / normalize / try ---
   test("decode_json_stream splits concatenated values") {
     assert(evalStr("""{"a":1}{"b":2} 3 "x"""", decode_json_stream) == """[{"a":1},{"b":2},3,"x"]""")

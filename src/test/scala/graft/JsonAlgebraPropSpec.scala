@@ -1,12 +1,15 @@
 package graft
 
-import com.fasterxml.jackson.databind.JsonNode
+import graft.cel.Collections
+import graft.cel.Eval.{parseV, renderV, V, VErr, VList, VMap, VString}
 import graft.values.JsonAlgebra._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property tests for the dynamic-value algebra (the semantics kernel
-  * under both the Column tier and the CEL front-end). */
+/** Property tests for the dynamic-value algebra: the collections library
+  * over CEL values (graft.cel.Collections — the semantics kernel under
+  * the json_* and v_* Column functions and both CEL tiers) and the Go
+  * float/key-order/render forms of the JSON codec (JsonAlgebra). */
 class JsonAlgebraPropSpec extends AnyFunSuite {
 
   /** Sampling-based property check (scalatest+scalacheck bridge not in
@@ -37,14 +40,16 @@ class JsonAlgebraPropSpec extends AnyFunSuite {
       } yield keys.distinct.zip(vals).map { case (k, v) => s""""$k":$v""" }
         .mkString("{", ",", "}")))
 
-  private def hasEmptyContainer(n: JsonNode): Boolean = {
-    if ((n.isArray || n.isObject) && n.size() == 0) true
-    else {
-      val it = n.elements()
-      var found = false
-      while (it.hasNext && !found) found = hasEmptyContainer(it.next())
-      found
-    }
+  private def children(v: V): Seq[V] = v match {
+    case VList(xs) => xs
+    case VMap(m) => m.values.toSeq
+    case _ => Nil
+  }
+
+  private def hasEmptyContainer(v: V): Boolean = v match {
+    case VList(xs) if xs.isEmpty => true
+    case VMap(m) if m.isEmpty => true
+    case _ => children(v).exists(hasEmptyContainer)
   }
 
   test("goFloat matches Go encoding/json float forms") {
@@ -57,14 +62,10 @@ class JsonAlgebraPropSpec extends AnyFunSuite {
     assert(goFloat(1.234e20) == "123400000000000000000")
     assert(goFloat(1.5e21) == "1.5e+21")
     assert(goFloat(-2.5e-9) == "-2.5e-9")
-    assert(goFloat32(0.1f) == "0.1")
     // single-significant-digit plain decimals must not keep BigDecimal's
     // trailing zero ("1.0E-4" -> "0.0001", not "0.00010")
     assert(goFloat(1e-4) == "0.0001")
     assert(goFloat(2e-5) == "0.00002")
-    // the float32 plain/e boundary compares in float32: (double)1e-6f
-    // is below 1e-6 but Go still prints the plain form
-    assert(goFloat32(1e-6f) == "0.000001")
     // non-finite doubles keep the quoted (parseable) form
     assert(goFloat(Double.PositiveInfinity) == "\"Infinity\"")
     assert(goFloat(Double.NaN) == "\"NaN\"")
@@ -97,63 +98,64 @@ class JsonAlgebraPropSpec extends AnyFunSuite {
 
   test("dropEmpty leaves no empty containers below the root") {
     check(genJson(3)) { doc =>
-      val out = dropEmpty(parse(doc))
-      val it = out.elements()
-      while (it.hasNext) assert(!hasEmptyContainer(it.next()))
+      children(Collections.dropEmpty(parseV(doc))).foreach(c => assert(!hasEmptyContainer(c)))
     }
   }
 
   test("dropEmpty is idempotent") {
     check(genJson(3)) { doc =>
-      val once = dropEmpty(parse(doc))
-      assert(render(dropEmpty(once)) == render(once))
+      val once = Collections.dropEmpty(parseV(doc))
+      assert(Collections.dropEmpty(once) == once)
     }
   }
 
   test("flattenDeep yields no all-list prefix violations (fixpoint under itself)") {
     check(genJson(3).suchThat(_.trim.startsWith("["))) { doc =>
-      val once = flattenDeep(parse(doc))
-      if (!isError(once)) assert(render(flattenDeep(once)) == render(once))
+      val once = Collections.flatten(parseV(doc))
+      if (!once.isInstanceOf[VErr]) assert(Collections.flatten(once) == once)
     }
   }
 
   test("merge algebra: withAll keys = union; withUpdate keeps dst; withReplace keeps dst keyset") {
     val genObj = genJson(2).suchThat(_.trim.startsWith("{"))
     check2(genObj, genObj) { (a, b) =>
-      val (na, nb) = (parse(a), parse(b))
-      val all = withAll(na, nb)
-      val upd = withUpdate(na, nb)
-      val rep = withReplace(na, nb)
-      import scala.jdk.CollectionConverters._
-      def keys(n: JsonNode): Set[String] = n.properties().asScala.map(_.getKey).toSet
+      val (na, nb) = (parseV(a).asInstanceOf[VMap], parseV(b).asInstanceOf[VMap])
+      val all = Collections.withAll(na, nb).asInstanceOf[VMap]
+      val upd = Collections.withUpdate(na, nb).asInstanceOf[VMap]
+      val rep = Collections.withReplace(na, nb).asInstanceOf[VMap]
+      def keys(m: VMap): Set[String] = m.v.keySet
       assert(keys(all) == keys(na) ++ keys(nb))
       assert(keys(upd) == keys(na) ++ keys(nb))
       assert(keys(rep) == keys(na))
       // withUpdate never changes existing values
-      keys(na).foreach(k => assert(upd.get(k) == na.get(k)))
+      keys(na).foreach(k => assert(upd.v(k) == na.v(k)))
       // withAll takes src values for src keys
-      keys(nb).foreach(k => assert(all.get(k) == nb.get(k)))
+      keys(nb).foreach(k => assert(all.v(k) == nb.v(k)))
+      // withReplace takes src values for shared keys, dst values otherwise
+      keys(na).foreach(k => assert(rep.v(k) == nb.v.getOrElse(k, na.v(k))))
     }
   }
 
   test("keysSorted is sorted and valuesSorted aligns with it") {
     check(genJson(2).suchThat(_.trim.startsWith("{"))) { doc =>
-      val n = parse(doc)
-      val ks = keysSorted(n)
-      val list = (0 until ks.size()).map(ks.get(_).asText())
-      assert(list == list.sorted)
+      val m = parseV(doc).asInstanceOf[VMap]
+      val VList(ks) = Collections.keys(m)
+      val VList(vs) = Collections.values(m)
+      val list = ks.map { case VString(k) => k; case k => fail(s"non-string key $k") }
+      assert(list == list.sorted(goOrder))
+      assert(vs == list.map(m.v))
     }
   }
 
   test("pathSepIndex finds first unescaped dot") {
-    assert(pathSepIndex("a.b") == (1, false))
-    assert(pathSepIndex("""a\.b.c""") == (4, true))
-    assert(pathSepIndex("abc") == (-1, false))
-    assert(pathSepIndex(""".x""") == (0, false))
+    assert(Collections.pathSepIndex("a.b") == (1, false))
+    assert(Collections.pathSepIndex("""a\.b.c""") == (4, true))
+    assert(Collections.pathSepIndex("abc") == (-1, false))
+    assert(Collections.pathSepIndex(""".x""") == (0, false))
   }
 
   test("collate on scalar with empty path returns the scalar") {
-    assert(render(collate(parse("5"), Seq(""))) == "[5]")
+    assert(renderV(Collections.collate(parseV("5"), Seq(""))) == "[5]")
   }
 
   // --- streaming codec equivalence: the V tier's direct parse/render

@@ -4,9 +4,10 @@ import graft.functions._
 import graft.values.JsonAlgebra
 import org.apache.spark.sql.functions._
 
-/** Byte-parity harness for the variant-native dynamic tier: every v_*
-  * operator must render identically to the json_* string tier (whose
-  * semantics are oracle- and golden-verified) on the same inputs.
+/** Parity harness for the VariantType entry points: every v_* operator
+  * must render identically to the json_* string tier (whose semantics
+  * are oracle- and golden-verified) on the same inputs. Both reach the
+  * same kernels (v_* through to_json/parse_json).
   */
 class VariantSpec extends SparkSpec {
 
@@ -83,6 +84,29 @@ class VariantSpec extends SparkSpec {
     val got = one(v_render(v_drop(v_parse(col("doc")), Seq("c.d", "b"))))
     val want = one(json_drop_all(col("doc"), Seq("c.d", "b")))
     assert(got == want, s"$got != $want")
+  }
+
+  test("v_* follow the json_* semantics where the variant-native kernel differed") {
+    val session = spark
+    import session.implicits._
+    def render(c: org.apache.spark.sql.Column): String =
+      Seq(1).toDF("i").select(c).head().get(0).toString
+    // invalid paths are validated lazily, when the walk reaches a map
+    assert(render(v_collate(v_parse(lit("[1,2]")), lit("a."))) == "[]")
+    assert(render(v_collate(v_parse(lit("[1,2]")), lit("a."))) ==
+      render(json_collate(lit("[1,2]"), lit("a."))))
+    assert(render(v_collate(v_parse(lit("""{"a":1}""")), lit("a."))) ==
+      """{"__error__":"invalid parameter path for drop: a."}""")
+    assert(render(v_render(v_drop(v_parse(lit("[1]")), Seq("a.")))) == "[1]")
+    // a nested {"__error__": ...} object is a map: the path walks on
+    assert(render(v_render(v_get(v_parse(lit("""{"a":{"__error__":"m"}}""")), lit("a.b")))) ==
+      """{"__error__":"no such key: b"}""")
+    // a top-level error document is an error value (size -1, not 1)
+    assert(render(v_size(v_parse(lit("""{"__error__":"m"}""")))) == "-1")
+    // exact decimals render in the float64 form, like json_normalize
+    assert(render(v_render(v_parse(lit("0.1000000000000000055511151231257827")))) == "0.1")
+    // integers beyond 64 bits wrap like the CEL parse
+    assert(render(v_render(v_parse(lit("""{"n":18446744073709551617}""")))) == """{"n":1}""")
   }
 
   test("variant columns round-trip through parquet and stay operable") {
