@@ -27,9 +27,7 @@ object Bench {
     * across strings, arithmetic, logic, crypto, collections and three
     * comprehensions — the "real mito program" profile (many small ops
     * per row) where per-node interpreter dispatch overhead accumulates,
-    * vs the narrow state-group shapes where parse/render dominate.
-    * Benchmarked in both tiers (mito_ = interpreter, auto_ = lowered);
-    * LoweringSpec pins that it stays inside the lowerable subset. */
+    * vs the narrow state-group shapes where parse/render dominate. */
   private[graft] val wideChain: String =
     """{
       "j": state.encode_json(),
@@ -87,32 +85,9 @@ object Bench {
       },
       "mito_strings_state" ->
         celCol("""{"upper": state.encode_json().to_upper(), "n": size(state)}"""),
-      // wide-program interpreter twin of the auto shape below
       "mito_wide_chain_state" -> celCol(wideChain)
-    ).map { case (name, c) => name -> events.select(c.cast("string").as("x")) } ++
-      // the SAME mito program texts, auto-lowered to Catalyst by
-      // Cel.auto (graft.cel.Lowering) — interpreter semantics at
-      // codegen speed, no hand translation. The program list is shared
-      // with LoweringSpec's tier-coverage gate, which asserts each one
-      // ACTUALLY lowers — a lowering regression fails the spec rather
-      // than silently re-pointing the bench at the interpreter tier.
-      autoShapePrograms.map { case (name, program) =>
-        name -> events.select(graft.cel.Cel.auto(program, col("props"), NOW)
-          .cast("string").as("x"))
-      }
+    ).map { case (name, c) => name -> events.select(c.cast("string").as("x")) }
   }
-
-  /** The auto-tier bench shapes (name -> CEL program). LoweringSpec's
-    * coverage gate runs Cel.tierOf over exactly this list. */
-  private[graft] val autoShapePrograms: Seq[(String, String)] = Seq(
-    "auto_hello_world_state" -> "state",
-    "auto_object_state" -> "state.k",
-    "auto_encode_json_state" -> "state.encode_json()",
-    "auto_nested_collate_map_state" ->
-      """{"state": state}.collate('state.k')""",
-    "auto_strings_state" ->
-      """{"upper": state.encode_json().to_upper(), "n": size(state)}""",
-    "auto_wide_chain_state" -> wideChain)
 
   /** The net benchmark group (mito_bench_test.go:166-298): each program
     * GETs a loopback stub and reshapes the body — the reference's
@@ -120,8 +95,8 @@ object Bench {
     * engine's execution shape is per-document, so absolute numbers
     * measure 1000 sequential-ish requests across 32 threads;
     * `null_net` isolates the server+transport share, exactly as the
-    * reference's comment prescribes). Executing HTTP never lowers, so
-    * these exercise the interpreter tier (the reference's own model). */
+    * reference's comment prescribes). Executing HTTP is impure, so each
+    * row issues its own request: nothing folds at plan time. */
   private def netShapes(events: DataFrame, base: String): Seq[(String, DataFrame)] = {
     def celCol(src: String) = graft.cel.Cel(src, org.apache.spark.sql.functions.lit("null"), nowMicros = NOW)
     val nested = s"bytes(get('$base/nested').Body).decode_json()"
@@ -227,13 +202,11 @@ object Bench {
       force(t.embeddings.limit(2000).select(
         dot_product(transform(col("embedding"), _.cast("double")),
           transform(col("embedding"), _.cast("double"))).as("d")))
-      // CEL tiers + string kernel: parser/eval/lowering classes and
-      // their JIT (q22's first pass measured 4.6x its warm median)
+      // CEL + string kernel: parser/eval classes and their JIT (q22's
+      // first pass measured 4.6x its warm median)
       force(t.events.limit(2000).select(graft.cel.Cel(
         """{"u": state.encode_json().to_upper(), "h": string(state.k).sha256().hex()}""",
         col("props"), nowMicros = NOW).cast("string").as("x")))
-      force(t.events.limit(2000).select(graft.cel.Cel.auto(
-        "state.encode_json()", col("props"), NOW).cast("string").as("x")))
     }
 
     def time(body: => Unit): Double = {
@@ -384,7 +357,7 @@ object Bench {
     // overflowed the window and every round's "parsed" came back null).
     // So the FIRST line is now the contract line, compacted to fit the
     // window: q* queries only, 3-decimal (1 ms) precision, ~3.4 KB for
-    // 126 queries. The mito/col/auto shape map goes on a second line
+    // 126 queries. The mito/col shape map goes on a second line
     // (truncation-tolerant: bench_last.json carries everything at full
     // precision), and per-family subtotals on a third for human diffing.
     def fmt(v: Double): String = if (v < 0) "-1" else f"$v%.3f"

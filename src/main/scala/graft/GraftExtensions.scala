@@ -133,14 +133,14 @@ object GraftFunctions {
     "parse_query"       -> si(H, MapType(Str, ArrS), "parseQuery", Seq(Str)) _,
     "format_query"      -> si(H, Str, "formatQuery", Seq(MapType(Str, ArrS))) _,
     // the CEL front-end itself: cel('<program>', state_json_col) — the
-    // program must be a literal (compiled once at plan time); lowered to
-    // codegen Columns when in the subset, interpreted otherwise
+    // program must be a literal (compiled once at plan time), run by the
+    // CEL interpreter per row
     "cel"               -> celBuilder _)
 
   private def celBuilder(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(org.apache.spark.sql.catalyst.expressions.Literal(p: org.apache.spark.unsafe.types.UTF8String, StringType), state) =>
       Shim.resolvedExpression(
-        graft.cel.Cel.auto(p.toString, Shim.column(state)))
+        graft.cel.Cel(p.toString, Shim.column(state)))
     case _ => throw new IllegalArgumentException(
       "cel(program, state): program must be a STRING literal")
   }

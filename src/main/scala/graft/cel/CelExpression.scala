@@ -12,24 +12,33 @@ import org.apache.spark.unsafe.types.UTF8String
   * AST ships to executors (compile-once / eval-per-row, the reference's
   * own model — mito.go:308-333 — but distributed across rows).
   *
-  * Interpretation is a per-row tree walk (CodegenFallback), exactly like
-  * the reference's cel-go interpreter; the Column API tier remains the
-  * codegen path. `nowMicros` is captured at plan time so `now`/`now()`
-  * are batch-constant and retries replay deterministically (mito's `now`
-  * variable semantics; its per-call now() diverges only within an
-  * evaluation, SURVEY §4).
+  * Every CEL column runs here: a per-row tree walk (CodegenFallback),
+  * exactly like the reference's cel-go interpreter. `nowMicros` is
+  * captured at plan time so `now`/`now()` are batch-constant and
+  * retries replay deterministically (mito's `now` variable semantics;
+  * its per-call now() diverges only within an evaluation, SURVEY §4).
+  *
+  * Folding and determinism follow the program: a program made only of
+  * pure calls ([[Functions.isPure]]) over a literal state folds at plan
+  * time, while one that calls uuid(), debug, file/dir, executing HTTP,
+  * channels or rate_limit is nondeterministic, so Catalyst neither
+  * folds it nor pushes a filter below it (which would evaluate it a
+  * second time per row).
   */
 case class CelEvalExpression(program: String, child: Expression, nowMicros: Long,
     regexps: Map[String, String], globalsJson: String = "")
     extends UnaryExpression with CodegenFallback {
 
   @transient private lazy val ast: Ast = Parser.parse(program)
+  @transient private lazy val pure: Boolean = Functions.isPure(ast)
   // globals parse + now + time_layout assembled once per task, not per row
   @transient private lazy val env0: Eval.Env =
     Eval.baseEnv(nowMicros, regexps, globalsJson)
 
   override def dataType: DataType = StringType
   override def prettyName: String = "cel"
+  override def foldable: Boolean = pure && child.foldable
+  override lazy val deterministic: Boolean = pure && child.deterministic
 
   override def nullSafeEval(state: Any): Any =
     UTF8String.fromString(
@@ -55,32 +64,21 @@ object Cel {
       org.apache.spark.sql.graft.Shim.expression(state), nowMicros, regexps, globalsJson))
   }
 
-  /** Compile `program` to a codegen'd Column when it falls in the
-    * lowerable dynamic-document subset ([[Lowering]]); None -> use
-    * apply() (the interpreter). */
+  /** Compatibility form of the retired lowered tier: always None,
+    * which tells the caller to use apply(). */
   def lower(program: String, state: Column,
       regexps: Map[String, String] = Map.empty,
-      nowMicros: Option[Long] = None): Option[Column] =
-    Lowering.tryLower(program, state, regexps, nowMicros)
+      nowMicros: Option[Long] = None): Option[Column] = None
 
-  /** Lowered when possible, interpreted otherwise — same semantics,
-    * same rendered output, compile-once either way. */
+  /** Same column as apply(), with `now` before `regexps`. */
   def auto(program: String, state: Column,
       nowMicros: Long = System.currentTimeMillis() * 1000L,
       regexps: Map[String, String] = Map.empty): Column =
-    Lowering.tryLower(program, state, regexps, Some(nowMicros))
-      .getOrElse(apply(program, state, regexps, nowMicros))
+    apply(program, state, regexps, nowMicros)
 
-  /** Which tier a Cel-built column actually runs: "lowered" when no
-    * interpreter node remains in its expression tree, "interpreted"
-    * otherwise. LoweringSpec's coverage gate runs this over every
-    * Cel.auto production shape so a lowering rule that silently starts
-    * declining (auto's fallback hides it) fails a spec instead. */
-  def tierOf(c: Column): String = {
-    val tree = org.apache.spark.sql.graft.Shim.expression(c)
-    val interp = tree.collectFirst { case e: CelEvalExpression => e }
-    if (interp.isEmpty) "lowered" else "interpreted"
-  }
+  /** Which tier a Cel-built column runs: always "interpreted", the
+    * only one. */
+  def tierOf(c: Column): String = "interpreted"
 
   /** One-shot local evaluation (no Spark): the mito CLI model. `xsds`
     * maps hint names to compiled hint JSON (the -cfg xsd: table,

@@ -6,12 +6,12 @@ import scala.util.control.NoStackTrace
 /** The collections library of the reference (lib/collections.go) over
   * CEL values: the one implementation of collate, drop, drop_empty,
   * flatten, with/with_update/with_replace, zip, keys, values, min and
-  * max. The interpreter and `Cel.auto` reach it through
-  * `Functions.method2` (VOps delegates there), and the json_* / v_*
-  * Column functions through [[graft.expressions.JsonKernel]] (parse to
-  * V, one op, [[Eval.renderV]]). No operator converts its document to
-  * another value type, so every CEL value (bytes, timestamps, typed map
-  * keys, optionals) passes through a collections op unchanged.
+  * max. CEL programs reach it through `Functions.method2`, and the
+  * json_* / v_* Column functions through [[graft.expressions.JsonKernel]]
+  * (parse to V, one op, [[Eval.renderV]]). No operator converts its
+  * document to another value type, so every CEL value (bytes,
+  * timestamps, typed map keys, optionals) passes through a collections
+  * op unchanged.
   *
   * Every op is total: failures are in-band [[Eval.VErr]] values. A map
   * that merely has an `__error__` key is a map here; the text-to-value

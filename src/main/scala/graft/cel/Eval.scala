@@ -6,7 +6,6 @@ import graft.expressions.{CryptoKernel, StringKernel, TimeKernel}
 import graft.values.JsonAlgebra
 import org.apache.spark.unsafe.types.UTF8String
 
-import java.time.Instant
 import scala.collection.immutable.VectorMap
 import scala.util.control.NonFatal
 
@@ -33,9 +32,9 @@ object Eval {
   case object VNull extends V
   final case class VList(v: Vector[V]) extends V
   /** VectorMap is not java-Serializable (scala/scala#12190), but V values
-    * ride inside plan Literals (lowered CEL literals, e.g. `time_layout`)
-    * which Spark serializes into task binaries — so VMap serializes via
-    * an entry-vector proxy that rebuilds the VectorMap on read.
+    * can ride inside serialized closures and task binaries — so VMap
+    * serializes via an entry-vector proxy that rebuilds the VectorMap
+    * on read.
     *
     * `intKeys` marks entries whose CEL key was an int/uint (testdata/
     * keys.txt: `keys({1: "a"})` must return `[1, 2]`, not strings).
@@ -111,7 +110,7 @@ object Eval {
         * the reference's semantics (lib/time.go:46-54: the variable is
         * bound at start, the function at call time, so
         * `now < now()` holds — testdata/now.txt). None (the Spark
-        * tiers) keeps both fixed for replay-deterministic retries. */
+        * column) keeps both fixed for replay-deterministic retries. */
       liveNowAnchor: Option[Long] = None)
 
   // ---------------- JSON <-> V ----------------
@@ -134,8 +133,8 @@ object Eval {
   private val nf = JsonNodeFactory.instance
 
   /** Whole doubles below 1e15 collapse to ints at JSON boundaries (Go
-    * json.Marshal of float64 — documented Lowering scaladoc). ONE
-    * definition shared with the tree and variant render paths. */
+    * json.Marshal of float64). ONE definition shared with the tree and
+    * variant render paths. */
   @inline private def wholeDouble(d: Double): Boolean =
     graft.values.JsonAlgebra.wholeDouble(d)
 
@@ -214,12 +213,11 @@ object Eval {
     }
   }
 
-  /** Document leaf parse — IDENTICAL in both CEL tiers (VOps
-    * .fromJsonText delegates here) and the json_* and v_* kernels
-    * (JsonKernel): parse failures are VErr, and a top-level error OBJECT
-    * promotes to VErr so rendered error values stay in-band across a
-    * render->parse round trip (the same convention as Functions.jv at
-    * the JSON boundary). */
+  /** Document leaf parse — shared by the CEL `state` binding and the
+    * json_* and v_* kernels (JsonKernel): parse failures are VErr, and a
+    * top-level error OBJECT promotes to VErr so rendered error values
+    * stay in-band across a render->parse round trip (the same
+    * convention as Functions.jv at the JSON boundary). */
   def stateLeafV(s: String): V = parseV(s) match {
     case m: VMap if m.v.size == 1 =>
       m.v.get(JsonAlgebra.ErrorKey) match {
@@ -233,17 +231,15 @@ object Eval {
     * object keys sorted at write time. Render-identical to
     * `JsonAlgebra.render(toJson(v))` (the goldens + oracle rows pin
     * this), but skips building a JsonNode tree, deep-copy-sorting it,
-    * and re-walking it — the per-row render cost of BOTH CEL tiers. */
+    * and re-walking it — the per-row render cost of every CEL column. */
   def renderV(value: V): String = {
-    // One-entry per-thread IDENTITY memo (the render-side sibling of
-    // VOps.fromJsonText's parse memo, r16): a program that references
-    // `state.encode_json()` k times renders the SAME immutable V
-    // object k times per row — wide_chain does it 5x — because
-    // Catalyst cannot CSE ObjectType StaticInvokes and the interpreter
-    // re-walks each AST occurrence. V values are immutable and the
-    // render is deterministic, so an `eq` hit returns the cached
-    // string; the memo never survives the row (the next different V
-    // overwrites it) and both tiers share it by construction.
+    // One-entry per-thread IDENTITY memo (r16): a program that
+    // references `state.encode_json()` k times renders the SAME
+    // immutable V object k times per row — wide_chain does it 5x —
+    // because the interpreter re-walks each AST occurrence. V values
+    // are immutable and the render is deterministic, so an `eq` hit
+    // returns the cached string; the memo never survives the row (the
+    // next different V overwrites it).
     val slot = lastRender.get()
     if (slot(0).asInstanceOf[AnyRef] eq value)
       return slot(1).asInstanceOf[String]
@@ -325,9 +321,9 @@ object Eval {
   /** Optional index `c[?k]` (cel-go OptionalTypes `_[?_]`): a present
     * list index / map key wraps in optional.of, an absent one is
     * optional.none; the target may itself be optional (chaining).
-    * Container/key type mismatches stay hard errors, mirroring
-    * [[VOps.index]]'s overloads. Shared by all three tiers. */
-  private[cel] def indexOptV(tv: V, iv: V): V = (tv, iv) match {
+    * Container/key type mismatches stay hard errors, mirroring the
+    * plain index's overloads. */
+  private def indexOptV(tv: V, iv: V): V = (tv, iv) match {
     case (err: VErr, _) => err
     case (_, err: VErr) => err
     case (VOpt(None), _) => VOpt(None)
@@ -383,13 +379,13 @@ object Eval {
     case VType(_) => VType("type")
   }
 
-  /** The standard type identifiers, bound as values in every env (both
-    * tiers) so `type(x) == int` works. Lowest precedence — cfg globals
-    * and the engine's own vars shadow them. `timestamp`/`duration` the
+  /** The standard type identifiers, bound as values in every env so
+    * `type(x) == int` works. Lowest precedence — cfg globals and the
+    * engine's own vars shadow them. `timestamp`/`duration` the
     * IDENTIFIERS are the proto type names they compare equal to
     * (cel-go's declarations); the same-named FUNCTIONS are Call nodes
     * and never consult these bindings. */
-  private[cel] val typeIdentsV: Map[String, V] = Map(
+  private val typeIdentsV: Map[String, V] = Map(
     "int" -> VType("int"), "uint" -> VType("uint"),
     "double" -> VType("double"), "string" -> VType("string"),
     "bytes" -> VType("bytes"), "bool" -> VType("bool"),
@@ -401,7 +397,7 @@ object Eval {
 
   /** The `time_layout` global (17 named Go layouts) — one shared value,
     * not rebuilt per evaluation. */
-  private[cel] val timeLayoutV: V = VMap(VectorMap.from(
+  private val timeLayoutV: V = VMap(VectorMap.from(
     TimeKernel.namedLayouts.toSeq.sortBy(_._1).map { case (k, l) => k -> (VString(l): V) }))
 
   /** Everything about the environment except the per-row `state`
@@ -564,16 +560,6 @@ object Eval {
   }
 
   /** CEL commutative error-absorbing logic ops. */
-  /** Package bridges for the lowering kernels (OpKernel): the SAME op
-    * implementations the interpreter dispatches to. */
-  private[cel] def binaryBridge(op: String, l: V, r: V): V = binary(op, l, r)
-  private[cel] def logicalBridge(l: V, r: V, and: Boolean): V = logical(l, () => r, and)
-  /** Short-circuiting form for the closure compiler ([[Compile]]), whose
-    * operand closures make laziness free (the Column tier pre-evaluates
-    * both sides — result-identical under CEL's commutative absorption). */
-  private[cel] def logicalLazyBridge(l: V, r: () => V, and: Boolean): V =
-    logical(l, r, and)
-
   private def logical(l: V, rThunk: () => V, and: Boolean): V = {
     val shortVal = !and // && shorts on false, || shorts on true
     l match {
@@ -604,9 +590,7 @@ object Eval {
   /** Map-literal builder over pre-evaluated (key, value) pairs in entry
     * order: first error wins, string/int/uint key typing, and duplicate
     * keys are ERRORS, never silent last-win (see the MapLit scaladoc
-    * trail). Shared by the interpreter's MapLit, the Column tier
-    * (VOps.mapOf) and the closure compiler, so all three agree. Two
-    * duplicate flavors:
+    * trail). Two duplicate flavors:
     *
     * - same-type repeat ({1:"a",1:"b"}, {"a":1,"a":2}): cel-go's own
     *   runtime error, "Failed with repeated key".
@@ -619,7 +603,7 @@ object Eval {
     *   equal-value keys count as SAME type here because this engine maps
     *   both to one numeric key space ({1:v} == {1u:v} by CEL numeric
     *   equality — the same choice typedKeys/equalsV make). */
-  private[cel] def mapFromPairs(pairs: Vector[(V, V)]): V = {
+  private def mapFromPairs(pairs: Vector[(V, V)]): V = {
     var m = VectorMap.empty[String, V]
     var intKeys = Set.empty[String]
     // uints >= 2^63: string-surfaced but numeric — local tag so a
@@ -788,8 +772,7 @@ object Eval {
       case VList(xs) => xs
       // Sorted key order: Go map iteration is RANDOM (no reference
       // program can depend on it), so we fix the canonical order used
-      // everywhere else in the engine — also keeps the lowered path
-      // (whose intermediate is sorted-key rendered JSON) bit-identical.
+      // everywhere else in the engine.
       case vm: VMap => typedKeys(vm).map(_._2)
       case other => return VErr(s"no such overload: $kind over $other")
     }
@@ -850,12 +833,7 @@ object Eval {
     }
   }
 
-  // expose for Functions
-  private[cel] def evalNode(e: Ast, env: Env): V = eval(e, env)
   private[cel] def guard[T](f: => V): V =
     try f catch { case NonFatal(ex) => VErr(ex.getMessage) }
   private[cel] def u8(s: String): UTF8String = UTF8String.fromString(s)
-  private[cel] def nowInstant(env: Env): Instant =
-    Instant.ofEpochSecond(Math.floorDiv(env.nowMicros, 1000000L),
-      Math.floorMod(env.nowMicros, 1000000L) * 1000L)
 }

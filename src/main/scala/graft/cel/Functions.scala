@@ -12,8 +12,8 @@ import scala.jdk.CollectionConverters._
   * plus the reference's extension libraries, routed through the SAME
   * kernels as the Column API (StringKernel/TimeKernel/CryptoKernel, and
   * [[Collections]] for the collections library, which the json_* and v_*
-  * Column functions also call) so every tier shares one semantics
-  * implementation.
+  * Column functions also call) so the CEL evaluator and the Column API
+  * share one semantics implementation.
   */
 private[cel] object Functions {
   import Eval._
@@ -162,19 +162,69 @@ private[cel] object Functions {
     vs.collectFirst { case e: VErr => e }.getOrElse(guard(f(t, vs)))
   }
 
-  /** Bridge for the lowering kernels (VOps.method*): the same dispatch
-    * the interpreter uses, for env-free methods. */
-  private[cel] def strictMethodBridge(fn: String, t: V, args: Vector[V]): V =
-    guard(method2(fn, t, args))
-
-  /** Env-free global functions shared by the interpreter's `call` and the
-    * lowering kernels (VOps.call*): pure value-level dispatch. */
-  private[cel] val pureGlobals: Set[String] = Set(
+  /** Env-free global functions: pure value-level dispatch ([[call2]]). */
+  private val pureGlobals: Set[String] = Set(
     "size", "int", "uint", "double", "string", "bytes", "bool", "timestamp",
     "duration", "dyn", "type", "max", "min", "zip", "keys", "values",
     "encode_json", "decode_json", "hmac", "matches")
 
-  private[cel] def call2(fn: String, vs: Vector[V]): V = fn match {
+  /** Methods (also callable in global form) whose result depends only on
+    * their target and arguments. Deliberately excluded: send_to/close
+    * (channel side effects), get/head/post/do_request (executing HTTP)
+    * and rate_limit (shared limiter state). */
+  private val pureMethods: Set[String] = Set(
+    "size", "collate", "drop", "drop_empty", "flatten", "with",
+    "with_update", "with_replace", "zip", "keys", "values", "min", "max",
+    "mime", "request", "get_request", "post_request",
+    "basic_authentication", "parse_url", "format_url", "parse_query",
+    "format_query", "encode_json", "decode_json", "decode_json_stream",
+    "to_lower", "to_upper", "to_title", "trim_space", "trim", "trim_left",
+    "trim_right", "trim_prefix", "trim_suffix", "has_prefix", "has_suffix",
+    "contains_substr", "contains_any", "compare", "count", "equal_fold",
+    "fields", "index", "index_any", "last_index", "last_index_any", "join",
+    "repeat", "replace", "replace_all", "split", "split_n", "split_after",
+    "split_after_n", "substring", "valid_utf8", "to_valid_utf8", "format",
+    "parse_time", "md5", "sha1", "sha256", "hex", "base64", "base64_raw",
+    "base64_decode", "base64_raw_decode", "hmac",
+    // cel-go STANDARD env: string predicates, matches, time accessors
+    "contains", "startsWith", "endsWith", "matches",
+    "getFullYear", "getMonth", "getDayOfYear", "getDayOfMonth",
+    "getDate", "getDayOfWeek", "getHours", "getMinutes",
+    "getSeconds", "getMilliseconds",
+    // optional-value accessors
+    "orValue", "or", "value", "hasValue")
+
+  /** True when every call in `e` is pure: the program reads only its
+    * state, globals and the evaluation's fixed `now`, so it may be
+    * folded at plan time or evaluated more than once per row. uuid(),
+    * debug, file/dir, executing HTTP, channels and rate_limit make a
+    * program impure, and so does any call not listed here. */
+  def isPure(e: Ast): Boolean = e match {
+    case Ast.Call(fn, args) =>
+      (pureGlobals(fn) || fn == "try" || fn == "is_error" || fn == "now" ||
+        (args.nonEmpty && pureMethods(fn))) && args.forall(isPure)
+    case Ast.Method(t, fn, args) =>
+      val ok = t match {
+        case Ast.Ident("optional") => fn == "of" || fn == "none" || fn == "ofNonZeroValue"
+        case _ => pureMethods(fn) || fn.startsWith("re_") ||
+          (fn == "decode_xml" && args.isEmpty)
+      }
+      ok && isPure(t) && args.forall(isPure)
+    case Ast.ListLit(es) => es.forall(isPure)
+    case Ast.MapLit(en) => en.forall { case (k, v) => isPure(k) && isPure(v) }
+    case Ast.Select(t, _) => isPure(t)
+    case Ast.SelectOpt(t, _) => isPure(t)
+    case Ast.Has(t, _) => isPure(t)
+    case Ast.Index(t, i) => isPure(t) && isPure(i)
+    case Ast.IndexOpt(t, i) => isPure(t) && isPure(i)
+    case Ast.Unary(_, x) => isPure(x)
+    case Ast.Binary(_, l, r) => isPure(l) && isPure(r)
+    case Ast.Ternary(c, t, f) => isPure(c) && isPure(t) && isPure(f)
+    case Ast.Comprehension(_, t, _, p, b) => isPure(t) && p.forall(isPure) && isPure(b)
+    case _ => true // literals and identifiers
+  }
+
+  private def call2(fn: String, vs: Vector[V]): V = fn match {
     case "type" => vs match {
       case Vector(x) => Eval.typeOf(x)
       case _ => VErr("no such overload: type")
@@ -599,14 +649,8 @@ private[cel] object Functions {
   }
 
   // ---- regexp (named registry from env) ----
-  /** Bridge for the lowering kernels: run a re_* method with the pattern
-    * already resolved (plan-time registry lookup). */
   private val regexCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.regex.Pattern]()
-
-  private[cel] def regexpBridge(fn: String, pattern: String, t: V, rest: Vector[V]): V =
-    guard(regexp(fn, t, VString("__lowered__") +: rest,
-      Env(Map.empty, 0L, regexps = Map("__lowered__" -> pattern))))
 
   private def regexp(fn: String, t: V, args: Vector[V], env: Env): V = {
     val name = args.headOption match {

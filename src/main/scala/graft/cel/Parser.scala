@@ -184,9 +184,9 @@ private final class Parser(src: String) {
         //                           ? optional.of($t.value().as(v, f))
         //                           : optional.none())
         //   t.optFlatMap(v, f) => same, without the optional.of wrap
-        // so both tiers (interpreter AND Lowering/Compile) host them with
-        // no new evaluation machinery. `$opt` cannot collide: '$' is not
-        // an identifier character, so no user binding can carry the name.
+        // so the interpreter hosts them with no new evaluation machinery.
+        // `$opt` cannot collide: '$' is not an identifier character, so
+        // no user binding can carry the name.
         case m @ ("optMap" | "optFlatMap") =>
           val v = parseIdent(); expect(",")
           val body = parseTernary(); expect(")")

@@ -299,69 +299,53 @@ object CelFunctions {
     },
 
     // CEL core accessors under the oracle gate: has(), membership `in`
-    // (map keys + list), computed list indexing — lowered path
+    // (map keys + list), computed list indexing
     "q76_cel_has_in" -> { (s, dir) =>
-      val program = loweredGatePrograms("q76_cel_has_in")
-      val c = graft.cel.Cel.lower(program, col("props"))
-        .getOrElse(sys.error("q76 program must lower"))
       Tables(s, dir).events.orderBy(col("event_id"))
-        .select(col("event_id"), c.as("doc"))
+        .select(col("event_id"), graft.cel.Cel(q76Program, col("props")).as("doc"))
     },
 
     // CEL comprehension macros under the oracle gate (map with and
     // without filter, filter, exists, all, exists_one — cel-go
     // fold semantics), value-dependent through state.k
     "q77_cel_comprehensions" -> { (s, dir) =>
-      val program = loweredGatePrograms("q77_cel_comprehensions")
-      val c = graft.cel.Cel.lower(program, col("props"))
-        .getOrElse(sys.error("q77 program must lower"))
       Tables(s, dir).events.orderBy(col("event_id"))
-        .select(col("event_id"), c.as("doc"))
+        .select(col("event_id"), graft.cel.Cel(q77Program, col("props")).as("doc"))
     },
 
     // the cel-go OptionalTypes surface under the oracle gate: .?f,
     // optional.of/none/ofNonZeroValue, or/orValue/hasValue, the
-    // optMap macro and optional index `[?k]` — lowered path,
-    // value-dependent through state.k
+    // optMap macro and optional index `[?k]`, value-dependent through
+    // state.k
     "q79_cel_optionals" -> { (s, dir) =>
-      val program = loweredGatePrograms("q79_cel_optionals")
-      val c = graft.cel.Cel.lower(program, col("props"))
-        .getOrElse(sys.error("q79 program must lower"))
       Tables(s, dir).events.orderBy(col("event_id"))
-        .select(col("event_id"), c.as("doc"))
+        .select(col("event_id"), graft.cel.Cel(q79Program, col("props")).as("doc"))
     },
 
     // the CEL cast family under the oracle gate (previously golden-only):
     // int/uint/double/string/bytes/bool/timestamp/duration/dyn, with the
     // Go render conventions (whole-double collapse, RFC3339 timestamps,
-    // Go duration strings) — lowered path, value-dependent through state.k
+    // Go duration strings), value-dependent through state.k
     "q80_cel_casts" -> { (s, dir) =>
-      val program = loweredGatePrograms("q80_cel_casts")
-      val c = graft.cel.Cel.lower(program, col("props"))
-        .getOrElse(sys.error("q80 program must lower"))
       Tables(s, dir).events.orderBy(col("event_id"))
-        .select(col("event_id"), c.as("doc"))
+        .select(col("event_id"), graft.cel.Cel(q80Program, col("props")).as("doc"))
     },
 
     // the cel-go STANDARD-env surface under the oracle gate: string
     // predicates (contains/startsWith/endsWith), matches, and the
-    // timestamp/duration accessors — lowered path, value-dependent
-    // through state.k
+    // timestamp/duration accessors, value-dependent through state.k
     "q81_cel_std" -> { (s, dir) =>
-      val program = loweredGatePrograms("q81_cel_std")
-      val c = graft.cel.Cel.lower(program, col("props"))
-        .getOrElse(sys.error("q81 program must lower"))
       Tables(s, dir).events.orderBy(col("event_id"))
-        .select(col("event_id"), c.as("doc"))
+        .select(col("event_id"), graft.cel.Cel(q81Program, col("props")).as("doc"))
     },
 
-    // --- the CEL text front-end itself under the oracle gate: the SAME
-    // --- program through the lowered (q58) and interpreted (q59) paths.
+    // --- the CEL text front-end itself under the oracle gate: the same
+    // --- program as q59, which pins `now` to 0. q58 keeps the name of
+    // --- the retired lowered tier because the oracle artifacts are keyed
+    // --- by it.
     "q58_cel_lowered" -> { (s, dir) =>
-      val c = graft.cel.Cel.lower(celGateProgram, col("props"))
-        .getOrElse(sys.error("q58 program must lower"))
       Tables(s, dir).events.orderBy(col("event_id"))
-        .select(col("event_id"), c.as("doc"))
+        .select(col("event_id"), graft.cel.Cel(celGateProgram, col("props")).as("doc"))
     },
 
     "q59_cel_interpreted" -> { (s, dir) =>
@@ -370,8 +354,8 @@ object CelFunctions {
           graft.cel.Cel(celGateProgram, col("props"), nowMicros = 0L).as("doc"))
     })
 
-  /** One program, three executors: Lowering (q58), the interpreter
-    * (q59), and the DuckDB oracle rebuild the same rendered document. */
+  /** One program, two executors: the CEL column (q58, q59) and the
+    * DuckDB oracle rebuild the same rendered document. */
   private val celGateProgram =
     """{"k10": state.k + 10,
        "big": state.k > 50,
@@ -379,37 +363,33 @@ object CelFunctions {
        "n": size(state),
        "ks": state.keys()}"""
 
-  /** The inventory queries whose correctness evidence pins the LOWERED
-    * tier: each query above errors loudly (sys.error) if its program
-    * stops lowering, and LoweringSpec's tier-coverage gate runs
-    * Cel.tierOf over exactly this map so the same regression also
-    * fails a spec with a per-program readout. */
-  private[graft] val loweredGatePrograms: Map[String, String] = Map(
-    "q58_cel_lowered" -> celGateProgram,
-    "q76_cel_has_in" ->
-      """{"h": has(state.k),
+  private val q76Program =
+    """{"h": has(state.k),
          "hn": has(state.nope),
          "m": "k" in state,
          "c": "k" in ["a", "k"],
-         "i": [10, 20, 30][state.k % 3]}""",
-    "q77_cel_comprehensions" ->
-      """{"sq": [1, 2, 3].map(i, i * state.k),
+         "i": [10, 20, 30][state.k % 3]}"""
+
+  private val q77Program =
+    """{"sq": [1, 2, 3].map(i, i * state.k),
          "odd": [1, 2, 3, 4].map(i, i % 2 == 1, i * 10),
          "ev": [1, 2, 3, 4].filter(i, i % 2 == 0),
          "any": [10, 60, 90].exists(i, i > state.k),
          "all": [10, 60, 90].all(i, i > state.k),
-         "one": [10, 60, 90].exists_one(i, i > state.k)}""",
-    "q79_cel_optionals" ->
-      """{"a": state.?k.orValue(-1),
+         "one": [10, 60, 90].exists_one(i, i > state.k)}"""
+
+  private val q79Program =
+    """{"a": state.?k.orValue(-1),
          "b": state.?nope.orValue(-1),
          "c": state.?nope.hasValue(),
          "d": optional.of(state.k).optMap(v, v * 2).orValue(0),
          "e": [10, 20, 30][?(state.k % 4)].orValue(-1),
          "f": state.?nope.or(state.?k).orValue(-1),
          "g": optional.ofNonZeroValue(state.k % 3).hasValue(),
-         "h": state[?"k"].orValue(-1)}""",
-    "q80_cel_casts" ->
-      """{"i": int("42") + state.k,
+         "h": state[?"k"].orValue(-1)}"""
+
+  private val q80Program =
+    """{"i": int("42") + state.k,
          "u": uint(state.k),
          "d": double(state.k) / 2.0,
          "s": string(state.k),
@@ -417,9 +397,10 @@ object CelFunctions {
          "bl": bool("true"),
          "ts": string(timestamp(1500000000 + state.k)),
          "dur": string(duration(string(state.k % 50) + "s")),
-         "dy": dyn(state.k)}""",
-    "q81_cel_std" ->
-      """{"c": string(state.k).contains("5"),
+         "dy": dyn(state.k)}"""
+
+  private val q81Program =
+    """{"c": string(state.k).contains("5"),
          "sw": string(state.k).startsWith("1"),
          "ew": string(state.k).endsWith("9"),
          "m": string(state.k).matches("^[0-9]$"),
@@ -427,7 +408,7 @@ object CelFunctions {
          "mo": timestamp(1500000000 + state.k * 86400).getMonth(),
          "dt": timestamp(1500000000 + state.k * 86400).getDate(),
          "dw": timestamp(1500000000 + state.k * 86400).getDayOfWeek(),
-         "h": duration(string(state.k) + "m").getHours()}""")
+         "h": duration(string(state.k) + "m").getHours()}"""
 
   def oracle: Map[String, String] = Map(
     "q20_json_collate" ->

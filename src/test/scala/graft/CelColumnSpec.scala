@@ -1,19 +1,21 @@
 package graft
 
-import graft.cel.Cel
+import graft.cel.{Cel, CelEvalExpression}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Parity harness for the CEL → Catalyst lowering: every lowerable
-  * program must produce byte-identical rendered output to the
-  * interpreter on real data, and the programs the subset can't host
-  * must decline (None) rather than mis-lower.
+/** The CEL column on real data: every program's `Cel(...)` column
+  * (the per-task `Eval.baseEnv` + `evalValueInEnv` path) renders
+  * byte-identically to the one-shot `Cel.evalOnce` on the same state;
+  * NULL states and the regexp registry behave; and the column's purity
+  * decides whether Catalyst may fold it or evaluate it twice.
   */
-class LoweringSpec extends SparkSpec {
+class CelColumnSpec extends SparkSpec {
 
   private val NOW = 1704067200000000L
 
-  // programs inside the lowerable subset, exercised over events.props
-  private val lowerable = Seq(
+  // programs across the CEL surface, exercised over events.props
+  private val corpus = Seq(
     "'hello world'",
     "42",
     "true",
@@ -42,7 +44,7 @@ class LoweringSpec extends SparkSpec {
     """{"a": 1}.with_replace({"a": 9, "b": 2})""",
     """state.as(s, {"doc": s, "k": s.k})""",
     // `as` evaluates the target strictly: a target error propagates even
-    // when the body never references the binding (VOps.asSeq)
+    // when the body never references the binding
     "state.nope.as(s, 1)",
     "(1 / 0).as(x, 'ok')",
     "state.k.as(x, 2)",
@@ -52,7 +54,7 @@ class LoweringSpec extends SparkSpec {
     "[1, 2][5]",
     """{"a": 1}["b"]""",
     """[1, 2][1]""",
-    // operators (VOps dispatches to the interpreter's own op implementations)
+    // operators
     "1 + 2 * 3",
     "state.k + 1",
     "state.k == 69",
@@ -72,7 +74,7 @@ class LoweringSpec extends SparkSpec {
     "size(state)",
     "[1, 2, 3].size()",
     "state.k == 69 ? state : {\"other\": true}",
-    // comprehensions: bodies run inside transform(), folds in the kernel
+    // comprehensions
     "[1, 2, 3].map(x, x * 10)",
     "[1, 2, 3].map(x, x > 1, x * 10)",
     "[1, 2, 3].filter(x, x > 1)",
@@ -85,7 +87,7 @@ class LoweringSpec extends SparkSpec {
     "[false, true].all(x, x)",
     "[1, 2].map(x, [x, x]).flatten()",
     "state.k.map(x, x)",
-    // strings/json methods through the generic strict-method bridge
+    // strings/json methods through the generic strict-method dispatch
     "'Hello World'.to_lower()",
     "'hello world'.to_title()",
     "'  x  '.trim_space()",
@@ -122,8 +124,7 @@ class LoweringSpec extends SparkSpec {
     "is_error(state.k)",
     "has(state.k)",
     "has(state.nope)",
-    // typed intermediates flow as V objects: bytes/timestamp/duration
-    // literals and producers lower directly (no fused special cases)
+    // typed intermediates: bytes/timestamp/duration literals and producers
     "b\"abc\"",
     "timestamp('2024-01-01T00:00:00Z')",
     "timestamp('2024-01-01T00:00:00Z') + duration('90s')",
@@ -148,7 +149,7 @@ class LoweringSpec extends SparkSpec {
     "'2024-03-05'.parse_time(time_layout.DateOnly).format('RFC3339')",
     "time_layout.RFC1123",
     "state.k.parse_time('RFC3339').format('Kitchen')", // error: target int
-    // fused digest+encode pairs (digestEncode) and bare encodes
+    // digest+encode pairs and bare encodes
     "'hello world'.md5().hex()",
     "'hello world'.sha256().base64()",
     "'hello'.sha1().base64_raw()",
@@ -157,7 +158,7 @@ class LoweringSpec extends SparkSpec {
     "state.k.md5().hex()", // error: digest of an int
     "'hello'.hex()",
     "'hello'.base64()",
-    // fused optional chains (VOps select chains)
+    // optional select chains
     "state.?k.orValue(-1)",
     "state.?missing.orValue('d')",
     "state.?missing.hasValue()",
@@ -172,7 +173,7 @@ class LoweringSpec extends SparkSpec {
     "optional.of(state.k).value()",
     "state.k.orValue(9)",              // orValue on non-optional passes through
     "5.orValue(1 / 0)",                // strict default: error propagates
-    // optMap/optFlatMap parse-time expansions lower through the existing
+    // optMap/optFlatMap parse-time expansions run through the existing
     // as/ternary/optional surface
     "state.?k.optMap(x, x + 1).orValue(-1)",
     "state.?missing.optMap(x, x + 1).orValue(-1)",
@@ -234,36 +235,31 @@ class LoweringSpec extends SparkSpec {
     "duration('1s').getMilliseconds()",
     "timestamp(1500000000 + state.k * 3600).getHours()",
     "state.k.getHours()",              // error: accessor on an int
-    // type() and the type-identifier bindings flow through both tiers
+    // type() and the type-identifier bindings
     "type(state.k) == int",
     "type(state) == map ? 'doc' : 'other'",
     "[1, 'a', true].map(x, type(x))",
     "type(state.k)",
-    // int-keyed maps: typed keys survive keys()/values()/iteration in
-    // BOTH tiers (VOps.items must use typedKeys — numeric order, VInt)
+    // int-keyed maps: typed keys survive keys()/values()/iteration
+    // (typedKeys — numeric order, VInt)
     """{2: "b", 10: "a", 1: "c"}.keys()""",
     """{2: "b", 10: "a"}.values()""",
     """{2: "b", 10: "a", 1: "c"}.map(k, k)""",
     """{1: "a", 2: "b"}.map(k, k > 1, k * 10)""",
     """{1: "a"} == {"1": "a"}""",      // key type is part of map equality
     """{1: "a", 2: "b"}.exists(k, k == 2)""",
-    // duplicate keys are in-band errors in BOTH tiers (Eval.mapFromPairs
-    // is the one shared core: interpreter MapLit, VOps.mapOf, Compile)
+    // duplicate keys are in-band errors (Eval.mapFromPairs)
     """{1: "a", 1: "b"}""",
     """{"a": 1, "a": 2}""",
     """{1: "a", 1u: "b"}""",
     """{1: "a", "1": "b"}""",
     """try({"k": 1, "k": 2})""",
-    // the wide-program bench shape: must stay lowerable so Bench's
-    // auto_wide_chain_state (.get, no fallback) keeps measuring the tier
+    // the wide-program bench shape
     Bench.wideChain)
 
-  // constructs the subset must DECLINE (fall back to the interpreter):
-  // env-dependent (now without a fixed nowMicros, file/dir), side-effecting
-  // (send_to/close, executing HTTP, debug), or non-deterministic (uuid)
-  private val notLowerable = Seq(
-    "now",
-    "now.format('RFC3339')",
+  // calls that read the outside world, change it or draw randomness:
+  // the column must be nondeterministic and never fold
+  private val impure = Seq(
     "uuid()",
     "file('x.txt')",
     "dir('.')",
@@ -272,124 +268,116 @@ class LoweringSpec extends SparkSpec {
     "'ch'.close()",
     "'https://example.com'.get()",
     "{\"URL\": \"https://example.com\"}.do_request()",
-    "state.rate_limit('okta', duration('1m'))")
+    "state.rate_limit('okta', duration('1m'))",
+    "[1, 2].map(x, uuid())",
+    "{'a': 1}.with({'id': uuid()})")
 
-  test("lowered output is byte-identical to the interpreter on events") {
+  /** The analyzed CelEvalExpression of `c` selected over `df`. */
+  private def celExpr(c: Column, df: DataFrame = spark.range(1).toDF()): CelEvalExpression =
+    df.select(c).queryExecution.analyzed.expressions
+      .flatMap(_.collectFirst { case e: CelEvalExpression => e }).head
+
+  /** Rows (props, program output) of one Spark job over `props`. */
+  private def outputs(props: DataFrame, c: Column): Seq[(String, String)] =
+    props.select(col("props"), c.as("out")).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1)))
+
+  test("Cel column equals Cel.evalOnce per row on events") {
     val props = Tables(spark, sf).events.select(col("props")).limit(200).cache()
-    lowerable.foreach { program =>
-      val lowered = Cel.lower(program, col("props"), nowMicros = Some(NOW))
-      assert(lowered.isDefined, s"expected lowerable: $program")
-      val both = props.select(
-        lowered.get.as("low"),
-        Cel(program, col("props"), nowMicros = NOW).as("interp"))
-      val diff = both.filter(col("low") =!= col("interp") ||
-        col("low").isNull =!= col("interp").isNull)
-      val bad = diff.take(1)
-      assert(bad.isEmpty,
-        s"$program diverged: lowered=${bad.headOption.map(_.get(0))} interpreted=${bad.headOption.map(_.get(1))}")
+    corpus.foreach { program =>
+      val rows = outputs(props, Cel(program, col("props"), nowMicros = NOW))
+      assert(rows.size == 200)
+      rows.foreach { case (state, got) =>
+        val want = if (state == null) null else Cel.evalOnce(program, state, NOW)
+        assert(got == want, s"$program on $state: column=$got evalOnce=$want")
+      }
     }
   }
 
-  test("NULL state column: lowered containers null out like the interpreter") {
-    // CreateArray does not propagate element nulls, so listOf/mapOf must
-    // null the whole result themselves — matching the interpreter's
-    // null-in/null-out row behavior (and not crashing renderV)
+  test("NULL state column: every CEL program yields NULL") {
     val df = spark.range(1).select(lit(null).cast("string").as("props"))
     Seq("""{"doc": state}""", "[state]", """[1, state, "x"]""",
-      "state.k", "state",
-      // comprehensions whose body/pred nulls out element-wise under a
-      // NULL state (finish's null guards; a literal target keeps the
-      // comprehension itself alive)
+      "state.k", "state", "'constant'",
       "[1, 2].map(i, state.k + i)",
       "[1, 2].map(i, i > state.k, i)",
       "[1, 2].filter(i, i > state.k)",
       "[1, 2].all(i, i > state.k)",
       "[1, 2].exists(i, i > state.k)",
       "[1, 2].exists_one(i, i > state.k)").foreach { p =>
-      val both = df.select(
-        Cel.lower(p, col("props"), nowMicros = Some(NOW)).get.as("low"),
-        Cel(p, col("props"), nowMicros = NOW).as("interp"))
-      val r = both.take(1).head
-      assert(r.isNullAt(0) && r.isNullAt(1), s"$p: $r")
+      val r = df.select(Cel(p, col("props"), nowMicros = NOW).as("x")).take(1).head
+      assert(r.isNullAt(0), s"$p: $r")
     }
   }
 
-  test("regexp methods lower with a plan-time registry") {
+  test("regexp methods resolve through the column's pattern registry") {
     val re = Map("word" -> "([a-z]+)", "digits" -> "[0-9]+")
     val programs = Seq(
       "'food fight'.re_match('word')",
       "'a1b22c333'.re_find_all('digits')",
       "'food'.re_find_submatch('word')",
       "'food fight'.re_replace_all('word', 'X')",
-      "state.encode_json().re_find('digits')")
+      "state.encode_json().re_find('digits')",
+      "'x'.re_match('nope')") // unknown pattern name: in-band error
     val props = Tables(spark, sf).events.select(col("props")).limit(100)
     programs.foreach { program =>
-      val lowered = Cel.lower(program, col("props"), re)
-      assert(lowered.isDefined, s"expected lowerable: $program")
-      val both = props.select(lowered.get.as("low"),
-        Cel(program, col("props"), re, NOW).as("interp"))
-      assert(both.filter(col("low") =!= col("interp")).take(1).isEmpty, program)
+      outputs(props, Cel(program, col("props"), re, NOW)).foreach { case (state, got) =>
+        assert(got == Cel.evalOnce(program, state, NOW, re), s"$program on $state")
+      }
     }
-    // unknown pattern name -> decline (interpreter reports the error)
-    assert(Cel.lower("'x'.re_match('nope')", col("props"), re).isEmpty)
+    val unknown = spark.range(1).select(
+      Cel("'x'.re_match('nope')", lit("{}"), re, NOW)).head().getString(0)
+    assert(unknown.contains("no regexp pattern: nope"), unknown)
   }
 
-  test("out-of-subset programs decline to lower") {
-    notLowerable.foreach { p =>
-      assert(Cel.lower(p, col("props")).isEmpty, s"must not lower: $p")
+  test("uuid() over a literal state runs per row, not once at plan time") {
+    val us = spark.range(2000).select(Cel("uuid()", lit("{}"), nowMicros = NOW).as("u"))
+      .collect().map(_.getString(0))
+    assert(us.distinct.length == 2000)
+  }
+
+  test("a filter on an impure CEL column keeps only rows that satisfy it") {
+    // pushing the filter below the projection would run uuid() twice per
+    // row: once for the predicate and once for the kept value
+    val kept = spark.range(2000)
+      .select(Cel("uuid()", col("id").cast("string"), nowMicros = NOW).as("u"))
+      .filter(col("u").startsWith("\"a"))
+      .collect().map(_.getString(0))
+    assert(kept.nonEmpty)
+    assert(kept.forall(_.startsWith("\"a")), kept.filterNot(_.startsWith("\"a")).take(3).toSeq)
+  }
+
+  test("purity: impure programs never fold, pure programs over a literal state do") {
+    impure.foreach { p =>
+      val e = celExpr(Cel(p, lit("{}"), nowMicros = NOW))
+      assert(!e.deterministic && !e.foldable, s"must be impure: $p")
     }
+    // `now` is the column's plan-time constant, so it is pure
+    (corpus :+ "now" :+ "now.format('RFC3339')").foreach { p =>
+      val e = celExpr(Cel(p, lit("{}"), nowMicros = NOW))
+      assert(e.deterministic && e.foldable, s"must be pure: $p")
+    }
+    val df = spark.range(3).select(Cel("state.k + 1", lit("""{"k": 1}"""), nowMicros = NOW).as("x"))
+    val plan = df.queryExecution.optimizedPlan
+    assert(!plan.expressions.exists(_.exists(_.isInstanceOf[CelEvalExpression])),
+      s"expected the pure program to fold:\n$plan")
+    assert(plan.expressions.exists(_.exists {
+      case org.apache.spark.sql.catalyst.expressions.Literal(v, _) => String.valueOf(v) == "2"
+      case _ => false
+    }), s"expected the folded Literal:\n$plan")
+    assert(df.collect().map(_.getString(0)).toSeq == Seq("2", "2", "2"))
   }
 
-  test("auto picks the lowered plan for lowerable programs") {
-    val c = Cel.auto("state.k", col("props"), NOW)
-    val plan = Tables(spark, sf).events.select(c.as("x"))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("VOps.select"), s"expected lowered kernel in plan:\n$plan")
-    assert(!plan.contains("CelEval"), "auto should not fall back for state.k")
-  }
-
-  /** Every production program that is SUPPOSED to run the lowered tier:
-    * the Bench auto shapes (Cel.auto — a regression there silently
-    * re-points the benchmark at the interpreter), the lowered-tier
-    * inventory gate queries (q58/q76/q77/q79/q80/q81), and this spec's
-    * own lowerable corpus. */
-  private def tierTable: Seq[(String, String)] =
-    (Bench.autoShapePrograms ++
-      graft.queries.CelFunctions.loweredGatePrograms.toSeq.sortBy(_._1) ++
-      lowerable.zipWithIndex.map { case (p, i) => s"corpus_$i" -> p })
-      .map { case (name, p) =>
-        name -> Cel.tierOf(Cel.auto(p, col("props"), NOW)) }
-
-  test("tier coverage gate: the lowered set cannot silently shrink") {
-    // Cel.auto hides a lowering regression by falling back to the
-    // interpreter with identical output — correctness stays green, the
-    // codegen tier silently stops being tested or benchmarked. This
-    // gate EMITS which tier each production program actually ran and
-    // fails if any expected-lowered program reports "interpreted".
-    val fallen = tierTable.filter(_._2 != "lowered")
-    info(s"${tierTable.size} gate programs, ${fallen.size} interpreted")
-    assert(fallen.isEmpty,
-      s"programs fell back to the interpreter: ${fallen.map(_._1)}")
-  }
-
-  test("a deliberately broken lowering rule trips the coverage gate") {
-    // simulate the failure mode end-to-end: with lowering broken,
-    // Cel.auto still returns a working (interpreter) column — only the
-    // tier gate can notice. It must.
-    graft.cel.Lowering.breakForTest = true
-    try {
-      val table = tierTable
-      assert(table.nonEmpty && table.forall(_._2 == "interpreted"),
-        "breakForTest should force every program onto the interpreter")
-      // and the broken tier still computes the right answer (auto's
-      // fallback is semantics-preserving — that is WHY it is silent)
-      val c = Cel.auto("state.k + 1", col("props"), NOW)
-      assert(Cel.tierOf(c) == "interpreted")
-      val ok = Tables(spark, sf).events.orderBy(col("event_id")).limit(1)
-        .select(c.cast("string").as("x")).head().getString(0)
-      assert(ok.nonEmpty)
-    } finally graft.cel.Lowering.breakForTest = false
-    // gate restored: the same table must be all-lowered again
-    assert(tierTable.forall(_._2 == "lowered"))
+  test("compatibility: Cel.lower is None, tierOf is interpreted, auto is apply") {
+    val props = Tables(spark, sf).events.orderBy(col("event_id")).limit(50)
+    val programs = Seq("state.k", "state.encode_json()", Bench.wideChain)
+    programs.foreach { p =>
+      assert(Cel.lower(p, col("props"), nowMicros = Some(NOW)).isEmpty)
+      val auto = Cel.auto(p, col("props"), NOW)
+      assert(Cel.tierOf(auto) == "interpreted")
+      assert(celExpr(auto, props) == celExpr(Cel(p, col("props"), nowMicros = NOW), props))
+    }
+    val both = props.select(Cel.auto(Bench.wideChain, col("props"), NOW).as("a"),
+      Cel(Bench.wideChain, col("props"), nowMicros = NOW).as("b")).collect()
+    assert(both.forall(r => r.getString(0) == r.getString(1)))
   }
 }

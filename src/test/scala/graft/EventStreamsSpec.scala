@@ -1215,7 +1215,7 @@ class EventStreamsSpec extends SparkSpec {
         "SELECT count(*), count(CASE WHEN low = interp THEN 1 END) FROM cel_stream")
         .as[(Long, Long)].head()
       assert(rows._1 > 0 && rows._1 == rows._2,
-        s"lowered/interpreted diverged on stream: $rows")
+        s"Cel.auto/Cel diverged on stream: $rows")
       val batch = spark.read.parquet(eventsDir)
         .select(graft.cel.Cel.auto(prog, col("props"), NOW).as("low"))
         .orderBy(col("low")).as[String].collect().toSeq

@@ -71,6 +71,26 @@ class HttpExecSpec extends SparkSpec {
     }
   }
 
+  test("get() over a literal state is requested once per row, not once per plan") {
+    withServer { (server, base) =>
+      val hits = new java.util.concurrent.atomic.AtomicInteger(0)
+      server.createContext("/", new HttpHandler {
+        override def handle(x: HttpExchange): Unit = {
+          hits.incrementAndGet()
+          val body = "ok".getBytes(StandardCharsets.UTF_8)
+          x.sendResponseHeaders(200, body.length)
+          x.getResponseBody.write(body); x.close()
+        }
+      })
+      // the Bench net shapes' form: an executing call over lit("null")
+      val got = spark.range(20)
+        .select(Cel(s"string(get('$base/').Body)", lit("null"), nowMicros = NOW))
+        .collect().map(_.getString(0))
+      assert(got.toSeq == Seq.fill(20)("\"ok\""))
+      assert(hits.get() == 20)
+    }
+  }
+
   test("head executes with no body (testdata/head.txt shape)") {
     withServer { (server, base) =>
       val method = new java.util.concurrent.atomic.AtomicReference[String]("")

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Property tests for the dynamic-value algebra: the collections library
   * over CEL values (graft.cel.Collections — the semantics kernel under
-  * the json_* and v_* Column functions and both CEL tiers) and the Go
+  * the json_* and v_* Column functions and CEL programs) and the Go
   * float/key-order/render forms of the JSON codec (JsonAlgebra). */
 class JsonAlgebraPropSpec extends AnyFunSuite {
 

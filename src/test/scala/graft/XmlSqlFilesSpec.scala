@@ -81,18 +81,18 @@ class XmlSqlFilesSpec extends SparkSpec {
     assert(r.getLong(6) == 39L) // x=3 even bits, y=5 odd: 0b100111
   }
 
-  test("cel() runs CEL programs from spark.sql (lowered when possible)") {
+  test("cel() runs CEL programs from spark.sql") {
     GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT cel('{"k10": state.k + 10, "big": state.k > 50}',
-                    '{"k": 69}') AS lowered,
-                cel('state.send_to("sql-ch")', '{"k": 1}') AS interpreted,
+                    '{"k": 69}') AS pure,
+                cel('state.send_to("sql-ch")', '{"k": 1}') AS side_effect,
                 split_after('a,b,c', ',') AS sa,
                 replace_n('x.x.x', 'x', 'y', 2) AS rn,
                 compare_str('a', 'b') AS cmp,
                 duration_go('90s') AS dur""").head()
     assert(r.getString(0) == """{"big":true,"k10":79}""")
-    assert(r.getString(1) == """{"k":1}""") // side-effecting -> interpreter tier
+    assert(r.getString(1) == """{"k":1}""") // side-effecting: not folded
     assert(r.getSeq[String](2) == Seq("a,", "b,", "c"))
     assert(r.getString(3) == "y.y.x")
     assert(r.getInt(4) == -1)
