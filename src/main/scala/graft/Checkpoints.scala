@@ -95,14 +95,18 @@ object Checkpoints {
 
   /** Unpersist the blocks behind a checkpointed df NOW. For iterative
     * loops: call on round n-1's state once round n is materialized
-    * (eager cp) and the convergence check has consumed it. Caller
-    * contract: `df` must be a cp result (or a pure projection of one)
-    * with NO other checkpoint in its plan — releasing a df whose plan
-    * embeds a still-needed shared checkpoint would kill that too. */
+    * (eager cp) and the convergence check has consumed it. `df` must be
+    * a cp result (or a projection of one) whose plan holds exactly one
+    * registered checkpoint; anything else fails here, before any block
+    * is freed — releasing a df whose plan embeds a still-needed shared
+    * checkpoint would kill that too, and a df with none (never
+    * checkpointed, or already released) names nothing to release. */
   def release(df: DataFrame): Unit = {
-    rddsOf(df).foreach { r =>
-      if (active.remove(r)) r.unpersist(blocking = false)
-    }
+    val registered = rddsOf(df).distinct.filter(active.contains)
+    require(registered.size == 1,
+      s"Checkpoints.release needs a plan with exactly one registered checkpoint, " +
+        s"found ${registered.size}")
+    if (active.remove(registered.head)) registered.head.unpersist(blocking = false)
   }
 
   /** Unpersist every checkpoint registered since the last drain. The

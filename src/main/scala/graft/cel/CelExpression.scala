@@ -41,8 +41,8 @@ case class CelEvalExpression(program: String, child: Expression, nowMicros: Long
   override lazy val deterministic: Boolean = pure && child.deterministic
 
   override def nullSafeEval(state: Any): Any =
-    UTF8String.fromString(
-      Eval.renderV(Eval.evalValueInEnv(ast, state.toString, env0)))
+    UTF8String.fromBytes(
+      Eval.renderUtf8(Eval.evalValueInEnv(ast, state.toString, env0)))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,6 +1,5 @@
 package graft.cel
 
-import scala.collection.immutable.VectorMap
 import scala.util.control.NoStackTrace
 
 /** The collections library of the reference (lib/collections.go) over
@@ -8,7 +7,7 @@ import scala.util.control.NoStackTrace
   * flatten, with/with_update/with_replace, zip, keys, values, min and
   * max. CEL programs reach it through `Functions.method2`, and the
   * json_* / v_* Column functions through [[graft.expressions.JsonKernel]]
-  * (parse to V, one op, [[Eval.renderV]]). No operator converts its
+  * (parse to V, one op, [[Eval.renderUtf8]]). No operator converts its
   * document to another value type, so every CEL value (bytes,
   * timestamps, typed map keys, optionals) passes through a collections
   * op unchanged.
@@ -73,8 +72,10 @@ object Collections {
   def dropEmpty(v: V): V = v match {
     case VList(xs) => VList(xs.flatMap(nonEmpty))
     case m: VMap =>
-      val kept = VectorMap.from(m.v.iterator.flatMap { case (k, x) => nonEmpty(x).map(k -> _) })
-      VMap(kept, m.intKeys.filter(kept.contains))
+      val kept = VMap.entryBuilder
+      m.v.foreachEntry { (k, x) => nonEmpty(x).foreach(y => kept += k -> y) }
+      val entries = kept.result()
+      VMap(entries, m.intKeys.filter(entries.contains))
     case other => other
   }
 
@@ -192,10 +193,10 @@ object Collections {
     case (VList(ks), VList(vs)) =>
       if (ks.length != vs.length)
         VErr(s"zip: size(keys) != size(vals): ${ks.length} != ${vs.length}")
-      else VMap(VectorMap.from(ks.lazyZip(vs).map {
+      else VMap.from(ks.lazyZip(vs).map {
         case (VString(k), x) => k -> x
         case (k, x) => renderV(k) -> x
-      }))
+      })
     case _ => VErr("no such overload: zip")
   }
 

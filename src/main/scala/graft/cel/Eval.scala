@@ -1,12 +1,16 @@
 package graft.cel
 
+import com.fasterxml.jackson.core.{JsonEncoding, JsonFactoryBuilder, JsonGenerator}
+import com.fasterxml.jackson.core.json.JsonWriteFeature
+import com.fasterxml.jackson.core.util.ByteArrayBuilder
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import graft.expressions.{CryptoKernel, StringKernel, TimeKernel}
 import graft.values.JsonAlgebra
 import org.apache.spark.unsafe.types.UTF8String
 
-import scala.collection.immutable.VectorMap
+import java.nio.charset.StandardCharsets
+import scala.collection.immutable.TreeMap
 import scala.util.control.NonFatal
 
 /** Tree-walk evaluator for the CEL subset (the text front-end of the
@@ -31,10 +35,14 @@ object Eval {
   final case class VBool(v: Boolean) extends V
   case object VNull extends V
   final case class VList(v: Vector[V]) extends V
-  /** VectorMap is not java-Serializable (scala/scala#12190), but V values
-    * can ride inside serialized closures and task binaries — so VMap
-    * serializes via an entry-vector proxy that rebuilds the VectorMap
-    * on read.
+  /** A CEL map. Entries are kept in Go key order (code-point order,
+    * [[JsonAlgebra.goOrder]]): the order Go's encoding/json marshals a
+    * map in (mito prints every result through it, mito.go:329-356) and
+    * the canonical order keys()/values() and comprehensions surface. So
+    * a render walks the entries once, with no per-render sort and no
+    * second lookup per key. The entry map is a TreeMap whose ordering is
+    * a serializable singleton, so a VMap rides inside serialized
+    * closures and task binaries as it is.
     *
     * `intKeys` marks entries whose CEL key was an int/uint (testdata/
     * keys.txt: `keys({1: "a"})` must return `[1, 2]`, not strings).
@@ -47,8 +55,7 @@ object Eval {
     * as the JSON value universe requires; the collections ops work on V
     * and keep the tag ([[Collections]]). Not a case class: the arity-1
     * unapply keeps the tag out of the 60+ existing match sites. */
-  final class VMap(val v: VectorMap[String, V], val intKeys: Set[String]) extends V {
-    protected def writeReplace(): Object = new VMapProxy(v.toVector, intKeys)
+  final class VMap(val v: TreeMap[String, V], val intKeys: Set[String]) extends V {
     override def equals(o: Any): Boolean = o match {
       case m: VMap => m.v == v && m.intKeys == intKeys
       case _ => false
@@ -58,14 +65,17 @@ object Eval {
     override def toString: String = s"VMap($v)"
   }
   object VMap {
-    def apply(v: VectorMap[String, V]): VMap = new VMap(v, Set.empty)
-    def apply(v: VectorMap[String, V], intKeys: Set[String]): VMap =
+    /** No entries, in Go key order: every map's entries grow from here. */
+    val noEntries: TreeMap[String, V] = TreeMap.empty(JsonAlgebra.goOrder)
+    def entryBuilder: scala.collection.mutable.Builder[(String, V), TreeMap[String, V]] =
+      TreeMap.newBuilder(JsonAlgebra.goOrder)
+    def apply(v: TreeMap[String, V]): VMap = new VMap(v, Set.empty)
+    def apply(v: TreeMap[String, V], intKeys: Set[String]): VMap =
       new VMap(v, intKeys)
-    def unapply(m: VMap): Option[VectorMap[String, V]] = Some(m.v)
-  }
-  private final class VMapProxy(entries: Vector[(String, V)],
-      intKeys: Set[String]) extends Serializable {
-    protected def readResolve(): Object = VMap(VectorMap.from(entries), intKeys)
+    /** A string-keyed map; a repeated key keeps its last value. */
+    def of(kvs: (String, V)*): VMap = from(kvs)
+    def from(kvs: IterableOnce[(String, V)]): VMap = new VMap(noEntries ++ kvs, Set.empty)
+    def unapply(m: VMap): Option[TreeMap[String, V]] = Some(m.v)
   }
   final case class VTimestamp(micros: Long) extends V
   final case class VDuration(micros: Long) extends V
@@ -125,9 +135,9 @@ object Eval {
       n.elements().forEachRemaining(e => b += fromJson(e))
       VList(b.result())
     } else {
-      var m = VectorMap.empty[String, V]
-      n.properties().forEach(e => m = m.updated(e.getKey, fromJson(e.getValue)))
-      VMap(m)
+      val b = VMap.entryBuilder
+      n.properties().forEach(e => b += e.getKey -> fromJson(e.getValue))
+      VMap(b.result())
     }
 
   private val nf = JsonNodeFactory.instance
@@ -167,7 +177,10 @@ object Eval {
     case VErr(msg) => JsonAlgebra.error(msg)
   }
 
-  private val jsonF = new com.fasterxml.jackson.core.JsonFactory()
+  // a surrogate pair renders as one 4-byte UTF-8 sequence, not as two
+  // escaped UTF-16 units (Jackson's UTF-8 generator default)
+  private val jsonF = new JsonFactoryBuilder()
+    .enable(JsonWriteFeature.COMBINE_UNICODE_SURROGATES_IN_UTF8).build()
 
   /** JSON text -> V through a streaming parser — the leaf-side mirror of
     * [[renderV]]: no JsonNode tree is built and re-walked. Number/shape
@@ -202,13 +215,14 @@ object Eval {
         while (p.nextToken() != END_ARRAY) b += readV(p)
         VList(b.result())
       case START_OBJECT =>
-        var m = VectorMap.empty[String, V]
+        // a repeated key keeps its last value, like Go's json.Unmarshal
+        val b = VMap.entryBuilder
         while (p.nextToken() != END_OBJECT) {
           val k = p.currentName()
           p.nextToken()
-          m = m.updated(k, readV(p))
+          b += k -> readV(p)
         }
-        VMap(m)
+        VMap(b.result())
       case other => VErr(s"failed to parse JSON: unexpected token $other")
     }
   }
@@ -227,62 +241,103 @@ object Eval {
     case ok => ok
   }
 
-  /** Direct V -> Go-rendered JSON: streams through a JsonGenerator with
-    * object keys sorted at write time. Render-identical to
+  /** V -> Go-rendered JSON text, as UTF-8 bytes: one pass through
+    * Jackson's UTF-8 generator, each map's entries written in their
+    * stored Go key order. Render-identical to
     * `JsonAlgebra.render(toJson(v))` (the goldens + oracle rows pin
-    * this), but skips building a JsonNode tree, deep-copy-sorting it,
-    * and re-walking it — the per-row render cost of every CEL column. */
-  def renderV(value: V): String = {
-    // One-entry per-thread IDENTITY memo (r16): a program that
-    // references `state.encode_json()` k times renders the SAME
-    // immutable V object k times per row — wide_chain does it 5x —
-    // because the interpreter re-walks each AST occurrence. V values
-    // are immutable and the render is deterministic, so an `eq` hit
-    // returns the cached string; the memo never survives the row (the
-    // next different V overwrites it).
-    val slot = lastRender.get()
-    if (slot(0).asInstanceOf[AnyRef] eq value)
-      return slot(1).asInstanceOf[String]
-    val w = new java.io.StringWriter(64)
-    val g = jsonF.createGenerator(w)
-    def write(x: V): Unit = x match {
-      case VNull => g.writeNull()
-      case VBool(b) => g.writeBoolean(b)
-      case VInt(i) => g.writeNumber(i)
-      case VUint(i) => g.writeNumber(i)
-      case VDouble(d) =>
-        if (wholeDouble(d)) g.writeNumber(d.toLong)
-        else g.writeNumber(JsonAlgebra.goFloat(d))
-      case VString(s) => g.writeString(s)
-      case VBytes(b) => g.writeString(java.util.Base64.getEncoder.encodeToString(b))
-      case VTimestamp(us) =>
-        g.writeString(TimeKernel.formatTime(us, rfc3339).toString)
-      case VDuration(us) => g.writeString(trimDur(us))
-      case VList(xs) => g.writeStartArray(); xs.foreach(write); g.writeEndArray()
-      case m: VMap =>
-        g.writeStartObject()
-        if (m.v.size <= 1) m.v.foreach { case (k, e) => g.writeFieldName(k); write(e) }
-        else m.v.keys.toArray.sorted(JsonAlgebra.goOrder)
-          .foreach { k => g.writeFieldName(k); write(m.v(k)) }
-        g.writeEndObject()
-      case VOpt(Some(x2)) => write(x2)
-      case VOpt(None) => g.writeNull()
-      case VType(n) => g.writeString(n) // see toJson's divergence note
-      case VErr(msg) =>
-        g.writeStartObject()
-        g.writeStringField(JsonAlgebra.ErrorKey, msg)
-        g.writeEndObject()
-    }
-    write(value)
+    * this), with no JsonNode tree, no per-map key sort and no
+    * String-to-UTF-8 re-encode: the per-row render of every CEL column
+    * and json_* kernel hands these bytes to Spark as they are.
+    *
+    * One-entry per-thread IDENTITY memo: a program that references
+    * `state.encode_json()` k times renders the SAME immutable V object
+    * k times per row — wide_chain does it 5x — because the interpreter
+    * re-walks each AST occurrence. V values are immutable and the
+    * render is deterministic, so an `eq` hit returns the cached result;
+    * the memo never survives the row (the next different V overwrites
+    * it). */
+  def renderUtf8(value: V): Array[Byte] = {
+    val memo = lastRender.get()
+    if (memo.value eq value) return memo.bytes
+    val sink = memo.sink
+    sink.reset()
+    val g = jsonF.createGenerator(sink, JsonEncoding.UTF8)
+    writeV(g, value)
     g.close()
-    val s = w.toString
-    slot(0) = value
-    slot(1) = s
+    val bytes = sink.toByteArray
+    memo.value = value
+    memo.bytes = bytes
+    memo.text = null
+    bytes
+  }
+
+  /** [[renderUtf8]] decoded to a String (encode_json, send_to, the CLI):
+    * the same bytes, so both forms of a render always agree. */
+  def renderV(value: V): String = {
+    val memo = lastRender.get()
+    if ((memo.value eq value) && memo.text != null) return memo.text
+    val text = new String(renderUtf8(value), StandardCharsets.UTF_8)
+    memo.text = text
+    text
+  }
+
+  private def writeV(g: JsonGenerator, x: V): Unit = x match {
+    case VNull => g.writeNull()
+    case VBool(b) => g.writeBoolean(b)
+    case VInt(i) => g.writeNumber(i)
+    case VUint(i) => g.writeNumber(i)
+    case VDouble(d) =>
+      if (wholeDouble(d)) g.writeNumber(d.toLong)
+      else g.writeNumber(JsonAlgebra.goFloat(d))
+    case VString(s) => g.writeString(wellFormed(s))
+    case VBytes(b) => g.writeString(java.util.Base64.getEncoder.encodeToString(b))
+    case VTimestamp(us) =>
+      g.writeString(TimeKernel.formatTime(us, rfc3339).toString)
+    case VDuration(us) => g.writeString(trimDur(us))
+    case VList(xs) =>
+      g.writeStartArray()
+      xs.foreach(writeV(g, _))
+      g.writeEndArray()
+    case VMap(m) =>
+      g.writeStartObject()
+      m.foreachEntry { (k, e) => g.writeFieldName(wellFormed(k)); writeV(g, e) }
+      g.writeEndObject()
+    case VOpt(Some(x2)) => writeV(g, x2)
+    case VOpt(None) => g.writeNull()
+    case VType(n) => g.writeString(n) // see toJson's divergence note
+    case VErr(msg) =>
+      g.writeStartObject()
+      g.writeStringField(JsonAlgebra.ErrorKey, wellFormed(msg))
+      g.writeEndObject()
+  }
+
+  /** A lone surrogate (reachable only through an escaped UTF-16 unit
+    * in parsed JSON) renders as `?`, as Java's UTF-8 encoder writes it;
+    * Jackson's UTF-8 generator would escape it instead. Well-formed
+    * text, the only kind in practice, is returned as it is. */
+  private def wellFormed(s: String): String = {
+    var i = 0
+    val n = s.length
+    while (i < n) {
+      val c = s.charAt(i)
+      if (!Character.isSurrogate(c)) i += 1
+      else if (Character.isHighSurrogate(c) && i + 1 < n &&
+          Character.isLowSurrogate(s.charAt(i + 1))) i += 2
+      else return new String(s.getBytes(StandardCharsets.UTF_8), StandardCharsets.UTF_8)
+    }
     s
   }
 
-  private val lastRender = new ThreadLocal[Array[Object]] {
-    override def initialValue(): Array[Object] = new Array[Object](2)
+  /** Per-thread render state: the identity memo and a reusable sink. */
+  private final class RenderMemo {
+    var value: V = null
+    var bytes: Array[Byte] = null
+    var text: String = null
+    val sink = new ByteArrayBuilder(256)
+  }
+
+  private val lastRender = new ThreadLocal[RenderMemo] {
+    override def initialValue(): RenderMemo = new RenderMemo
   }
 
   private def trimDur(us: Long): String = {
@@ -397,8 +452,8 @@ object Eval {
 
   /** The `time_layout` global (17 named Go layouts) — one shared value,
     * not rebuilt per evaluation. */
-  private val timeLayoutV: V = VMap(VectorMap.from(
-    TimeKernel.namedLayouts.toSeq.sortBy(_._1).map { case (k, l) => k -> (VString(l): V) }))
+  private val timeLayoutV: V = VMap.from(
+    TimeKernel.namedLayouts.iterator.map { case (k, l) => k -> (VString(l): V) })
 
   /** Everything about the environment except the per-row `state`
     * binding: globals parse, `now`, `time_layout`. Built ONCE per query
@@ -604,7 +659,7 @@ object Eval {
     *   both to one numeric key space ({1:v} == {1u:v} by CEL numeric
     *   equality — the same choice typedKeys/equalsV make). */
   private def mapFromPairs(pairs: Vector[(V, V)]): V = {
-    var m = VectorMap.empty[String, V]
+    var m = VMap.noEntries
     var intKeys = Set.empty[String]
     // uints >= 2^63: string-surfaced but numeric — local tag so a
     // same-rendering string key still collides loudly
@@ -648,13 +703,13 @@ object Eval {
   /** Canonical-order typed keys of a map (storage key -> surfaced V):
     * an all-int-keyed map sorts numerically and surfaces VInt keys
     * (reference testdata/keys.txt wants `keys({1:"a",2:"b"}) == [1,2]`);
-    * anything else keeps the engine's sorted-string order, with tagged
+    * anything else keeps the entries' own Go key order, with tagged
     * keys still surfacing as ints. */
   def typedKeys(m: VMap): Vector[(String, V)] = {
     val ks = m.v.keys.toVector
     val sorted =
-      if (ks.nonEmpty && ks.forall(m.intKeys)) ks.sortBy(_.toLong)
-      else ks.sorted(JsonAlgebra.goOrder)
+      if (m.intKeys.nonEmpty && ks.forall(m.intKeys)) ks.sortBy(_.toLong)
+      else ks
     sorted.map(k => k -> (if (m.intKeys(k)) VInt(k.toLong) else VString(k): V))
   }
 
@@ -669,9 +724,11 @@ object Eval {
     case (VList(xs), VList(ys)) =>
       xs.length == ys.length && xs.zip(ys).forall { case (x, y) => equalsV(x, y) }
     case (m1: VMap, m2: VMap) =>
-      // key TYPE is part of CEL map equality: {1:"a"} != {"1":"a"}
-      m1.intKeys == m2.intKeys && m1.v.keySet == m2.v.keySet &&
-        m1.v.forall { case (k, v) => equalsV(v, m2.v(k)) }
+      // key TYPE is part of CEL map equality: {1:"a"} != {"1":"a"};
+      // both entry maps are in key order, so one zipped walk compares them
+      m1.intKeys == m2.intKeys && m1.v.size == m2.v.size &&
+        m1.v.iterator.zip(m2.v.iterator).forall { case ((k1, v1), (k2, v2)) =>
+          k1 == k2 && equalsV(v1, v2) }
     case (VBytes(x), VBytes(y)) => java.util.Arrays.equals(x, y)
     case _ => numPair(a, b) match {
       case Some((x, y)) => x == y

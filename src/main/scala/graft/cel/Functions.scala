@@ -5,7 +5,7 @@ import graft.values.JsonAlgebra
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.charset.StandardCharsets
-import scala.collection.immutable.VectorMap
+import scala.collection.immutable.TreeMap
 import scala.jdk.CollectionConverters._
 
 /** Function/method bindings for the CEL front-end: CEL core conversions
@@ -41,7 +41,7 @@ private[cel] object Functions {
       val v = Eval.eval(args(0), env)
       (v, args.lift(1).map(Eval.eval(_, env))) match {
         case (VErr(m), None) => VString(m)
-        case (VErr(m), Some(VString(label))) => VMap(VectorMap(label -> VString(m)))
+        case (VErr(m), Some(VString(label))) => VMap.of(label -> VString(m))
         case (ok, _) => ok
       }
     case "is_error" => VBool(Eval.eval(args(0), env).isInstanceOf[VErr])
@@ -482,7 +482,7 @@ private[cel] object Functions {
           s"$user:$pass".getBytes(StandardCharsets.UTF_8))
         val hdr = m.get("Header") match {
           case Some(VMap(h)) => h
-          case _ => VectorMap.empty[String, V]
+          case _ => VMap.noEntries
         }
         VMap(m + ("Header" -> VMap(hdr +
           ("Authorization" -> VList(Vector(VString("Basic " + tok)))))))
@@ -726,11 +726,11 @@ private[cel] object Functions {
           val attrs = java.nio.file.Files.readAttributes(f,
             classOf[java.nio.file.attribute.BasicFileAttributes])
           val mt = attrs.lastModifiedTime().toInstant
-          VMap(VectorMap[String, V](
+          VMap.of(
             "is_dir" -> VBool(attrs.isDirectory),
             "mod_time" -> VString(mt.toString),
             "name" -> VString(f.getFileName.toString),
-            "size" -> VInt(attrs.size())))
+            "size" -> VInt(attrs.size()))
         })
       } catch { case e: Exception => VErr(s"failed to read dir: ${e.getMessage}") }
   }
@@ -751,9 +751,9 @@ private[cel] object Functions {
       else {
         val h = rows.head
         VList(rows.tail.toVector.map(rec =>
-          VMap(VectorMap.from(h.zip(rec.padTo(h.length, "")).map {
+          VMap.from(h.zip(rec.padTo(h.length, "")).map {
             case (k, v) => k -> (VString(v): V)
-          }))))
+          })))
       }
     case "text/csv; header=absent" =>
       VList(graft.expressions.MimeKernel
@@ -797,17 +797,17 @@ private[cel] object Functions {
     val fragment = row.getUTF8String(8).toString
     val user: V =
       if (username.isEmpty && !passwordSet) VNull
-      else VMap(VectorMap("Username" -> VString(username),
-        "Password" -> VString(password), "PasswordSet" -> VBool(passwordSet)))
-    VMap(VectorMap(
+      else VMap.of("Username" -> VString(username),
+        "Password" -> VString(password), "PasswordSet" -> VBool(passwordSet))
+    VMap.of(
       "Scheme" -> VString(scheme), "Opaque" -> VString(opaque),
       "User" -> user, "Host" -> VString(host), "Path" -> VString(path),
       "RawPath" -> VString(""), "ForceQuery" -> VBool(false),
       "RawQuery" -> VString(rawQuery), "Fragment" -> VString(fragment),
-      "RawFragment" -> VString("")))
+      "RawFragment" -> VString(""))
   }
 
-  def formatUrlV(m: VectorMap[String, V]): V = {
+  def formatUrlV(m: TreeMap[String, V]): V = {
     def str(k: String) = m.get(k) match { case Some(VString(s)) => s; case _ => "" }
     val sb = new StringBuilder
     if (str("Scheme").nonEmpty) sb.append(str("Scheme")).append(':')
@@ -833,7 +833,7 @@ private[cel] object Functions {
   }
 
   def parseQueryV(q: String): V = {
-    var m = VectorMap.empty[String, V]
+    var m = VMap.noEntries
     q.split('&').filter(_.nonEmpty).foreach { p =>
       val i = p.indexOf('=')
       val (k, v) = if (i < 0) (p, "") else (p.substring(0, i), p.substring(i + 1))
@@ -847,9 +847,9 @@ private[cel] object Functions {
     VMap(m)
   }
 
-  def formatQueryV(m: VectorMap[String, V]): V = {
+  def formatQueryV(m: TreeMap[String, V]): V = {
     val sb = new StringBuilder
-    m.toSeq.sortBy(_._1)(JsonAlgebra.goOrder).foreach { case (k, vs) =>
+    m.foreachEntry { (k, vs) =>
       val vals = vs match {
         case VList(xs) => xs.collect { case VString(s) => s }
         case VString(s) => Vector(s)
@@ -881,7 +881,7 @@ private[cel] object Functions {
     }
 
   private def limitRowToV(r: org.apache.spark.sql.catalyst.InternalRow): V = {
-    var m = VectorMap.empty[String, V]
+    var m = VMap.noEntries
     if (!r.isNullAt(2)) m = m.updated("burst", VInt(r.getLong(2)))
     if (!r.isNullAt(5)) m = m.updated("error", VString(r.getUTF8String(5).toString))
     if (!r.isNullAt(4)) m = m.updated("headers", VString(r.getUTF8String(4).toString))
@@ -920,9 +920,9 @@ private[cel] object Functions {
   }
 
   private def headerV(h: Map[String, Seq[String]]): V =
-    VMap(VectorMap.from(h.toSeq.sortBy(_._1)(JsonAlgebra.goOrder).map { case (k, vs) =>
+    VMap.from(h.iterator.map { case (k, vs) =>
       k -> (VList(vs.toVector.map(VString(_): V)): V)
-    }))
+    })
 
   /** Go reqToMap shape (http.go:713-746): the request as data. Body keeps
     * the caller's value type (string stays a string in the render, like
@@ -937,10 +937,10 @@ private[cel] object Functions {
       }
     }
     val header: V = contentType match {
-      case Some(ct) => VMap(VectorMap("Content-Type" -> (VList(Vector(VString(ct))): V)))
-      case None => VMap(VectorMap.empty[String, V])
+      case Some(ct) => VMap.of("Content-Type" -> VList(Vector(VString(ct))))
+      case None => VMap(VMap.noEntries)
     }
-    val base = VectorMap[String, V](
+    val base = VMap.noEntries ++ Seq[(String, V)](
       "Close" -> VBool(false),
       "ContentLength" -> VInt(len),
       "Header" -> header,
@@ -957,7 +957,7 @@ private[cel] object Functions {
   }
 
   private def respToV(r: graft.sources.HttpExec.Resp): V = {
-    val reqEcho = VMap(VectorMap[String, V](
+    val reqEcho = VMap.of(
       "Close" -> VBool(false),
       "ContentLength" -> VInt(r.reqContentLength),
       "Header" -> headerV(r.reqHeader),
@@ -966,8 +966,8 @@ private[cel] object Functions {
       "Proto" -> VString("HTTP/1.1"),
       "ProtoMajor" -> VInt(1),
       "ProtoMinor" -> VInt(1),
-      "URL" -> VString(r.reqUrl)))
-    VMap(VectorMap[String, V](
+      "URL" -> VString(r.reqUrl))
+    VMap.of(
       "Body" -> VBytes(r.body),
       "Close" -> VBool(false),
       "ContentLength" -> VInt(r.contentLength),
@@ -978,7 +978,7 @@ private[cel] object Functions {
       "Request" -> reqEcho,
       "Status" -> VString(r.status),
       "StatusCode" -> VInt(r.statusCode),
-      "Uncompressed" -> VBool(r.uncompressed)))
+      "Uncompressed" -> VBool(r.uncompressed))
   }
 
   private def execHttpV(method: String, url: String,
@@ -1014,7 +1014,7 @@ private[cel] object Functions {
     Map("Authorization" -> Seq("Basic " + java.util.Base64.getEncoder.encodeToString(
       s"$user:$pass".getBytes(StandardCharsets.UTF_8))))
 
-  private def doRequestV(m: VectorMap[String, V]): V = {
+  private def doRequestV(m: TreeMap[String, V]): V = {
     val url = m.get("URL") match {
       case Some(VString(s)) => s
       case _ => return VErr("no such overload for do_request")

@@ -6,8 +6,6 @@ import graft.values.JsonAlgebra
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-import scala.collection.immutable.VectorMap
-
 /** JVM kernel for the dynamic-document (JSON) operator tier: the json_*
   * functions, and the v_* functions after builtin `to_json`.
   *
@@ -19,13 +17,14 @@ import scala.collection.immutable.VectorMap
   * value ([[Eval.stateLeafV]], so an in-band `{"__error__": msg}`
   * document is an error value and propagates unchanged), the shared
   * operator ([[graft.cel.Collections]]), one Go-faithful render
-  * ([[Eval.renderV]]). All methods are total: CEL error values
+  * ([[Eval.renderUtf8]], whose bytes become the result UTF8String as
+  * they are). All methods are total: CEL error values
   * (reference lib/errors.go) are returned in-band, never thrown, so the
   * CEL error-absorption semantics survive distribution.
   */
 object JsonKernel {
   private def doc(u: UTF8String): V = Eval.stateLeafV(u.toString)
-  private def out(v: V): UTF8String = UTF8String.fromString(Eval.renderV(v))
+  private def out(v: V): UTF8String = UTF8String.fromBytes(Eval.renderUtf8(v))
 
   private def op1(json: UTF8String)(f: V => V): UTF8String = doc(json) match {
     case e: VErr => out(e)
@@ -96,7 +95,7 @@ object JsonKernel {
 
   /** CEL try(e, label): weaken an error value to {label: msg}. */
   def tryWeakenLabeled(json: UTF8String, label: UTF8String): UTF8String = doc(json) match {
-    case VErr(m) => out(VMap(VectorMap(label.toString -> VString(m))))
+    case VErr(m) => out(VMap.of(label.toString -> VString(m)))
     case x => out(x)
   }
 

@@ -219,8 +219,12 @@ object Quantile {
     * lexicographic, `rank > cum_d  <=>  (value, id) > boundary_d`, so
     * the bucket equals `ntileOf(rank, n, k)` of [[ranked]] EXACTLY —
     * with one extra precondition: `id` must be UNIQUE within its group
-    * (duplicate (value, id) rows would tie across a boundary; every
-    * caller keys by user_id/doc_id after a rollup). Replaces the
+    * (every caller keys by user_id/doc_id after a rollup). It is not
+    * checked at run time. When it breaks, every copy of a duplicate
+    * (value, id) pair that sits on a boundary lands in the lower bucket,
+    * so bucket sizes differ from ANSI ntile's; OperatorLawSpec "quantile
+    * ntiled with duplicate (value, id) pairs across a boundary" pins
+    * that behaviour. Replaces the
     * full-input window sort with a bounded boundary pick + a map-only
     * broadcast compare. Output: all input columns + `bucketCol`
     * (LONG in 1..k). */

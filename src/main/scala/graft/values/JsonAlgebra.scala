@@ -1,5 +1,6 @@
 package graft.values
 
+import com.fasterxml.jackson.core.io.NumberOutput
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNode, TextNode}
 
@@ -40,10 +41,30 @@ object JsonAlgebra {
   /** Go string order = byte order of the UTF-8 encoding = code-point
     * order. Java's String.compareTo compares UTF-16 units, which ranks
     * U+E000..U+FFFF ABOVE supplementary characters (their surrogates
-    * start at 0xD800) — the opposite of Go. Every key sort (render,
-    * keys(), values(), format_query) shares this ordering. */
-  val goOrder: Ordering[String] = new Ordering[String] {
+    * start at 0xD800) — the opposite of Go. Every key order (CEL map
+    * entries, the tree render, keys(), values(), format_query) shares
+    * this ordering. A serializable singleton, so ordered maps keep it
+    * across Java serialization. */
+  val goOrder: Ordering[String] = GoOrder
+
+  private object GoOrder extends Ordering[String] {
+    /** Compares UTF-16 units up to the first difference, which is
+      * code-point order unless a surrogate is involved; only then does
+      * it compare by code points. */
     def compare(a: String, b: String): Int = {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n) {
+        val ca = a.charAt(i); val cb = b.charAt(i)
+        if (ca != cb)
+          return if (Character.isSurrogate(ca) || Character.isSurrogate(cb)) byCodePoint(a, b)
+                 else ca - cb
+        i += 1
+      }
+      a.length - b.length
+    }
+
+    private def byCodePoint(a: String, b: String): Int = {
       var i = 0; var j = 0
       while (i < a.length && j < b.length) {
         val ca = a.codePointAt(i); val cb = b.codePointAt(j)
@@ -55,15 +76,17 @@ object JsonAlgebra {
   }
 
   /** Go `encoding/json` float form for NON-whole doubles (whole ones
-    * collapse via [[wholeDouble]] first): shortest digits; plain
-    * decimal for 1e-6 <= |d| < 1e21, else e-notation with lowercase
-    * `e`, explicit `+`, and no zero-padded exponent (Go's floatEncoder
-    * turns strconv's `e-08` into `e-8`). Java's Double.toString has the
-    * same shortest-digits guarantee but different notation boundaries,
-    * so this converts rather than reformats — digits are never touched. */
+    * collapse via [[wholeDouble]] first): shortest round-trip digits
+    * (Go's strconv 'g' with precision -1); plain decimal for
+    * 1e-6 <= |d| < 1e21, else e-notation with lowercase `e`, explicit
+    * `+`, and no zero-padded exponent (Go's floatEncoder turns
+    * strconv's `e-08` into `e-8`). The digits come from Jackson's
+    * Schubfach writer: JDK 17's Double.toString is not always shortest
+    * (2e23 prints as 1.9999999999999998E23, JDK-4511638); its layout is
+    * the same, and this converts the layout, never the digits. */
   def goFloat(d: Double): String =
     if (d.isNaN || d.isInfinite) "\"" + d + "\"" // Jackson's quoted non-numeric form
-    else goForm(java.lang.Double.toString(d), {
+    else goForm(NumberOutput.toString(d, true), {
       val abs = math.abs(d); abs >= 1e-6 && abs < 1e21
     })
 

@@ -25,6 +25,14 @@ class CelSpec extends SparkSpec {
     assert(run("[1,2] + [3]") == "[1,2,3]")
   }
 
+  test("doubles render with Go's shortest round-trip digits") {
+    // Go's encoding/json prints the shortest digits that parse back to
+    // the same float64; JDK 17's Double.toString does not always find
+    // them (2e23 -> 1.9999999999999998E23)
+    assert(run("[2e23, 1e23, 8.41e21, 282879384806159000.0]", "{}") ==
+      "[2e+23,1e+23,8.41e+21,282879384806159000]")
+  }
+
   test("eval errors carry source spans (DecoratedError, lib/errors.go:28-52)") {
     // error originates at the '/' node: offset 6 -> 1:7, caret under it
     assert(Cel.evalDecorated("1 + 2 / (3 - 3)", "null", NOW) == Left(
@@ -166,8 +174,7 @@ class CelSpec extends SparkSpec {
 
   test("VMap intKeys tag survives java serialization (task-binary literals)") {
     import graft.cel.Eval.{VMap, VString, V}
-    import scala.collection.immutable.VectorMap
-    val tagged = VMap(VectorMap("1" -> (VString("a"): V), "x" -> (VString("b"): V)), Set("1"))
+    val tagged = VMap(VMap.noEntries ++ Seq("1" -> (VString("a"): V), "x" -> (VString("b"): V)), Set("1"))
     val bos = new java.io.ByteArrayOutputStream()
     new java.io.ObjectOutputStream(bos).writeObject(tagged)
     val back = new java.io.ObjectInputStream(

@@ -94,4 +94,20 @@ class CheckpointsSpec extends SparkSpec {
     while (anyBlockLeft && System.nanoTime() < deadline) Thread.sleep(50)
     assert(!anyBlockLeft, "RDD blocks survived releaseAll")
   }
+
+  test("release of a plan with two checkpoints fails at the call and frees nothing") {
+    Checkpoints.releaseAll()
+    val before = cachedRddIds
+    val a = Checkpoints.cp(spark.range(0, 100).toDF("x"))
+    val b = Checkpoints.cp(spark.range(0, 100).toDF("x").withColumn("y", col("x") * 2))
+    val held = cachedRddIds -- before
+    val e = intercept[IllegalArgumentException](Checkpoints.release(a.join(b, "x")))
+    assert(e.getMessage.contains("exactly one registered checkpoint, found 2"))
+    assert(cachedRddIds -- before == held, "a refused release freed blocks")
+    // each side alone is one checkpoint: released once, then refused
+    Checkpoints.release(a.select(col("x") + 1))
+    intercept[IllegalArgumentException](Checkpoints.release(a))
+    Checkpoints.release(b)
+    assert((cachedRddIds -- before).isEmpty)
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.cel.Collections
-import graft.cel.Eval.{parseV, renderV, V, VErr, VList, VMap, VString}
+import graft.cel.Eval.{parseV, renderV, V, VErr, VList, VMap, VNull, VString}
 import graft.values.JsonAlgebra._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
@@ -66,6 +66,12 @@ class JsonAlgebraPropSpec extends AnyFunSuite {
     // trailing zero ("1.0E-4" -> "0.0001", not "0.00010")
     assert(goFloat(1e-4) == "0.0001")
     assert(goFloat(2e-5) == "0.00002")
+    // shortest round-trip digits, which JDK 17's Double.toString misses
+    // (JDK-4511638): Go prints these as below
+    assert(goFloat(2e23) == "2e+23")
+    assert(goFloat(1e23) == "1e+23")
+    assert(goFloat(8.41e21) == "8.41e+21")
+    assert(goFloat(282879384806159000.0) == "282879384806159000")
     // non-finite doubles keep the quoted (parseable) form
     assert(goFloat(Double.PositiveInfinity) == "\"Infinity\"")
     assert(goFloat(Double.NaN) == "\"NaN\"")
@@ -180,6 +186,140 @@ class JsonAlgebraPropSpec extends AnyFunSuite {
     check(genJson(3)) { doc =>
       val direct = graft.cel.Eval.renderV(graft.cel.Eval.parseV(doc))
       assert(direct == render(parse(doc)), s"normal forms diverged on $doc")
+    }
+  }
+
+  // --- the CEL map core: entries in Go key order (Eval.VMap) ---------
+
+  private val E = graft.cel.Eval
+
+  test("duplicate JSON keys: the last one wins") {
+    val doc = """{"b":1,"a":2,"b":3}"""
+    assert(renderV(parseV(doc)) == """{"a":2,"b":3}""")
+    assert(renderV(E.fromJson(parse(doc))) == """{"a":2,"b":3}""")
+    assert(graft.cel.Cel.evalOnce("state.b", doc) == "3")
+    assert(graft.cel.Cel.evalOnce("state.keys()", doc) == """["a","b"]""")
+  }
+
+  /** Text mixing ASCII, other BMP text, U+E000..U+FFFF, supplementary
+    * characters and lone surrogates: the cases where UTF-16 unit order
+    * and code-point order part. */
+  private val genText: Gen[String] = {
+    val cp: Gen[Int] = Gen.frequency(
+      4 -> Gen.choose(0x20, 0x7e),
+      2 -> Gen.choose(0x80, 0xd7ff),
+      3 -> Gen.choose(0xe000, 0xffff),
+      3 -> Gen.choose(0x10000, 0x10ffff),
+      1 -> Gen.choose(0xd800, 0xdfff))
+    Gen.choose(0, 6).flatMap(n => Gen.listOfN(n, cp))
+      .map(cps => cps.map(c => new String(Character.toChars(c))).mkString)
+  }
+
+  test("goOrder equals code-point order on random strings") {
+    def ref(a: String, b: String): Int =
+      java.util.Arrays.compare(a.codePoints().toArray, b.codePoints().toArray)
+    // a shared prefix makes the first difference land past index 0
+    check2(genText, genText) { (a, b) =>
+      for ((x, y) <- Seq((a, b), (a + b, a + a), (b + a, b)))
+        assert(goOrder.compare(x, y).sign == ref(x, y).sign, s"'$x' vs '$y'")
+    }
+    val pua = "\uE000"
+    val clef = new String(Character.toChars(0x1D11E))
+    assert(goOrder.compare(pua, clef) < 0 && goOrder.compare(clef, pua) > 0)
+    assert(goOrder.compare("a" + pua, "a" + clef) < 0)
+  }
+
+  test("the int-key tag survives with, drop, drop_empty and keys()") {
+    def run(p: String) = graft.cel.Cel.evalOnce(p, "null")
+    // numeric key order (1, 2, 10), not string order ("1", "10", "2")
+    assert(run("{10: 'x', 2: 'b', 1: 'a'}.keys()") == "[1,2,10]")
+    assert(run("{10: 'x', 1: 'a'}.with({2: 'b'}).keys()") == "[1,2,10]")
+    assert(run("{10: 'x', 2: 'b', 1: 'a'}.drop('2').keys()") == "[1,10]")
+    assert(run("{10: 'x', 2: [], 1: 'a'}.drop_empty().keys()") == "[1,10]")
+    assert(run("{10: 'x', 1: 'a'}.with({2: 'b'}) == {1: 'a', 2: 'b', 10: 'x'}") == "true")
+    assert(run("{10: 'x', 1: 'a'}.with({2: 'b'}) == {'1': 'a', '2': 'b', '10': 'x'}") == "false")
+    assert(run("{10: 'x', 2: 'b', 1: 'a'}.values()") == """["a","b","x"]""")
+  }
+
+  test("map equality does not depend on construction order") {
+    val entries = (0 until 12).map(i => s"k$i" -> (graft.cel.Eval.VInt(i.toLong): V))
+    check(Gen.const(entries).map(scala.util.Random.shuffle(_))) { shuffled =>
+      val a = VMap.from(entries)
+      val b = VMap.from(shuffled)
+      assert(a == b && a.hashCode == b.hashCode && E.equalsV(a, b))
+      assert(renderV(a) == renderV(b))
+    }
+    assert(parseV("""{"b":1,"a":{"y":2,"x":3}}""") == parseV("""{"a":{"x":3,"y":2},"b":1}"""))
+    assert(graft.cel.Cel.evalOnce("{'b': 1, 'a': 2} == {'a': 2, 'b': 1}", "null") == "true")
+  }
+
+  test("a nested VMap survives a Java-serialization round trip") {
+    val clef = new String(Character.toChars(0x1D11E))
+    val inner = VMap(VMap.noEntries ++ Seq("2" -> (VString("b"): V), "1" -> VString("a")),
+      Set("1", "2"))
+    val doc = VMap.of("z" -> VList(Vector(inner, VString(clef))), clef -> inner,
+      "\uE000" -> VString("pua"))
+    val bos = new java.io.ByteArrayOutputStream()
+    new java.io.ObjectOutputStream(bos).writeObject(doc)
+    val back = new java.io.ObjectInputStream(
+      new java.io.ByteArrayInputStream(bos.toByteArray)).readObject().asInstanceOf[VMap]
+    assert(back == doc && renderV(back) == renderV(doc))
+    back.v(clef) match {
+      case m: VMap => assert(m.intKeys == Set("1", "2"), "nested int-key tag")
+      case other => fail(s"nested map came back as $other")
+    }
+    // the entries keep Go key order after the trip: U+E000 sorts below
+    // a supplementary character, as it does before
+    assert(back.v.updated("\uF000", VNull).keys.toSeq ==
+      Seq("z", "\uE000", "\uF000", clef))
+  }
+
+  test("a 20k-key object parses, renders and merges in linear-ish time") {
+    def doc(n: Int) = (0 until n).map(i => s""""k${(i * 7919) % n}":$i""")
+      .mkString("{", ",", "}")
+    def bestNanos(n: Int): Long = {
+      val text = doc(n)
+      (0 until 3).map { _ =>
+        val t0 = System.nanoTime()
+        val v = parseV(text)
+        renderV(Collections.withAll(v, parseV(text)))
+        System.nanoTime() - t0
+      }.min
+    }
+    bestNanos(5000) // warm up
+    val small = bestNanos(5000)
+    val big = bestNanos(20000)
+    val v = parseV(doc(20000))
+    assert(v.asInstanceOf[VMap].v.size == 20000)
+    // 4x the keys: about 4-5x the time for n log n, 16x for a quadratic path
+    assert(big < 10 * small, s"20k keys took ${big / 1e6} ms, 5k keys ${small / 1e6} ms")
+  }
+
+  test("the UTF-8 render equals the tree render's bytes on escapes, non-BMP text and floats") {
+    val genStr: Gen[String] = Gen.frequency(
+      3 -> genText,
+      2 -> Gen.listOfN(4, Gen.oneOf("\"", "\\", "\n", "\t", "\u0001", "\u001f",
+        "\u007f", "\u2028", "/", "<", "\u00e9", "x")).map(_.mkString))
+    def quote(s: String) = render(com.fasterxml.jackson.databind.node.TextNode.valueOf(s))
+    val genNum: Gen[String] = Gen.oneOf(
+      Gen.oneOf(2e23, 1e23, 8.41e21, 0.1, 6.483528991463317e-8, -2.5e-9, 1.5e300),
+      Gen.chooseNum(-1e25, 1e25), Gen.chooseNum(-1.0, 1.0)).map(_.toString)
+    def genDoc(depth: Int): Gen[String] =
+      if (depth <= 0) Gen.oneOf(genStr.map(quote), genNum, genScalar)
+      else Gen.frequency(
+        2 -> Gen.oneOf(genStr.map(quote), genNum),
+        1 -> Gen.listOfN(3, genDoc(depth - 1)).map(_.mkString("[", ",", "]")),
+        2 -> (for {
+          keys <- Gen.listOfN(3, genStr)
+          vals <- Gen.listOfN(3, genDoc(depth - 1))
+        } yield keys.zip(vals).map { case (k, x) => quote(k) + ":" + x }
+          .mkString("{", ",", "}")))
+    check(genDoc(3), n = 300) { doc =>
+      val v = parseV(doc)
+      val bytes = E.renderUtf8(v)
+      val tree = render(E.toJson(v)).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      assert(java.util.Arrays.equals(bytes, tree), s"bytes diverged on $doc")
+      assert(new String(bytes, java.nio.charset.StandardCharsets.UTF_8) == renderV(v))
     }
   }
 }

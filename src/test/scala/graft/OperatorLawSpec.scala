@@ -237,6 +237,43 @@ class OperatorLawSpec extends SparkSpec {
     }
   }
 
+  test("quantile ntiled with duplicate (value, id) pairs across a boundary: copies share the lower bucket") {
+    // ntiled's precondition is a unique id per group; this pins what it
+    // does when that breaks. A row's bucket is 1 + #(boundary pairs
+    // strictly below its (value, id)), the boundaries being the pairs
+    // at the ANSI bucket-edge ranks, so every copy of a pair that sits
+    // on a boundary lands in the lower bucket, and the bucket sizes
+    // stop being ANSI ntile's. n = 10, k = 2: the boundary is rank 5,
+    // and ranks 5 and 6 are the same pair (5, 5).
+    val df = Seq(1L, 2L, 3L, 4L, 5L, 5L, 7L, 8L, 9L, 10L).map(v => (v, v)).toDF("v", "id")
+    val got = Quantile.ntiled(df, Seq.empty, "v", "id", 2, "b")
+      .select("v", "b").as[(Long, Long)].collect().sorted.toSeq
+    assert(got == Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (5L, 1L), (5L, 1L),
+      (7L, 2L), (8L, 2L), (9L, 2L), (10L, 2L)))
+    val w = org.apache.spark.sql.expressions.Window.orderBy(col("v"), col("id"))
+    val ansi = df.select(ntile(2).over(w).as("b")).groupBy("b").count()
+      .as[(Int, Long)].collect().toMap
+    assert(ansi == Map(1 -> 5L, 2 -> 5L), "ANSI ntile splits the tied pair")
+    // the same rule on random groups with heavy (value, id) duplication
+    for (trial <- 0 until 3; k <- Seq(3, 4)) {
+      val rows = (0 until 150).map(_ =>
+        (rnd.nextInt(2).toLong, rnd.nextInt(6).toLong, rnd.nextInt(3).toLong))
+      val in = rows.toDF("g", "v", "id")
+      val out = Quantile.ntiled(in, Seq("g"), "v", "id", k, "b")
+        .select("g", "v", "id", "b").as[(Long, Long, Long, Long)].collect()
+      val ord = Ordering.Tuple2[Long, Long]
+      val want = rows.groupBy(_._1).flatMap { case (g, rs) =>
+        val pairs = rs.map(r => (r._2, r._3)).sorted(ord)
+        val n = pairs.length
+        val bounds = (1 until k).map(d => pairs(d * (n / k) + math.min(d, n % k) - 1))
+        rs.map(r => (g, r._2, r._3,
+          1L + bounds.count(b => ord.lt(b, (r._2, r._3)))))
+      }.toSeq
+      assert(out.toSeq.sorted == want.sorted, s"trial $trial k=$k")
+    }
+    graft.Checkpoints.releaseAll()
+  }
+
   test("topK packing bounds violations fail loudly, not silently") {
     val bad = Seq((1L, 1L, (1L << 22) + 1L)).toDF("g", "k", "v")
     val e = intercept[Exception] {
