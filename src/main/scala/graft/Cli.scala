@@ -1,7 +1,7 @@
 package graft
 
 import graft.cel.{CelConfig, Errors, Eval, Parser}
-import graft.values.JsonAlgebra
+import graft.streaming.WantMore
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
@@ -144,14 +144,9 @@ object Cli {
           err("failed eval: " + Errors.display(src, e.at, e.msg))
           return 1
         case v =>
-          val compact = Eval.renderV(v)
-          val node = JsonAlgebra.parse(compact)
-          out(JsonAlgebra.renderPretty(node))
-          more = node.isObject && {
-            val wm = node.get("want_more")
-            wm != null && wm.isBoolean && wm.booleanValue()
-          }
-          state = Some(compact)
+          out(Eval.renderPretty(v))
+          more = WantMore.wantsMore(v)
+          state = Some(Eval.renderV(v))
       }
     }
     0

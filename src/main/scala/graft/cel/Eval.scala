@@ -124,6 +124,9 @@ object Eval {
       liveNowAnchor: Option[Long] = None)
 
   // ---------------- JSON <-> V ----------------
+  // The Jackson-tree bridge: the property tests check the V codec
+  // (parseV, renderUtf8) against the tree codec through these two. No
+  // document path builds or reads a tree.
   def fromJson(n: JsonNode): V =
     if (n == null || n.isNull) VNull
     else if (n.isTextual) VString(n.textValue())
@@ -174,7 +177,7 @@ object Eval {
     // this); the name string is strictly more useful and keeps type
     // values alive inside rendered containers.
     case VType(n) => nf.textNode(n)
-    case VErr(msg) => JsonAlgebra.error(msg)
+    case VErr(msg) => nf.objectNode().put(JsonAlgebra.ErrorKey, msg)
   }
 
   // a surrogate pair renders as one 4-byte UTF-8 sequence, not as two
@@ -183,20 +186,51 @@ object Eval {
     .enable(JsonWriteFeature.COMBINE_UNICODE_SURROGATES_IN_UTF8).build()
 
   /** JSON text -> V through a streaming parser — the leaf-side mirror of
-    * [[renderV]]: no JsonNode tree is built and re-walked. Number/shape
+    * [[renderUtf8]]: no JsonNode tree is built and re-walked. Number/shape
     * mapping matches [[fromJson]] exactly (integral -> VInt with Go-like
-    * wraparound on overflow, other numbers -> VDouble). Parse failures
-    * are in-band `VErr("failed to parse JSON: ...")` values. */
+    * wraparound on overflow, other numbers -> VDouble). The whole input
+    * is one value, as Go's json.Unmarshal requires: content after it is
+    * an error. Parse failures are in-band
+    * `VErr("failed to parse JSON: ...")` values. */
   def parseV(s: String): V =
     try {
       val p = jsonF.createParser(s)
       try {
-        if (p.nextToken() == null) VErr("failed to parse JSON: no content")
-        else readV(p)
+        if (p.nextToken() == null) VErr("failed to parse JSON: unexpected end of JSON input")
+        else {
+          val v = readV(p)
+          val rest = s.indexWhere(c => c != ' ' && c != '\t' && c != '\n' && c != '\r',
+            p.currentLocation().getCharOffset.toInt)
+          if (rest < 0) v
+          else VErr(s"failed to parse JSON: invalid character ${goQuoteChar(s.codePointAt(rest))}" +
+            " after top-level value")
+        }
       } finally p.close()
     } catch {
       case NonFatal(e) => VErr(s"failed to parse JSON: ${e.getMessage}")
     }
+
+  /** Concatenated JSON values -> a list of them (decode_json_stream,
+    * reference lib/json.go:268-289): the stream form of [[parseV]]. */
+  def parseStreamV(s: String): V =
+    try {
+      val p = jsonF.createParser(s)
+      try {
+        val b = Vector.newBuilder[V]
+        while (p.nextToken() != null) b += readV(p)
+        VList(b.result())
+      } finally p.close()
+    } catch {
+      case NonFatal(e) => VErr(s"failed to decode JSON stream: ${e.getMessage}")
+    }
+
+  /** Go's quoteChar (encoding/json scanner errors). */
+  private def goQuoteChar(c: Int): String = "'" + (c match {
+    case '\'' => "\\'"
+    case 7 => "\\a"; case '\b' => "\\b"; case '\f' => "\\f"; case 11 => "\\v"
+    case _ if c < 0x20 || c == 0x7f => f"\\x$c%02x"
+    case _ => new String(Character.toChars(c))
+  }) + "'"
 
   private def readV(p: com.fasterxml.jackson.core.JsonParser): V = {
     import com.fasterxml.jackson.core.JsonToken._
@@ -227,11 +261,11 @@ object Eval {
     }
   }
 
-  /** Document leaf parse — shared by the CEL `state` binding and the
-    * json_* and v_* kernels (JsonKernel): parse failures are VErr, and a
-    * top-level error OBJECT promotes to VErr so rendered error values
-    * stay in-band across a render->parse round trip (the same
-    * convention as Functions.jv at the JSON boundary). */
+  /** Document leaf parse — shared by the CEL `state` binding,
+    * `decode_json` and the json_* and v_* kernels (JsonKernel): parse
+    * failures are VErr, and a top-level `{"__error__": "<msg>"}` object
+    * promotes to VErr so rendered error values stay in-band across a
+    * render->parse round trip. Any other `__error__` value stays a map. */
   def stateLeafV(s: String): V = parseV(s) match {
     case m: VMap if m.v.size == 1 =>
       m.v.get(JsonAlgebra.ErrorKey) match {
@@ -243,11 +277,12 @@ object Eval {
 
   /** V -> Go-rendered JSON text, as UTF-8 bytes: one pass through
     * Jackson's UTF-8 generator, each map's entries written in their
-    * stored Go key order. Render-identical to
-    * `JsonAlgebra.render(toJson(v))` (the goldens + oracle rows pin
-    * this), with no JsonNode tree, no per-map key sort and no
-    * String-to-UTF-8 re-encode: the per-row render of every CEL column
-    * and json_* kernel hands these bytes to Spark as they are.
+    * stored Go key order. The same bytes as the tree render
+    * `JsonAlgebra.render(toJson(v))` but for a lone surrogate (U+FFFD
+    * here; JsonAlgebraPropSpec pins this), with no JsonNode tree, no
+    * per-map key sort and no String-to-UTF-8 re-encode: the per-row
+    * render of every CEL column, json_* kernel and Column decoder hands
+    * these bytes to Spark as they are.
     *
     * One-entry per-thread IDENTITY memo: a program that references
     * `state.encode_json()` k times renders the SAME immutable V object
@@ -271,14 +306,51 @@ object Eval {
     bytes
   }
 
-  /** [[renderUtf8]] decoded to a String (encode_json, send_to, the CLI):
-    * the same bytes, so both forms of a render always agree. */
+  /** [[renderUtf8]] decoded to a String (encode_json, send_to, the
+    * CLI's next state): the same bytes, so both forms of a render always
+    * agree. */
   def renderV(value: V): String = {
     val memo = lastRender.get()
     if ((memo.value eq value) && memo.text != null) return memo.text
     val text = new String(renderUtf8(value), StandardCharsets.UTF_8)
     memo.text = text
     text
+  }
+
+  /** Go `json.Encoder` SetIndent("", "\t") form, mito's stdout
+    * (mito.go:351-356): the [[renderUtf8]] writer with tab indentation,
+    * `"key": value` and empty composites kept compact. */
+  def renderPretty(value: V): String = {
+    val sink = new ByteArrayBuilder(256)
+    val g = jsonF.createGenerator(sink, JsonEncoding.UTF8)
+    g.setPrettyPrinter(new GoIndent)
+    writeV(g, value)
+    g.close()
+    new String(sink.toByteArray, StandardCharsets.UTF_8)
+  }
+
+  /** Jackson's DefaultPrettyPrinter writes `{ }` for an empty object and
+    * ` : ` between a key and its value; Go writes `{}` and `: `. */
+  private final class GoIndent extends com.fasterxml.jackson.core.PrettyPrinter {
+    private var depth = 0
+    private def newline(g: JsonGenerator): Unit = g.writeRaw("\n" + "\t" * depth)
+    private def open(g: JsonGenerator, c: Char): Unit = { g.writeRaw(c); depth += 1 }
+    private def close(g: JsonGenerator, c: Char, entries: Int): Unit = {
+      depth -= 1
+      if (entries > 0) newline(g)
+      g.writeRaw(c)
+    }
+    private def next(g: JsonGenerator): Unit = { g.writeRaw(','); newline(g) }
+    def writeRootValueSeparator(g: JsonGenerator): Unit = newline(g)
+    def writeStartObject(g: JsonGenerator): Unit = open(g, '{')
+    def writeEndObject(g: JsonGenerator, entries: Int): Unit = close(g, '}', entries)
+    def writeObjectEntrySeparator(g: JsonGenerator): Unit = next(g)
+    def writeObjectFieldValueSeparator(g: JsonGenerator): Unit = g.writeRaw(": ")
+    def writeStartArray(g: JsonGenerator): Unit = open(g, '[')
+    def writeEndArray(g: JsonGenerator, entries: Int): Unit = close(g, ']', entries)
+    def writeArrayValueSeparator(g: JsonGenerator): Unit = next(g)
+    def beforeArrayValues(g: JsonGenerator): Unit = newline(g)
+    def beforeObjectEntries(g: JsonGenerator): Unit = newline(g)
   }
 
   private def writeV(g: JsonGenerator, x: V): Unit = x match {
@@ -312,8 +384,8 @@ object Eval {
   }
 
   /** A lone surrogate (reachable only through an escaped UTF-16 unit
-    * in parsed JSON) renders as `?`, as Java's UTF-8 encoder writes it;
-    * Jackson's UTF-8 generator would escape it instead. Well-formed
+    * in parsed JSON) renders as U+FFFD, as Go's encoding/json decodes
+    * it; Jackson's UTF-8 generator would escape it instead. Well-formed
     * text, the only kind in practice, is returned as it is. */
   private def wellFormed(s: String): String = {
     var i = 0
@@ -323,10 +395,14 @@ object Eval {
       if (!Character.isSurrogate(c)) i += 1
       else if (Character.isHighSurrogate(c) && i + 1 < n &&
           Character.isLowSurrogate(s.charAt(i + 1))) i += 2
-      else return new String(s.getBytes(StandardCharsets.UTF_8), StandardCharsets.UTF_8)
+      else return loneSurrogate.matcher(s).replaceAll("\uFFFD")
     }
     s
   }
+
+  // java.util.regex reads a surrogate pair as one code point, so the
+  // class matches only unpaired surrogates
+  private val loneSurrogate = java.util.regex.Pattern.compile("[\\x{D800}-\\x{DFFF}]")
 
   /** Per-thread render state: the identity memo and a reusable sink. */
   private final class RenderMemo {

@@ -29,10 +29,9 @@ private[cel] object Functions {
     case other => Left(VErr(s"no such overload: bytes from $other"))
   }
 
-  private def jv(n: com.fasterxml.jackson.databind.JsonNode): V = {
-    val out = Eval.fromJson(n)
-    if (JsonAlgebra.isError(n)) VErr(n.get(JsonAlgebra.ErrorKey).asText()) else out
-  }
+  /** decode_json: one JSON document, read as a `state` document is. */
+  private def decodeJson(v: V): V =
+    bytesOf(v).fold(identity, b => Eval.stateLeafV(new String(b, StandardCharsets.UTF_8)))
 
   // ---------------- global calls ----------------
   def call(fn: String, args: Vector[Ast], env: Env): V = fn match {
@@ -138,8 +137,7 @@ private[cel] object Functions {
           case (Left(e), _) => e
           case (_, Left(e)) => e
           case (Right(b), Right(h)) =>
-            jv(JsonAlgebra.parse(graft.expressions.XmlKernel.decodeXmlHinted(
-              UTF8String.fromBytes(b), UTF8String.fromString(h)).toString))
+            graft.expressions.XmlKernel.decode(new String(b, StandardCharsets.UTF_8), h)
         }
       }
     // cfg-level Basic auth rides on every executing get/head/post
@@ -302,14 +300,8 @@ private[cel] object Functions {
     case "zip" => Collections.zip(vs(0), vs(1))
     case "keys" => Collections.keys(vs.head)
     case "values" => Collections.values(vs.head)
-    // r16: the direct streaming serializer (render-identical to
-    // JsonAlgebra.render(toJson(v)) — goldens + oracle pin it; see
-    // Eval.renderV) replaces the build-tree-then-render path: one
-    // encode_json used to cost a full JsonNode tree build + deep
-    // key-sort + re-walk per call per row
     case "encode_json" => VString(Eval.renderV(vs.head))
-    case "decode_json" =>
-      bytesOf(vs.head).fold(identity, b => jv(JsonAlgebra.parse(new String(b, StandardCharsets.UTF_8))))
+    case "decode_json" => decodeJson(vs.head)
     case "hmac" => vs match {
       case Vector(d0, VString(alg), k0) =>
         (bytesOf(d0), bytesOf(k0)) match {
@@ -508,13 +500,10 @@ private[cel] object Functions {
     }
 
     // ---- json ----
-    // r16: streaming serializer, not tree-build + sort + walk (same
-    // bytes — see the global-form note at Functions.call2)
     case "encode_json" => VString(Eval.renderV(t))
-    case "decode_json" =>
-      bytesOf(t).fold(identity, b => jv(JsonAlgebra.parse(new String(b, StandardCharsets.UTF_8))))
+    case "decode_json" => decodeJson(t)
     case "decode_json_stream" =>
-      bytesOf(t).fold(identity, b => jv(JsonAlgebra.decodeJsonStream(new String(b, StandardCharsets.UTF_8))))
+      bytesOf(t).fold(identity, b => Eval.parseStreamV(new String(b, StandardCharsets.UTF_8)))
 
     // ---- strings (StringKernel + builtins) ----
     case "to_lower" => str1(t)(s => VString(s.toLowerCase))
@@ -743,7 +732,7 @@ private[cel] object Functions {
       try VBytes(graft.expressions.MimeKernel.gunzip(b))
       catch { case e: Exception => VErr(s"gzip: ${e.getMessage}") }
     case "application/zip" =>
-      try jv(JsonAlgebra.parse(graft.expressions.MimeKernel.zipMapJson(b)))
+      try graft.expressions.MimeKernel.zipMap(b)
       catch { case e: Exception => VErr(s"zip: ${e.getMessage}") }
     case "text/csv; header=present" =>
       val rows = graft.expressions.MimeKernel.csvRows(new String(b, StandardCharsets.UTF_8))
@@ -759,19 +748,7 @@ private[cel] object Functions {
       VList(graft.expressions.MimeKernel
         .csvRows(new String(b, StandardCharsets.UTF_8))
         .toVector.map(rec => VList(rec.toVector.map(VString(_): V))))
-    case "application/x-ndjson" =>
-      VList(new String(b, StandardCharsets.UTF_8).split("\n", -1).toVector
-        .filter(_.trim.nonEmpty)
-        .map { line =>
-          jv(JsonAlgebra.parse(line)) match {
-            // match Go's encoding/json message for truncated documents
-            // (reference mime.go:302-306 embeds err + line)
-            case VErr(m) if m.contains("end-of-input") =>
-              VErr(s"unexpected end of JSON input: $line")
-            case VErr(m) => VErr(s"$m: $line")
-            case ok => ok
-          }
-        })
+    case "application/x-ndjson" => VList(graft.expressions.MimeKernel.ndjsonDocs(b))
     case other => VErr(s"unknown transform: $other")
   }
 

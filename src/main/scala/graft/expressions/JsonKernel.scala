@@ -2,7 +2,6 @@ package graft.expressions
 
 import graft.cel.{Collections, Eval}
 import graft.cel.Eval.{V, VErr, VList, VMap, VString}
-import graft.values.JsonAlgebra
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -81,8 +80,7 @@ object JsonKernel {
     * for already-dynamic documents; typed columns use to_json). */
   def normalize(json: UTF8String): UTF8String = out(doc(json))
 
-  def decodeStream(s: UTF8String): UTF8String =
-    UTF8String.fromString(JsonAlgebra.render(JsonAlgebra.decodeJsonStream(s.toString)))
+  def decodeStream(s: UTF8String): UTF8String = out(Eval.parseStreamV(s.toString))
 
   def isError(json: UTF8String): Boolean = doc(json).isInstanceOf[VErr]
 

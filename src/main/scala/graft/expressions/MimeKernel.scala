@@ -1,6 +1,7 @@
 package graft.expressions
 
-import graft.values.JsonAlgebra
+import graft.cel.Eval
+import graft.cel.Eval.{V, VBool, VErr, VInt, VList, VMap, VString}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, ArrayBasedMapData}
 import org.apache.spark.unsafe.types.UTF8String
@@ -57,14 +58,13 @@ object MimeKernel {
   }
 
   /** application/zip for the CEL tier: Go's full archive map
-    * ({"Comment", "File": [FileHeader...]}) rendered as JSON, matching
+    * ({"Comment", "File": [FileHeader...]}) as a CEL value, matching
     * archive/zip's reader fields (CRC32, central-directory Extra,
     * Modified with the timezone offset reconstructed from the extended
     * timestamp vs the MS-DOS wall time, rounded to 15 minutes). Uses
     * ZipFile over a temp file because only the central directory carries
     * the Extra bytes the reference exposes. */
-  def zipMapJson(data: Array[Byte]): String = {
-    val nf = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance
+  def zipMap(data: Array[Byte]): V = {
     def u16(i: Int): Int = (data(i) & 0xff) | ((data(i + 1) & 0xff) << 8)
     def u32(i: Int): Long = {
       var v = 0L
@@ -98,7 +98,7 @@ object MimeKernel {
     // central-directory walk: the authoritative flags/dostime/extra Go
     // exposes (java.util.zip substitutes the UT time into the DOS
     // fields, losing the wall clock the offset is derived from)
-    val files = nf.arrayNode()
+    val files = Vector.newBuilder[V]
     var p = cdOff
     var e = 0
     while (e < nEntries && p + 46 <= data.length && u32(p) == 0x02014b50L) {
@@ -148,26 +148,22 @@ object MimeKernel {
       val fmt =
         if (modified.getOffset == java.time.ZoneOffset.UTC) modified.toInstant.toString
         else modified.format(java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME)
-      val o = nf.objectNode()
-      o.put("CRC32", crc)
-      o.put("Comment", comment)
-      o.put("Data", java.util.Base64.getEncoder.encodeToString(
-        contents.getOrElse(name, Array.empty[Byte])))
-      o.put("Extra", java.util.Base64.getEncoder.encodeToString(extra))
-      o.put("IsDir", isDir)
-      o.put("Modified", fmt)
-      o.put("Name", name)
-      // Go: NonUTF8 set only when bit 11 is clear and the strings need it
-      o.put("NonUTF8", (flags & 0x800) == 0 && (name + comment).exists(_ >= 128))
-      o.put("Size", usize)
-      files.add(o)
+      files += VMap.of(
+        "CRC32" -> VInt(crc),
+        "Comment" -> VString(comment),
+        "Data" -> VString(java.util.Base64.getEncoder.encodeToString(
+          contents.getOrElse(name, Array.empty[Byte]))),
+        "Extra" -> VString(java.util.Base64.getEncoder.encodeToString(extra)),
+        "IsDir" -> VBool(isDir),
+        "Modified" -> VString(fmt),
+        "Name" -> VString(name),
+        // Go: NonUTF8 set only when bit 11 is clear and the strings need it
+        "NonUTF8" -> VBool((flags & 0x800) == 0 && (name + comment).exists(_ >= 128)),
+        "Size" -> VInt(usize))
       p += 46 + nameLen + extraLen + commentLen
       e += 1
     }
-    val root = nf.objectNode()
-    root.put("Comment", archiveComment)
-    root.set[com.fasterxml.jackson.databind.JsonNode]("File", files)
-    JsonAlgebra.render(root)
+    VMap.of("Comment" -> VString(archiveComment), "File" -> VList(files.result()))
   }
 
   /** Minimal RFC-4180 CSV split (quoted fields, embedded quotes). */
@@ -219,31 +215,26 @@ object MimeKernel {
     new GenericArrayData(csvRows(new String(data, StandardCharsets.UTF_8))
       .map(rec => new GenericArrayData(rec.map(UTF8String.fromString(_): Any)): Any).toArray)
 
-  /** application/x-ndjson -> array of JSON documents; malformed lines
-    * become in-band error values — mime.go:292-314. */
-  // ObjectReader is immutable and thread-safe; building an ObjectMapper
-  // per line costs more than the parse itself.
-  private val ndjsonReader =
-    new com.fasterxml.jackson.databind.ObjectMapper()
-      .readerFor(classOf[com.fasterxml.jackson.databind.JsonNode])
-      .`with`(com.fasterxml.jackson.databind.DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+  /** application/x-ndjson -> array of JSON documents, one per
+    * non-blank line ([[ndjsonDocs]] rendered). */
+  def ndjson(data: Array[Byte]): ArrayData =
+    new GenericArrayData(
+      ndjsonDocs(data).map(v => UTF8String.fromBytes(Eval.renderUtf8(v)): Any).toArray)
 
-  def ndjson(data: Array[Byte]): ArrayData = {
-    val out = ArrayBuffer.empty[Any]
-    new String(data, StandardCharsets.UTF_8).split("\n", -1).foreach { line =>
-      if (line.trim.nonEmpty) {
-        val parsed =
-          try JsonAlgebra.render(
-            ndjsonReader.readValue(line): com.fasterxml.jackson.databind.JsonNode)
-          catch {
-            case e: Exception =>
-              JsonAlgebra.render(JsonAlgebra.error(s"${e.getMessage}: $line"))
-          }
-        out += UTF8String.fromString(parsed)
-      }
-    }
-    new GenericArrayData(out.toArray)
-  }
+  /** One document per non-blank line; a malformed line is an in-band
+    * error carrying the line — mime.go:292-314. The CEL mime transform
+    * returns these values. */
+  def ndjsonDocs(data: Array[Byte]): Vector[V] =
+    new String(data, StandardCharsets.UTF_8).split("\n", -1).iterator
+      .filter(_.trim.nonEmpty)
+      .map { line =>
+        Eval.parseV(line) match {
+          // Go's encoding/json message for a truncated document
+          case VErr(m) if m.contains("end-of-input") => VErr(s"unexpected end of JSON input: $line")
+          case VErr(m) => VErr(s"$m: $line")
+          case ok => ok
+        }
+      }.toVector
 
   /** text/rot13 (reference test transform, mito.go:358-365). */
   def rot13(data: Array[Byte]): Array[Byte] = data.map { b =>

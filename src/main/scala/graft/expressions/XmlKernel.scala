@@ -1,12 +1,12 @@
 package graft.expressions
 
-import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
-import graft.values.JsonAlgebra
+import graft.cel.Eval
+import graft.cel.Eval.{V, VBool, VDouble, VErr, VInt, VList, VMap, VString}
 import org.apache.spark.unsafe.types.UTF8String
 
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 import java.io.StringReader
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
 /** XML decode kernel mirroring the reference's schemaless XML walk
@@ -23,16 +23,16 @@ import scala.util.control.NonFatal
   * supplied directly (XSD -> tree compilation is a config-time concern,
   * not a per-row one).
   *
-  * Output is a dynamic-tier JSON document: {"doc": ..., "#text": ...},
-  * matching decodeXMLWithXSD (lib/xml.go:177-208).
+  * The walk builds a CEL value, {"doc": ..., "#text": ...}, matching
+  * decodeXMLWithXSD (lib/xml.go:177-208): the CEL `decode_xml` call
+  * returns it, and the Column kernels render it as a JSON document.
   */
 object XmlKernel {
-  private val nf = JsonNodeFactory.instance
+  private val noHints: V = VMap(VMap.noEntries)
 
   // Hint trees are plan-time literals (compiled XSDs), so the parsed
   // cache stays bounded by the number of distinct hint configs.
-  private val hintCache =
-    new java.util.concurrent.ConcurrentHashMap[String, JsonNode]()
+  private val hintCache = new java.util.concurrent.ConcurrentHashMap[String, V]()
 
   // XMLInputFactory.newInstance() walks the service loader — far too
   // expensive per row (it dominated decode at ~160us/row). The factory
@@ -48,44 +48,45 @@ object XmlKernel {
 
   def decodeXml(data: UTF8String): UTF8String = decodeXmlHinted(data, null)
 
-  def decodeXmlHinted(data: UTF8String, hintsJson: UTF8String): UTF8String = {
+  def decodeXmlHinted(data: UTF8String, hintsJson: UTF8String): UTF8String =
+    UTF8String.fromBytes(Eval.renderUtf8(
+      decode(data.toString, if (hintsJson == null) "" else hintsJson.toString)))
+
+  /** The decoded document; `hintsJson` is a hint tree ("" for none). */
+  def decode(xml: String, hintsJson: String): V = {
     // Go's encoding/xml consumes tag-less input as chardata until EOF and
     // reports io.ErrUnexpectedEOF; surface the same error text.
-    if (data != null && !data.toString.contains('<'))
-      return UTF8String.fromString(JsonAlgebra.render(
-        JsonAlgebra.error("failed to unmarshal XML document: unexpected EOF")))
-    val out =
-      try {
-        val hints: JsonNode =
-          if (hintsJson == null || hintsJson.numChars() == 0) nf.objectNode()
-          else hintCache.computeIfAbsent(hintsJson.toString, JsonAlgebra.parse(_))
-        val r = factory.get().createXMLStreamReader(new StringReader(data.toString))
-        val (cdata, doc) = walk(r, Nil, hints)
-        val m = nf.objectNode()
-        if (cdata.nonEmpty) m.set[JsonNode]("#text", nf.textNode(cdata))
-        if (doc.size() > 0) m.set[JsonNode]("doc", doc)
-        m
-      } catch {
-        case NonFatal(e) =>
-          JsonAlgebra.error(s"failed to unmarshal XML document: ${e.getMessage}")
-      }
-    UTF8String.fromString(JsonAlgebra.render(out))
+    if (!xml.contains('<')) return VErr("failed to unmarshal XML document: unexpected EOF")
+    try {
+      val hints =
+        if (hintsJson.isEmpty) noHints
+        else hintCache.computeIfAbsent(hintsJson, Eval.parseV(_))
+      val r = factory.get().createXMLStreamReader(new StringReader(xml))
+      val (cdata, doc) = walk(r, Nil, hints)
+      val out = VMap.entryBuilder
+      if (cdata.nonEmpty) out += "#text" -> VString(cdata)
+      if (doc.nonEmpty) out += "doc" -> VMap.from(doc)
+      VMap(out.result())
+    } catch {
+      case NonFatal(e) => VErr(s"failed to unmarshal XML document: ${e.getMessage}")
+    }
   }
 
-  private def hintFor(details: JsonNode, key: String): JsonNode =
-    if (details != null && details.isObject && details.has(key)) details.get(key)
-    else nf.objectNode()
+  private def hint(details: V, key: String): Option[V] = details match {
+    case VMap(m) => m.get(key)
+    case _ => None
+  }
 
   /** Recursive element walk; returns (cdata, elems). Mirrors walkXML. */
   private def walk(r: XMLStreamReader, attrs: Seq[(String, String)],
-      details: JsonNode): (String, ObjectNode) = {
-    val elems = nf.objectNode()
+      details: V): (String, mutable.Map[String, V]) = {
+    val elems = mutable.HashMap.empty[String, V]
     var cdata = ""
     while (r.hasNext) {
       r.next() match {
         case XMLStreamConstants.START_ELEMENT =>
           val key = r.getLocalName
-          val det = hintFor(details, key)
+          val det = hint(details, key).getOrElse(noHints)
           // Attributes plus namespace declarations: Go's encoding/xml
           // reports xmlns:foo="uri" as a regular attribute named "foo"
           // (xml.go's walk keeps it); StAX splits them out.
@@ -95,31 +96,25 @@ object XmlKernel {
               val p = r.getNamespacePrefix(i)
               (if (p == null || p.isEmpty) "xmlns" else p) -> r.getNamespaceURI(i)
             }
-          val (childCdata, part) = walk(r, childAttrs,
-            if (det.has("children")) det.get("children") else nf.objectNode())
-          var add: JsonNode =
-            if (part.size() == 0) nf.textNode(childCdata)
+          val (childCdata, part) = walk(r, childAttrs, hint(det, "children").getOrElse(noHints))
+          val add = entype(
+            if (part.isEmpty) VString(childCdata)
             else {
-              if (childCdata.nonEmpty) part.set[JsonNode]("#text", nf.textNode(childCdata))
-              part
-            }
-          add = entype(add, if (det.has("type")) det.get("type").asText() else "string")
-          val plural = det.has("plural") && det.get("plural").asBoolean()
-          elems.get(key) match {
-            case null =>
-              if (plural) { val a = nf.arrayNode(); a.add(add); elems.set[JsonNode](key, a) }
-              else elems.set[JsonNode](key, add)
-            case prev if prev.isArray =>
-              prev.asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode].add(add)
-            case prev =>
-              val a = nf.arrayNode(); a.add(prev); a.add(add)
-              elems.set[JsonNode](key, a)
+              if (childCdata.nonEmpty) part("#text") = VString(childCdata)
+              VMap.from(part)
+            },
+            hint(det, "type") match { case Some(VString(t)) => t; case _ => "string" })
+          val plural = hint(det, "plural").contains(VBool(true))
+          elems(key) = elems.get(key) match {
+            case None => if (plural) VList(Vector(add)) else add
+            case Some(VList(prev)) => VList(prev :+ add)
+            case Some(prev) => VList(Vector(prev, add))
           }
         case XMLStreamConstants.CHARACTERS | XMLStreamConstants.CDATA =>
           val t = r.getText.trim
           if (t.nonEmpty || cdata.isEmpty) cdata = t
         case XMLStreamConstants.END_ELEMENT =>
-          attrs.foreach { case (k, v) => elems.set[JsonNode](k, nf.textNode(v)) }
+          attrs.foreach { case (k, v) => elems(k) = VString(v) }
           return (cdata, elems)
         case XMLStreamConstants.END_DOCUMENT =>
           return (cdata, elems)
@@ -130,19 +125,20 @@ object XmlKernel {
   }
 
   /** entype — xml/xml.go:240-271. */
-  private def entype(v: JsonNode, t: String): JsonNode =
-    if (!v.isTextual) v
-    else t match {
+  private def entype(v: V, t: String): V = v match {
+    case VString(s) => t match {
       case "bool" =>
-        v.textValue() match {
-          case "TRUE"  => nf.booleanNode(true)
-          case "FALSE" => nf.booleanNode(false)
+        s match {
+          case "TRUE"  => VBool(true)
+          case "FALSE" => VBool(false)
           case _       => v
         }
       case "int" =>
-        try nf.numberNode(v.textValue().toLong) catch { case _: NumberFormatException => v }
+        try VInt(s.toLong) catch { case _: NumberFormatException => v }
       case "float" =>
-        try nf.numberNode(v.textValue().toDouble) catch { case _: NumberFormatException => v }
+        try VDouble(s.toDouble) catch { case _: NumberFormatException => v }
       case _ => v
     }
+    case _ => v
+  }
 }

@@ -1,7 +1,7 @@
 package graft.expressions
 
-import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
+import graft.cel.Eval
+import graft.cel.Eval.{V, VBool, VMap, VString}
 import org.w3c.dom.{Element, Node}
 
 import java.io.ByteArrayInputStream
@@ -25,7 +25,6 @@ import javax.xml.parsers.DocumentBuilderFactory
   */
 object XsdCompiler {
 
-  private val nf = JsonNodeFactory.instance
   private val XS = "http://www.w3.org/2001/XMLSchema"
 
   // builtinTypeFor mapping (xml.go:85-97)
@@ -126,21 +125,18 @@ object XsdCompiler {
       }
     }
 
-    val out = nf.objectNode()
-    roots.sortBy(_._1).foreach { case (k, d) => out.set[JsonNode](k, toNode(d)) }
-    graft.values.JsonAlgebra.render(out)
+    Eval.renderV(hintMap(roots))
   }
 
-  private def toNode(d: Detail): ObjectNode = {
-    val o = nf.objectNode()
-    if (d.tpe != "string") o.set[JsonNode]("type", nf.textNode(d.tpe))
-    if (d.plural) o.set[JsonNode]("plural", nf.booleanNode(true))
-    if (d.children.nonEmpty) {
-      val c = nf.objectNode()
-      d.children.toSeq.sortBy(_._1).foreach { case (k, cd) => c.set[JsonNode](k, toNode(cd)) }
-      o.set[JsonNode]("children", c)
-    }
-    o
+  private def hintMap(details: Iterable[(String, Detail)]): V =
+    VMap.from(details.map { case (k, d) => k -> toV(d) })
+
+  private def toV(d: Detail): V = {
+    val o = VMap.entryBuilder
+    if (d.tpe != "string") o += "type" -> VString(d.tpe)
+    if (d.plural) o += "plural" -> VBool(true)
+    if (d.children.nonEmpty) o += "children" -> hintMap(d.children)
+    VMap(o.result())
   }
 
   private def childElems(parent: Element, local: String): Seq[Element] =

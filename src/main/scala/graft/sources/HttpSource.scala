@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.cel.Eval
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -96,7 +97,6 @@ object HttpSource {
     s"https://login.microsoftonline.com/$tenantId/oauth2/token"
 
   private lazy val tokenClient: HttpClient = HttpClient.newHttpClient()
-  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   def oauth2Token(cfg: OAuth2Config): String = tokenCache.synchronized {
     // single-flight per JVM: concurrent partitions share one fetch
@@ -195,8 +195,7 @@ object HttpSource {
   }
 
   private def isValidJson(s: String): Boolean =
-    try { jsonMapper.readTree(s); true }
-    catch { case scala.util.control.NonFatal(_) => false }
+    !Eval.parseV(s).isInstanceOf[Eval.VErr]
 
   /** Two-legged service-account flow: build the RS256-signed assertion
     * from the key's client_email/private_key/token_uri and POST it as
@@ -213,7 +212,7 @@ object HttpSource {
     val now = System.currentTimeMillis() / 1000
     // JSON-escape every string claim (a quote/backslash in client_email
     // or a scope would otherwise corrupt the signed assertion)
-    def q(s: String): String = jsonMapper.writeValueAsString(s)
+    def q(s: String): String = Eval.renderV(Eval.VString(s))
     val sub =
       if (cfg.googleDelegatedAccount.nonEmpty)
         s""","sub":${q(cfg.googleDelegatedAccount)}""" else ""

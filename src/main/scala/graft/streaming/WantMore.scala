@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.values.JsonAlgebra
+import graft.cel.Eval
+import graft.cel.Eval.{V, VBool, VMap}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.lit
 
@@ -36,13 +37,16 @@ object WantMore {
       val out = spark.range(1).select(program(lit(state)).as("state"))
         .head().getString(0)
       outs += out
-      val node = JsonAlgebra.parse(out)
-      more = node.isObject && {
-        val wm = node.get("want_more")
-        wm != null && wm.isBoolean && wm.booleanValue()
-      }
+      more = wantsMore(Eval.parseV(out))
       state = out
     }
     Result(outs.toSeq, outs.length)
+  }
+
+  /** The loop condition, shared with the CLI: the output document is a
+    * map whose `want_more` is true. */
+  def wantsMore(doc: V): Boolean = doc match {
+    case VMap(m) => m.get("want_more").contains(VBool(true))
+    case _ => false
   }
 }

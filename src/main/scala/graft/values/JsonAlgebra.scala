@@ -2,21 +2,22 @@ package graft.values
 
 import com.fasterxml.jackson.core.io.NumberOutput
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNode, TextNode}
+import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
 
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-/** Jackson-tree JSON codec with Go `encoding/json` output forms: parse,
-  * the sorted-key compact and indented renders, and the float/key-order
-  * rules every render path shares (the CEL value render, Eval.renderV,
-  * delegates its number and key forms here).
+/** Go `encoding/json` number and key-order rules, and a Jackson-tree
+  * JSON codec kept as a reference.
   *
-  * Pure Scala, no Spark dependency. The collections library is not here:
-  * it operates on CEL values ([[graft.cel.Collections]]), and the json_*
-  * Column functions parse to those values. The tree form serves the
-  * callers that need a Jackson tree (MIME/XML decoders, the HTTP source,
-  * the CLI's pretty printer).
+  * Documents live as CEL values ([[graft.cel.Eval.V]]): every decoder
+  * builds them, `Eval.parseV` parses them and `Eval.renderUtf8` (with
+  * its pretty mode) prints them. That writer takes its float and key
+  * forms from here: [[goFloat]], [[wholeDouble]], [[goOrder]].
+  *
+  * [[parse]]/[[render]] are the tree codec. No document path calls
+  * them; they stay because the benchmark's value-layer probe times
+  * them, the property tests compare the V codec against them, and the
+  * OAuth credential readers pick fields out of a parsed tree.
   *
   * Error values (CEL errors-as-data, lib/errors.go) are encoded as
   * `{"__error__": "<msg>"}` objects so they flow through data exactly
@@ -30,7 +31,9 @@ object JsonAlgebra {
 
   def parse(s: String): JsonNode =
     try mapper.readTree(s)
-    catch { case NonFatal(e) => error(s"failed to parse JSON: ${e.getMessage}") }
+    catch {
+      case NonFatal(e) => nf.objectNode().put(ErrorKey, s"failed to parse JSON: ${e.getMessage}")
+    }
 
   /** Go `json.Marshal` prints a whole float64 without a fractional part
     * (`-5.0` → `-5`). Both render paths — tree and streaming V — share
@@ -107,34 +110,11 @@ object JsonAlgebra {
     }
   }
 
-  /** Go `json.Encoder` SetIndent("", "\t") form (mito's stdout,
-    * mito.go:351-356): tab indentation, `"key": value`, empty
-    * composites compact, keys sorted, scalars via the same Go-faithful
-    * serializer as [[render]]. Byte-identical to the reference's CLI
-    * output (asserted against its goldens in ReferenceGoldenSpec). */
-  def renderPretty(n: JsonNode, depth: Int = 0): String = {
-    val tab = "\t" * depth
-    if (n.isObject && n.size() > 0) {
-      val keys = new Array[String](n.size)
-      var i = 0
-      n.fieldNames().forEachRemaining { k => keys(i) = k; i += 1 }
-      java.util.Arrays.sort(keys, goOrder)
-      keys.map { k =>
-        val key = render(com.fasterxml.jackson.databind.node.TextNode.valueOf(k))
-        s"$tab\t$key: ${renderPretty(n.get(k), depth + 1)}"
-      }.mkString("{\n", ",\n", s"\n$tab}")
-    } else if (n.isArray && n.size() > 0)
-      (0 until n.size()).map(j => s"$tab\t${renderPretty(n.get(j), depth + 1)}")
-        .mkString("[\n", ",\n", s"\n$tab]")
-    else render(n)
-  }
-
   /** Serialize with object keys sorted — matches Go `json.Marshal` map
     * key ordering (mito's encode_json, lib/json.go:207-247). Streams the
-    * tree once with keys sorted at write time instead of deep-copying it
-    * through sortKeys first; scalars delegate to the mapper's own
-    * serializers (writeTree), so output is byte-identical to
-    * writeValueAsString. */
+    * tree once with keys sorted at write time; scalars delegate to the
+    * mapper's own serializers (writeTree), so output is byte-identical
+    * to writeValueAsString. */
   def render(n: JsonNode): String = {
     val w = new java.io.StringWriter(64)
     val g = mapper.createGenerator(w)
@@ -166,38 +146,4 @@ object JsonAlgebra {
     g.close()
     w.toString
   }
-
-  def sortKeys(n: JsonNode): JsonNode = n match {
-    case o: ObjectNode =>
-      val out = nf.objectNode()
-      o.properties().asScala.toSeq.map(e => e.getKey -> e.getValue)
-        .sortBy(_._1)(goOrder).foreach { case (k, v) => out.set[JsonNode](k, sortKeys(v)) }
-      out
-    case a: ArrayNode =>
-      val out = nf.arrayNode()
-      a.elements().asScala.foreach(e => out.add(sortKeys(e)))
-      out
-    case other => other
-  }
-
-  def error(msg: String): ObjectNode = {
-    val o = nf.objectNode()
-    o.set[JsonNode](ErrorKey, new TextNode(msg))
-    o
-  }
-
-  def isError(n: JsonNode): Boolean =
-    n != null && n.isObject && n.size() == 1 && n.has(ErrorKey)
-
-  // ---------------------------------------------------------------------
-  // decode_json_stream — concatenated JSON values -> list.
-  // Reference: lib/json.go:268-289.
-  // ---------------------------------------------------------------------
-  def decodeJsonStream(s: String): JsonNode =
-    try {
-      val p   = mapper.createParser(s)
-      val out = nf.arrayNode()
-      mapper.readValues(p, classOf[JsonNode]).forEachRemaining(n => out.add(n))
-      out
-    } catch { case NonFatal(e) => error(s"failed to decode JSON stream: ${e.getMessage}") }
 }

@@ -33,6 +33,39 @@ class CelSpec extends SparkSpec {
       "[2e+23,1e+23,8.41e+21,282879384806159000]")
   }
 
+  test("a lone surrogate renders as U+FFFD, as Go's encoding/json does") {
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    // the escape reaches the value as a lone UTF-16 unit
+    val v = graft.cel.Eval.parseV("\"x\\ud800y\"")
+    assert(graft.cel.Eval.renderUtf8(v).toSeq == "\"x\uFFFDy\"".getBytes(utf8).toSeq)
+    // keys too, and a well-formed pair is kept whole
+    assert(run("state", "{\"k\\udc00\":\"\\ud83d\\ude00\"}") == "{\"k\uFFFD\":\"\ud83d\ude00\"}")
+  }
+
+  test("decode_json and state read the whole input as one document") {
+    def err(m: String) = s"""{"__error__":"failed to parse JSON: $m"}"""
+    assert(run("""'{"a":1} x'.decode_json()""") == err("invalid character 'x' after top-level value"))
+    assert(run("""'{"a":1}{"b":2}'.decode_json()""") == err("invalid character '{' after top-level value"))
+    assert(run("""'1 2'.decode_json()""") == err("invalid character '2' after top-level value"))
+    assert(run("''.decode_json()") == err("unexpected end of JSON input"))
+    assert(run("state", """{"a":1} x""") == err("invalid character 'x' after top-level value"))
+    // whitespace around the value is not content
+    assert(run("""' {"a":1}\n '.decode_json()""") == """{"a":1}""")
+    assert(run("state.a", " {\"a\":1}\r\n") == "1")
+    // an error document decodes to an error value; another __error__ value stays a map
+    assert(run("""is_error('{"__error__":"boom"}'.decode_json())""") == "true")
+    assert(run("""'{"__error__":5}'.decode_json()""") == """{"__error__":5}""")
+  }
+
+  test("float-hinted XML leaves decode to doubles (mito's float64)") {
+    val hints = """{"r":{"children":{"f":{"type":"float"},"n":{"type":"int"}}}}"""
+    def xml(program: String) =
+      Cel.evalOnce(program, "\"<r><f>1.0</f><n>2</n></r>\"", NOW, xsds = Map("h" -> hints))
+    assert(xml("state.decode_xml('h')") == """{"doc":{"r":{"f":1,"n":2}}}""")
+    assert(xml("[type(state.decode_xml('h').doc.r.f), type(state.decode_xml('h').doc.r.n)]") ==
+      """["double","int"]""")
+  }
+
   test("eval errors carry source spans (DecoratedError, lib/errors.go:28-52)") {
     // error originates at the '/' node: offset 6 -> 1:7, caret under it
     assert(Cel.evalDecorated("1 + 2 / (3 - 3)", "null", NOW) == Left(

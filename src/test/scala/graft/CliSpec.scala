@@ -26,11 +26,17 @@ class CliSpec extends AnyFunSuite {
 
   test("pretty output is Go json.Encoder SetIndent form (tabs, sorted keys)") {
     val dir = Files.createTempDirectory("cli")
-    val src = write(dir, "p.cel", """{"b": [1, {"x": "y"}], "a": 1.5, "e": {}, "l": []}""")
+    val src = write(dir, "p.cel",
+      """{"b": [1, {"x": "y"}], "a": 1.5, "e": {}, "l": [], "f": 2e23,""" +
+        """ "n": {"m": [], "o": {}, "p": [{}, []]},""" +
+        " \"s\": \"q\\\"\\\\\\n\\t\\u0001\u00e9\ud83d\ude00\"}")
     val (rc, out, _) = run(src)
     assert(rc == 0)
     assert(out.mkString("\n") ==
-      "{\n\t\"a\": 1.5,\n\t\"b\": [\n\t\t1,\n\t\t{\n\t\t\t\"x\": \"y\"\n\t\t}\n\t],\n\t\"e\": {},\n\t\"l\": []\n}")
+      "{\n\t\"a\": 1.5,\n\t\"b\": [\n\t\t1,\n\t\t{\n\t\t\t\"x\": \"y\"\n\t\t}\n\t],\n\t\"e\": {}," +
+        "\n\t\"f\": 2e+23,\n\t\"l\": []," +
+        "\n\t\"n\": {\n\t\t\"m\": [],\n\t\t\"o\": {},\n\t\t\"p\": [\n\t\t\t{},\n\t\t\t[]\n\t\t]\n\t}," +
+        "\n\t\"s\": \"q\\\"\\\\\\n\\t\\u0001\u00e9\ud83d\ude00\"\n}")
   }
 
   test("-data binds state; without it state is undeclared (exit 1)") {

@@ -1,8 +1,13 @@
 package graft
 
+import graft.cel.{Eval, Parser}
 import graft.functions._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{col, lit}
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+
+import java.nio.charset.StandardCharsets
 
 class FunctionsSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
@@ -124,6 +129,100 @@ class FunctionsSpec extends SparkSpec {
   // --- json stream / normalize / try ---
   test("decode_json_stream splits concatenated values") {
     assert(evalStr("""{"a":1}{"b":2} 3 "x"""", decode_json_stream) == """[{"a":1},{"b":2},3,"x"]""")
+  }
+
+  test("a document is the whole input: trailing content is an in-band error") {
+    for ((in, c) <- Seq("""{"a":1} x""" -> "x", """{"a":1}{"b":2}""" -> "{", "[1] ]" -> "]")) {
+      assert(evalOn(evalStr(in, json_normalize), is_error) == true, in)
+      assert(evalStr(in, c => try_(c)) ==
+        s""""failed to parse JSON: invalid character '$c' after top-level value"""")
+    }
+    assert(evalStr(" {\"a\":1} \n\t", json_normalize) == """{"a":1}""")
+  }
+
+  // --- every Column decoder equals its CEL twin ---
+  private val genLeaf: Gen[String] = Gen.oneOf(
+    Gen.choose(-1000L, 1000L).map(_.toString),
+    Gen.oneOf("18446744073709551617", "-9223372036854775809", "9223372036854775807",
+      "123456789012345678901234567890"),
+    Gen.oneOf("1.5", "1.0", "-0.0", "2e23", "6.483528991463317e-8", "1E3", "0.1"),
+    Gen.oneOf("\"a\\\"b\"", "\"\\u00e9\\ud83d\\ude00\"", "\"t\\tn\\n\"", "\"x\\ud800y\"",
+      "\"\u00e9\ud83d\ude00\"", "\"\""),
+    Gen.oneOf("true", "false", "null"))
+
+  private def genDoc(depth: Int): Gen[String] =
+    if (depth <= 0) genLeaf
+    else Gen.frequency(
+      2 -> genLeaf,
+      1 -> Gen.listOfN(2, genDoc(depth - 1)).map(_.mkString("[", ",", "]")),
+      2 -> Gen.listOfN(2, genDoc(depth - 1)).map(_.zipWithIndex
+        .map { case (v, i) => s""""k$i":$v""" }.mkString("{", ",", "}")))
+
+  /** One document as it may arrive: whole, followed by more tokens, or
+    * cut short. */
+  private val genLine: Gen[String] = for {
+    d <- genDoc(2)
+    form <- Gen.choose(0, 5)
+  } yield form match {
+    case 0 => d + " x"
+    case 1 => d + d
+    case 2 => d.dropRight(1)
+    case _ => d
+  }
+
+  private val xsd =
+    """<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+      |  <xs:element name="r"><xs:complexType><xs:sequence>
+      |    <xs:element name="n" type="xs:int"/>
+      |    <xs:element name="f" type="xs:double" maxOccurs="unbounded"/>
+      |    <xs:element name="b" type="xs:boolean"/>
+      |    <xs:element name="s" type="xs:string"/>
+      |  </xs:sequence></xs:complexType></xs:element>
+      |</xs:schema>""".stripMargin
+
+  private val genXml: Gen[String] = {
+    val text = Gen.oneOf("1", "1.0", "1.5", "-0", "2e23", "99999999999999999999", "x",
+      "TRUE", "FALSE", "&lt;&amp;&quot;", "\u00e9\ud83d\ude00", "")
+    for {
+      n <- text; f1 <- text; f2 <- text; b <- text; s <- text
+      cut <- Gen.oneOf(false, false, false, true)
+    } yield {
+      val doc = s"""<r a="$s"><n>$n</n><f>$f1</f><f>$f2</f><b>$b</b><s>$s</s></r>"""
+      if (cut) doc.dropRight(4) else doc
+    }
+  }
+
+  private def sample[T](g: Gen[T], n: Int): Seq[T] =
+    (0 until n).map(i => g.pureApply(Gen.Parameters.default, Seed(i.toLong)))
+
+  /** The CEL twin: `program` over `state` bound to the input string. */
+  private def celOn(program: String, input: String, xsds: Map[String, String] = Map.empty): Eval.V =
+    Eval.evalValue(Parser.parse(program), Eval.renderV(Eval.VString(input)), 0L, xsds = xsds)
+
+  test("every Column decoder equals its CEL twin on generated input") {
+    val streams = sample(Gen.listOfN(3, genLine).map(_.mkString(" ")), 80)
+    val streamCol = streams.toDF("v").select(decode_json_stream(col("v"))).collect().map(_.getString(0))
+    streams.zip(streamCol).foreach { case (in, got) =>
+      assert(got == Eval.renderV(celOn("state.decode_json_stream()", in)), s"decode_json_stream: $in")
+    }
+
+    val ndjson = sample(Gen.listOfN(4, Gen.frequency(6 -> genLine, 1 -> Gen.const(" ")))
+      .map(_.mkString("\n")), 80)
+    val ndjsonCol = ndjson.map(_.getBytes(StandardCharsets.UTF_8)).toDF("b")
+      .select(ndjson_docs(col("b"))).collect().map(_.getSeq[String](0))
+    ndjson.zip(ndjsonCol).foreach { case (in, got) =>
+      celOn("state.mime('application/x-ndjson')", in) match {
+        case Eval.VList(docs) => assert(got == docs.map(Eval.renderV), s"ndjson: $in")
+        case other => fail(s"ndjson: $in gave $other")
+      }
+    }
+
+    val hints = compile_xsd(xsd)
+    val xmls = sample(genXml, 60)
+    val xmlCol = xmls.toDF("x").select(decode_xml(col("x"), lit(hints))).collect().map(_.getString(0))
+    xmls.zip(xmlCol).foreach { case (in, got) =>
+      assert(got == Eval.renderV(celOn("state.decode_xml('h')", in, Map("h" -> hints))), s"decode_xml: $in")
+    }
   }
 
   test("json_normalize sorts keys (Go json.Marshal order)") {

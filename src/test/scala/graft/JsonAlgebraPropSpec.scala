@@ -314,12 +314,35 @@ class JsonAlgebraPropSpec extends AnyFunSuite {
           vals <- Gen.listOfN(3, genDoc(depth - 1))
         } yield keys.zip(vals).map { case (k, x) => quote(k) + ":" + x }
           .mkString("{", ",", "}")))
+    // Go's encoding/json decodes a lone surrogate escape to U+FFFD
+    val goUtf8 = java.nio.charset.StandardCharsets.UTF_8.newEncoder()
+      .onMalformedInput(java.nio.charset.CodingErrorAction.REPLACE)
+      .replaceWith("\uFFFD".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    def encode(s: String): Array[Byte] = {
+      val buf = goUtf8.encode(java.nio.CharBuffer.wrap(s))
+      java.util.Arrays.copyOfRange(buf.array, buf.position, buf.limit)
+    }
     check(genDoc(3), n = 300) { doc =>
       val v = parseV(doc)
       val bytes = E.renderUtf8(v)
-      val tree = render(E.toJson(v)).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val tree = encode(render(E.toJson(v)))
       assert(java.util.Arrays.equals(bytes, tree), s"bytes diverged on $doc")
       assert(new String(bytes, java.nio.charset.StandardCharsets.UTF_8) == renderV(v))
     }
+  }
+
+  test("no product source but the JSON codec and the evaluator uses Jackson trees") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_)).toSeq
+    val allowed = Set("scala/graft/values/JsonAlgebra.scala", "scala/graft/cel/Eval.scala")
+    val treeUsers = files.filter { f =>
+      new String(java.nio.file.Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8)
+        .contains("jackson.databind")
+    }.map(root.relativize(_).toString.replace('\\', '/'))
+      .filterNot(allowed)
+    assert(files.length > 50, s"scanned only ${files.length} files under $root")
+    assert(treeUsers.isEmpty, s"Jackson trees used outside the codec: ${treeUsers.mkString(", ")}")
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
 import com.fasterxml.jackson.databind.JsonNode
-import graft.cel.Cel
+import graft.cel.{Cel, Eval}
+import graft.streaming.WantMore
 import graft.values.JsonAlgebra
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -365,7 +366,7 @@ class ReferenceGoldenSpec extends AnyFunSuite {
     // `stdout <regex>` assertion scripts: one eval, pattern must match
     s.stdoutRe.foreach { re =>
       return evalWith(state).flatMap { got =>
-        val pretty = JsonAlgebra.renderPretty(JsonAlgebra.parse(got))
+        val pretty = Eval.renderPretty(Eval.parseV(got))
         if (re.r.findFirstIn(pretty).isDefined) Right(true)
         else Left(s"stdout !~ /$re/: $pretty")
       }
@@ -378,7 +379,7 @@ class ReferenceGoldenSpec extends AnyFunSuite {
     val wantDocs = parseDocs(s.want)
     if (wantDocs.isEmpty) return Left("non-JSON golden")
     if (wantDocs.length > 1) {
-      val gotDocs = Vector.newBuilder[JsonNode]
+      val gotDocs = Vector.newBuilder[String]
       var st = state
       var more = true
       var i = 0
@@ -387,19 +388,15 @@ class ReferenceGoldenSpec extends AnyFunSuite {
           case Left(err) => return Left(err)
           case Right(o) => o
         }
-        val node = JsonAlgebra.parse(out)
-        gotDocs += node
-        more = node.isObject && {
-          val wm = node.get("want_more")
-          wm != null && wm.isBoolean && wm.booleanValue()
-        }
+        gotDocs += out
+        more = WantMore.wantsMore(Eval.parseV(out))
         st = out
         i += 1
       }
       val got = gotDocs.result()
       return if (got.length == wantDocs.length &&
-        got.zip(wantDocs).forall { case (g, w) => treeEq(g, w) })
-        Right(got.map(JsonAlgebra.renderPretty(_)).mkString("\n") == wantNorm(s.want))
+        got.zip(wantDocs).forall { case (g, w) => treeEq(JsonAlgebra.parse(g), w) })
+        Right(got.map(g => Eval.renderPretty(Eval.parseV(g))).mkString("\n") == wantNorm(s.want))
       else Left(s"want_more loop mismatch: ${got.length} docs vs ${wantDocs.length}")
     }
 
@@ -408,10 +405,10 @@ class ReferenceGoldenSpec extends AnyFunSuite {
       case Right(o) => o
     }
     val wantNode = wantDocs.head
-    val gotNode = JsonAlgebra.parse(got)
-    if (JsonAlgebra.isError(gotNode)) Left(s"error result: $got")
-    else if (treeEq(gotNode, wantNode))
-      Right(JsonAlgebra.renderPretty(gotNode) == wantNorm(s.want))
+    val gotV = Eval.stateLeafV(got)
+    if (gotV.isInstanceOf[Eval.VErr]) Left(s"error result: $got")
+    else if (treeEq(JsonAlgebra.parse(got), wantNode))
+      Right(Eval.renderPretty(gotV) == wantNorm(s.want))
     else Left(s"mismatch:\n  got:  $got\n  want: ${JsonAlgebra.render(wantNode)}")
   }
 
