@@ -40,9 +40,14 @@ case class CelEvalExpression(program: String, child: Expression, nowMicros: Long
   override def foldable: Boolean = pure && child.foldable
   override lazy val deterministic: Boolean = pure && child.deterministic
 
-  override def nullSafeEval(state: Any): Any =
-    UTF8String.fromBytes(
-      Eval.renderUtf8(Eval.evalValueInEnv(ast, state.toString, env0)))
+  // a non-string state (SQL `cel('state * 2', 21)`) is read as its text
+  override def nullSafeEval(state: Any): Any = {
+    val v = state match {
+      case u: UTF8String => Eval.evalValueInEnv(ast, u, env0)
+      case o => Eval.evalValueInEnv(ast, o.toString, env0)
+    }
+    UTF8String.fromBytes(Eval.renderUtf8(v))
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,16 +1,17 @@
 package graft.cel
 
-import com.fasterxml.jackson.core.{JsonEncoding, JsonFactoryBuilder, JsonGenerator}
+import com.fasterxml.jackson.core.{JsonEncoding, JsonFactoryBuilder, JsonGenerator, JsonParseException, JsonParser, StreamReadFeature}
 import com.fasterxml.jackson.core.json.JsonWriteFeature
 import com.fasterxml.jackson.core.util.ByteArrayBuilder
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import graft.expressions.{CryptoKernel, StringKernel, TimeKernel}
 import graft.values.JsonAlgebra
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.charset.StandardCharsets
-import scala.collection.immutable.TreeMap
+import scala.collection.immutable.{ArraySeq, TreeMap}
 import scala.util.control.NonFatal
 
 /** Tree-walk evaluator for the CEL subset (the text front-end of the
@@ -157,7 +158,9 @@ object Eval {
     case VNull => nf.nullNode()
     case VBool(b) => nf.booleanNode(b)
     case VInt(i) => nf.numberNode(i)
-    case VUint(i) => nf.numberNode(i)
+    case VUint(i) =>
+      if (i >= 0) nf.numberNode(i)
+      else nf.numberNode(new java.math.BigInteger(java.lang.Long.toUnsignedString(i)))
     case VDouble(d) => if (wholeDouble(d))
       nf.numberNode(d.toLong) else nf.numberNode(d)
     case VString(s) => nf.textNode(s)
@@ -181,9 +184,12 @@ object Eval {
   }
 
   // a surrogate pair renders as one 4-byte UTF-8 sequence, not as two
-  // escaped UTF-16 units (Jackson's UTF-8 generator default)
+  // escaped UTF-16 units (Jackson's UTF-8 generator default); doubles
+  // parse with Jackson's fast parser, which is correctly rounded, so a
+  // double keeps the bits Double.parseDouble gives it
   private val jsonF = new JsonFactoryBuilder()
-    .enable(JsonWriteFeature.COMBINE_UNICODE_SURROGATES_IN_UTF8).build()
+    .enable(JsonWriteFeature.COMBINE_UNICODE_SURROGATES_IN_UTF8)
+    .enable(StreamReadFeature.USE_FAST_DOUBLE_PARSER).build()
 
   /** JSON text -> V through a streaming parser — the leaf-side mirror of
     * [[renderUtf8]]: no JsonNode tree is built and re-walked. Number/shape
@@ -201,28 +207,121 @@ object Eval {
           val v = readV(p)
           val rest = s.indexWhere(c => c != ' ' && c != '\t' && c != '\n' && c != '\r',
             p.currentLocation().getCharOffset.toInt)
-          if (rest < 0) v
-          else VErr(s"failed to parse JSON: invalid character ${goQuoteChar(s.codePointAt(rest))}" +
-            " after top-level value")
+          if (rest < 0) v else afterTopLevel(s.codePointAt(rest))
         }
       } finally p.close()
     } catch {
+      // Jackson rejects a character glued to a root-level number ("1x")
+      // before the check above runs; the offset is that character's
+      case e: JsonParseException if e.getOriginalMessage.endsWith(MissingRootSpace) =>
+        afterTopLevel(s.codePointAt(e.getLocation.getCharOffset.toInt))
       case NonFatal(e) => VErr(s"failed to parse JSON: ${e.getMessage}")
     }
+
+  /** [[parseV]] of the UTF-8 text in `b(off until off + len)`, read
+    * straight from the bytes: no String is built for a well-formed
+    * document. Jackson's byte parser reads the bytes only where it
+    * provably agrees with `parseV(new String(b, off, len, UTF_8))`
+    * ([[byteParsable]]) and only when it reads exactly one value; every
+    * other input — an error, trailing content, a BOM, ill-formed UTF-8 —
+    * takes the decoded text, so values and error texts are the String
+    * path's. */
+  def parseV(b: Array[Byte], off: Int, len: Int): V = {
+    val v = if (byteParsable(b, off, len)) parseBytes(b, off, len) else null
+    if (v ne null) v else parseV(new String(b, off, len, StandardCharsets.UTF_8))
+  }
+
+  /** The one value in the bytes, or null when the byte parser fails or
+    * finds more than one value. */
+  private def parseBytes(b: Array[Byte], off: Int, len: Int): V =
+    try {
+      val p = jsonF.createParser(b, off, len)
+      try {
+        if (p.nextToken() == null) null
+        else {
+          val v = readV(p)
+          if (p.nextToken() == null) v else null
+        }
+      } finally p.close()
+    } catch { case NonFatal(_) => null }
+
+  private val MissingRootSpace = "Expected space separating root-level values"
+
+  /** Go's encoding/json error for content after the document. */
+  private def afterTopLevel(c: Int): V =
+    VErr(s"failed to parse JSON: invalid character ${goQuoteChar(c)} after top-level value")
+
+  /** True when Jackson's UTF-8 byte parser reads `b(off until off+len)`
+    * as its char parser reads the decoded text. Three inputs part them:
+    * ill-formed UTF-8, which the decoder turns into U+FFFD (as Go's
+    * json.Unmarshal does) while the byte parser fails or decodes it
+    * leniently (overlong forms, encoded surrogates); a leading BOM, which
+    * the byte parser skips and Go rejects; and a NUL among the first four
+    * bytes, from which the byte parser's bootstrapper guesses UTF-16 or
+    * UTF-32. ASCII runs are checked eight bytes at a time. */
+  private def byteParsable(b: Array[Byte], off: Int, len: Int): Boolean = {
+    val end = off + len
+    if (len >= 3 && b(off) == 0xEF.toByte && b(off + 1) == 0xBB.toByte && b(off + 2) == 0xBF.toByte)
+      return false
+    var i = off
+    while (i < end && i < off + 4) { if (b(i) == 0) return false; i += 1 }
+    i = off
+    while (i < end) {
+      if (i + 8 <= end &&
+          (Platform.getLong(b, Platform.BYTE_ARRAY_OFFSET + i) & 0x8080808080808080L) == 0) i += 8
+      else if (b(i) >= 0) i += 1
+      else {
+        val n = utf8Length(b, i, end)
+        if (n == 0) return false
+        i += n
+      }
+    }
+    true
+  }
+
+  /** Length of the well-formed UTF-8 sequence led by the non-ASCII byte
+    * at `i` (Unicode Table 3-7, which the JDK decoder follows), or 0. */
+  private def utf8Length(b: Array[Byte], i: Int, end: Int): Int = {
+    def cont(j: Int, lo: Int = 0x80, hi: Int = 0xBF): Boolean =
+      j < end && (b(j) & 0xFF) >= lo && (b(j) & 0xFF) <= hi
+    (b(i) & 0xFF) match {
+      case c if c >= 0xC2 && c <= 0xDF => if (cont(i + 1)) 2 else 0
+      case 0xE0 => if (cont(i + 1, 0xA0) && cont(i + 2)) 3 else 0
+      case 0xED => if (cont(i + 1, 0x80, 0x9F) && cont(i + 2)) 3 else 0
+      case c if c >= 0xE1 && c <= 0xEF => if (cont(i + 1) && cont(i + 2)) 3 else 0
+      case 0xF0 => if (cont(i + 1, 0x90) && cont(i + 2) && cont(i + 3)) 4 else 0
+      case 0xF4 => if (cont(i + 1, 0x80, 0x8F) && cont(i + 2) && cont(i + 3)) 4 else 0
+      case c if c >= 0xF1 && c <= 0xF3 => if (cont(i + 1) && cont(i + 2) && cont(i + 3)) 4 else 0
+      case _ => 0
+    }
+  }
 
   /** Concatenated JSON values -> a list of them (decode_json_stream,
     * reference lib/json.go:268-289): the stream form of [[parseV]]. */
   def parseStreamV(s: String): V =
     try {
       val p = jsonF.createParser(s)
-      try {
-        val b = Vector.newBuilder[V]
-        while (p.nextToken() != null) b += readV(p)
-        VList(b.result())
-      } finally p.close()
+      try readStream(p) finally p.close()
     } catch {
       case NonFatal(e) => VErr(s"failed to decode JSON stream: ${e.getMessage}")
     }
+
+  /** [[parseStreamV]] of UTF-8 bytes, read as [[parseV]] reads bytes. */
+  def parseStreamV(b: Array[Byte]): V = {
+    val v =
+      if (!byteParsable(b, 0, b.length)) null
+      else try {
+        val p = jsonF.createParser(b)
+        try readStream(p) finally p.close()
+      } catch { case NonFatal(_) => null }
+    if (v ne null) v else parseStreamV(new String(b, StandardCharsets.UTF_8))
+  }
+
+  private def readStream(p: JsonParser): V = {
+    val b = Vector.newBuilder[V]
+    while (p.nextToken() != null) b += readV(p)
+    VList(b.result())
+  }
 
   /** Go's quoteChar (encoding/json scanner errors). */
   private def goQuoteChar(c: Int): String = "'" + (c match {
@@ -232,22 +331,15 @@ object Eval {
     case _ => new String(Character.toChars(c))
   }) + "'"
 
-  private def readV(p: com.fasterxml.jackson.core.JsonParser): V = {
+  /** The value at the parser's current token: the one token-to-value
+    * reader under every decoder entry point. A list's elements go into a
+    * local array that ends at exactly their count, which the Vector
+    * wraps as it is (up to 32 elements); a map's entries go straight
+    * into its Go-ordered entry builder. */
+  private def readV(p: JsonParser): V = {
     import com.fasterxml.jackson.core.JsonToken._
     p.currentToken() match {
-      case VALUE_NULL => VNull
-      case VALUE_TRUE => VBool(true)
-      case VALUE_FALSE => VBool(false)
-      case VALUE_NUMBER_INT =>
-        try VInt(p.getLongValue)
-        catch { case _: com.fasterxml.jackson.core.exc.InputCoercionException =>
-          VInt(p.getBigIntegerValue.longValue()) } // JsonNode.longValue() parity
-      case VALUE_NUMBER_FLOAT => VDouble(p.getDoubleValue)
       case VALUE_STRING => VString(p.getText)
-      case START_ARRAY =>
-        val b = Vector.newBuilder[V]
-        while (p.nextToken() != END_ARRAY) b += readV(p)
-        VList(b.result())
       case START_OBJECT =>
         // a repeated key keeps its last value, like Go's json.Unmarshal
         val b = VMap.entryBuilder
@@ -257,6 +349,25 @@ object Eval {
           b += k -> readV(p)
         }
         VMap(b.result())
+      case START_ARRAY =>
+        var a = new Array[AnyRef](4)
+        var n = 0
+        while (p.nextToken() != END_ARRAY) {
+          if (n == a.length) a = java.util.Arrays.copyOf(a, n * 2)
+          a(n) = readV(p)
+          n += 1
+        }
+        if (n == 0) VList(Vector.empty)
+        else VList(Vector.from(ArraySeq.unsafeWrapArray(
+          if (n == a.length) a else java.util.Arrays.copyOf(a, n))).asInstanceOf[Vector[V]])
+      case VALUE_NUMBER_INT =>
+        try VInt(p.getLongValue)
+        catch { case _: com.fasterxml.jackson.core.exc.InputCoercionException =>
+          VInt(p.getBigIntegerValue.longValue()) } // JsonNode.longValue() parity
+      case VALUE_NUMBER_FLOAT => VDouble(p.getDoubleValue)
+      case VALUE_TRUE => VBool(true)
+      case VALUE_FALSE => VBool(false)
+      case VALUE_NULL => VNull
       case other => VErr(s"failed to parse JSON: unexpected token $other")
     }
   }
@@ -266,7 +377,22 @@ object Eval {
     * failures are VErr, and a top-level `{"__error__": "<msg>"}` object
     * promotes to VErr so rendered error values stay in-band across a
     * render->parse round trip. Any other `__error__` value stays a map. */
-  def stateLeafV(s: String): V = parseV(s) match {
+  def stateLeafV(s: String): V = inBandError(parseV(s))
+
+  /** [[stateLeafV]] of UTF-8 bytes, read as [[parseV]] reads bytes. */
+  def stateLeafV(b: Array[Byte], off: Int, len: Int): V = inBandError(parseV(b, off, len))
+
+  /** [[stateLeafV]] of a Spark string, read from its bytes where they
+    * lie: an on-heap row's byte array is not copied. */
+  def stateLeafV(u: UTF8String): V = u.getBaseObject match {
+    case a: Array[Byte] =>
+      stateLeafV(a, (u.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, u.numBytes)
+    case _ =>
+      val a = u.getBytes
+      stateLeafV(a, 0, a.length)
+  }
+
+  private def inBandError(v: V): V = v match {
     case m: VMap if m.v.size == 1 =>
       m.v.get(JsonAlgebra.ErrorKey) match {
         case Some(VString(msg)) => VErr(msg)
@@ -357,7 +483,9 @@ object Eval {
     case VNull => g.writeNull()
     case VBool(b) => g.writeBoolean(b)
     case VInt(i) => g.writeNumber(i)
-    case VUint(i) => g.writeNumber(i)
+    // a uint holds its bits in a Long: 2^63 and above print unsigned
+    case VUint(i) =>
+      if (i >= 0) g.writeNumber(i) else g.writeNumber(java.lang.Long.toUnsignedString(i))
     case VDouble(d) =>
       if (wholeDouble(d)) g.writeNumber(d.toLong)
       else g.writeNumber(JsonAlgebra.goFloat(d))
@@ -554,6 +682,11 @@ object Eval {
 
   def evalValueInEnv(program: Ast, stateJson: String, env: Env): V =
     eval(program, env.copy(vars = env.vars.updated("state", stateLeafV(stateJson))))
+
+  /** [[evalValueInEnv]] with the state read from a Spark string's UTF-8
+    * bytes (the per-row path of every CEL column). */
+  def evalValueInEnv(program: Ast, state: UTF8String, env: Env): V =
+    eval(program, env.copy(vars = env.vars.updated("state", stateLeafV(state))))
 
   /** Evaluate with an OPTIONAL state binding: None leaves `state`
     * unbound, so programs referencing it get the undeclared-reference

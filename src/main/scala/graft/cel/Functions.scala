@@ -31,7 +31,7 @@ private[cel] object Functions {
 
   /** decode_json: one JSON document, read as a `state` document is. */
   private def decodeJson(v: V): V =
-    bytesOf(v).fold(identity, b => Eval.stateLeafV(new String(b, StandardCharsets.UTF_8)))
+    bytesOf(v).fold(identity, b => Eval.stateLeafV(b, 0, b.length))
 
   // ---------------- global calls ----------------
   def call(fn: String, args: Vector[Ast], env: Env): V = fn match {
@@ -371,8 +371,25 @@ private[cel] object Functions {
     case other => VErr(s"no such overload: $fn($other)")
   }
 
-  /** Shared method implementations (also reachable as global calls). */
-  private def method2(fn: String, t: V, args: Vector[V]): V = fn match {
+  /** Shared method implementations (also reachable as global calls),
+    * one dispatcher per mito library (one Go file each under the
+    * reference's lib/). Each dispatcher answers `null` for a name that
+    * is not its library's, and the next one is asked. The split keeps
+    * every dispatcher far below HotSpot's 8,000-byte `HugeMethodLimit`,
+    * past which a method is never JIT-compiled and every call through
+    * it runs in the bytecode interpreter (BytecodeSizeSpec). */
+  private def method2(fn: String, t: V, args: Vector[V]): V = {
+    var v = collectionsLib(fn, t, args)
+    if (v eq null) v = stringsLib(fn, t, args)
+    if (v eq null) v = timeLib(fn, t, args)
+    if (v eq null) v = cryptoLib(fn, t, args)
+    if (v eq null) v = httpLib(fn, t, args)
+    if (v eq null) v = documentLib(fn, t, args)
+    if (v eq null) VErr(s"no such function: $fn") else v
+  }
+
+  /** collections (graft.cel.Collections, shared with json_* and v_*). */
+  private def collectionsLib(fn: String, t: V, args: Vector[V]): V = fn match {
     case "size" => t match {
       case VString(s) => VInt(s.codePointCount(0, s.length).toLong)
       case VBytes(b) => VInt(b.length.toLong)
@@ -380,7 +397,6 @@ private[cel] object Functions {
       case VMap(m) => VInt(m.size.toLong)
       case other => VErr(s"no such overload: size($other)")
     }
-    // ---- collections (graft.cel.Collections, shared with json_* and v_*) ----
     case "collate" => pathsArg(args.head, "collate").fold(identity, Collections.collate(t, _))
     case "drop" => pathsArg(args.head, "drop").fold(identity, Collections.drop(t, _))
     case "drop_empty" => Collections.dropEmpty(t)
@@ -393,10 +409,13 @@ private[cel] object Functions {
     case "values" => Collections.values(t)
     case "min" => Collections.min(t)
     case "max" => Collections.max(t)
+    case _ => null
+  }
 
-    // ---- cel-go STANDARD env (not the mito libs): string predicates,
-    // ---- matches, and the timestamp/duration accessors — available in
-    // ---- every program the reference compiles (cel.NewEnv defaults).
+  /** strings (StringKernel + builtins), with cel-go's STANDARD-env
+    * string predicates and matches, which every program the reference
+    * compiles has (cel.NewEnv defaults). */
+  private def stringsLib(fn: String, t: V, args: Vector[V]): V = fn match {
     case "contains" => (t, args) match {
       case (VString(s), Vector(VString(sub))) => VBool(s.contains(sub))
       case _ => VErr(s"no such overload: contains($t)")
@@ -413,99 +432,6 @@ private[cel] object Functions {
       case (VString(s), Vector(VString(re))) => matchesRe(s, re)
       case _ => VErr(s"no such overload: matches($t)")
     }
-    case "getFullYear" | "getMonth" | "getDayOfYear" | "getDayOfMonth" |
-         "getDate" | "getDayOfWeek" | "getHours" | "getMinutes" |
-         "getSeconds" | "getMilliseconds" => timeAccessor(fn, t, args)
-
-    // ---- mime transforms on bytes (reference lib/mime.go:90-132) ----
-    case "mime" => (t, args.headOption) match {
-      case (VBytes(b), Some(VString(tpe))) => mimeTransform(b, tpe)
-      case (VString(s2), Some(VString(tpe))) =>
-        mimeTransform(s2.getBytes(StandardCharsets.UTF_8), tpe)
-      case _ => VErr("no such overload: mime")
-    }
-
-    // ---- channels (reference lib/send.go:149-197) ----
-    // v.send_to(name) pushes the value (rendered JSON) onto the named
-    // driver channel and returns the value; v.close(name) closes it.
-    // send_refval_to (send.go:148-159) differs from send_to (:161-177)
-    // only in HOW the value crosses the channel: raw ref.Val vs
-    // converted-to-native. Here every value is already a rendered V, so
-    // the distinction collapses and the two are the same operation.
-    case "send_to" | "send_refval_to" => args match {
-      case Vector(VString(name)) =>
-        graft.streaming.Channels.send(name, Eval.renderV(t))
-        t
-      case _ => VErr("no such overload")
-    }
-    case "close" => args match {
-      case Vector(VString(name)) =>
-        if (graft.streaming.Channels.closeStrict(name)) VBool(true)
-        else VErr(s"no channel $name")
-      case _ => VErr("no such overload")
-    }
-
-    // ---- http: request-as-data + executing calls ----
-    // reference lib/http.go: makeRequestBody :672-712, reqToMap :713-746,
-    // doHead :518-548, doPost :585-635, doRequest :826-854,
-    // basicAuthentication :783-824.
-    case "request" => (t, args) match {
-      case (VString(m), Vector(VString(url))) => buildRequestV(m, url, None, None)
-      case (VString(m), Vector(VString(url), body)) => buildRequestV(m, url, Some(body), None)
-      case _ => VErr("no such overload for request")
-    }
-    case "get_request" => (t, args) match {
-      case (VString(url), Vector()) => buildRequestV("GET", url, None, None)
-      case _ => VErr("no such overload for request")
-    }
-    case "post_request" => (t, args) match {
-      case (VString(url), Vector(VString(ct), body)) =>
-        buildRequestV("POST", url, Some(body), Some(ct))
-      case _ => VErr("no such overload for post request")
-    }
-    case "get" | "head" | "post" => httpExecCall(fn, t, args, Map.empty)
-    case "do_request" => t match {
-      case VMap(m) => doRequestV(m)
-      case _ => VErr("no such overload for do_request")
-    }
-    case "basic_authentication" => (t, args) match {
-      case (VMap(m), Vector(VString(user), VString(pass))) =>
-        val tok = java.util.Base64.getEncoder.encodeToString(
-          s"$user:$pass".getBytes(StandardCharsets.UTF_8))
-        val hdr = m.get("Header") match {
-          case Some(VMap(h)) => h
-          case _ => VMap.noEntries
-        }
-        VMap(m + ("Header" -> VMap(hdr +
-          ("Authorization" -> VList(Vector(VString("Basic " + tok)))))))
-      case _ => VErr("no such overload for request")
-    }
-
-    // ---- url / query ----
-    case "parse_url" => t match {
-      case VString(s) => parseUrlV(s)
-      case _ => VErr("no such overload for request")
-    }
-    case "format_url" => t match {
-      case VMap(m) => formatUrlV(m)
-      case _ => VErr("no such overload")
-    }
-    case "parse_query" => t match {
-      case VString(s) => parseQueryV(s)
-      case _ => VErr("no such overload")
-    }
-    case "format_query" => t match {
-      case VMap(m) => formatQueryV(m)
-      case _ => VErr("no such overload")
-    }
-
-    // ---- json ----
-    case "encode_json" => VString(Eval.renderV(t))
-    case "decode_json" => decodeJson(t)
-    case "decode_json_stream" =>
-      bytesOf(t).fold(identity, b => Eval.parseStreamV(new String(b, StandardCharsets.UTF_8)))
-
-    // ---- strings (StringKernel + builtins) ----
     case "to_lower" => str1(t)(s => VString(s.toLowerCase))
     case "to_upper" => str1(t)(s => VString(s.toUpperCase))
     case "to_title" => str1(t)(s => VString(StringKernel.toTitle(u8(s)).toString))
@@ -572,8 +498,11 @@ private[cel] object Functions {
       case (Right(b), VString(r)) => VString(StringKernel.toValidUTF8(b, u8(r)).toString)
       case _ => VErr("no such overload: to_valid_utf8")
     }
+    case _ => null
+  }
 
-    // ---- time ----
+  /** time, with cel-go's STANDARD-env timestamp/duration accessors. */
+  private def timeLib(fn: String, t: V, args: Vector[V]): V = fn match {
     case "format" => (t, args.head) match {
       case (VTimestamp(us), VString(layout)) =>
         VString(TimeKernel.formatTime(us, u8(layout)).toString)
@@ -591,14 +520,18 @@ private[cel] object Functions {
         VErr(s"failed to parse $s with any provided layout")
       case _ => VErr("no such overload: parse_time")
     }
+    case "getFullYear" | "getMonth" | "getDayOfYear" | "getDayOfMonth" |
+         "getDate" | "getDayOfWeek" | "getHours" | "getMinutes" |
+         "getSeconds" | "getMilliseconds" => timeAccessor(fn, t, args)
+    case _ => null
+  }
 
-    // ---- crypto ----
+  /** crypto (reference lib/crypto.go). */
+  private def cryptoLib(fn: String, t: V, args: Vector[V]): V = fn match {
     case "md5" => bytesOf(t).fold(identity, b => VBytes(CryptoKernel.md5Bytes(b)))
     case "sha1" => bytesOf(t).fold(identity, b => VBytes(CryptoKernel.sha1Bytes(b)))
     case "sha256" => bytesOf(t).fold(identity, b => VBytes(CryptoKernel.sha256Bytes(b)))
-    case "hex" => bytesOf(t).fold(identity, b => VBytes(CryptoKernel.hexEncode(b).toString.getBytes) match {
-      case _ => VString(CryptoKernel.hexEncode(b).toString)
-    })
+    case "hex" => bytesOf(t).fold(identity, b => VString(CryptoKernel.hexEncode(b).toString))
     case "base64" => bytesOf(t).fold(identity, b => VString(CryptoKernel.base64Std(b).toString))
     case "base64_raw" => bytesOf(t).fold(identity, b => VString(CryptoKernel.base64Raw(b).toString))
     case "base64_decode" => t match {
@@ -614,8 +547,94 @@ private[cel] object Functions {
         bytesOf(k).fold(identity, kb => VBytes(CryptoKernel.hmac(d, u8(alg), kb)))
       case _ => VErr("no such overload: hmac")
     }
+    case _ => null
+  }
 
-    case other => VErr(s"no such function: $other")
+  /** http: request-as-data, executing calls, url and query. Reference
+    * lib/http.go: makeRequestBody :672-712, reqToMap :713-746, doHead
+    * :518-548, doPost :585-635, doRequest :826-854,
+    * basicAuthentication :783-824. */
+  private def httpLib(fn: String, t: V, args: Vector[V]): V = fn match {
+    case "request" => (t, args) match {
+      case (VString(m), Vector(VString(url))) => buildRequestV(m, url, None, None)
+      case (VString(m), Vector(VString(url), body)) => buildRequestV(m, url, Some(body), None)
+      case _ => VErr("no such overload for request")
+    }
+    case "get_request" => (t, args) match {
+      case (VString(url), Vector()) => buildRequestV("GET", url, None, None)
+      case _ => VErr("no such overload for request")
+    }
+    case "post_request" => (t, args) match {
+      case (VString(url), Vector(VString(ct), body)) =>
+        buildRequestV("POST", url, Some(body), Some(ct))
+      case _ => VErr("no such overload for post request")
+    }
+    case "get" | "head" | "post" => httpExecCall(fn, t, args, Map.empty)
+    case "do_request" => t match {
+      case VMap(m) => doRequestV(m)
+      case _ => VErr("no such overload for do_request")
+    }
+    case "basic_authentication" => (t, args) match {
+      case (VMap(m), Vector(VString(user), VString(pass))) =>
+        val tok = java.util.Base64.getEncoder.encodeToString(
+          s"$user:$pass".getBytes(StandardCharsets.UTF_8))
+        val hdr = m.get("Header") match {
+          case Some(VMap(h)) => h
+          case _ => VMap.noEntries
+        }
+        VMap(m + ("Header" -> VMap(hdr +
+          ("Authorization" -> VList(Vector(VString("Basic " + tok)))))))
+      case _ => VErr("no such overload for request")
+    }
+    case "parse_url" => t match {
+      case VString(s) => parseUrlV(s)
+      case _ => VErr("no such overload for request")
+    }
+    case "format_url" => t match {
+      case VMap(m) => formatUrlV(m)
+      case _ => VErr("no such overload")
+    }
+    case "parse_query" => t match {
+      case VString(s) => parseQueryV(s)
+      case _ => VErr("no such overload")
+    }
+    case "format_query" => t match {
+      case VMap(m) => formatQueryV(m)
+      case _ => VErr("no such overload")
+    }
+    case _ => null
+  }
+
+  /** json, mime transforms on bytes (reference lib/mime.go:90-132) and
+    * channels (lib/send.go:149-197). v.send_to(name) pushes the value
+    * (rendered JSON) onto the named driver channel and returns the
+    * value; v.close(name) closes it. send_refval_to (send.go:148-159)
+    * differs from send_to (:161-177) only in HOW the value crosses the
+    * channel: raw ref.Val vs converted-to-native. Here every value is
+    * already a rendered V, so the two are the same operation. */
+  private def documentLib(fn: String, t: V, args: Vector[V]): V = fn match {
+    case "encode_json" => VString(Eval.renderV(t))
+    case "decode_json" => decodeJson(t)
+    case "decode_json_stream" => bytesOf(t).fold(identity, Eval.parseStreamV(_))
+    case "mime" => (t, args.headOption) match {
+      case (VBytes(b), Some(VString(tpe))) => mimeTransform(b, tpe)
+      case (VString(s2), Some(VString(tpe))) =>
+        mimeTransform(s2.getBytes(StandardCharsets.UTF_8), tpe)
+      case _ => VErr("no such overload: mime")
+    }
+    case "send_to" | "send_refval_to" => args match {
+      case Vector(VString(name)) =>
+        graft.streaming.Channels.send(name, Eval.renderV(t))
+        t
+      case _ => VErr("no such overload")
+    }
+    case "close" => args match {
+      case Vector(VString(name)) =>
+        if (graft.streaming.Channels.closeStrict(name)) VBool(true)
+        else VErr(s"no channel $name")
+      case _ => VErr("no such overload")
+    }
+    case _ => null
   }
 
   private def arr(a: org.apache.spark.sql.catalyst.util.ArrayData): Vector[V] =

@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * CEL error-absorption semantics survive distribution.
   */
 object JsonKernel {
-  private def doc(u: UTF8String): V = Eval.stateLeafV(u.toString)
+  private def doc(u: UTF8String): V = Eval.stateLeafV(u)
   private def out(v: V): UTF8String = UTF8String.fromBytes(Eval.renderUtf8(v))
 
   private def op1(json: UTF8String)(f: V => V): UTF8String = doc(json) match {
@@ -80,7 +80,7 @@ object JsonKernel {
     * for already-dynamic documents; typed columns use to_json). */
   def normalize(json: UTF8String): UTF8String = out(doc(json))
 
-  def decodeStream(s: UTF8String): UTF8String = out(Eval.parseStreamV(s.toString))
+  def decodeStream(s: UTF8String): UTF8String = out(Eval.parseStreamV(s.getBytes))
 
   def isError(json: UTF8String): Boolean = doc(json).isInstanceOf[VErr]
 

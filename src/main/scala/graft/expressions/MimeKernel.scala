@@ -224,17 +224,28 @@ object MimeKernel {
   /** One document per non-blank line; a malformed line is an in-band
     * error carrying the line — mime.go:292-314. The CEL mime transform
     * returns these values. */
-  def ndjsonDocs(data: Array[Byte]): Vector[V] =
-    new String(data, StandardCharsets.UTF_8).split("\n", -1).iterator
-      .filter(_.trim.nonEmpty)
-      .map { line =>
-        Eval.parseV(line) match {
-          // Go's encoding/json message for a truncated document
-          case VErr(m) if m.contains("end-of-input") => VErr(s"unexpected end of JSON input: $line")
-          case VErr(m) => VErr(s"$m: $line")
+  def ndjsonDocs(data: Array[Byte]): Vector[V] = {
+    val docs = Vector.newBuilder[V]
+    var start = 0
+    while (start <= data.length) {
+      var end = start
+      while (end < data.length && data(end) != '\n') end += 1
+      // blank: only bytes a String trim drops (none of them is part of
+      // a multi-byte character)
+      if ((start until end).exists(i => (data(i) & 0xFF) > ' ')) {
+        docs += (Eval.parseV(data, start, end - start) match {
+          case VErr(m) =>
+            val line = new String(data, start, end - start, StandardCharsets.UTF_8)
+            // Go's encoding/json message for a truncated document
+            if (m.contains("end-of-input")) VErr(s"unexpected end of JSON input: $line")
+            else VErr(s"$m: $line")
           case ok => ok
-        }
-      }.toVector
+        })
+      }
+      start = end + 1
+    }
+    docs.result()
+  }
 
   /** text/rot13 (reference test transform, mito.go:358-365). */
   def rot13(data: Array[Byte]): Array[Byte] = data.map { b =>

@@ -309,6 +309,19 @@ class CelColumnSpec extends SparkSpec {
     }
   }
 
+  test("a non-string state column is read as its JSON text") {
+    val df = spark.range(3).select((col("id") * 7).as("n"), (col("id") > 0).as("b"))
+    val rows = df.select(Cel("state * 2", col("n"), nowMicros = NOW),
+      Cel("state", col("b"), nowMicros = NOW)).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(rows == Seq(("0", "false"), ("14", "true"), ("28", "true")))
+    // an int literal state folds at plan time through the same path
+    val folded = spark.range(1).select(Cel("state * 2", lit(21), nowMicros = NOW))
+    assert(folded.head().getString(0) == "42")
+    GraftFunctions.register(spark)
+    assert(spark.sql("SELECT cel('state * 2', 21)").head().getString(0) == "42")
+  }
+
   test("regexp methods resolve through the column's pattern registry") {
     val re = Map("word" -> "([a-z]+)", "digits" -> "[0-9]+")
     val programs = Seq(

@@ -33,6 +33,28 @@ class CelSpec extends SparkSpec {
       "[2e+23,1e+23,8.41e+21,282879384806159000]")
   }
 
+  test("a uint at or above 2^63 renders its unsigned digits, as Go does") {
+    assert(run("[18446744073709551615u, 9223372036854775808u, 5u]") ==
+      "[18446744073709551615,9223372036854775808,5]")
+    assert(run("{'u': 18446744073709551615u}.encode_json()") ==
+      "\"{\\\"u\\\":18446744073709551615}\"")
+    // the tree reference agrees with the writer
+    val v = graft.cel.Eval.VUint(-1L)
+    assert(graft.values.JsonAlgebra.render(graft.cel.Eval.toJson(v)) == "18446744073709551615")
+  }
+
+  test("a character glued to a root-level number is Go's after-top-level error") {
+    def err(c: String) =
+      s"""{"__error__":"failed to parse JSON: invalid character '$c' after top-level value"}"""
+    assert(run("'1x'.decode_json()") == err("x"))
+    assert(run("b'-2.5e3}'.decode_json()") == err("}"))
+    assert(run("'7\u00e9'.decode_json()") == err("\u00e9"))
+    assert(run("state", "  12x") == err("x"))
+    val kernel = Seq("1x").toDF("s")
+      .select(graft.functions.json_normalize(col("s"))).as[String].collect()
+    assert(kernel.toSeq == Seq(err("x")))
+  }
+
   test("a lone surrogate renders as U+FFFD, as Go's encoding/json does") {
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     // the escape reaches the value as a lone UTF-16 unit
