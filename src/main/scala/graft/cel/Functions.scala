@@ -8,32 +8,66 @@ import java.nio.charset.StandardCharsets
 import scala.collection.immutable.TreeMap
 import scala.jdk.CollectionConverters._
 
-/** Function/method bindings for the CEL front-end: CEL core conversions
-  * plus the reference's extension libraries, routed through the SAME
-  * kernels as the Column API (StringKernel/TimeKernel/CryptoKernel, and
-  * [[Collections]] for the collections library, which the json_* and v_*
-  * Column functions also call) so the CEL evaluator and the Column API
-  * share one semantics implementation.
+/** The CEL function table: CEL's standard functions plus the reference's
+  * extension libraries, each declared ONCE (as mito declares each in one
+  * `decls.NewFunction` block bound to one Go body) with
+  *  - its forms: a member function `x.f(a)` is also called `f(x, a)`;
+  *    a global one (`int`, `timestamp`, `now`, ...) only `f(a)`;
+  *  - the counts of values its body takes, a member's target included;
+  *    any other count is `no such overload: <fn>` in both forms;
+  *  - whether it is pure: it reads only its arguments and the
+  *    evaluation's fixed `now`, so a program of pure calls may be folded
+  *    at plan time ([[isPure]]);
+  *  - one body over the evaluated values and the [[Eval.Env]].
+  * [[call]], [[method]] and [[isPure]] read the table and nothing else
+  * does. Outside it stay the non-strict `try`, `is_error` and `debug`,
+  * which see unevaluated arguments, and the `optional.of`/`none`/
+  * `ofNonZeroValue` namespace, whose target is an identifier.
+  *
+  * Bodies run the SAME kernels as the Column API (StringKernel,
+  * TimeKernel, CryptoKernel, and [[Collections]], which the json_* and
+  * v_* Column functions also call), so both front-ends share one
+  * semantics implementation.
   */
 private[cel] object Functions {
   import Eval._
 
-  private def strict(args: Vector[Ast], env: Env)(f: Vector[V] => V): V = {
-    val vs = args.map(a => Eval.eval(a, env))
-    vs.collectFirst { case e: VErr => e }.getOrElse(guard(f(vs)))
+  /** One declared function; `arities` has bit n set when the body takes
+    * n values. */
+  private final class Fn(val member: Boolean, arities: Int, val pure: Boolean,
+      val body: (Env, Vector[V]) => V) {
+    def takes(n: Int): Boolean = n < 32 && (arities & (1 << n)) != 0
   }
 
-  private def bytesOf(v: V): Either[VErr, Array[Byte]] = v match {
-    case VBytes(b) => Right(b)
-    case VString(s) => Right(s.getBytes(StandardCharsets.UTF_8))
-    case other => Left(VErr(s"no such overload: bytes from $other"))
-  }
+  private val Pure = true
+  private val Impure = false
 
-  /** decode_json: one JSON document, read as a `state` document is. */
-  private def decodeJson(v: V): V =
-    bytesOf(v).fold(identity, b => Eval.stateLeafV(b, 0, b.length))
+  private def fn(name: String, member: Boolean, pure: Boolean, arities: Seq[Int])
+      (body: (Env, Vector[V]) => V): (String, Fn) =
+    name -> new Fn(member, arities.foldLeft(0)((m, n) => m | (1 << n)), pure, body)
 
-  // ---------------- global calls ----------------
+  // member functions by the number of values they take, target included
+  private def m1(name: String, pure: Boolean)(f: V => V) =
+    fn(name, member = true, pure, Seq(1))((_, vs) => f(vs(0)))
+  private def m2(name: String, pure: Boolean)(f: (V, V) => V) =
+    fn(name, member = true, pure, Seq(2))((_, vs) => f(vs(0), vs(1)))
+  private def m3(name: String, pure: Boolean)(f: (V, V, V) => V) =
+    fn(name, member = true, pure, Seq(3))((_, vs) => f(vs(0), vs(1), vs(2)))
+  private def mv(name: String, pure: Boolean, arities: Int*)(body: (Env, Vector[V]) => V) =
+    fn(name, member = true, pure, arities)(body)
+  private def g1(name: String, pure: Boolean)(f: V => V) =
+    fn(name, member = false, pure, Seq(1))((_, vs) => f(vs(0)))
+  private def gv(name: String, pure: Boolean, arities: Int*)(body: (Env, Vector[V]) => V) =
+    fn(name, member = false, pure, arities)(body)
+
+  /** Every function, by name. Declared library by library (one Go file
+    * each under the reference's lib/), each group its own method so no
+    * initializer nears HotSpot's 8,000-byte `HugeMethodLimit`
+    * (BytecodeSizeSpec). */
+  private val table: Map[String, Fn] = Map.from(
+    conversions ++ collections ++ strings ++ time ++ crypto ++ http ++ documents ++ optionals)
+
+  // ---------------- calls ----------------
   def call(fn: String, args: Vector[Ast], env: Env): V = fn match {
     // NonStrict (receive error values; lib/try.go:96-111, debug.go:62)
     case "try" =>
@@ -49,163 +83,68 @@ private[cel] object Functions {
       val v = Eval.eval(args(1), env)
       System.err.println(s"DEBUG: ${tag match { case VString(s) => s; case o => o }}: $v")
       v
-
-    case fn2 if pureGlobals(fn2) => strict(args, env)(vs => call2(fn2, vs))
-    case "rate_limit" => strict(args, env) {
-      case Vector(h, VString(policy), VDuration(win)) => rateLimit(h, policy, win, env)
-      case Vector(h, VString(prefix), VBool(_), VBool(delta), VDuration(win), VInt(burst)) =>
-        rateLimitGeneral(h, prefix, delta, win, burst, env)
-      case _ => VErr("no such overload: rate_limit")
-    }
-    case "now" => env.liveNowAnchor match {
-      // live call-time clock (monotonic, +1us so `now < now()` is
-      // strict even inside one microsecond — time.go:194-199)
-      case Some(anchor) =>
-        VTimestamp(env.nowMicros + (System.nanoTime() - anchor) / 1000L + 1L)
-      case None => VTimestamp(env.nowMicros)
-    }
-    // file library (reference lib/file.go; baseDir = the evaluation's
-    // working directory, like the mito CLI's cwd)
-    case "file" => strict(args, env) {
-      case Vector(VString(path)) => readFileV(path, env)
-      case Vector(VString(path), VString(mime)) =>
-        readFileV(path, env) match {
-          case VBytes(b) => mimeTransform(b, mime)
-          case err => err
-        }
-      case _ => VErr("no such overload: file")
-    }
-    case "dir" => strict(args, env) {
-      case Vector(VString(path)) => readDirV(path, env)
-      case _ => VErr("no such overload: dir")
-    }
-    case "uuid" => VString(java.util.UUID.randomUUID().toString)
-    case other =>
-      // fall back to method form with first arg as target (CEL allows both
-      // for several reference overloads, e.g. collate(x, p))
-      if (args.nonEmpty) {
-        val vs = args.map(a => Eval.eval(a, env))
-        vs.collectFirst { case e: VErr => e }.getOrElse((other, env.httpAuth) match {
-          // cfg-level Basic auth on executing calls, global form
-          case ("get" | "head" | "post", Some((u, p))) =>
-            guard(httpExecCall(other, vs.head, vs.tail, basicAuthHeader(u, p)))
-          case _ => guard(method2(other, vs.head, vs.tail))
-        })
-      } else VErr(s"unknown function: $other")
-  }
-
-  // ---------------- method calls ----------------
-  def method(target: Ast, fn: String, args: Vector[Ast], env: Env): V = fn match {
-    // optional.of(x) / optional.none() namespace calls
-    case "of" if target == Ast.Ident("optional") =>
-      strict(args, env)(vs => VOpt(Some(vs.head)))
-    case "none" if target == Ast.Ident("optional") => VOpt(None)
-    case "ofNonZeroValue" if target == Ast.Ident("optional") =>
-      strict(args, env)(vs =>
-        VOpt(if (Eval.isZeroV(vs.head)) None else Some(vs.head)))
-    // optional-value accessors
-    case "orValue" => strictWithTarget(target, args, env) {
-      case (VOpt(Some(v)), _) => v
-      case (VOpt(None), vs) => vs.head
-      case (v, _) => v // CEL: orValue on a non-optional passes through
-    }
-    case "or" => strictWithTarget(target, args, env) { (t, vs) =>
-      Eval.orOptV(t, vs.head)
-    }
-    case "hasValue" => strictWithTarget(target, args, env) {
-      case (VOpt(o), _) => VBool(o.isDefined)
-      case _ => VBool(true)
-    }
-    case "value" => strictWithTarget(target, args, env) {
-      case (VOpt(Some(v)), _) => v
-      case (VOpt(None), _) => VErr("optional.none() dereference")
-      case (v, _) => v
-    }
-    case "rate_limit" => // needs env.nowMicros
-      strictWithTarget(target, args, env) { case (h, Vector(VString(policy), VDuration(win))) =>
-        rateLimit(h, policy, win, env)
-      }
-    case "decode_xml" => // needs env.xsds for the named-hint overload
-      strictWithTarget(target, args, env) { (t, vs) =>
-        val hints: Either[VErr, String] = vs match {
-          case Vector() => Right("")
-          case Vector(VString(name)) =>
-            env.xsds.get(name).toRight(VErr(s"unknown XSD: $name"))
-          case _ => Left(VErr("no such overload for decode_xml"))
-        }
-        (bytesOf(t), hints) match {
-          case (Left(e), _) => e
-          case (_, Left(e)) => e
-          case (Right(b), Right(h)) =>
-            graft.expressions.XmlKernel.decode(new String(b, StandardCharsets.UTF_8), h)
-        }
-      }
-    // cfg-level Basic auth rides on every executing get/head/post
-    // (never do_request — lib/http.go:46-50)
-    case "get" | "head" | "post" if env.httpAuth.isDefined =>
-      val (u, p) = env.httpAuth.get
-      strictWithTarget(target, args, env)((t, vs) =>
-        httpExecCall(fn, t, vs, basicAuthHeader(u, p)))
-    case _ if env.regexps.nonEmpty && fn.startsWith("re_") =>
-      strictWithTarget(target, args, env)((t, vs) => regexp(fn, t, vs, env))
     case _ =>
-      strictWithTarget(target, args, env)((t, vs) => method2(fn, t, vs))
+      val f = table.getOrElse(fn, null)
+      if (f == null && args.isEmpty) VErr(s"unknown function: $fn")
+      else invoke(fn, f, args.map(Eval.eval(_, env)), env)
   }
 
-  private def strictWithTarget(target: Ast, args: Vector[Ast], env: Env)
-      (f: (V, Vector[V]) => V): V = {
-    val t = Eval.eval(target, env)
-    t match { case e: VErr => return e case _ => }
+  def method(target: Ast, fn: String, args: Vector[Ast], env: Env): V = fn match {
+    case "of" if target == OptionalNs =>
+      strict(args, env)(vs => VOpt(Some(vs.head)))
+    case "none" if target == OptionalNs => VOpt(None)
+    case "ofNonZeroValue" if target == OptionalNs =>
+      strict(args, env)(vs => VOpt(if (Eval.isZeroV(vs.head)) None else Some(vs.head)))
+    case _ =>
+      // the arguments are not evaluated when the target is an error
+      val t = Eval.eval(target, env)
+      if (t.isInstanceOf[VErr]) t
+      else {
+        val f = table.getOrElse(fn, null)
+        val vs = Vector.newBuilder[V]
+        vs += t
+        args.foreach(a => vs += Eval.eval(a, env))
+        invoke(fn, if (f != null && f.member) f else null, vs.result(), env)
+      }
+  }
+
+  private val OptionalNs = Ast.Ident("optional")
+
+  /** `f` over evaluated values: the first error among them, else `no
+    * such function` when the form binds no `f` (null), else `no such
+    * overload` for a count `f` does not take, else its body. */
+  private def invoke(fn: String, f: Fn, vs: Vector[V], env: Env): V = {
+    var i = 0
+    while (i < vs.length) {
+      if (vs(i).isInstanceOf[VErr]) return vs(i)
+      i += 1
+    }
+    if (f == null) VErr(s"no such function: $fn")
+    else if (!f.takes(vs.length)) VErr(s"no such overload: $fn")
+    else guard(f.body(env, vs))
+  }
+
+  private def strict(args: Vector[Ast], env: Env)(f: Vector[V] => V): V = {
     val vs = args.map(a => Eval.eval(a, env))
-    vs.collectFirst { case e: VErr => e }.getOrElse(guard(f(t, vs)))
+    vs.collectFirst { case e: VErr => e }.getOrElse(guard(f(vs)))
   }
 
-  /** Env-free global functions: pure value-level dispatch ([[call2]]). */
-  private val pureGlobals: Set[String] = Set(
-    "size", "int", "uint", "double", "string", "bytes", "bool", "timestamp",
-    "duration", "dyn", "type", "max", "min", "zip", "keys", "values",
-    "encode_json", "decode_json", "hmac", "matches")
-
-  /** Methods (also callable in global form) whose result depends only on
-    * their target and arguments. Deliberately excluded: send_to/close
-    * (channel side effects), get/head/post/do_request (executing HTTP)
-    * and rate_limit (shared limiter state). */
-  private val pureMethods: Set[String] = Set(
-    "size", "collate", "drop", "drop_empty", "flatten", "with",
-    "with_update", "with_replace", "zip", "keys", "values", "min", "max",
-    "mime", "request", "get_request", "post_request",
-    "basic_authentication", "parse_url", "format_url", "parse_query",
-    "format_query", "encode_json", "decode_json", "decode_json_stream",
-    "to_lower", "to_upper", "to_title", "trim_space", "trim", "trim_left",
-    "trim_right", "trim_prefix", "trim_suffix", "has_prefix", "has_suffix",
-    "contains_substr", "contains_any", "compare", "count", "equal_fold",
-    "fields", "index", "index_any", "last_index", "last_index_any", "join",
-    "repeat", "replace", "replace_all", "split", "split_n", "split_after",
-    "split_after_n", "substring", "valid_utf8", "to_valid_utf8", "format",
-    "parse_time", "md5", "sha1", "sha256", "hex", "base64", "base64_raw",
-    "base64_decode", "base64_raw_decode", "hmac",
-    // cel-go STANDARD env: string predicates, matches, time accessors
-    "contains", "startsWith", "endsWith", "matches",
-    "getFullYear", "getMonth", "getDayOfYear", "getDayOfMonth",
-    "getDate", "getDayOfWeek", "getHours", "getMinutes",
-    "getSeconds", "getMilliseconds",
-    // optional-value accessors
-    "orValue", "or", "value", "hasValue")
-
-  /** True when every call in `e` is pure: the program reads only its
-    * state, globals and the evaluation's fixed `now`, so it may be
-    * folded at plan time or evaluated more than once per row. uuid(),
-    * debug, file/dir, executing HTTP, channels and rate_limit make a
-    * program impure, and so does any call not listed here. */
+  /** True when every call in `e` is to a pure function (the table's
+    * flag; `try` and `is_error` are pure, `debug` is not, and a name the
+    * form does not bind is not): the program reads only its state,
+    * globals and the evaluation's fixed `now`, so it may be folded at
+    * plan time or evaluated more than once per row. */
   def isPure(e: Ast): Boolean = e match {
     case Ast.Call(fn, args) =>
-      (pureGlobals(fn) || fn == "try" || fn == "is_error" || fn == "now" ||
-        (args.nonEmpty && pureMethods(fn))) && args.forall(isPure)
+      (fn match {
+        case "try" | "is_error" => true
+        case "debug" => false
+        case _ => table.get(fn).exists(_.pure)
+      }) && args.forall(isPure)
     case Ast.Method(t, fn, args) =>
       val ok = t match {
-        case Ast.Ident("optional") => fn == "of" || fn == "none" || fn == "ofNonZeroValue"
-        case _ => pureMethods(fn) || fn.startsWith("re_") ||
-          (fn == "decode_xml" && args.isEmpty)
+        case OptionalNs => fn == "of" || fn == "none" || fn == "ofNonZeroValue"
+        case _ => table.get(fn).exists(f => f.member && f.pure)
       }
       ok && isPure(t) && args.forall(isPure)
     case Ast.ListLit(es) => es.forall(isPure)
@@ -222,95 +161,348 @@ private[cel] object Functions {
     case _ => true // literals and identifiers
   }
 
-  private def call2(fn: String, vs: Vector[V]): V = fn match {
-    case "type" => vs match {
-      case Vector(x) => Eval.typeOf(x)
-      case _ => VErr("no such overload: type")
-    }
-    case "size" => vs match {
-      case Vector(VString(s)) => VInt(s.codePointCount(0, s.length).toLong)
-      case Vector(VBytes(b)) => VInt(b.length.toLong)
-      case Vector(VList(xs)) => VInt(xs.length.toLong)
-      case Vector(VMap(m)) => VInt(m.size.toLong)
-      case v => VErr(s"no such overload: size(${v.head})")
-    }
-    case "int" => vs match {
-      case Vector(VInt(i)) => VInt(i)
-      case Vector(VUint(i)) => VInt(i)
-      case Vector(VDouble(d)) => VInt(d.toLong)
-      case Vector(VString(s)) => try VInt(s.toLong) catch { case _: NumberFormatException => VErr(s"cannot convert to int: $s") }
-      case Vector(VTimestamp(us)) => VInt(Math.floorDiv(us, 1000000L))
-      case Vector(VDuration(us)) => VInt(us * 1000L) // CEL: duration -> ns? Go int(duration)=ns
-      case v => VErr(s"no such overload: int(${v.head})")
-    }
-    case "uint" => vs match {
-      case Vector(VInt(i)) => VUint(i)
-      case Vector(VUint(i)) => VUint(i)
-      case Vector(VDouble(d)) => VUint(d.toLong)
-      case Vector(VString(s)) => VUint(java.lang.Long.parseUnsignedLong(s))
-      case v => VErr(s"no such overload: uint(${v.head})")
-    }
-    case "double" => vs match {
-      case Vector(VInt(i)) => VDouble(i.toDouble)
-      case Vector(VUint(i)) => VDouble(i.toDouble)
-      case Vector(VDouble(d)) => VDouble(d)
-      case Vector(VString(s)) => try VDouble(s.toDouble) catch { case _: NumberFormatException => VErr(s"cannot convert to double: $s") }
-      case v => VErr(s"no such overload: double(${v.head})")
-    }
-    case "string" => vs match {
-      case Vector(VString(s)) => VString(s)
-      case Vector(VBytes(b)) =>
-        if (!StringKernel.validUTF8(b))
-          VErr("invalid UTF-8 in bytes, cannot convert to string")
+  // ---------------- the table ----------------
+
+  /** CEL's standard conversions and the environment's globals: now,
+    * uuid and the file library (reference lib/file.go; the base
+    * directory is the evaluation's working directory, like the mito
+    * CLI's cwd). */
+  private def conversions: Seq[(String, Fn)] = Seq(
+    g1("type", Pure)(Eval.typeOf),
+    g1("int", Pure) {
+      case VInt(i) => VInt(i)
+      case VUint(i) => VInt(i)
+      case VDouble(d) => VInt(d.toLong)
+      case VString(s) =>
+        try VInt(s.toLong) catch { case _: NumberFormatException => VErr(s"cannot convert to int: $s") }
+      case VTimestamp(us) => VInt(Math.floorDiv(us, 1000000L))
+      case VDuration(us) => VInt(us * 1000L) // Go int(duration) is nanoseconds
+      case v => VErr(s"no such overload: int($v)")
+    },
+    g1("uint", Pure) {
+      case VInt(i) => VUint(i)
+      case VUint(i) => VUint(i)
+      case VDouble(d) => VUint(d.toLong)
+      case VString(s) => VUint(java.lang.Long.parseUnsignedLong(s))
+      case v => VErr(s"no such overload: uint($v)")
+    },
+    g1("double", Pure) {
+      case VInt(i) => VDouble(i.toDouble)
+      case VUint(i) => VDouble(i.toDouble)
+      case VDouble(d) => VDouble(d)
+      case VString(s) =>
+        try VDouble(s.toDouble) catch { case _: NumberFormatException => VErr(s"cannot convert to double: $s") }
+      case v => VErr(s"no such overload: double($v)")
+    },
+    g1("string", Pure) {
+      case VString(s) => VString(s)
+      case VBytes(b) =>
+        if (!StringKernel.validUTF8(b)) VErr("invalid UTF-8 in bytes, cannot convert to string")
         else VString(new String(b, StandardCharsets.UTF_8))
-      case Vector(VInt(i)) => VString(i.toString)
-      case Vector(VUint(i)) => VString(java.lang.Long.toUnsignedString(i))
-      case Vector(VDouble(d)) => VString(
-        if (JsonAlgebra.wholeDouble(d)) d.toLong.toString else d.toString)
-      case Vector(VBool(b)) => VString(b.toString)
-      case Vector(VTimestamp(us)) => VString(TimeKernel.formatTime(us, u8("RFC3339")).toString)
-      case Vector(VDuration(us)) => VString(TimeKernel.formatDuration(us).toString)
-      case v => VErr(s"no such overload: string(${v.head})")
-    }
-    case "bytes" => bytesOf(vs.head).fold(identity, VBytes(_))
-    case "bool" => vs match {
-      case Vector(VBool(b)) => VBool(b)
-      case Vector(VString("true")) => VBool(true)
-      case Vector(VString("false")) => VBool(false)
-      case v => VErr(s"no such overload: bool(${v.head})")
-    }
-    case "timestamp" => vs match {
-      case Vector(VString(s)) => VTimestamp(TimeKernel.parseTime(u8(s), u8("RFC3339")))
-      case Vector(VInt(sec)) => VTimestamp(sec * 1000000L)
-      case Vector(t: VTimestamp) => t
-      case v => VErr(s"no such overload: timestamp(${v.head})")
-    }
-    case "duration" => vs match {
-      case Vector(VString(s)) => VDuration(TimeKernel.parseDuration(u8(s)))
-      case Vector(d: VDuration) => d
-      case v => VErr(s"no such overload: duration(${v.head})")
-    }
-    case "dyn" => vs.head
-    case "matches" => vs match { // cel-go standard global form
-      case Vector(VString(s), VString(re)) => matchesRe(s, re)
-      case _ => VErr("no such overload: matches")
-    }
-    case "max" => Collections.max(vs.head)
-    case "min" => Collections.min(vs.head)
-    case "zip" => Collections.zip(vs(0), vs(1))
-    case "keys" => Collections.keys(vs.head)
-    case "values" => Collections.values(vs.head)
-    case "encode_json" => VString(Eval.renderV(vs.head))
-    case "decode_json" => decodeJson(vs.head)
-    case "hmac" => vs match {
-      case Vector(d0, VString(alg), k0) =>
-        (bytesOf(d0), bytesOf(k0)) match {
-          case (Right(d), Right(k)) => VBytes(CryptoKernel.hmac(d, u8(alg), k))
-          case _ => VErr("no such overload: hmac")
+      case VInt(i) => VString(i.toString)
+      case VUint(i) => VString(java.lang.Long.toUnsignedString(i))
+      case VDouble(d) => VString(if (JsonAlgebra.wholeDouble(d)) d.toLong.toString else d.toString)
+      case VBool(b) => VString(b.toString)
+      case VTimestamp(us) => VString(TimeKernel.formatTime(us, u8("RFC3339")).toString)
+      case VDuration(us) => VString(TimeKernel.formatDuration(us).toString)
+      case v => VErr(s"no such overload: string($v)")
+    },
+    g1("bytes", Pure)(v => bytesOf(v).fold(identity, VBytes(_))),
+    g1("bool", Pure) {
+      case VBool(b) => VBool(b)
+      case VString("true") => VBool(true)
+      case VString("false") => VBool(false)
+      case v => VErr(s"no such overload: bool($v)")
+    },
+    g1("timestamp", Pure) {
+      case VString(s) => VTimestamp(TimeKernel.parseTime(u8(s), u8("RFC3339")))
+      case VInt(sec) => VTimestamp(sec * 1000000L)
+      case t: VTimestamp => t
+      case v => VErr(s"no such overload: timestamp($v)")
+    },
+    g1("duration", Pure) {
+      case VString(s) => VDuration(TimeKernel.parseDuration(u8(s)))
+      case d: VDuration => d
+      case v => VErr(s"no such overload: duration($v)")
+    },
+    g1("dyn", Pure)(identity),
+    gv("now", Pure, 0)((env, _) => env.liveNowAnchor match {
+      // live call-time clock (monotonic, +1us so `now < now()` is
+      // strict even inside one microsecond — time.go:194-199)
+      case Some(anchor) =>
+        VTimestamp(env.nowMicros + (System.nanoTime() - anchor) / 1000L + 1L)
+      case None => VTimestamp(env.nowMicros)
+    }),
+    gv("uuid", Impure, 0)((_, _) => VString(java.util.UUID.randomUUID().toString)),
+    gv("file", Impure, 1, 2)((env, vs) => vs match {
+      case Vector(VString(path)) => readFileV(path, env)
+      case Vector(VString(path), VString(mime)) =>
+        readFileV(path, env) match {
+          case VBytes(b) => mimeTransform(b, mime)
+          case err => err
         }
+      case _ => VErr("no such overload: file")
+    }),
+    gv("dir", Impure, 1)((env, vs) => vs(0) match {
+      case VString(path) => readDirV(path, env)
+      case _ => VErr("no such overload: dir")
+    }))
+
+  /** collections ([[Collections]], shared with json_* and v_*). */
+  private def collections: Seq[(String, Fn)] = Seq(
+    m1("size", Pure) {
+      case VString(s) => VInt(s.codePointCount(0, s.length).toLong)
+      case VBytes(b) => VInt(b.length.toLong)
+      case VList(xs) => VInt(xs.length.toLong)
+      case VMap(m) => VInt(m.size.toLong)
+      case other => VErr(s"no such overload: size($other)")
+    },
+    m2("collate", Pure)((t, a) => pathsArg(a, "collate").fold(identity, Collections.collate(t, _))),
+    m2("drop", Pure)((t, a) => pathsArg(a, "drop").fold(identity, Collections.drop(t, _))),
+    m1("drop_empty", Pure)(Collections.dropEmpty),
+    m1("flatten", Pure)(Collections.flatten),
+    m2("with", Pure)(Collections.withAll),
+    m2("with_update", Pure)(Collections.withUpdate),
+    m2("with_replace", Pure)(Collections.withReplace),
+    m2("zip", Pure)(Collections.zip),
+    m1("keys", Pure)(Collections.keys),
+    m1("values", Pure)(Collections.values),
+    m1("min", Pure)(Collections.min),
+    m1("max", Pure)(Collections.max))
+
+  /** strings (StringKernel + builtins), with cel-go's STANDARD-env
+    * string predicates and matches, which every program the reference
+    * compiles has (cel.NewEnv defaults). */
+  private def strings: Seq[(String, Fn)] = Seq(
+    m2("contains", Pure) {
+      case (VString(s), VString(sub)) => VBool(s.contains(sub))
+      case (t, _) => VErr(s"no such overload: contains($t)")
+    },
+    m2("startsWith", Pure) {
+      case (VString(s), VString(p)) => VBool(s.startsWith(p))
+      case (t, _) => VErr(s"no such overload: startsWith($t)")
+    },
+    m2("endsWith", Pure) {
+      case (VString(s), VString(p)) => VBool(s.endsWith(p))
+      case (t, _) => VErr(s"no such overload: endsWith($t)")
+    },
+    m2("matches", Pure) {
+      case (VString(s), VString(re)) => matchesRe(s, re)
+      case (t, _) => VErr(s"no such overload: matches($t)")
+    },
+    m1("to_lower", Pure)(str1(_)(s => VString(s.toLowerCase))),
+    m1("to_upper", Pure)(str1(_)(s => VString(s.toUpperCase))),
+    m1("to_title", Pure)(str1(_)(s => VString(StringKernel.toTitle(u8(s)).toString))),
+    m1("trim_space", Pure)(str1(_)(s => VString(s.trim))),
+    m2("trim", Pure)(str2(_, _)((s, c) => VString(StringKernel.trimCutset(u8(s), u8(c)).toString))),
+    m2("trim_left", Pure)(str2(_, _)((s, c) => VString(StringKernel.trimLeftCutset(u8(s), u8(c)).toString))),
+    m2("trim_right", Pure)(str2(_, _)((s, c) => VString(StringKernel.trimRightCutset(u8(s), u8(c)).toString))),
+    m2("trim_prefix", Pure)(str2(_, _)((s, p) => VString(StringKernel.trimPrefix(u8(s), u8(p)).toString))),
+    m2("trim_suffix", Pure)(str2(_, _)((s, p) => VString(StringKernel.trimSuffix(u8(s), u8(p)).toString))),
+    m2("has_prefix", Pure)(str2(_, _)((s, p) => VBool(s.startsWith(p)))),
+    m2("has_suffix", Pure)(str2(_, _)((s, p) => VBool(s.endsWith(p)))),
+    m2("contains_substr", Pure)(str2(_, _)((s, p) => VBool(s.contains(p)))),
+    m2("contains_any", Pure)(str2(_, _)((s, p) => VBool(StringKernel.containsAny(u8(s), u8(p))))),
+    m2("compare", Pure)(str2(_, _)((a, b) => VInt(StringKernel.compareStr(u8(a), u8(b)).toLong))),
+    m2("count", Pure)(str2(_, _)((s, sub) => VInt(StringKernel.countSubstr(u8(s), u8(sub))))),
+    m2("equal_fold", Pure)(str2(_, _)((a, b) => VBool(a.equalsIgnoreCase(b)))),
+    m1("fields", Pure)(str1(_)(s => VList(s.split("\\s+").filter(_.nonEmpty).toVector.map(VString(_))))),
+    m2("index", Pure)(str2(_, _)((s, sub) => VInt(StringKernel.indexOf(u8(s), u8(sub))))),
+    m2("index_any", Pure)(str2(_, _)((s, c) => VInt(StringKernel.indexAny(u8(s), u8(c))))),
+    m2("last_index", Pure)(str2(_, _)((s, sub) => VInt(StringKernel.lastIndexOf(u8(s), u8(sub))))),
+    m2("last_index_any", Pure)(str2(_, _)((s, c) => VInt(StringKernel.lastIndexAny(u8(s), u8(c))))),
+    m2("join", Pure)(join),
+    m2("repeat", Pure) {
+      case (VString(s), VInt(n)) => VString(s * n.toInt)
+      case _ => VErr("no such overload: repeat")
+    },
+    mv("replace", Pure, 3, 4)((_, vs) => vs match {
+      case Vector(VString(s), VString(o), VString(n2)) =>
+        VString(StringKernel.replaceN(u8(s), u8(o), u8(n2), -1).toString)
+      case Vector(VString(s), VString(o), VString(n2), VInt(k)) =>
+        VString(StringKernel.replaceN(u8(s), u8(o), u8(n2), k).toString)
+      case _ => VErr("no such overload: replace")
+    }),
+    m3("replace_all", Pure) {
+      case (VString(s), VString(o), VString(n2)) =>
+        VString(StringKernel.replaceN(u8(s), u8(o), u8(n2), -1).toString)
+      case _ => VErr("no such overload: replace_all")
+    },
+    m2("split", Pure)(str2(_, _)((s, sep) => VList(arr(StringKernel.splitN(u8(s), u8(sep), -1))))),
+    m3("split_n", Pure) {
+      case (VString(s), VString(sep), VInt(n)) => VList(arr(StringKernel.splitN(u8(s), u8(sep), n)))
+      case _ => VErr("no such overload: split_n")
+    },
+    m2("split_after", Pure)(str2(_, _)((s, sep) => VList(arr(StringKernel.splitAfter(u8(s), u8(sep)))))),
+    m3("split_after_n", Pure) {
+      case (VString(s), VString(sep), VInt(n)) =>
+        VList(arr(StringKernel.splitAfterN(u8(s), u8(sep), n)))
+      case _ => VErr("no such overload: split_after_n")
+    },
+    m3("substring", Pure) {
+      case (VString(s), VInt(a), VInt(b)) => VString(StringKernel.substrRunes(u8(s), a, b).toString)
+      case _ => VErr("no such overload: substring")
+    },
+    m1("valid_utf8", Pure)(t => bytesOf(t).fold(identity, b => VBool(StringKernel.validUTF8(b)))),
+    m2("to_valid_utf8", Pure)((t, rep) => (bytesOf(t), rep) match {
+      case (Right(b), VString(r)) => VString(StringKernel.toValidUTF8(b, u8(r)).toString)
+      case _ => VErr("no such overload: to_valid_utf8")
+    }),
+    // the registry's named regexps (Env.regexps); with none configured
+    // the re_* names are unknown
+    mv("re_match", Pure, 2)(regexp("re_match")),
+    mv("re_find", Pure, 2)(regexp("re_find")),
+    mv("re_find_all", Pure, 2)(regexp("re_find_all")),
+    mv("re_find_submatch", Pure, 2)(regexp("re_find_submatch")),
+    mv("re_find_all_submatch", Pure, 2)(regexp("re_find_all_submatch")),
+    mv("re_replace_all", Pure, 3)(regexp("re_replace_all")))
+
+  /** time, with cel-go's STANDARD-env timestamp/duration accessors
+    * (the target, then an optional time zone). */
+  private def time: Seq[(String, Fn)] = Seq(
+    m2("format", Pure) {
+      case (VTimestamp(us), VString(layout)) => VString(TimeKernel.formatTime(us, u8(layout)).toString)
+      case _ => VErr("no such overload: format")
+    },
+    m2("parse_time", Pure)(parseTimeV)) ++
+    Seq("getFullYear", "getMonth", "getDayOfYear", "getDayOfMonth", "getDate",
+      "getDayOfWeek", "getHours", "getMinutes", "getSeconds", "getMilliseconds").map(name =>
+      mv(name, Pure, 1, 2)((_, vs) => timeAccessor(name, vs.head, vs.tail)))
+
+  /** crypto (reference lib/crypto.go). */
+  private def crypto: Seq[(String, Fn)] = Seq(
+    m1("md5", Pure)(t => bytesOf(t).fold(identity, b => VBytes(CryptoKernel.md5Bytes(b)))),
+    m1("sha1", Pure)(t => bytesOf(t).fold(identity, b => VBytes(CryptoKernel.sha1Bytes(b)))),
+    m1("sha256", Pure)(t => bytesOf(t).fold(identity, b => VBytes(CryptoKernel.sha256Bytes(b)))),
+    m1("hex", Pure)(t => bytesOf(t).fold(identity, b => VString(CryptoKernel.hexEncode(b).toString))),
+    m1("base64", Pure)(t => bytesOf(t).fold(identity, b => VString(CryptoKernel.base64Std(b).toString))),
+    m1("base64_raw", Pure)(t => bytesOf(t).fold(identity, b => VString(CryptoKernel.base64Raw(b).toString))),
+    m1("base64_decode", Pure) {
+      case VString(s) => VBytes(CryptoKernel.base64Decode(u8(s)))
+      case _ => VErr("no such overload: base64_decode")
+    },
+    m1("base64_raw_decode", Pure) {
+      case VString(s) => VBytes(CryptoKernel.base64RawDecode(u8(s)))
+      case _ => VErr("no such overload: base64_raw_decode")
+    },
+    m3("hmac", Pure)((d0, alg, k) => (bytesOf(d0), alg) match {
+      case (Right(d), VString(a)) => bytesOf(k).fold(identity, kb => VBytes(CryptoKernel.hmac(d, u8(a), kb)))
       case _ => VErr("no such overload: hmac")
-    }
-    case other => VErr(s"unknown function: $other")
+    }))
+
+  /** http: request-as-data, executing calls, url and query. Reference
+    * lib/http.go: makeRequestBody :672-712, reqToMap :713-746, doHead
+    * :518-548, doPost :585-635, doRequest :826-854,
+    * basicAuthentication :783-824. The cfg-level Basic auth
+    * (Env.httpAuth) rides on every executing get/head/post, never on
+    * do_request (lib/http.go:46-50). */
+  private def http: Seq[(String, Fn)] = Seq(
+    mv("request", Pure, 2, 3)((_, vs) => vs match {
+      case Vector(VString(m), VString(url)) => buildRequestV(m, url, None, None)
+      case Vector(VString(m), VString(url), body) => buildRequestV(m, url, Some(body), None)
+      case _ => VErr("no such overload for request")
+    }),
+    m1("get_request", Pure) {
+      case VString(url) => buildRequestV("GET", url, None, None)
+      case _ => VErr("no such overload for request")
+    },
+    m3("post_request", Pure) {
+      case (VString(url), VString(ct), body) => buildRequestV("POST", url, Some(body), Some(ct))
+      case _ => VErr("no such overload for post request")
+    },
+    mv("get", Impure, 1)(httpExecCall("get")),
+    mv("head", Impure, 1)(httpExecCall("head")),
+    mv("post", Impure, 3)(httpExecCall("post")),
+    m1("do_request", Impure) {
+      case VMap(m) => doRequestV(m)
+      case _ => VErr("no such overload for do_request")
+    },
+    m3("basic_authentication", Pure) {
+      case (VMap(m), VString(user), VString(pass)) =>
+        val tok = java.util.Base64.getEncoder.encodeToString(
+          s"$user:$pass".getBytes(StandardCharsets.UTF_8))
+        val hdr = m.get("Header") match {
+          case Some(VMap(h)) => h
+          case _ => VMap.noEntries
+        }
+        VMap(m + ("Header" -> VMap(hdr + ("Authorization" -> VList(Vector(VString("Basic " + tok)))))))
+      case _ => VErr("no such overload for request")
+    },
+    m1("parse_url", Pure) {
+      case VString(s) => parseUrlV(s)
+      case _ => VErr("no such overload for request")
+    },
+    m1("format_url", Pure) {
+      case VMap(m) => formatUrlV(m)
+      case _ => VErr("no such overload")
+    },
+    m1("parse_query", Pure) {
+      case VString(s) => parseQueryV(s)
+      case _ => VErr("no such overload")
+    },
+    m1("format_query", Pure) {
+      case VMap(m) => formatQueryV(m)
+      case _ => VErr("no such overload")
+    },
+    mv("rate_limit", Impure, 3, 6)((env, vs) => vs match {
+      case Vector(h, VString(policy), VDuration(win)) => rateLimit(h, policy, win, env)
+      case Vector(h, VString(prefix), VBool(_), VBool(delta), VDuration(win), VInt(burst)) =>
+        rateLimitGeneral(h, prefix, delta, win, burst, env)
+      case _ => VErr("no such overload: rate_limit")
+    }))
+
+  /** json and xml documents, mime transforms on bytes (reference
+    * lib/mime.go:90-132) and channels (lib/send.go:149-197).
+    * v.send_to(name) pushes the value (rendered JSON) onto the named
+    * driver channel and returns the value; v.close(name) closes it.
+    * send_refval_to (send.go:148-159) differs from send_to (:161-177)
+    * only in HOW the value crosses the channel: raw ref.Val vs
+    * converted-to-native. Here every value is already a rendered V, so
+    * the two are the same operation. */
+  private def documents: Seq[(String, Fn)] = Seq(
+    m1("encode_json", Pure)(t => VString(Eval.renderV(t))),
+    m1("decode_json", Pure)(t => bytesOf(t).fold(identity, b => Eval.stateLeafV(b, 0, b.length))),
+    m1("decode_json_stream", Pure)(t => bytesOf(t).fold(identity, Eval.parseStreamV(_))),
+    // the hint table (Env.xsds) is empty in a Column's env, where a
+    // named hint is a constant error, so the call is pure in both arities
+    mv("decode_xml", Pure, 1, 2)((env, vs) => decodeXml(vs.head, vs.tail, env)),
+    m2("mime", Pure) {
+      case (VBytes(b), VString(tpe)) => mimeTransform(b, tpe)
+      case (VString(s), VString(tpe)) => mimeTransform(s.getBytes(StandardCharsets.UTF_8), tpe)
+      case _ => VErr("no such overload: mime")
+    },
+    m2("send_to", Impure)(sendTo),
+    m2("send_refval_to", Impure)(sendTo),
+    m2("close", Impure) {
+      case (_, VString(name)) =>
+        if (graft.streaming.Channels.closeStrict(name)) VBool(true) else VErr(s"no channel $name")
+      case _ => VErr("no such overload")
+    })
+
+  /** optional-value accessors (CEL optional types, mito.go:83). */
+  private def optionals: Seq[(String, Fn)] = Seq(
+    m2("orValue", Pure) {
+      case (VOpt(Some(v)), _) => v
+      case (VOpt(None), d) => d
+      case (v, _) => v // CEL: orValue on a non-optional passes through
+    },
+    m2("or", Pure)(Eval.orOptV),
+    m1("hasValue", Pure) {
+      case VOpt(o) => VBool(o.isDefined)
+      case _ => VBool(true)
+    },
+    m1("value", Pure) {
+      case VOpt(Some(v)) => v
+      case VOpt(None) => VErr("optional.none() dereference")
+      case v => v
+    })
+
+  // ---------------- bodies ----------------
+
+  private def bytesOf(v: V): Either[VErr, Array[Byte]] = v match {
+    case VBytes(b) => Right(b)
+    case VString(s) => Right(s.getBytes(StandardCharsets.UTF_8))
+    case other => Left(VErr(s"no such overload: bytes from $other"))
   }
 
   /** `s.matches(re)` — unanchored partial match, the semantics of Go's
@@ -327,6 +519,25 @@ private[cel] object Functions {
       if (matchesCache.size > 1024) java.util.regex.Pattern.compile(re)
       else matchesCache.computeIfAbsent(re, java.util.regex.Pattern.compile(_))
     VBool(p.matcher(s).find())
+  }
+
+  private def join(t: V, sep: V): V = (t, sep) match {
+    case (VList(xs), VString(sep)) =>
+      VString(xs.map { case VString(s) => s; case o => return VErr(s"join: $o") }.mkString(sep))
+    case _ => VErr("no such overload: join")
+  }
+
+  private def parseTimeV(t: V, layout: V): V = (t, layout) match {
+    case (VString(s), VString(layout)) => VTimestamp(TimeKernel.parseTime(u8(s), u8(layout)))
+    case (VString(s), VList(layouts)) =>
+      layouts.foreach {
+        case VString(l) =>
+          try return VTimestamp(TimeKernel.parseTime(u8(s), u8(l)))
+          catch { case _: Exception => }
+        case _ =>
+      }
+      VErr(s"failed to parse $s with any provided layout")
+    case _ => VErr("no such overload: parse_time")
   }
 
   /** cel-go standard timestamp/duration accessors. Timestamp fields are
@@ -365,276 +576,31 @@ private[cel] object Functions {
           case "getMinutes" => VInt(zdt.getMinute.toLong)
           case "getSeconds" => VInt(zdt.getSecond.toLong)
           case "getMilliseconds" => VInt(zdt.getNano.toLong / 1000000L)
-          case _ => VErr(s"no such overload: timestamp.$fn")
         }
       })
     case other => VErr(s"no such overload: $fn($other)")
   }
 
-  /** Shared method implementations (also reachable as global calls),
-    * one dispatcher per mito library (one Go file each under the
-    * reference's lib/). Each dispatcher answers `null` for a name that
-    * is not its library's, and the next one is asked. The split keeps
-    * every dispatcher far below HotSpot's 8,000-byte `HugeMethodLimit`,
-    * past which a method is never JIT-compiled and every call through
-    * it runs in the bytecode interpreter (BytecodeSizeSpec). */
-  private def method2(fn: String, t: V, args: Vector[V]): V = {
-    var v = collectionsLib(fn, t, args)
-    if (v eq null) v = stringsLib(fn, t, args)
-    if (v eq null) v = timeLib(fn, t, args)
-    if (v eq null) v = cryptoLib(fn, t, args)
-    if (v eq null) v = httpLib(fn, t, args)
-    if (v eq null) v = documentLib(fn, t, args)
-    if (v eq null) VErr(s"no such function: $fn") else v
+  /** decode_xml, with the hint name looked up in the env's XSD table. */
+  private def decodeXml(t: V, args: Vector[V], env: Env): V = {
+    val hints: Either[VErr, String] = args match {
+      case Vector() => Right("")
+      case Vector(VString(name)) => env.xsds.get(name).toRight(VErr(s"unknown XSD: $name"))
+      case _ => Left(VErr("no such overload for decode_xml"))
+    }
+    (bytesOf(t), hints) match {
+      case (Left(e), _) => e
+      case (_, Left(e)) => e
+      case (Right(b), Right(h)) =>
+        graft.expressions.XmlKernel.decode(new String(b, StandardCharsets.UTF_8), h)
+    }
   }
 
-  /** collections (graft.cel.Collections, shared with json_* and v_*). */
-  private def collectionsLib(fn: String, t: V, args: Vector[V]): V = fn match {
-    case "size" => t match {
-      case VString(s) => VInt(s.codePointCount(0, s.length).toLong)
-      case VBytes(b) => VInt(b.length.toLong)
-      case VList(xs) => VInt(xs.length.toLong)
-      case VMap(m) => VInt(m.size.toLong)
-      case other => VErr(s"no such overload: size($other)")
-    }
-    case "collate" => pathsArg(args.head, "collate").fold(identity, Collections.collate(t, _))
-    case "drop" => pathsArg(args.head, "drop").fold(identity, Collections.drop(t, _))
-    case "drop_empty" => Collections.dropEmpty(t)
-    case "flatten" => Collections.flatten(t)
-    case "with" => Collections.withAll(t, args.head)
-    case "with_update" => Collections.withUpdate(t, args.head)
-    case "with_replace" => Collections.withReplace(t, args.head)
-    case "zip" => Collections.zip(t, args.head)
-    case "keys" => Collections.keys(t)
-    case "values" => Collections.values(t)
-    case "min" => Collections.min(t)
-    case "max" => Collections.max(t)
-    case _ => null
-  }
-
-  /** strings (StringKernel + builtins), with cel-go's STANDARD-env
-    * string predicates and matches, which every program the reference
-    * compiles has (cel.NewEnv defaults). */
-  private def stringsLib(fn: String, t: V, args: Vector[V]): V = fn match {
-    case "contains" => (t, args) match {
-      case (VString(s), Vector(VString(sub))) => VBool(s.contains(sub))
-      case _ => VErr(s"no such overload: contains($t)")
-    }
-    case "startsWith" => (t, args) match {
-      case (VString(s), Vector(VString(p))) => VBool(s.startsWith(p))
-      case _ => VErr(s"no such overload: startsWith($t)")
-    }
-    case "endsWith" => (t, args) match {
-      case (VString(s), Vector(VString(p))) => VBool(s.endsWith(p))
-      case _ => VErr(s"no such overload: endsWith($t)")
-    }
-    case "matches" => (t, args) match {
-      case (VString(s), Vector(VString(re))) => matchesRe(s, re)
-      case _ => VErr(s"no such overload: matches($t)")
-    }
-    case "to_lower" => str1(t)(s => VString(s.toLowerCase))
-    case "to_upper" => str1(t)(s => VString(s.toUpperCase))
-    case "to_title" => str1(t)(s => VString(StringKernel.toTitle(u8(s)).toString))
-    case "trim_space" => str1(t)(s => VString(s.trim))
-    case "trim" => str2(t, args)((s, c) => VString(StringKernel.trimCutset(u8(s), u8(c)).toString))
-    case "trim_left" => str2(t, args)((s, c) => VString(StringKernel.trimLeftCutset(u8(s), u8(c)).toString))
-    case "trim_right" => str2(t, args)((s, c) => VString(StringKernel.trimRightCutset(u8(s), u8(c)).toString))
-    case "trim_prefix" => str2(t, args)((s, p) => VString(StringKernel.trimPrefix(u8(s), u8(p)).toString))
-    case "trim_suffix" => str2(t, args)((s, p) => VString(StringKernel.trimSuffix(u8(s), u8(p)).toString))
-    case "has_prefix" => str2(t, args)((s, p) => VBool(s.startsWith(p)))
-    case "has_suffix" => str2(t, args)((s, p) => VBool(s.endsWith(p)))
-    case "contains_substr" => str2(t, args)((s, p) => VBool(s.contains(p)))
-    case "contains_any" => str2(t, args)((s, p) => VBool(StringKernel.containsAny(u8(s), u8(p))))
-    case "compare" => str2(t, args)((a, b) => VInt(StringKernel.compareStr(u8(a), u8(b)).toLong))
-    case "count" => str2(t, args)((s, sub) => VInt(StringKernel.countSubstr(u8(s), u8(sub))))
-    case "equal_fold" => str2(t, args)((a, b) => VBool(a.equalsIgnoreCase(b)))
-    case "fields" => str1(t)(s => VList(s.split("\\s+").filter(_.nonEmpty).toVector.map(VString(_))))
-    case "index" => str2(t, args)((s, sub) => VInt(StringKernel.indexOf(u8(s), u8(sub))))
-    case "index_any" => str2(t, args)((s, c) => VInt(StringKernel.indexAny(u8(s), u8(c))))
-    case "last_index" => str2(t, args)((s, sub) => VInt(StringKernel.lastIndexOf(u8(s), u8(sub))))
-    case "last_index_any" => str2(t, args)((s, c) => VInt(StringKernel.lastIndexAny(u8(s), u8(c))))
-    case "join" => (t, args.head) match {
-      case (VList(xs), VString(sep)) =>
-        VString(xs.map { case VString(s) => s; case o => return VErr(s"join: $o") }.mkString(sep))
-      case _ => VErr("no such overload: join")
-    }
-    case "repeat" => (t, args.head) match {
-      case (VString(s), VInt(n)) => VString(s * n.toInt)
-      case _ => VErr("no such overload: repeat")
-    }
-    case "replace" => (t, args) match {
-      case (VString(s), Vector(VString(o), VString(n2))) =>
-        VString(StringKernel.replaceN(u8(s), u8(o), u8(n2), -1).toString)
-      case (VString(s), Vector(VString(o), VString(n2), VInt(k))) =>
-        VString(StringKernel.replaceN(u8(s), u8(o), u8(n2), k).toString)
-      case _ => VErr("no such overload: replace")
-    }
-    case "replace_all" => (t, args) match {
-      case (VString(s), Vector(VString(o), VString(n2))) =>
-        VString(StringKernel.replaceN(u8(s), u8(o), u8(n2), -1).toString)
-      case _ => VErr("no such overload: replace_all")
-    }
-    case "split" => str2(t, args)((s, sep) =>
-      VList(arr(StringKernel.splitN(u8(s), u8(sep), -1))))
-    case "split_n" => (t, args) match {
-      case (VString(s), Vector(VString(sep), VInt(n))) =>
-        VList(arr(StringKernel.splitN(u8(s), u8(sep), n)))
-      case _ => VErr("no such overload: split_n")
-    }
-    case "split_after" => str2(t, args)((s, sep) =>
-      VList(arr(StringKernel.splitAfter(u8(s), u8(sep)))))
-    case "split_after_n" => (t, args) match {
-      case (VString(s), Vector(VString(sep), VInt(n))) =>
-        VList(arr(StringKernel.splitAfterN(u8(s), u8(sep), n)))
-      case _ => VErr("no such overload: split_after_n")
-    }
-    case "substring" => (t, args) match {
-      case (VString(s), Vector(VInt(a), VInt(b))) =>
-        VString(StringKernel.substrRunes(u8(s), a, b).toString)
-      case _ => VErr("no such overload: substring")
-    }
-    case "valid_utf8" => bytesOf(t).fold(identity, b => VBool(StringKernel.validUTF8(b)))
-    case "to_valid_utf8" => (bytesOf(t), args.head) match {
-      case (Right(b), VString(r)) => VString(StringKernel.toValidUTF8(b, u8(r)).toString)
-      case _ => VErr("no such overload: to_valid_utf8")
-    }
-    case _ => null
-  }
-
-  /** time, with cel-go's STANDARD-env timestamp/duration accessors. */
-  private def timeLib(fn: String, t: V, args: Vector[V]): V = fn match {
-    case "format" => (t, args.head) match {
-      case (VTimestamp(us), VString(layout)) =>
-        VString(TimeKernel.formatTime(us, u8(layout)).toString)
-      case _ => VErr("no such overload: format")
-    }
-    case "parse_time" => (t, args.head) match {
-      case (VString(s), VString(layout)) => VTimestamp(TimeKernel.parseTime(u8(s), u8(layout)))
-      case (VString(s), VList(layouts)) =>
-        layouts.foreach {
-          case VString(l) =>
-            try return VTimestamp(TimeKernel.parseTime(u8(s), u8(l)))
-            catch { case _: Exception => }
-          case _ =>
-        }
-        VErr(s"failed to parse $s with any provided layout")
-      case _ => VErr("no such overload: parse_time")
-    }
-    case "getFullYear" | "getMonth" | "getDayOfYear" | "getDayOfMonth" |
-         "getDate" | "getDayOfWeek" | "getHours" | "getMinutes" |
-         "getSeconds" | "getMilliseconds" => timeAccessor(fn, t, args)
-    case _ => null
-  }
-
-  /** crypto (reference lib/crypto.go). */
-  private def cryptoLib(fn: String, t: V, args: Vector[V]): V = fn match {
-    case "md5" => bytesOf(t).fold(identity, b => VBytes(CryptoKernel.md5Bytes(b)))
-    case "sha1" => bytesOf(t).fold(identity, b => VBytes(CryptoKernel.sha1Bytes(b)))
-    case "sha256" => bytesOf(t).fold(identity, b => VBytes(CryptoKernel.sha256Bytes(b)))
-    case "hex" => bytesOf(t).fold(identity, b => VString(CryptoKernel.hexEncode(b).toString))
-    case "base64" => bytesOf(t).fold(identity, b => VString(CryptoKernel.base64Std(b).toString))
-    case "base64_raw" => bytesOf(t).fold(identity, b => VString(CryptoKernel.base64Raw(b).toString))
-    case "base64_decode" => t match {
-      case VString(s) => VBytes(CryptoKernel.base64Decode(u8(s)))
-      case _ => VErr("no such overload: base64_decode")
-    }
-    case "base64_raw_decode" => t match {
-      case VString(s) => VBytes(CryptoKernel.base64RawDecode(u8(s)))
-      case _ => VErr("no such overload: base64_raw_decode")
-    }
-    case "hmac" => (bytesOf(t), args) match {
-      case (Right(d), Vector(VString(alg), k)) =>
-        bytesOf(k).fold(identity, kb => VBytes(CryptoKernel.hmac(d, u8(alg), kb)))
-      case _ => VErr("no such overload: hmac")
-    }
-    case _ => null
-  }
-
-  /** http: request-as-data, executing calls, url and query. Reference
-    * lib/http.go: makeRequestBody :672-712, reqToMap :713-746, doHead
-    * :518-548, doPost :585-635, doRequest :826-854,
-    * basicAuthentication :783-824. */
-  private def httpLib(fn: String, t: V, args: Vector[V]): V = fn match {
-    case "request" => (t, args) match {
-      case (VString(m), Vector(VString(url))) => buildRequestV(m, url, None, None)
-      case (VString(m), Vector(VString(url), body)) => buildRequestV(m, url, Some(body), None)
-      case _ => VErr("no such overload for request")
-    }
-    case "get_request" => (t, args) match {
-      case (VString(url), Vector()) => buildRequestV("GET", url, None, None)
-      case _ => VErr("no such overload for request")
-    }
-    case "post_request" => (t, args) match {
-      case (VString(url), Vector(VString(ct), body)) =>
-        buildRequestV("POST", url, Some(body), Some(ct))
-      case _ => VErr("no such overload for post request")
-    }
-    case "get" | "head" | "post" => httpExecCall(fn, t, args, Map.empty)
-    case "do_request" => t match {
-      case VMap(m) => doRequestV(m)
-      case _ => VErr("no such overload for do_request")
-    }
-    case "basic_authentication" => (t, args) match {
-      case (VMap(m), Vector(VString(user), VString(pass))) =>
-        val tok = java.util.Base64.getEncoder.encodeToString(
-          s"$user:$pass".getBytes(StandardCharsets.UTF_8))
-        val hdr = m.get("Header") match {
-          case Some(VMap(h)) => h
-          case _ => VMap.noEntries
-        }
-        VMap(m + ("Header" -> VMap(hdr +
-          ("Authorization" -> VList(Vector(VString("Basic " + tok)))))))
-      case _ => VErr("no such overload for request")
-    }
-    case "parse_url" => t match {
-      case VString(s) => parseUrlV(s)
-      case _ => VErr("no such overload for request")
-    }
-    case "format_url" => t match {
-      case VMap(m) => formatUrlV(m)
-      case _ => VErr("no such overload")
-    }
-    case "parse_query" => t match {
-      case VString(s) => parseQueryV(s)
-      case _ => VErr("no such overload")
-    }
-    case "format_query" => t match {
-      case VMap(m) => formatQueryV(m)
-      case _ => VErr("no such overload")
-    }
-    case _ => null
-  }
-
-  /** json, mime transforms on bytes (reference lib/mime.go:90-132) and
-    * channels (lib/send.go:149-197). v.send_to(name) pushes the value
-    * (rendered JSON) onto the named driver channel and returns the
-    * value; v.close(name) closes it. send_refval_to (send.go:148-159)
-    * differs from send_to (:161-177) only in HOW the value crosses the
-    * channel: raw ref.Val vs converted-to-native. Here every value is
-    * already a rendered V, so the two are the same operation. */
-  private def documentLib(fn: String, t: V, args: Vector[V]): V = fn match {
-    case "encode_json" => VString(Eval.renderV(t))
-    case "decode_json" => decodeJson(t)
-    case "decode_json_stream" => bytesOf(t).fold(identity, Eval.parseStreamV(_))
-    case "mime" => (t, args.headOption) match {
-      case (VBytes(b), Some(VString(tpe))) => mimeTransform(b, tpe)
-      case (VString(s2), Some(VString(tpe))) =>
-        mimeTransform(s2.getBytes(StandardCharsets.UTF_8), tpe)
-      case _ => VErr("no such overload: mime")
-    }
-    case "send_to" | "send_refval_to" => args match {
-      case Vector(VString(name)) =>
-        graft.streaming.Channels.send(name, Eval.renderV(t))
-        t
-      case _ => VErr("no such overload")
-    }
-    case "close" => args match {
-      case Vector(VString(name)) =>
-        if (graft.streaming.Channels.closeStrict(name)) VBool(true)
-        else VErr(s"no channel $name")
-      case _ => VErr("no such overload")
-    }
-    case _ => null
+  private def sendTo(t: V, name: V): V = name match {
+    case VString(n) =>
+      graft.streaming.Channels.send(n, Eval.renderV(t))
+      t
+    case _ => VErr("no such overload")
   }
 
   private def arr(a: org.apache.spark.sql.catalyst.util.ArrayData): Vector[V] =
@@ -644,8 +610,8 @@ private[cel] object Functions {
     case VString(s) => f(s)
     case _ => VErr(s"no such overload on $t")
   }
-  private def str2(t: V, args: Vector[V])(f: (String, String) => V): V = (t, args.headOption) match {
-    case (VString(s), Some(VString(a))) => f(s, a)
+  private def str2(t: V, a: V)(f: (String, String) => V): V = (t, a) match {
+    case (VString(s), VString(a)) => f(s, a)
     case _ => VErr(s"no such overload on $t")
   }
 
@@ -660,9 +626,11 @@ private[cel] object Functions {
   private val regexCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.regex.Pattern]()
 
-  private def regexp(fn: String, t: V, args: Vector[V], env: Env): V = {
-    val name = args.headOption match {
-      case Some(VString(n)) => n
+  private def regexp(fn: String)(env: Env, vs: Vector[V]): V = {
+    if (env.regexps.isEmpty) return VErr(s"no such function: $fn")
+    val t = vs(0)
+    val name = vs(1) match {
+      case VString(n) => n
       case _ => return VErr(s"no such overload: $fn")
     }
     val pat = env.regexps.getOrElse(name, return VErr(s"no regexp pattern: $name"))
@@ -697,19 +665,14 @@ private[cel] object Functions {
           b += VList((0 to m.groupCount()).map(g => out(Option(m.group(g)).getOrElse(""))).toVector)
         VList(b.result())
       case "re_replace_all" =>
-        args.lift(1) match {
-          case Some(r) =>
-            val rep = r match {
-              case VString(x) => x
-              case VBytes(b2) => new String(b2, StandardCharsets.ISO_8859_1)
-              case _ => return VErr("no such overload: re_replace_all")
-            }
-            // Go ${n} group syntax -> Java $n
-            val javaRep = rep.replaceAll("\\$\\{(\\d+)\\}", "\\$$1")
-            out(p.matcher(s).replaceAll(javaRep))
-          case None => VErr("no such overload: re_replace_all")
+        val rep = vs(2) match {
+          case VString(x) => x
+          case VBytes(b2) => new String(b2, StandardCharsets.ISO_8859_1)
+          case _ => return VErr("no such overload: re_replace_all")
         }
-      case other => VErr(s"no such function: $other")
+        // Go ${n} group syntax -> Java $n
+        val javaRep = rep.replaceAll("\\$\\{(\\d+)\\}", "\\$$1")
+        out(p.matcher(s).replaceAll(javaRep))
     }
   }
 
@@ -982,33 +945,24 @@ private[cel] object Functions {
     try respToV(graft.sources.HttpExec.send(method, url, headers, body))
     catch { case scala.util.control.NonFatal(e) => VErr(String.valueOf(e.getMessage)) }
 
-  /** The executing get/head/post overloads, with `extra` headers merged
-    * in — the hook for cfg-level Basic auth (Env.httpAuth), which the
-    * reference applies to exactly these three calls (lib/http.go
-    * :544-545, :575-576, :630-631) and never to do_request. */
-  private[cel] def httpExecCall(fn: String, t: V, args: Vector[V],
-      extra: Map[String, Seq[String]]): V = fn match {
-    case "get" => (t, args) match {
-      case (VString(url), Vector()) => execHttpV("GET", url, extra, null)
-      case _ => VErr("no such overload for get")
+  /** The executing get/head/post overloads, with the cfg-level Basic
+    * auth (Env.httpAuth) merged in: the reference applies it to exactly
+    * these three calls (lib/http.go :544-545, :575-576, :630-631) and
+    * never to do_request. The header is Go's req.SetBasicAuth form. */
+  private def httpExecCall(fn: String)(env: Env, vs: Vector[V]): V = {
+    val auth = env.httpAuth.fold(Map.empty[String, Seq[String]]) { case (user, pass) =>
+      Map("Authorization" -> Seq("Basic " + java.util.Base64.getEncoder.encodeToString(
+        s"$user:$pass".getBytes(StandardCharsets.UTF_8))))
     }
-    case "head" => (t, args) match {
-      case (VString(url), Vector()) => execHttpV("HEAD", url, extra, null)
-      case _ => VErr("no such overload for head")
-    }
-    case "post" => (t, args) match {
-      case (VString(url), Vector(VString(ct), body)) =>
+    (fn, vs) match {
+      case ("get", Vector(VString(url))) => execHttpV("GET", url, auth, null)
+      case ("head", Vector(VString(url))) => execHttpV("HEAD", url, auth, null)
+      case ("post", Vector(VString(url), VString(ct), body)) =>
         reqBodyBytes(body).fold(identity,
-          b => execHttpV("POST", url, extra + ("Content-Type" -> Seq(ct)), b))
-      case _ => VErr("no such overload for post")
+          b => execHttpV("POST", url, auth + ("Content-Type" -> Seq(ct)), b))
+      case _ => VErr(s"no such overload for $fn")
     }
-    case other => VErr(s"no such overload for $other")
   }
-
-  /** "Basic <base64(user:pass)>" — Go req.SetBasicAuth. */
-  private[cel] def basicAuthHeader(user: String, pass: String): Map[String, Seq[String]] =
-    Map("Authorization" -> Seq("Basic " + java.util.Base64.getEncoder.encodeToString(
-      s"$user:$pass".getBytes(StandardCharsets.UTF_8))))
 
   private def doRequestV(m: TreeMap[String, V]): V = {
     val url = m.get("URL") match {

@@ -291,9 +291,9 @@ object FunctionTableSpec {
     "size(1)" ->
       "{\"__error__\":\"no such overload: size(VInt(1))\"}",
     "'ab'.size(2)" ->
-      "2",
+      "{\"__error__\":\"no such overload: size\"}",
     "size('ab', 2)" ->
-      "{\"__error__\":\"no such overload: size(VString(ab))\"}",
+      "{\"__error__\":\"no such overload: size\"}",
     "{'a': {'b': 1}}.collate('a.b')" ->
       "[1]",
     "collate({'a': {'b': 1}}, 'a.b')" ->
@@ -421,7 +421,7 @@ object FunctionTableSpec {
     "1.matches('a')" ->
       "{\"__error__\":\"no such overload: matches(VInt(1))\"}",
     "matches(1, 'a')" ->
-      "{\"__error__\":\"no such overload: matches\"}",
+      "{\"__error__\":\"no such overload: matches(VInt(1))\"}",
     "'aBc'.to_lower()" ->
       "\"abc\"",
     "to_lower('aBc')" ->
@@ -439,9 +439,9 @@ object FunctionTableSpec {
     "to_upper(1)" ->
       "{\"__error__\":\"no such overload on VInt(1)\"}",
     "'abc'.to_upper(1)" ->
-      "\"ABC\"",
+      "{\"__error__\":\"no such overload: to_upper\"}",
     "to_upper('abc', 1)" ->
-      "\"ABC\"",
+      "{\"__error__\":\"no such overload: to_upper\"}",
     "'hello world'.to_title()" ->
       "\"HELLO WORLD\"",
     "to_title('hello world')" ->
@@ -893,7 +893,7 @@ object FunctionTableSpec {
     "'d'.hmac('sha256', 1)" ->
       "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
     "hmac('d', 'sha256', 1)" ->
-      "{\"__error__\":\"no such overload: hmac\"}",
+      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
     "1.hmac('sha256', 'k')" ->
       "{\"__error__\":\"no such overload: hmac\"}",
     "hmac(1, 'sha256', 'k')" ->
@@ -999,9 +999,9 @@ object FunctionTableSpec {
     "encode_json({'a': [1]})" ->
       "\"{\\\"a\\\":[1]}\"",
     "1.encode_json(2)" ->
-      "\"1\"",
+      "{\"__error__\":\"no such overload: encode_json\"}",
     "encode_json(1, 2)" ->
-      "\"1\"",
+      "{\"__error__\":\"no such overload: encode_json\"}",
     "'{\"a\": 1}'.decode_json()" ->
       "{\"a\":1}",
     "decode_json('{\"a\": 1}')" ->
@@ -1021,19 +1021,19 @@ object FunctionTableSpec {
     "'<r><f>1.0</f><n>2</n></r>'.decode_xml()" ->
       "{\"doc\":{\"r\":{\"f\":\"1.0\",\"n\":\"2\"}}}",
     "decode_xml('<r><f>1.0</f><n>2</n></r>')" ->
-      "{\"__error__\":\"no such function: decode_xml\"}",
+      "{\"doc\":{\"r\":{\"f\":\"1.0\",\"n\":\"2\"}}}",
     "'<r><f>1.0</f><n>2</n></r>'.decode_xml('h')" ->
       "{\"doc\":{\"r\":{\"f\":1,\"n\":2}}}",
     "decode_xml('<r><f>1.0</f><n>2</n></r>', 'h')" ->
-      "{\"__error__\":\"no such function: decode_xml\"}",
+      "{\"doc\":{\"r\":{\"f\":1,\"n\":2}}}",
     "'<r/>'.decode_xml('nope')" ->
       "{\"__error__\":\"unknown XSD: nope\"}",
     "decode_xml('<r/>', 'nope')" ->
-      "{\"__error__\":\"no such function: decode_xml\"}",
+      "{\"__error__\":\"unknown XSD: nope\"}",
     "1.decode_xml()" ->
       "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
     "decode_xml(1)" ->
-      "{\"__error__\":\"no such function: decode_xml\"}",
+      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
     "b'abc'.mime('text/upper')" ->
       "\"QUJD\"",
     "mime(b'abc', 'text/upper')" ->
@@ -1075,11 +1075,11 @@ object FunctionTableSpec {
     "rate_limit({'X-Rate-Limit-Limit': ['600'], 'X-Rate-Limit-Remaining': ['598'], 'X-Rate-Limit-Reset': ['253402300799']}, 'okta', duration('1m'))" ->
       "{\"burst\":1,\"headers\":\"X-Rate-Limit-Limit=\\\"600\\\" X-Rate-Limit-Remaining=\\\"598\\\" X-Rate-Limit-Reset=\\\"253402300799\\\"\",\"next\":10,\"rate\":6.483528991463317e-8,\"reset\":\"9999-12-31T23:59:59Z\"}",
     "{'X-Rate-Limit-Limit': ['600'], 'X-Rate-Limit-Remaining': ['598'], 'X-Rate-Limit-Reset': ['253402300799']}.rate_limit('X-Rate-Limit', true, false, duration('1m'), 5)" ->
-      "{\"__error__\":\"(VMap(TreeMap(X-Rate-Limit-Limit -> VList(Vector(VString(600))), X-Rate-Limit-Remaining -> VList(Vector(VString(598))), X-Rate-Limit-Reset -> VList(Vector(VString(253402300799))))),Vector(VString(X-Rate-Limit), VBool(true), VBool(false), VDuration(60000000), VInt(5))) (of class scala.Tuple2)\"}",
+      "{\"burst\":5,\"headers\":\"X-Rate-Limit-Limit=\\\"600\\\" X-Rate-Limit-Remaining=\\\"598\\\" X-Rate-Limit-Reset=\\\"253402300799\\\"\",\"next\":10,\"rate\":1.080588165243886e-9,\"reset\":\"9999-12-31T23:59:59Z\"}",
     "rate_limit({'X-Rate-Limit-Limit': ['600'], 'X-Rate-Limit-Remaining': ['598'], 'X-Rate-Limit-Reset': ['253402300799']}, 'X-Rate-Limit', true, false, duration('1m'), 5)" ->
       "{\"burst\":5,\"headers\":\"X-Rate-Limit-Limit=\\\"600\\\" X-Rate-Limit-Remaining=\\\"598\\\" X-Rate-Limit-Reset=\\\"253402300799\\\"\",\"next\":10,\"rate\":1.080588165243886e-9,\"reset\":\"9999-12-31T23:59:59Z\"}",
     "{'X-Rate-Limit-Limit': ['600'], 'X-Rate-Limit-Remaining': ['598'], 'X-Rate-Limit-Reset': ['253402300799']}.rate_limit('okta', 1)" ->
-      "{\"__error__\":\"(VMap(TreeMap(X-Rate-Limit-Limit -> VList(Vector(VString(600))), X-Rate-Limit-Remaining -> VList(Vector(VString(598))), X-Rate-Limit-Reset -> VList(Vector(VString(253402300799))))),Vector(VString(okta), VInt(1))) (of class scala.Tuple2)\"}",
+      "{\"__error__\":\"no such overload: rate_limit\"}",
     "rate_limit({'X-Rate-Limit-Limit': ['600'], 'X-Rate-Limit-Remaining': ['598'], 'X-Rate-Limit-Reset': ['253402300799']}, 'okta', 1)" ->
       "{\"__error__\":\"no such overload: rate_limit\"}",
     "1.rate_limit('okta', duration('1m'))" ->
@@ -1089,91 +1089,91 @@ object FunctionTableSpec {
     "'food fight'.re_match('word')" ->
       "true",
     "re_match('food fight', 'word')" ->
-      "{\"__error__\":\"no such function: re_match\"}",
+      "true",
     "1.re_match('word')" ->
       "{\"__error__\":\"no such overload: re_match on VInt(1)\"}",
     "re_match(1, 'word')" ->
-      "{\"__error__\":\"no such function: re_match\"}",
+      "{\"__error__\":\"no such overload: re_match on VInt(1)\"}",
     "'x'.re_match('nope')" ->
       "{\"__error__\":\"no regexp pattern: nope\"}",
     "re_match('x', 'nope')" ->
-      "{\"__error__\":\"no such function: re_match\"}",
+      "{\"__error__\":\"no regexp pattern: nope\"}",
     "'food fight'.re_find('word')" ->
       "\"food\"",
     "re_find('food fight', 'word')" ->
-      "{\"__error__\":\"no such function: re_find\"}",
+      "\"food\"",
     "b'food'.re_find('word')" ->
       "\"Zm9vZA==\"",
     "re_find(b'food', 'word')" ->
-      "{\"__error__\":\"no such function: re_find\"}",
+      "\"Zm9vZA==\"",
     "1.re_find('word')" ->
       "{\"__error__\":\"no such overload: re_find on VInt(1)\"}",
     "re_find(1, 'word')" ->
-      "{\"__error__\":\"no such function: re_find\"}",
+      "{\"__error__\":\"no such overload: re_find on VInt(1)\"}",
     "'food fight'.re_find_all('word')" ->
       "[\"food\",\"fight\"]",
     "re_find_all('food fight', 'word')" ->
-      "{\"__error__\":\"no such function: re_find_all\"}",
+      "[\"food\",\"fight\"]",
     "1.re_find_all('word')" ->
       "{\"__error__\":\"no such overload: re_find_all on VInt(1)\"}",
     "re_find_all(1, 'word')" ->
-      "{\"__error__\":\"no such function: re_find_all\"}",
+      "{\"__error__\":\"no such overload: re_find_all on VInt(1)\"}",
     "'food fight'.re_find_submatch('word')" ->
       "[\"food\",\"food\"]",
     "re_find_submatch('food fight', 'word')" ->
-      "{\"__error__\":\"no such function: re_find_submatch\"}",
+      "[\"food\",\"food\"]",
     "1.re_find_submatch('word')" ->
       "{\"__error__\":\"no such overload: re_find_submatch on VInt(1)\"}",
     "re_find_submatch(1, 'word')" ->
-      "{\"__error__\":\"no such function: re_find_submatch\"}",
+      "{\"__error__\":\"no such overload: re_find_submatch on VInt(1)\"}",
     "'food fight'.re_find_all_submatch('word')" ->
       "[[\"food\",\"food\"],[\"fight\",\"fight\"]]",
     "re_find_all_submatch('food fight', 'word')" ->
-      "{\"__error__\":\"no such function: re_find_all_submatch\"}",
+      "[[\"food\",\"food\"],[\"fight\",\"fight\"]]",
     "1.re_find_all_submatch('word')" ->
       "{\"__error__\":\"no such overload: re_find_all_submatch on VInt(1)\"}",
     "re_find_all_submatch(1, 'word')" ->
-      "{\"__error__\":\"no such function: re_find_all_submatch\"}",
+      "{\"__error__\":\"no such overload: re_find_all_submatch on VInt(1)\"}",
     "'food fight'.re_replace_all('word', 'X')" ->
       "\"X X\"",
     "re_replace_all('food fight', 'word', 'X')" ->
-      "{\"__error__\":\"no such function: re_replace_all\"}",
+      "\"X X\"",
     "1.re_replace_all('word', 'X')" ->
       "{\"__error__\":\"no such overload: re_replace_all on VInt(1)\"}",
     "re_replace_all(1, 'word', 'X')" ->
-      "{\"__error__\":\"no such function: re_replace_all\"}",
+      "{\"__error__\":\"no such overload: re_replace_all on VInt(1)\"}",
     "optional.none().orValue(1)" ->
       "1",
     "orValue(optional.none(), 1)" ->
-      "{\"__error__\":\"no such function: orValue\"}",
+      "1",
     "optional.of(2).orValue(1)" ->
       "2",
     "orValue(optional.of(2), 1)" ->
-      "{\"__error__\":\"no such function: orValue\"}",
+      "2",
     "optional.none().or(optional.of(1))" ->
       "1",
     "or(optional.none(), optional.of(1))" ->
-      "{\"__error__\":\"no such function: or\"}",
+      "1",
     "optional.none().or(1)" ->
       "{\"__error__\":\"no such overload: optional.none().or(VInt(1))\"}",
     "or(optional.none(), 1)" ->
-      "{\"__error__\":\"no such function: or\"}",
+      "{\"__error__\":\"no such overload: optional.none().or(VInt(1))\"}",
     "optional.of(1).hasValue()" ->
       "true",
     "hasValue(optional.of(1))" ->
-      "{\"__error__\":\"no such function: hasValue\"}",
+      "true",
     "1.hasValue()" ->
       "true",
     "hasValue(1)" ->
-      "{\"__error__\":\"no such function: hasValue\"}",
+      "true",
     "optional.of(1).value()" ->
       "1",
     "value(optional.of(1))" ->
-      "{\"__error__\":\"no such function: value\"}",
+      "1",
     "optional.none().value()" ->
       "{\"__error__\":\"optional.none() dereference\"}",
     "value(optional.none())" ->
-      "{\"__error__\":\"no such function: value\"}",
+      "{\"__error__\":\"optional.none() dereference\"}",
     "int('12')" ->
       "12",
     "int(1.9)" ->
@@ -1241,7 +1241,7 @@ object FunctionTableSpec {
     "dyn(1)" ->
       "1",
     "dyn(1, 2)" ->
-      "1",
+      "{\"__error__\":\"no such overload: dyn\"}",
     "type(1)" ->
       "\"int\"",
     "type({})" ->
@@ -1251,11 +1251,11 @@ object FunctionTableSpec {
     "now()" ->
       "\"2024-01-01T00:00:00Z\"",
     "now(1)" ->
-      "\"2024-01-01T00:00:00Z\"",
+      "{\"__error__\":\"no such overload: now\"}",
     "uuid().size()" ->
       "36",
     "uuid(1).size()" ->
-      "36",
+      "{\"__error__\":\"no such overload: uuid\"}",
     "file('a.txt')" ->
       "\"aGk=\"",
     "file('a.txt', 'text/upper')" ->
