@@ -62,7 +62,7 @@ object Eval {
       case _ => false
     }
     override def hashCode: Int = v.hashCode * 31 + intKeys.hashCode
-    // case-class-format toString: VMap error texts predate the tag
+    // case-class-format toString, as debug() prints a value
     override def toString: String = s"VMap($v)"
   }
   object VMap {
@@ -591,7 +591,7 @@ object Eval {
       if (idx >= 0 && idx < xs.length) VOpt(Some(xs(idx.toInt))) else VOpt(None)
     case (VMap(m), VString(k)) => VOpt(m.get(k))
     case (VMap(m), VInt(k)) => VOpt(m.get(k.toString))
-    case (a, b) => VErr(s"no such overload: ($a)[?$b]")
+    case (a, b) => VErr(s"no such overload: ${typeName(a)}[?${typeName(b)}]")
   }
 
   /** cel-go types' IsZeroValue, the `optional.ofNonZeroValue` predicate:
@@ -616,26 +616,34 @@ object Eval {
     case (_, e: VErr) => e
     case (o @ VOpt(Some(_)), _) => o
     case (VOpt(None), o: VOpt) => o
-    case (VOpt(None), other) => VErr(s"no such overload: optional.none().or($other)")
-    case (other, _) => VErr(s"no such overload: ($other).or(...)")
+    case (VOpt(None), other) => VErr(s"no such overload: optional.none().or(${typeName(other)})")
+    case (other, _) => VErr(s"no such overload: ${typeName(other)}.or(...)")
   }
 
   /** cel-go's runtime type of a value (the `type()` overload). */
   private[cel] def typeOf(v: V): V = v match {
     case e: VErr => e
-    case VInt(_) => VType("int")
-    case VUint(_) => VType("uint")
-    case VDouble(_) => VType("double")
-    case VString(_) => VType("string")
-    case VBytes(_) => VType("bytes")
-    case VBool(_) => VType("bool")
-    case VNull => VType("null_type")
-    case VList(_) => VType("list")
-    case _: VMap => VType("map")
-    case VTimestamp(_) => VType("google.protobuf.Timestamp")
-    case VDuration(_) => VType("google.protobuf.Duration")
-    case VOpt(_) => VType("optional_type")
-    case VType(_) => VType("type")
+    case _ => VType(typeName(v))
+  }
+
+  /** The CEL type name of a value: [[typeOf]]'s name, and `error` for
+    * an error. Error texts name a value by its type, never by its
+    * contents. */
+  private[cel] def typeName(v: V): String = v match {
+    case VInt(_) => "int"
+    case VUint(_) => "uint"
+    case VDouble(_) => "double"
+    case VString(_) => "string"
+    case VBytes(_) => "bytes"
+    case VBool(_) => "bool"
+    case VNull => "null_type"
+    case VList(_) => "list"
+    case _: VMap => "map"
+    case VTimestamp(_) => "google.protobuf.Timestamp"
+    case VDuration(_) => "google.protobuf.Duration"
+    case VOpt(_) => "optional_type"
+    case VType(_) => "type"
+    case _: VErr => "error"
   }
 
   /** The standard type identifiers, bound as values in every env so
@@ -750,7 +758,7 @@ object Eval {
         case VOpt(Some(VMap(m))) => VOpt(m.get(f))
         case VOpt(None) => VOpt(None)
         case VNull => VErr(s"no such key: $f")
-        case other => VErr(s"no such field: $f on $other")
+        case other => VErr(s"no such field: $f on ${typeName(other)}")
       }
 
     case Ast.SelectOpt(t, f) =>
@@ -760,7 +768,7 @@ object Eval {
         case VOpt(Some(VMap(m))) => VOpt(m.get(f)) // chained a.?b.?c
         case VOpt(None) => VOpt(None)
         case VNull => VOpt(None)
-        case other => VErr(s"no such field: $f on $other")
+        case other => VErr(s"no such field: $f on ${typeName(other)}")
       }
 
     case Ast.Has(t, f) =>
@@ -779,7 +787,7 @@ object Eval {
           else VErr(s"index out of range: $idx")
         case (VMap(m), VString(k)) => m.getOrElse(k, VErr(s"no such key: $k"))
         case (VMap(m), VInt(k)) => m.getOrElse(k.toString, VErr(s"no such key: $k"))
-        case (a, b) => VErr(s"no such overload: ($a)[$b]")
+        case (a, b) => VErr(s"no such overload: ${typeName(a)}[${typeName(b)}]")
       }
 
     case Ast.IndexOpt(t, i) =>
@@ -793,14 +801,14 @@ object Eval {
       eval(x, env) match {
         case err: VErr => err
         case VBool(b) => VBool(!b)
-        case other => VErr(s"no such overload: !$other")
+        case other => VErr(s"no such overload: !${typeName(other)}")
       }
     case Ast.Unary("-", x) =>
       eval(x, env) match {
         case err: VErr => err
         case VInt(i) => VInt(-i)
         case VDouble(d) => VDouble(-d)
-        case other => VErr(s"no such overload: -$other")
+        case other => VErr(s"no such overload: -${typeName(other)}")
       }
     case Ast.Unary(op, _) => VErr(s"unknown unary op $op")
 
@@ -813,7 +821,7 @@ object Eval {
         case err: VErr => err
         case VBool(true) => eval(t, env)
         case VBool(false) => eval(f, env)
-        case other => VErr(s"no such overload: $other ? _ : _")
+        case other => VErr(s"no such overload: ${typeName(other)} ? _ : _")
       }
 
     case Ast.Comprehension(kind, target, x, pred, body) =>
@@ -903,7 +911,7 @@ object Eval {
               else VErr(s"map key collision: $ks")
             m = m.updated(ks, vv); hugeUintKeys += ks
           }
-        case (other, _) => return VErr(s"unsupported map key: $other")
+        case (other, _) => return VErr(s"unsupported map key: ${typeName(other)}")
       }
     }
     VMap(m, intKeys)
@@ -973,13 +981,13 @@ object Eval {
             case ">" => c > 0
             case ">=" => c >= 0
           })
-          case None => VErr(s"no such overload: $l $op $r")
+          case None => VErr(s"no such overload: ${typeName(l)} $op ${typeName(r)}")
         }
       case "in" => (r, l) match {
         case (VList(xs), x) => VBool(xs.exists(equalsV(_, x)))
         case (VMap(m), VString(k)) => VBool(m.contains(k))
         case (VMap(m), VInt(k)) => VBool(m.contains(k.toString))
-        case _ => VErr(s"no such overload: $l in $r")
+        case _ => VErr(s"no such overload: ${typeName(l)} in ${typeName(r)}")
       }
       case "+" => (l, r) match {
         case (VInt(a), VInt(b)) => VInt(a + b)
@@ -991,7 +999,7 @@ object Eval {
         case (VTimestamp(a), VDuration(b)) => VTimestamp(a + b)
         case (VDuration(a), VTimestamp(b)) => VTimestamp(a + b)
         case (VDuration(a), VDuration(b)) => VDuration(a + b)
-        case _ => VErr(s"no such overload: $l + $r")
+        case _ => VErr(s"no such overload: ${typeName(l)} + ${typeName(r)}")
       }
       case "-" => (l, r) match {
         case (VInt(a), VInt(b)) => VInt(a - b)
@@ -1000,13 +1008,13 @@ object Eval {
         case (VTimestamp(a), VDuration(b)) => VTimestamp(a - b)
         case (VTimestamp(a), VTimestamp(b)) => VDuration(a - b)
         case (VDuration(a), VDuration(b)) => VDuration(a - b)
-        case _ => VErr(s"no such overload: $l - $r")
+        case _ => VErr(s"no such overload: ${typeName(l)} - ${typeName(r)}")
       }
       case "*" => (l, r) match {
         case (VInt(a), VInt(b)) => VInt(a * b)
         case (VUint(a), VUint(b)) => VUint(a * b)
         case (VDouble(a), VDouble(b)) => VDouble(a * b)
-        case _ => VErr(s"no such overload: $l * $r")
+        case _ => VErr(s"no such overload: ${typeName(l)} * ${typeName(r)}")
       }
       case "/" => (l, r) match {
         case (VInt(_), VInt(0)) => VErr("division by zero")
@@ -1014,13 +1022,13 @@ object Eval {
         case (VUint(_), VUint(0)) => VErr("division by zero")
         case (VUint(a), VUint(b)) => VUint(java.lang.Long.divideUnsigned(a, b))
         case (VDouble(a), VDouble(b)) => VDouble(a / b)
-        case _ => VErr(s"no such overload: $l / $r")
+        case _ => VErr(s"no such overload: ${typeName(l)} / ${typeName(r)}")
       }
       case "%" => (l, r) match {
         case (VInt(_), VInt(0)) => VErr("modulus by zero")
         case (VInt(a), VInt(b)) => VInt(a % b)
         case (VUint(a), VUint(b)) => VUint(java.lang.Long.remainderUnsigned(a, b))
-        case _ => VErr(s"no such overload: $l % $r")
+        case _ => VErr(s"no such overload: ${typeName(l)} % ${typeName(r)}")
       }
       case other => VErr(s"unknown operator $other")
     }
@@ -1040,7 +1048,7 @@ object Eval {
       // program can depend on it), so we fix the canonical order used
       // everywhere else in the engine.
       case vm: VMap => typedKeys(vm).map(_._2)
-      case other => return VErr(s"no such overload: $kind over $other")
+      case other => return VErr(s"no such overload: $kind over ${typeName(other)}")
     }
     def bind(v: V) = env.copy(vars = env.vars.updated(x, v))
     kind match {
@@ -1052,7 +1060,7 @@ object Eval {
             case Some(p) => eval(p, bind(item)) match {
               case VBool(b) => b
               case err: VErr => return err
-              case other => return VErr(s"no such overload: predicate $other")
+              case other => return VErr(s"no such overload: predicate ${typeName(other)}")
             }
           }
           if (keep) eval(body, bind(item)) match {
@@ -1067,7 +1075,7 @@ object Eval {
           case VBool(true) => out += item
           case VBool(false) =>
           case err: VErr => return err
-          case other => return VErr(s"no such overload: predicate $other")
+          case other => return VErr(s"no such overload: predicate ${typeName(other)}")
         }
         VList(out.result())
       case "all" =>
@@ -1075,7 +1083,7 @@ object Eval {
           case VBool(false) => return VBool(false)
           case VBool(true) =>
           case err: VErr => return err
-          case other => return VErr(s"no such overload: predicate $other")
+          case other => return VErr(s"no such overload: predicate ${typeName(other)}")
         }
         VBool(true)
       case "exists" =>
@@ -1083,7 +1091,7 @@ object Eval {
           case VBool(true) => return VBool(true)
           case VBool(false) =>
           case err: VErr => return err
-          case other => return VErr(s"no such overload: predicate $other")
+          case other => return VErr(s"no such overload: predicate ${typeName(other)}")
         }
         VBool(false)
       case "exists_one" =>
@@ -1092,7 +1100,7 @@ object Eval {
           case VBool(true) => n += 1
           case VBool(false) =>
           case err: VErr => return err
-          case other => return VErr(s"no such overload: predicate $other")
+          case other => return VErr(s"no such overload: predicate ${typeName(other)}")
         }
         VBool(n == 1)
       case other => VErr(s"unknown macro $other")

@@ -177,14 +177,14 @@ private[cel] object Functions {
         try VInt(s.toLong) catch { case _: NumberFormatException => VErr(s"cannot convert to int: $s") }
       case VTimestamp(us) => VInt(Math.floorDiv(us, 1000000L))
       case VDuration(us) => VInt(us * 1000L) // Go int(duration) is nanoseconds
-      case v => VErr(s"no such overload: int($v)")
+      case v => VErr(s"no such overload: int(${typeName(v)})")
     },
     g1("uint", Pure) {
       case VInt(i) => VUint(i)
       case VUint(i) => VUint(i)
       case VDouble(d) => VUint(d.toLong)
       case VString(s) => VUint(java.lang.Long.parseUnsignedLong(s))
-      case v => VErr(s"no such overload: uint($v)")
+      case v => VErr(s"no such overload: uint(${typeName(v)})")
     },
     g1("double", Pure) {
       case VInt(i) => VDouble(i.toDouble)
@@ -192,7 +192,7 @@ private[cel] object Functions {
       case VDouble(d) => VDouble(d)
       case VString(s) =>
         try VDouble(s.toDouble) catch { case _: NumberFormatException => VErr(s"cannot convert to double: $s") }
-      case v => VErr(s"no such overload: double($v)")
+      case v => VErr(s"no such overload: double(${typeName(v)})")
     },
     g1("string", Pure) {
       case VString(s) => VString(s)
@@ -205,25 +205,25 @@ private[cel] object Functions {
       case VBool(b) => VString(b.toString)
       case VTimestamp(us) => VString(TimeKernel.formatTime(us, u8("RFC3339")).toString)
       case VDuration(us) => VString(TimeKernel.formatDuration(us).toString)
-      case v => VErr(s"no such overload: string($v)")
+      case v => VErr(s"no such overload: string(${typeName(v)})")
     },
     g1("bytes", Pure)(v => bytesOf(v).fold(identity, VBytes(_))),
     g1("bool", Pure) {
       case VBool(b) => VBool(b)
       case VString("true") => VBool(true)
       case VString("false") => VBool(false)
-      case v => VErr(s"no such overload: bool($v)")
+      case v => VErr(s"no such overload: bool(${typeName(v)})")
     },
     g1("timestamp", Pure) {
       case VString(s) => VTimestamp(TimeKernel.parseTime(u8(s), u8("RFC3339")))
       case VInt(sec) => VTimestamp(sec * 1000000L)
       case t: VTimestamp => t
-      case v => VErr(s"no such overload: timestamp($v)")
+      case v => VErr(s"no such overload: timestamp(${typeName(v)})")
     },
     g1("duration", Pure) {
       case VString(s) => VDuration(TimeKernel.parseDuration(u8(s)))
       case d: VDuration => d
-      case v => VErr(s"no such overload: duration($v)")
+      case v => VErr(s"no such overload: duration(${typeName(v)})")
     },
     g1("dyn", Pure)(identity),
     gv("now", Pure, 0)((env, _) => env.liveNowAnchor match {
@@ -255,7 +255,7 @@ private[cel] object Functions {
       case VBytes(b) => VInt(b.length.toLong)
       case VList(xs) => VInt(xs.length.toLong)
       case VMap(m) => VInt(m.size.toLong)
-      case other => VErr(s"no such overload: size($other)")
+      case other => VErr(s"no such overload: size(${typeName(other)})")
     },
     m2("collate", Pure)((t, a) => pathsArg(a, "collate").fold(identity, Collections.collate(t, _))),
     m2("drop", Pure)((t, a) => pathsArg(a, "drop").fold(identity, Collections.drop(t, _))),
@@ -276,19 +276,19 @@ private[cel] object Functions {
   private def strings: Seq[(String, Fn)] = Seq(
     m2("contains", Pure) {
       case (VString(s), VString(sub)) => VBool(s.contains(sub))
-      case (t, _) => VErr(s"no such overload: contains($t)")
+      case (t, _) => VErr(s"no such overload: contains(${typeName(t)})")
     },
     m2("startsWith", Pure) {
       case (VString(s), VString(p)) => VBool(s.startsWith(p))
-      case (t, _) => VErr(s"no such overload: startsWith($t)")
+      case (t, _) => VErr(s"no such overload: startsWith(${typeName(t)})")
     },
     m2("endsWith", Pure) {
       case (VString(s), VString(p)) => VBool(s.endsWith(p))
-      case (t, _) => VErr(s"no such overload: endsWith($t)")
+      case (t, _) => VErr(s"no such overload: endsWith(${typeName(t)})")
     },
     m2("matches", Pure) {
       case (VString(s), VString(re)) => matchesRe(s, re)
-      case (t, _) => VErr(s"no such overload: matches($t)")
+      case (t, _) => VErr(s"no such overload: matches(${typeName(t)})")
     },
     m1("to_lower", Pure)(str1(_)(s => VString(s.toLowerCase))),
     m1("to_upper", Pure)(str1(_)(s => VString(s.toUpperCase))),
@@ -502,7 +502,7 @@ private[cel] object Functions {
   private def bytesOf(v: V): Either[VErr, Array[Byte]] = v match {
     case VBytes(b) => Right(b)
     case VString(s) => Right(s.getBytes(StandardCharsets.UTF_8))
-    case other => Left(VErr(s"no such overload: bytes from $other"))
+    case other => Left(VErr(s"no such overload: bytes from ${typeName(other)}"))
   }
 
   /** `s.matches(re)` — unanchored partial match, the semantics of Go's
@@ -523,7 +523,7 @@ private[cel] object Functions {
 
   private def join(t: V, sep: V): V = (t, sep) match {
     case (VList(xs), VString(sep)) =>
-      VString(xs.map { case VString(s) => s; case o => return VErr(s"join: $o") }.mkString(sep))
+      VString(xs.map { case VString(s) => s; case o => return VErr(s"join: ${typeName(o)}") }.mkString(sep))
     case _ => VErr("no such overload: join")
   }
 
@@ -578,7 +578,7 @@ private[cel] object Functions {
           case "getMilliseconds" => VInt(zdt.getNano.toLong / 1000000L)
         }
       })
-    case other => VErr(s"no such overload: $fn($other)")
+    case other => VErr(s"no such overload: $fn(${typeName(other)})")
   }
 
   /** decode_xml, with the hint name looked up in the env's XSD table. */
@@ -608,18 +608,18 @@ private[cel] object Functions {
 
   private def str1(t: V)(f: String => V): V = t match {
     case VString(s) => f(s)
-    case _ => VErr(s"no such overload on $t")
+    case _ => VErr(s"no such overload on ${typeName(t)}")
   }
   private def str2(t: V, a: V)(f: (String, String) => V): V = (t, a) match {
     case (VString(s), VString(a)) => f(s, a)
-    case _ => VErr(s"no such overload on $t")
+    case _ => VErr(s"no such overload on ${typeName(t)}")
   }
 
   /** collate/drop path argument: one path or a list of paths. */
   private def pathsArg(a: V, fn: String): Either[VErr, Seq[String]] = a match {
     case VString(p) => Right(Seq(p))
-    case VList(ps) => Right(ps.map { case VString(p) => p; case o => return Left(VErr(s"bad path $o")) })
-    case o => Left(VErr(s"invalid parameter type for $fn: $o"))
+    case VList(ps) => Right(ps.map { case VString(p) => p; case o => return Left(VErr(s"bad path ${typeName(o)}")) })
+    case o => Left(VErr(s"invalid parameter type for $fn: ${typeName(o)}"))
   }
 
   // ---- regexp (named registry from env) ----
@@ -640,7 +640,7 @@ private[cel] object Functions {
     val s = t match {
       case VString(x) => x
       case VBytes(b) => new String(b, StandardCharsets.ISO_8859_1)
-      case _ => return VErr(s"no such overload: $fn on $t")
+      case _ => return VErr(s"no such overload: $fn on ${typeName(t)}")
     }
     def out(x: String): V =
       if (isBytes) VBytes(x.getBytes(StandardCharsets.ISO_8859_1)) else VString(x)
@@ -875,7 +875,7 @@ private[cel] object Functions {
   private def reqBodyBytes(v: V): Either[VErr, Array[Byte]] = v match {
     case VString(s) => Right(s.getBytes(StandardCharsets.UTF_8))
     case VBytes(b) => Right(b)
-    case other => Left(VErr(s"invalid type for request body: $other"))
+    case other => Left(VErr(s"invalid type for request body: ${typeName(other)}"))
   }
 
   private def headerV(h: Map[String, Seq[String]]): V =

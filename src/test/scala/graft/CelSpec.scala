@@ -15,7 +15,7 @@ class CelSpec extends SparkSpec {
   test("literals, arithmetic, logic, comparisons") {
     assert(run("1 + 2 * 3") == "7")
     assert(run("(1 + 2) * 3") == "9")
-    assert(run("7 % 3 + 1.5") == """{"__error__":"no such overload: VInt(1) + VDouble(1.5)"}""")
+    assert(run("7 % 3 + 1.5") == """{"__error__":"no such overload: int + double"}""")
     assert(run("double(7 % 3) + 1.5") == "2.5")
     assert(run("1 < 2 && 2 <= 2 && 'a' != 'b'") == "true")
     assert(run("'b' in ['a','b'] && 'k' in {'k':1}") == "true")
@@ -23,6 +23,16 @@ class CelSpec extends SparkSpec {
     assert(run("size('héllo')") == "5")
     assert(run("\"a\" + 'b'") == "\"ab\"")
     assert(run("[1,2] + [3]") == "[1,2,3]")
+  }
+
+  test("error texts name a value by its CEL type, not its contents") {
+    assert(run("{'a': 1}[true]") == """{"__error__":"no such overload: map[bool]"}""")
+    assert(run("[1][?'x']") == """{"__error__":"no such overload: list[?string]"}""")
+    assert(run("{'a': [1]}.contains('a')") == """{"__error__":"no such overload: contains(map)"}""")
+    assert(run("b'x'.to_upper()") == """{"__error__":"no such overload on bytes"}""")
+    assert(run("1.decode_json()") == """{"__error__":"no such overload: bytes from int"}""")
+    assert(run("timestamp('2024-01-01T00:00:00Z') + 1") ==
+      """{"__error__":"no such overload: google.protobuf.Timestamp + int"}""")
   }
 
   test("doubles render with Go's shortest round-trip digits") {

@@ -287,9 +287,9 @@ object FunctionTableSpec {
     "size(b'abc')" ->
       "3",
     "1.size()" ->
-      "{\"__error__\":\"no such overload: size(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: size(int)\"}",
     "size(1)" ->
-      "{\"__error__\":\"no such overload: size(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: size(int)\"}",
     "'ab'.size(2)" ->
       "{\"__error__\":\"no such overload: size\"}",
     "size('ab', 2)" ->
@@ -299,17 +299,17 @@ object FunctionTableSpec {
     "collate({'a': {'b': 1}}, 'a.b')" ->
       "[1]",
     "{'a': 1}.collate(1)" ->
-      "{\"__error__\":\"invalid parameter type for collate: VInt(1)\"}",
+      "{\"__error__\":\"invalid parameter type for collate: int\"}",
     "collate({'a': 1}, 1)" ->
-      "{\"__error__\":\"invalid parameter type for collate: VInt(1)\"}",
+      "{\"__error__\":\"invalid parameter type for collate: int\"}",
     "{'a': 1, 'b': 2}.drop('a')" ->
       "{\"b\":2}",
     "drop({'a': 1, 'b': 2}, 'a')" ->
       "{\"b\":2}",
     "{'a': 1}.drop(1)" ->
-      "{\"__error__\":\"invalid parameter type for drop: VInt(1)\"}",
+      "{\"__error__\":\"invalid parameter type for drop: int\"}",
     "drop({'a': 1}, 1)" ->
-      "{\"__error__\":\"invalid parameter type for drop: VInt(1)\"}",
+      "{\"__error__\":\"invalid parameter type for drop: int\"}",
     "{'a': {}, 'b': 1}.drop_empty()" ->
       "{\"b\":1}",
     "drop_empty({'a': {}, 'b': 1})" ->
@@ -395,49 +395,49 @@ object FunctionTableSpec {
     "contains('abc', 'b')" ->
       "true",
     "1.contains('b')" ->
-      "{\"__error__\":\"no such overload: contains(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: contains(int)\"}",
     "contains(1, 'b')" ->
-      "{\"__error__\":\"no such overload: contains(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: contains(int)\"}",
     "'abc'.startsWith('a')" ->
       "true",
     "startsWith('abc', 'a')" ->
       "true",
     "1.startsWith('a')" ->
-      "{\"__error__\":\"no such overload: startsWith(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: startsWith(int)\"}",
     "startsWith(1, 'a')" ->
-      "{\"__error__\":\"no such overload: startsWith(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: startsWith(int)\"}",
     "'abc'.endsWith('c')" ->
       "true",
     "endsWith('abc', 'c')" ->
       "true",
     "1.endsWith('c')" ->
-      "{\"__error__\":\"no such overload: endsWith(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: endsWith(int)\"}",
     "endsWith(1, 'c')" ->
-      "{\"__error__\":\"no such overload: endsWith(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: endsWith(int)\"}",
     "'abc'.matches('b.')" ->
       "true",
     "matches('abc', 'b.')" ->
       "true",
     "1.matches('a')" ->
-      "{\"__error__\":\"no such overload: matches(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: matches(int)\"}",
     "matches(1, 'a')" ->
-      "{\"__error__\":\"no such overload: matches(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: matches(int)\"}",
     "'aBc'.to_lower()" ->
       "\"abc\"",
     "to_lower('aBc')" ->
       "\"abc\"",
     "1.to_lower()" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "to_lower(1)" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'aBc'.to_upper()" ->
       "\"ABC\"",
     "to_upper('aBc')" ->
       "\"ABC\"",
     "1.to_upper()" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "to_upper(1)" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'abc'.to_upper(1)" ->
       "{\"__error__\":\"no such overload: to_upper\"}",
     "to_upper('abc', 1)" ->
@@ -447,161 +447,161 @@ object FunctionTableSpec {
     "to_title('hello world')" ->
       "\"HELLO WORLD\"",
     "1.to_title()" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "to_title(1)" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'  a b  '.trim_space()" ->
       "\"a b\"",
     "trim_space('  a b  ')" ->
       "\"a b\"",
     "1.trim_space()" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "trim_space(1)" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'xxaxx'.trim('x')" ->
       "\"a\"",
     "trim('xxaxx', 'x')" ->
       "\"a\"",
     "1.trim('x')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "trim(1, 'x')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'xxaxx'.trim_left('x')" ->
       "\"axx\"",
     "trim_left('xxaxx', 'x')" ->
       "\"axx\"",
     "1.trim_left('x')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "trim_left(1, 'x')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'xxaxx'.trim_right('x')" ->
       "\"xxa\"",
     "trim_right('xxaxx', 'x')" ->
       "\"xxa\"",
     "1.trim_right('x')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "trim_right(1, 'x')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'prefix_a'.trim_prefix('prefix_')" ->
       "\"a\"",
     "trim_prefix('prefix_a', 'prefix_')" ->
       "\"a\"",
     "1.trim_prefix('p')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "trim_prefix(1, 'p')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'a_suffix'.trim_suffix('_suffix')" ->
       "\"a\"",
     "trim_suffix('a_suffix', '_suffix')" ->
       "\"a\"",
     "1.trim_suffix('s')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "trim_suffix(1, 's')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'abc'.has_prefix('ab')" ->
       "true",
     "has_prefix('abc', 'ab')" ->
       "true",
     "1.has_prefix('ab')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "has_prefix(1, 'ab')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'abc'.has_suffix('bc')" ->
       "true",
     "has_suffix('abc', 'bc')" ->
       "true",
     "1.has_suffix('bc')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "has_suffix(1, 'bc')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'abc'.contains_substr('b')" ->
       "true",
     "contains_substr('abc', 'b')" ->
       "true",
     "1.contains_substr('b')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "contains_substr(1, 'b')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'abc'.contains_any('xc')" ->
       "true",
     "contains_any('abc', 'xc')" ->
       "true",
     "1.contains_any('xc')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "contains_any(1, 'xc')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'a'.compare('b')" ->
       "-1",
     "compare('a', 'b')" ->
       "-1",
     "1.compare('b')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "compare(1, 'b')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'banana'.count('a')" ->
       "3",
     "count('banana', 'a')" ->
       "3",
     "1.count('a')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "count(1, 'a')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'Go'.equal_fold('GO')" ->
       "true",
     "equal_fold('Go', 'GO')" ->
       "true",
     "1.equal_fold('GO')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "equal_fold(1, 'GO')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "' a  b '.fields()" ->
       "[\"a\",\"b\"]",
     "fields(' a  b ')" ->
       "[\"a\",\"b\"]",
     "1.fields()" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "fields(1)" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'chicken'.index('ken')" ->
       "4",
     "index('chicken', 'ken')" ->
       "4",
     "1.index('k')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "index(1, 'k')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'chicken'.index_any('kc')" ->
       "0",
     "index_any('chicken', 'kc')" ->
       "0",
     "1.index_any('k')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "index_any(1, 'k')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'go gopher'.last_index('go')" ->
       "3",
     "last_index('go gopher', 'go')" ->
       "3",
     "1.last_index('go')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "last_index(1, 'go')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'go gopher'.last_index_any('go')" ->
       "4",
     "last_index_any('go gopher', 'go')" ->
       "4",
     "1.last_index_any('go')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "last_index_any(1, 'go')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "['a', 'b'].join('-')" ->
       "\"a-b\"",
     "join(['a', 'b'], '-')" ->
       "\"a-b\"",
     "[1].join('-')" ->
-      "{\"__error__\":\"join: VInt(1)\"}",
+      "{\"__error__\":\"join: int\"}",
     "join([1], '-')" ->
-      "{\"__error__\":\"join: VInt(1)\"}",
+      "{\"__error__\":\"join: int\"}",
     "1.join('-')" ->
       "{\"__error__\":\"no such overload: join\"}",
     "join(1, '-')" ->
@@ -639,9 +639,9 @@ object FunctionTableSpec {
     "split('a,b,c', ',')" ->
       "[\"a\",\"b\",\"c\"]",
     "1.split(',')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "split(1, ',')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'a,b,c'.split_n(',', 2)" ->
       "[\"a\",\"b,c\"]",
     "split_n('a,b,c', ',', 2)" ->
@@ -655,9 +655,9 @@ object FunctionTableSpec {
     "split_after('a,b,c', ',')" ->
       "[\"a,\",\"b,\",\"c\"]",
     "1.split_after(',')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "split_after(1, ',')" ->
-      "{\"__error__\":\"no such overload on VInt(1)\"}",
+      "{\"__error__\":\"no such overload on int\"}",
     "'a,b,c'.split_after_n(',', 2)" ->
       "[\"a,\",\"b,c\"]",
     "split_after_n('a,b,c', ',', 2)" ->
@@ -679,9 +679,9 @@ object FunctionTableSpec {
     "valid_utf8(b'ab')" ->
       "true",
     "1.valid_utf8()" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "valid_utf8(1)" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "b'a\\xffb'.to_valid_utf8('?')" ->
       "\"a?b\"",
     "to_valid_utf8(b'a\\xffb', '?')" ->
@@ -719,49 +719,49 @@ object FunctionTableSpec {
     "getFullYear(timestamp('2024-02-03T04:05:06.789Z'), 'America/New_York')" ->
       "2024",
     "1.getFullYear()" ->
-      "{\"__error__\":\"no such overload: getFullYear(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getFullYear(int)\"}",
     "getFullYear(1)" ->
-      "{\"__error__\":\"no such overload: getFullYear(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getFullYear(int)\"}",
     "timestamp('2024-02-03T04:05:06.789Z').getMonth()" ->
       "1",
     "getMonth(timestamp('2024-02-03T04:05:06.789Z'))" ->
       "1",
     "1.getMonth()" ->
-      "{\"__error__\":\"no such overload: getMonth(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getMonth(int)\"}",
     "getMonth(1)" ->
-      "{\"__error__\":\"no such overload: getMonth(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getMonth(int)\"}",
     "timestamp('2024-02-03T04:05:06.789Z').getDayOfYear()" ->
       "33",
     "getDayOfYear(timestamp('2024-02-03T04:05:06.789Z'))" ->
       "33",
     "1.getDayOfYear()" ->
-      "{\"__error__\":\"no such overload: getDayOfYear(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getDayOfYear(int)\"}",
     "getDayOfYear(1)" ->
-      "{\"__error__\":\"no such overload: getDayOfYear(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getDayOfYear(int)\"}",
     "timestamp('2024-02-03T04:05:06.789Z').getDayOfMonth()" ->
       "2",
     "getDayOfMonth(timestamp('2024-02-03T04:05:06.789Z'))" ->
       "2",
     "1.getDayOfMonth()" ->
-      "{\"__error__\":\"no such overload: getDayOfMonth(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getDayOfMonth(int)\"}",
     "getDayOfMonth(1)" ->
-      "{\"__error__\":\"no such overload: getDayOfMonth(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getDayOfMonth(int)\"}",
     "timestamp('2024-02-03T04:05:06.789Z').getDate()" ->
       "3",
     "getDate(timestamp('2024-02-03T04:05:06.789Z'))" ->
       "3",
     "1.getDate()" ->
-      "{\"__error__\":\"no such overload: getDate(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getDate(int)\"}",
     "getDate(1)" ->
-      "{\"__error__\":\"no such overload: getDate(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getDate(int)\"}",
     "timestamp('2024-02-03T04:05:06.789Z').getDayOfWeek()" ->
       "6",
     "getDayOfWeek(timestamp('2024-02-03T04:05:06.789Z'))" ->
       "6",
     "1.getDayOfWeek()" ->
-      "{\"__error__\":\"no such overload: getDayOfWeek(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getDayOfWeek(int)\"}",
     "getDayOfWeek(1)" ->
-      "{\"__error__\":\"no such overload: getDayOfWeek(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getDayOfWeek(int)\"}",
     "timestamp('2024-02-03T04:05:06.789Z').getHours()" ->
       "4",
     "getHours(timestamp('2024-02-03T04:05:06.789Z'))" ->
@@ -779,9 +779,9 @@ object FunctionTableSpec {
     "getHours(timestamp('2024-02-03T04:05:06.789Z'), 'Nowhere/Land')" ->
       "{\"__error__\":\"cannot parse timezone: Nowhere/Land\"}",
     "1.getHours()" ->
-      "{\"__error__\":\"no such overload: getHours(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getHours(int)\"}",
     "getHours(1)" ->
-      "{\"__error__\":\"no such overload: getHours(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getHours(int)\"}",
     "timestamp('2024-02-03T04:05:06.789Z').getMinutes()" ->
       "5",
     "getMinutes(timestamp('2024-02-03T04:05:06.789Z'))" ->
@@ -791,9 +791,9 @@ object FunctionTableSpec {
     "getMinutes(duration('90m'))" ->
       "90",
     "1.getMinutes()" ->
-      "{\"__error__\":\"no such overload: getMinutes(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getMinutes(int)\"}",
     "getMinutes(1)" ->
-      "{\"__error__\":\"no such overload: getMinutes(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getMinutes(int)\"}",
     "timestamp('2024-02-03T04:05:06.789Z').getSeconds()" ->
       "6",
     "getSeconds(timestamp('2024-02-03T04:05:06.789Z'))" ->
@@ -803,9 +803,9 @@ object FunctionTableSpec {
     "getSeconds(duration('90m'))" ->
       "5400",
     "1.getSeconds()" ->
-      "{\"__error__\":\"no such overload: getSeconds(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getSeconds(int)\"}",
     "getSeconds(1)" ->
-      "{\"__error__\":\"no such overload: getSeconds(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getSeconds(int)\"}",
     "timestamp('2024-02-03T04:05:06.789Z').getMilliseconds()" ->
       "789",
     "getMilliseconds(timestamp('2024-02-03T04:05:06.789Z'))" ->
@@ -815,9 +815,9 @@ object FunctionTableSpec {
     "getMilliseconds(duration('1.5s'))" ->
       "1500",
     "1.getMilliseconds()" ->
-      "{\"__error__\":\"no such overload: getMilliseconds(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getMilliseconds(int)\"}",
     "getMilliseconds(1)" ->
-      "{\"__error__\":\"no such overload: getMilliseconds(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: getMilliseconds(int)\"}",
     "duration('1.5s').getMilliseconds('UTC')" ->
       "{\"__error__\":\"no such overload: duration.getMilliseconds\"}",
     "getMilliseconds(duration('1.5s'), 'UTC')" ->
@@ -827,49 +827,49 @@ object FunctionTableSpec {
     "md5('abc')" ->
       "\"kAFQmDzST7DWlj99KOF/cg==\"",
     "1.md5()" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "md5(1)" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "'abc'.sha1()" ->
       "\"qZk+NkcGgWq6PiVxeFDCbJzQ2J0=\"",
     "sha1('abc')" ->
       "\"qZk+NkcGgWq6PiVxeFDCbJzQ2J0=\"",
     "1.sha1()" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "sha1(1)" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "'abc'.sha256()" ->
       "\"ungWv48Bz+pBQUDeXa4iI7ADYaOWF3qctBD/YfIAFa0=\"",
     "sha256('abc')" ->
       "\"ungWv48Bz+pBQUDeXa4iI7ADYaOWF3qctBD/YfIAFa0=\"",
     "1.sha256()" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "sha256(1)" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "'abc'.hex()" ->
       "\"616263\"",
     "hex('abc')" ->
       "\"616263\"",
     "1.hex()" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "hex(1)" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "'abc'.base64()" ->
       "\"YWJj\"",
     "base64('abc')" ->
       "\"YWJj\"",
     "1.base64()" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "base64(1)" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "'abc'.base64_raw()" ->
       "\"YWJj\"",
     "base64_raw('abc')" ->
       "\"YWJj\"",
     "1.base64_raw()" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "base64_raw(1)" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "'YWJj'.base64_decode()" ->
       "\"YWJj\"",
     "base64_decode('YWJj')" ->
@@ -891,9 +891,9 @@ object FunctionTableSpec {
     "hmac('d', 'sha256', 'k')" ->
       "\"5+ohw7y2Ok2jrXhQMWjTa9ygvmIjgupgoQj61OSWZnk=\"",
     "'d'.hmac('sha256', 1)" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "hmac('d', 'sha256', 1)" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "1.hmac('sha256', 'k')" ->
       "{\"__error__\":\"no such overload: hmac\"}",
     "hmac(1, 'sha256', 'k')" ->
@@ -1007,17 +1007,17 @@ object FunctionTableSpec {
     "decode_json('{\"a\": 1}')" ->
       "{\"a\":1}",
     "1.decode_json()" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "decode_json(1)" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "'1 2'.decode_json_stream()" ->
       "[1,2]",
     "decode_json_stream('1 2')" ->
       "[1,2]",
     "1.decode_json_stream()" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "decode_json_stream(1)" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "'<r><f>1.0</f><n>2</n></r>'.decode_xml()" ->
       "{\"doc\":{\"r\":{\"f\":\"1.0\",\"n\":\"2\"}}}",
     "decode_xml('<r><f>1.0</f><n>2</n></r>')" ->
@@ -1031,9 +1031,9 @@ object FunctionTableSpec {
     "decode_xml('<r/>', 'nope')" ->
       "{\"__error__\":\"unknown XSD: nope\"}",
     "1.decode_xml()" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "decode_xml(1)" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "b'abc'.mime('text/upper')" ->
       "\"QUJD\"",
     "mime(b'abc', 'text/upper')" ->
@@ -1091,9 +1091,9 @@ object FunctionTableSpec {
     "re_match('food fight', 'word')" ->
       "true",
     "1.re_match('word')" ->
-      "{\"__error__\":\"no such overload: re_match on VInt(1)\"}",
+      "{\"__error__\":\"no such overload: re_match on int\"}",
     "re_match(1, 'word')" ->
-      "{\"__error__\":\"no such overload: re_match on VInt(1)\"}",
+      "{\"__error__\":\"no such overload: re_match on int\"}",
     "'x'.re_match('nope')" ->
       "{\"__error__\":\"no regexp pattern: nope\"}",
     "re_match('x', 'nope')" ->
@@ -1107,41 +1107,41 @@ object FunctionTableSpec {
     "re_find(b'food', 'word')" ->
       "\"Zm9vZA==\"",
     "1.re_find('word')" ->
-      "{\"__error__\":\"no such overload: re_find on VInt(1)\"}",
+      "{\"__error__\":\"no such overload: re_find on int\"}",
     "re_find(1, 'word')" ->
-      "{\"__error__\":\"no such overload: re_find on VInt(1)\"}",
+      "{\"__error__\":\"no such overload: re_find on int\"}",
     "'food fight'.re_find_all('word')" ->
       "[\"food\",\"fight\"]",
     "re_find_all('food fight', 'word')" ->
       "[\"food\",\"fight\"]",
     "1.re_find_all('word')" ->
-      "{\"__error__\":\"no such overload: re_find_all on VInt(1)\"}",
+      "{\"__error__\":\"no such overload: re_find_all on int\"}",
     "re_find_all(1, 'word')" ->
-      "{\"__error__\":\"no such overload: re_find_all on VInt(1)\"}",
+      "{\"__error__\":\"no such overload: re_find_all on int\"}",
     "'food fight'.re_find_submatch('word')" ->
       "[\"food\",\"food\"]",
     "re_find_submatch('food fight', 'word')" ->
       "[\"food\",\"food\"]",
     "1.re_find_submatch('word')" ->
-      "{\"__error__\":\"no such overload: re_find_submatch on VInt(1)\"}",
+      "{\"__error__\":\"no such overload: re_find_submatch on int\"}",
     "re_find_submatch(1, 'word')" ->
-      "{\"__error__\":\"no such overload: re_find_submatch on VInt(1)\"}",
+      "{\"__error__\":\"no such overload: re_find_submatch on int\"}",
     "'food fight'.re_find_all_submatch('word')" ->
       "[[\"food\",\"food\"],[\"fight\",\"fight\"]]",
     "re_find_all_submatch('food fight', 'word')" ->
       "[[\"food\",\"food\"],[\"fight\",\"fight\"]]",
     "1.re_find_all_submatch('word')" ->
-      "{\"__error__\":\"no such overload: re_find_all_submatch on VInt(1)\"}",
+      "{\"__error__\":\"no such overload: re_find_all_submatch on int\"}",
     "re_find_all_submatch(1, 'word')" ->
-      "{\"__error__\":\"no such overload: re_find_all_submatch on VInt(1)\"}",
+      "{\"__error__\":\"no such overload: re_find_all_submatch on int\"}",
     "'food fight'.re_replace_all('word', 'X')" ->
       "\"X X\"",
     "re_replace_all('food fight', 'word', 'X')" ->
       "\"X X\"",
     "1.re_replace_all('word', 'X')" ->
-      "{\"__error__\":\"no such overload: re_replace_all on VInt(1)\"}",
+      "{\"__error__\":\"no such overload: re_replace_all on int\"}",
     "re_replace_all(1, 'word', 'X')" ->
-      "{\"__error__\":\"no such overload: re_replace_all on VInt(1)\"}",
+      "{\"__error__\":\"no such overload: re_replace_all on int\"}",
     "optional.none().orValue(1)" ->
       "1",
     "orValue(optional.none(), 1)" ->
@@ -1155,9 +1155,9 @@ object FunctionTableSpec {
     "or(optional.none(), optional.of(1))" ->
       "1",
     "optional.none().or(1)" ->
-      "{\"__error__\":\"no such overload: optional.none().or(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: optional.none().or(int)\"}",
     "or(optional.none(), 1)" ->
-      "{\"__error__\":\"no such overload: optional.none().or(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: optional.none().or(int)\"}",
     "optional.of(1).hasValue()" ->
       "true",
     "hasValue(optional.of(1))" ->
@@ -1187,13 +1187,13 @@ object FunctionTableSpec {
     "int('x')" ->
       "{\"__error__\":\"cannot convert to int: x\"}",
     "int([1])" ->
-      "{\"__error__\":\"no such overload: int(VList(Vector(VInt(1))))\"}",
+      "{\"__error__\":\"no such overload: int(list)\"}",
     "uint('3')" ->
       "3",
     "uint(2)" ->
       "2",
     "uint(true)" ->
-      "{\"__error__\":\"no such overload: uint(VBool(true))\"}",
+      "{\"__error__\":\"no such overload: uint(bool)\"}",
     "double('1.5')" ->
       "1.5",
     "double(2)" ->
@@ -1201,7 +1201,7 @@ object FunctionTableSpec {
     "double('x')" ->
       "{\"__error__\":\"cannot convert to double: x\"}",
     "double(true)" ->
-      "{\"__error__\":\"no such overload: double(VBool(true))\"}",
+      "{\"__error__\":\"no such overload: double(bool)\"}",
     "string(1)" ->
       "\"1\"",
     "string(b'ab')" ->
@@ -1219,25 +1219,25 @@ object FunctionTableSpec {
     "string(duration('90s'))" ->
       "\"1m30s\"",
     "string([1])" ->
-      "{\"__error__\":\"no such overload: string(VList(Vector(VInt(1))))\"}",
+      "{\"__error__\":\"no such overload: string(list)\"}",
     "bytes('ab')" ->
       "\"YWI=\"",
     "bytes(1)" ->
-      "{\"__error__\":\"no such overload: bytes from VInt(1)\"}",
+      "{\"__error__\":\"no such overload: bytes from int\"}",
     "bool('true')" ->
       "true",
     "bool(1)" ->
-      "{\"__error__\":\"no such overload: bool(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: bool(int)\"}",
     "timestamp('2024-01-02T03:04:05Z')" ->
       "\"2024-01-02T03:04:05Z\"",
     "timestamp(0)" ->
       "\"1970-01-01T00:00:00Z\"",
     "timestamp(true)" ->
-      "{\"__error__\":\"no such overload: timestamp(VBool(true))\"}",
+      "{\"__error__\":\"no such overload: timestamp(bool)\"}",
     "duration('1h')" ->
       "\"3600s\"",
     "duration(1)" ->
-      "{\"__error__\":\"no such overload: duration(VInt(1))\"}",
+      "{\"__error__\":\"no such overload: duration(int)\"}",
     "dyn(1)" ->
       "1",
     "dyn(1, 2)" ->
