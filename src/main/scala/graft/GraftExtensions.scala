@@ -24,96 +24,79 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftFunctions {
-  private val J = Class.forName("graft.expressions.JsonKernel")
-  private val S = Class.forName("graft.expressions.StringKernel")
-  private val T = Class.forName("graft.expressions.TimeKernel")
-  private val C = Class.forName("graft.expressions.CryptoKernel")
-  private val K = Class.forName("graft.expressions.SketchKernel")
-  private val M = Class.forName("graft.expressions.MimeKernel")
-  private val H = Class.forName("graft.expressions.HttpKernel")
-  private val X = Class.forName("graft.expressions.XmlKernel")
-
-  private val Str  = StringType
-  private val Bin  = BinaryType
-  private val ArrS = ArrayType(StringType)
-
-  private def si(cls: Class[_], dt: DataType, method: String,
-      inTypes: Seq[DataType])(exprs: Seq[Expression]): Expression =
-    StaticInvoke(cls, dt, method, exprs.toIndexedSeq, inTypes)
-
   private def cols(f: Seq[Column] => Column): Seq[Expression] => Expression =
     exprs => Shim.resolvedExpression(f(exprs.map(Shim.column)))
 
-  /** name -> expression builder, shared by both registration paths. */
-  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  /** SQL names built from their `graft.functions` Column form, so both
+    * surfaces build the same expression. */
+  private[graft] val fromColumns: Seq[(String, Seq[Expression] => Expression)] = Seq(
     // dynamic-document collections tier
-    "json_collate"      -> si(J, Str, "collate", Seq(Str, Str)) _,
-    "json_drop"         -> si(J, Str, "dropPath", Seq(Str, Str)) _,
-    "json_drop_empty"   -> si(J, Str, "dropEmpty", Seq(Str)) _,
-    "json_flatten_deep" -> si(J, Str, "flattenDeep", Seq(Str)) _,
-    "json_with"         -> si(J, Str, "withAll", Seq(Str, Str)) _,
-    "json_with_update"  -> si(J, Str, "withUpdate", Seq(Str, Str)) _,
-    "json_with_replace" -> si(J, Str, "withReplace", Seq(Str, Str)) _,
-    "json_keys"         -> si(J, Str, "keysSorted", Seq(Str)) _,
-    "json_values"       -> si(J, Str, "valuesSorted", Seq(Str)) _,
-    "json_zip"          -> si(J, Str, "zip", Seq(Str, Str)) _,
-    "json_min"          -> si(J, Str, "minList", Seq(Str)) _,
-    "json_max"          -> si(J, Str, "maxList", Seq(Str)) _,
-    "json_normalize"    -> si(J, Str, "normalize", Seq(Str)) _,
-    "decode_json_stream" -> si(J, Str, "decodeStream", Seq(Str)) _,
-    "json_elements"     -> si(J, ArrS, "elements", Seq(Str)) _,
-    "is_error"          -> si(J, BooleanType, "isError", Seq(Str)) _,
-    "try_weaken"        -> si(J, Str, "tryWeaken", Seq(Str)) _,
-    "try_weaken_labeled" -> si(J, Str, "tryWeakenLabeled", Seq(Str, Str)) _,
+    "json_collate"      -> cols(c => functions.json_collate(c(0), c(1))),
+    "json_drop_empty"   -> cols(c => functions.json_drop_empty(c(0))),
+    "json_flatten_deep" -> cols(c => functions.json_flatten_deep(c(0))),
+    "json_with"         -> cols(c => functions.json_with(c(0), c(1))),
+    "json_with_update"  -> cols(c => functions.json_with_update(c(0), c(1))),
+    "json_with_replace" -> cols(c => functions.json_with_replace(c(0), c(1))),
+    "json_keys"         -> cols(c => functions.json_keys(c(0))),
+    "json_values"       -> cols(c => functions.json_values(c(0))),
+    "json_zip"          -> cols(c => functions.json_zip(c(0), c(1))),
+    "json_min"          -> cols(c => functions.json_min(c(0))),
+    "json_max"          -> cols(c => functions.json_max(c(0))),
+    "json_normalize"    -> cols(c => functions.json_normalize(c(0))),
+    "decode_json_stream" -> cols(c => functions.decode_json_stream(c(0))),
+    "json_elements"     -> cols(c => functions.json_elements(c(0))),
+    "is_error"          -> cols(c => functions.is_error(c(0))),
+    "try_weaken"        -> cols(c => functions.try_(c(0))),
     // strings
-    "count_substr"      -> si(S, LongType, "countSubstr", Seq(Str, Str)) _,
-    "index_str"         -> si(S, LongType, "indexOf", Seq(Str, Str)) _,
-    "last_index_str"    -> si(S, LongType, "lastIndexOf", Seq(Str, Str)) _,
-    "index_any"         -> si(S, LongType, "indexAny", Seq(Str, Str)) _,
-    "last_index_any"    -> si(S, LongType, "lastIndexAny", Seq(Str, Str)) _,
-    "compare_str"       -> si(S, IntegerType, "compareStr", Seq(Str, Str)) _,
-    "contains_any"      -> si(S, BooleanType, "containsAny", Seq(Str, Str)) _,
-    "equal_fold"        -> si(S, BooleanType, "equalFold", Seq(Str, Str)) _,
-    "substring_runes"   -> si(S, Str, "substrRunes", Seq(Str, LongType, LongType)) _,
-    "to_title"          -> si(S, Str, "toTitle", Seq(Str)) _,
-    "to_valid_utf8"     -> si(S, Str, "toValidUTF8", Seq(Bin, Str)) _,
-    "trim_cutset"       -> si(S, Str, "trimCutset", Seq(Str, Str)) _,
-    "trim_prefix"       -> si(S, Str, "trimPrefix", Seq(Str, Str)) _,
-    "trim_suffix"       -> si(S, Str, "trimSuffix", Seq(Str, Str)) _,
-    "fields_str"        -> si(S, ArrS, "fields", Seq(Str)) _,
-    "split_n"           -> si(S, ArrS, "splitN", Seq(Str, Str, LongType)) _,
-    "split_after"       -> si(S, ArrS, "splitAfter", Seq(Str, Str)) _,
-    "split_after_n"     -> si(S, ArrS, "splitAfterN", Seq(Str, Str, LongType)) _,
-    "replace_n"         -> si(S, Str, "replaceN", Seq(Str, Str, Str, LongType)) _,
-    "find_all_submatch" -> si(S, ArrayType(ArrS), "findAllSubmatch", Seq(Str, Str)) _,
-    // time (named Go layouts resolve inside the kernel)
-    "format_time_go"    -> si(T, Str, "formatTime", Seq(TimestampType, Str)) _,
-    "parse_time_go"     -> si(T, TimestampType, "parseTime", Seq(Str, Str)) _,
-    "duration_go"       -> si(T, LongType, "parseDuration", Seq(Str)) _,
-    "format_duration_go" -> si(T, Str, "formatDuration", Seq(LongType)) _,
+    "count_substr"      -> cols(c => functions.count_substr(c(0), c(1))),
+    "index_str"         -> cols(c => functions.index_str(c(0), c(1))),
+    "last_index_str"    -> cols(c => functions.last_index(c(0), c(1))),
+    "index_any"         -> cols(c => functions.index_any(c(0), c(1))),
+    "last_index_any"    -> cols(c => functions.last_index_any(c(0), c(1))),
+    "compare_str"       -> cols(c => functions.compare_str(c(0), c(1))),
+    "contains_any"      -> cols(c => functions.contains_any(c(0), c(1))),
+    "equal_fold"        -> cols(c => functions.equal_fold(c(0), c(1))),
+    "substring_runes"   -> cols(c => functions.substring_runes(c(0), c(1), c(2))),
+    "to_title"          -> cols(c => functions.to_title(c(0))),
+    "to_valid_utf8"     -> cols(c => functions.to_valid_utf8(c(0), c(1))),
+    "trim_cutset"       -> cols(c => functions.trim_cutset(c(0), c(1))),
+    "trim_prefix"       -> cols(c => functions.trim_prefix(c(0), c(1))),
+    "trim_suffix"       -> cols(c => functions.trim_suffix(c(0), c(1))),
+    "fields_str"        -> cols(c => functions.fields_str(c(0))),
+    "split_n"           -> cols(c => functions.split_n(c(0), c(1), c(2))),
+    "split_after"       -> cols(c => functions.split_after(c(0), c(1))),
+    "split_after_n"     -> cols(c => functions.split_after_n(c(0), c(1), c(2))),
+    "replace_n"         -> cols(c => functions.replace_n(c(0), c(1), c(2), c(3))),
+    // time
+    "duration_go"       -> cols(c => functions.duration_go(c(0))),
+    "format_duration_go" -> cols(c => functions.format_duration_go(c(0))),
     // crypto
-    "md5_bytes"         -> si(C, Bin, "md5Bytes", Seq(Bin)) _,
-    "sha1_bytes"        -> si(C, Bin, "sha1Bytes", Seq(Bin)) _,
-    "sha256_bytes"      -> si(C, Bin, "sha256Bytes", Seq(Bin)) _,
-    "hmac_bytes"        -> si(C, Bin, "hmac", Seq(Bin, Str, Bin)) _,
-    "base64_raw"        -> si(C, Str, "base64Raw", Seq(Bin)) _,
-    "hex_lower"         -> si(C, Str, "hexEncode", Seq(Bin)) _,
+    "md5_bytes"         -> cols(c => functions.md5_bytes(c(0))),
+    "sha1_bytes"        -> cols(c => functions.sha1_bytes(c(0))),
+    "sha256_bytes"      -> cols(c => functions.sha256_bytes(c(0))),
+    "base64_std"        -> cols(c => functions.base64_std(c(0))),
+    "base64_raw"        -> cols(c => functions.base64_raw(c(0))),
+    "base64_decode"     -> cols(c => functions.base64_decode(c(0))),
+    "hex_lower"         -> cols(c => functions.hex_lower(c(0))),
     // sketches / pipeline
-    "simhash64"         -> si(K, LongType, "simhash64", Seq(ArrS)) _,
-    "morton16"          -> si(K, LongType, "morton16", Seq(LongType, LongType)) _,
-    "rolling_fingerprint" -> si(K, LongType, "rollingFingerprint", Seq(ArrS)) _,
-    "lang_id"           -> si(K, Str, "langId", Seq(ArrS)) _,
+    "simhash64"         -> cols(c => functions.simhash64(c(0))),
+    "morton16"          -> cols(c => functions.morton16(c(0), c(1))),
+    "rolling_fingerprint" -> cols(c => functions.rolling_fingerprint(c(0))),
+    "lang_id"           -> cols(c => functions.lang_id(c(0))),
     // formats
-    "gunzip"            -> si(M, Bin, "gunzip", Seq(Bin)) _,
-    "ndjson_docs"       -> si(M, ArrS, "ndjson", Seq(Bin)) _,
-    "rot13"             -> si(M, Bin, "rot13", Seq(Bin)) _,
-    "csv_header"        -> si(M, ArrayType(MapType(Str, Str)), "csvHeader", Seq(Bin)) _,
-    "csv_no_header"     -> si(M, ArrayType(ArrS), "csvNoHeader", Seq(Bin)) _,
-    // crypto additions
-    "base64_std"        -> si(C, Str, "base64Std", Seq(Bin)) _,
-    "base64_decode"     -> si(C, Bin, "base64Decode", Seq(Str)) _,
-    // variant entry points (v_parse = builtin parse_json), built from
-    // the graft.functions Column forms so both surfaces stay in step
+    "gunzip"            -> cols(c => functions.gunzip(c(0))),
+    "ndjson_docs"       -> cols(c => functions.ndjson_docs(c(0))),
+    "rot13"             -> cols(c => functions.rot13(c(0))),
+    "csv_header"        -> cols(c => functions.csv_header(c(0))),
+    "csv_no_header"     -> cols(c => functions.csv_no_header(c(0))),
+    "decode_xml"        -> cols(c => functions.decode_xml(c(0))),
+    "decode_xml_hinted" -> cols(c => functions.decode_xml(c(0), c(1))),
+    // url/query
+    "parse_url"         -> cols(c => functions.parse_url(c(0))),
+    "format_url"        -> cols(c => functions.format_url(c(0))),
+    "parse_query"       -> cols(c => functions.parse_query(c(0))),
+    "format_query"      -> cols(c => functions.format_query(c(0))),
+    // variant entry points (v_parse = builtin parse_json)
     "v_render"          -> cols(c => functions.v_render(c(0))),
     "v_get"             -> cols(c => functions.v_get(c(0), c(1))),
     "v_has"             -> cols(c => functions.v_has(c(0), c(1))),
@@ -124,14 +107,29 @@ object GraftFunctions {
     "v_keys"            -> cols(c => functions.v_keys(c(0))),
     "v_values"          -> cols(c => functions.v_values(c(0))),
     "v_size"            -> cols(c => functions.v_size(c(0))),
-    "v_drop"            -> cols(c => functions.v_drop(c(0), c(1))),
-    "decode_xml"        -> si(X, Str, "decodeXml", Seq(Str)) _,
-    "decode_xml_hinted" -> si(X, Str, "decodeXmlHinted", Seq(Str, Str)) _,
-    // url/query
-    "parse_url"         -> si(H, graft.expressions.HttpKernel.urlStructType, "parseUrl", Seq(Str)) _,
-    "format_url"        -> si(H, Str, "formatUrl", Seq(graft.expressions.HttpKernel.urlStructType)) _,
-    "parse_query"       -> si(H, MapType(Str, ArrS), "parseQuery", Seq(Str)) _,
-    "format_query"      -> si(H, Str, "formatQuery", Seq(MapType(Str, ArrS))) _,
+    "v_drop"            -> cols(c => functions.v_drop(c(0), c(1))))
+
+  private val J = Class.forName("graft.expressions.JsonKernel")
+  private val S = Class.forName("graft.expressions.StringKernel")
+  private val T = Class.forName("graft.expressions.TimeKernel")
+  private val C = Class.forName("graft.expressions.CryptoKernel")
+
+  private def si(cls: Class[_], dt: DataType, method: String,
+      inTypes: Seq[DataType])(exprs: Seq[Expression]): Expression =
+    StaticInvoke(cls, dt, method, exprs.toIndexedSeq, inTypes)
+
+  /** name -> expression builder, shared by both registration paths. The
+    * names whose Column form takes a Scala String (a path, label, regexp
+    * name, Go layout or hash name) where SQL passes a column invoke
+    * their kernel directly. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = fromColumns ++ Seq(
+    "json_drop"         -> si(J, StringType, "dropPath", Seq(StringType, StringType)) _,
+    "try_weaken_labeled" -> si(J, StringType, "tryWeakenLabeled", Seq(StringType, StringType)) _,
+    "find_all_submatch" -> si(S, ArrayType(ArrayType(StringType)), "findAllSubmatch",
+      Seq(StringType, StringType)) _,
+    "format_time_go"    -> si(T, StringType, "formatTime", Seq(TimestampType, StringType)) _,
+    "parse_time_go"     -> si(T, TimestampType, "parseTime", Seq(StringType, StringType)) _,
+    "hmac_bytes"        -> si(C, BinaryType, "hmac", Seq(BinaryType, StringType, BinaryType)) _,
     // the CEL front-end itself: cel('<program>', state_json_col) — the
     // program must be a literal (compiled once at plan time), run by the
     // CEL interpreter per row
