@@ -109,14 +109,16 @@ object Checkpoints {
     if (active.remove(registered.head)) registered.head.unpersist(blocking = false)
   }
 
-  /** Unpersist every checkpoint registered since the last drain. The
-    * harness hook: a query's checkpoints are dead once its terminal
-    * action returns, so Bench (per timed sample) and Verify (per
-    * query) drain here — blocks never accumulate across a suite. */
+  /** Unpersist every checkpoint registered since the last drain, and
+    * return only once their blocks are removed. The harness hook: a
+    * query's checkpoints are dead once its terminal action returns, so
+    * Bench (per timed sample) and Verify (per query) drain here, outside
+    * any timer — blocks never accumulate across a suite, and no block
+    * removal overlaps the next sample or dump. */
   def releaseAll(): Unit = {
     val it = active.iterator()
     while (it.hasNext) {
-      val r = it.next(); it.remove(); r.unpersist(blocking = false)
+      val r = it.next(); it.remove(); r.unpersist(blocking = true)
     }
   }
 }

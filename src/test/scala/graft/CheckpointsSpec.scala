@@ -95,6 +95,22 @@ class CheckpointsSpec extends SparkSpec {
     assert(!anyBlockLeft, "RDD blocks survived releaseAll")
   }
 
+  test("releaseAll returns only after every released block is removed") {
+    Checkpoints.releaseAll()
+    val before = cachedRddIds
+    val dfs = (0 until 3).map(k => Checkpoints.cp(spark.range(0, 2000).toDF("x")
+      .withColumn("k", col("x") + k)).repartition(4))
+    assert(dfs.map(_.count()).sum == 6000)
+    val ids = cachedRddIds -- before
+    assert(ids.nonEmpty)
+    Checkpoints.releaseAll()
+    // no polling: the blocks must already be gone when releaseAll returns
+    val left = org.apache.spark.SparkEnv.get.blockManager.master
+      .getMatchingBlockIds(_.isInstanceOf[RDDBlockId], askStorageEndpoints = true)
+      .collect { case RDDBlockId(r, _) if ids(r) => r }
+    assert(left.isEmpty, s"blocks of released RDDs ${left.distinct} survived releaseAll")
+  }
+
   test("release of a plan with two checkpoints fails at the call and frees nothing") {
     Checkpoints.releaseAll()
     val before = cachedRddIds
