@@ -221,14 +221,39 @@ object Eval {
   /** [[parseV]] of the UTF-8 text in `b(off until off + len)`, read
     * straight from the bytes: no String is built for a well-formed
     * document. Jackson's byte parser reads the bytes only where it
-    * provably agrees with `parseV(new String(b, off, len, UTF_8))`
+    * provably agrees with `parseV(utf8Text(b, off, len))`
     * ([[byteParsable]]) and only when it reads exactly one value; every
     * other input — an error, trailing content, a BOM, ill-formed UTF-8 —
-    * takes the decoded text, so values and error texts are the String
-    * path's. */
+    * takes the text Go decodes the bytes to ([[utf8Text]]), so values
+    * and error texts are the String path's. */
   def parseV(b: Array[Byte], off: Int, len: Int): V = {
     val v = if (byteParsable(b, off, len)) parseBytes(b, off, len) else null
-    if (v ne null) v else parseV(new String(b, off, len, StandardCharsets.UTF_8))
+    if (v ne null) v else parseV(utf8Text(b, off, len))
+  }
+
+  /** UTF-8 bytes to text as Go decodes them: a byte that does not begin
+    * a well-formed sequence becomes one U+FFFD (utf8.DecodeRune's width
+    * 1, which encoding/json's string unquoting follows), so `ED A0 80`
+    * gives three and a truncated `E2 82` two, where the JDK decoder
+    * gives one for each maximal ill-formed subpart. Well-formed bytes
+    * decode as the JDK decodes them. */
+  def utf8Text(b: Array[Byte], off: Int, len: Int): String = {
+    val end = off + len
+    var out: java.lang.StringBuilder = null
+    var run = off // start of the well-formed run not yet copied
+    var i = off
+    while (i < end) {
+      val n = if (b(i) >= 0) 1 else utf8Length(b, i, end)
+      if (n > 0) i += n
+      else {
+        if (out == null) out = new java.lang.StringBuilder(len)
+        out.append(new String(b, run, i - run, StandardCharsets.UTF_8)).append('\uFFFD')
+        i += 1
+        run = i
+      }
+    }
+    if (out == null) new String(b, off, len, StandardCharsets.UTF_8)
+    else out.append(new String(b, run, end - run, StandardCharsets.UTF_8)).toString
   }
 
   /** The one value in the bytes, or null when the byte parser fails or
@@ -253,7 +278,7 @@ object Eval {
 
   /** True when Jackson's UTF-8 byte parser reads `b(off until off+len)`
     * as its char parser reads the decoded text. Three inputs part them:
-    * ill-formed UTF-8, which the decoder turns into U+FFFD (as Go's
+    * ill-formed UTF-8, which [[utf8Text]] turns into U+FFFD (as Go's
     * json.Unmarshal does) while the byte parser fails or decodes it
     * leniently (overlong forms, encoded surrogates); a leading BOM, which
     * the byte parser skips and Go rejects; and a NUL among the first four
@@ -280,7 +305,8 @@ object Eval {
   }
 
   /** Length of the well-formed UTF-8 sequence led by the non-ASCII byte
-    * at `i` (Unicode Table 3-7, which the JDK decoder follows), or 0. */
+    * at `i` (Unicode Table 3-7, which the JDK decoder and Go's
+    * utf8.DecodeRune follow), or 0. */
   private def utf8Length(b: Array[Byte], i: Int, end: Int): Int = {
     def cont(j: Int, lo: Int = 0x80, hi: Int = 0xBF): Boolean =
       j < end && (b(j) & 0xFF) >= lo && (b(j) & 0xFF) <= hi
@@ -314,7 +340,7 @@ object Eval {
         val p = jsonF.createParser(b)
         try readStream(p) finally p.close()
       } catch { case NonFatal(_) => null }
-    if (v ne null) v else parseStreamV(new String(b, StandardCharsets.UTF_8))
+    if (v ne null) v else parseStreamV(utf8Text(b, 0, b.length))
   }
 
   private def readStream(p: JsonParser): V = {

@@ -235,7 +235,7 @@ object MimeKernel {
       if ((start until end).exists(i => (data(i) & 0xFF) > ' ')) {
         docs += (Eval.parseV(data, start, end - start) match {
           case VErr(m) =>
-            val line = new String(data, start, end - start, StandardCharsets.UTF_8)
+            val line = Eval.utf8Text(data, start, end - start)
             // Go's encoding/json message for a truncated document
             if (m.contains("end-of-input")) VErr(s"unexpected end of JSON input: $line")
             else VErr(s"$m: $line")

@@ -11,9 +11,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 /** The byte-native decoder against the text decoder it replaces on the
   * per-row paths. A document arrives as UTF-8 bytes; its reference is
   * the Jackson-tree decode of the text those bytes decode to
-  * (`new String(b, UTF_8)`, which turns ill-formed UTF-8 into U+FFFD as
-  * Go's json.Unmarshal does), and for a document that fails, the text
-  * decoder's error. Every path must give exactly that: the `Cel(...)`
+  * (`Eval.utf8Text`, which turns each ill-formed byte into one U+FFFD
+  * as Go's json.Unmarshal does), and for a document that fails, the
+  * text decoder's error. Every path must give exactly that: the `Cel(...)`
   * column, `Cel.evalOnce`, a json_* kernel and `decode_json` on bytes.
   *
   * The generated inputs include the bytes a plain swap to Jackson's
@@ -54,7 +54,7 @@ class DecoderParitySpec extends SparkSpec {
         .map(_.map { case (k, v) => s"$k:$v" }.mkString("{", " , ", "}")))
   }
 
-  /** Byte sequences the JDK decoder replaces with U+FFFD: a lone
+  /** Byte sequences that decode to U+FFFD: a lone
     * continuation byte, overlong forms, an encoded surrogate, a code
     * point above U+10FFFF, a truncated sequence, bytes never used. */
   private val illFormed: Seq[Array[Int]] = Seq(Array(0x80), Array(0xc0, 0x80), Array(0xc1, 0xbf),
@@ -63,6 +63,7 @@ class DecoderParitySpec extends SparkSpec {
     Array(0xe2, 0x82, 0x41), Array(0xff), Array(0xfe))
 
   private def bytes(s: String): Array[Byte] = s.getBytes(UTF_8)
+  private def text(b: Array[Byte]): String = Eval.utf8Text(b, 0, b.length)
 
   /** A document's bytes, often altered at the byte level. */
   private val genBytes: Gen[Array[Byte]] = genDoc(3).flatMap { d =>
@@ -88,10 +89,10 @@ class DecoderParitySpec extends SparkSpec {
   /** The parent's result: the tree decode of the decoded text, or the
     * text decoder's error. */
   private def reference(b: Array[Byte]): V = {
-    val text = new String(b, UTF_8)
-    Eval.stateLeafV(text) match {
+    val t = text(b)
+    Eval.stateLeafV(t) match {
       case e: VErr => e
-      case _ => Eval.fromJson(JsonAlgebra.parse(text))
+      case _ => Eval.fromJson(JsonAlgebra.parse(t))
     }
   }
 
@@ -106,7 +107,7 @@ class DecoderParitySpec extends SparkSpec {
       assert(Eval.stateLeafV(d, 0, d.length) == ref, s"bytes: $shown")
       // an offset view of a larger array, as a Spark row holds it
       val framed = bytes("xx") ++ d ++ bytes("yy")
-      assert(Eval.parseV(framed, 2, d.length) == Eval.parseV(new String(d, UTF_8)), s"framed: $shown")
+      assert(Eval.parseV(framed, 2, d.length) == Eval.parseV(text(d)), s"framed: $shown")
       ref match {
         case e: VErr => assert(Eval.parseV(d, 0, d.length) == e)
         case _ =>
@@ -123,7 +124,7 @@ class DecoderParitySpec extends SparkSpec {
       val shown = d.map(b => f"${b & 0xff}%02x").mkString(" ")
       assert(viaCel(i) == want, s"Cel column on $shown")
       assert(viaKernel(i) == want, s"json_normalize on $shown")
-      assert(Cel.evalOnce("state", new String(d, UTF_8)) == want, s"evalOnce on $shown")
+      assert(Cel.evalOnce("state", text(d)) == want, s"evalOnce on $shown")
       // decode_json on bytes: the program receives the document as bytes
       val b64 = java.util.Base64.getEncoder.encodeToString(d)
       assert(Cel.evalOnce("state.base64_decode().decode_json()", s""""$b64"""") == want,
@@ -131,23 +132,33 @@ class DecoderParitySpec extends SparkSpec {
     }
   }
 
+  test("ill-formed UTF-8 decodes to one U+FFFD per byte that begins no sequence, as in Go") {
+    def t(xs: Int*) = text(xs.map(_.toByte).toArray)
+    assert(t(0xed, 0xa0, 0x80) == "\uFFFD\uFFFD\uFFFD")
+    assert(t(0xe2, 0x82) == "\uFFFD\uFFFD")
+    assert(t(0x61, 0xe2, 0x82, 0x41, 0xe2, 0x82, 0xac) == "a\uFFFD\uFFFDA\u20AC")
+    assert(t(0xf0, 0x9f, 0x98, 0x80, 0xff) == "\uD83D\uDE00\uFFFD")
+    // an offset view decodes only its own bytes
+    assert(Eval.utf8Text(Array(0x80, 0x62, 0x80).map(_.toByte), 1, 1) == "b")
+  }
+
   test("the inputs a plain byte-parser swap reads differently keep the text path's result") {
     def dec(b: Array[Byte]) = Eval.parseV(b, 0, b.length)
     val bom = Array(0xef, 0xbb, 0xbf).map(_.toByte) ++ bytes("""{"a":1}""")
     assert(dec(bom).isInstanceOf[VErr], "a leading BOM is an error, as in Go")
-    assert(dec(bom) == Eval.parseV(new String(bom, UTF_8)))
-    // ill-formed UTF-8 inside a string decodes to U+FFFD, as the text
-    // path decodes it (the JDK replaces a maximal ill-formed subpart once)
+    assert(dec(bom) == Eval.parseV(text(bom)))
+    // ill-formed UTF-8 inside a string decodes as Go decodes it: one
+    // U+FFFD per byte that does not begin a well-formed sequence
     assert(dec(bytes("\"a") ++ Array(0xc0, 0x80).map(_.toByte) ++ bytes("b\"")) ==
       VString("a\uFFFD\uFFFDb"))
     assert(dec(bytes("[\"") ++ Array(0xed, 0xa0, 0x80).map(_.toByte) ++ bytes("\"]")) ==
-      VList(Vector(VString("\uFFFD"))))
+      VList(Vector(VString("\uFFFD\uFFFD\uFFFD"))))
     val nul = Array[Byte](0, '1')
-    assert(dec(nul) == Eval.parseV(new String(nul, UTF_8)))
+    assert(dec(nul) == Eval.parseV(text(nul)))
     // NDJSON lines read as bytes, ill-formed bytes at a line's end included
     val nd = bytes("{\"a\":\"") ++ Array(0xe2, 0x82).map(_.toByte) ++ bytes("\"}\n\n[1]\n")
     assert(Cel.evalOnce("state.base64_decode().mime('application/x-ndjson')",
       "\"" + java.util.Base64.getEncoder.encodeToString(nd) + "\"") ==
-      """[{"a":"\uFFFD"},[1]]""")
+      """[{"a":"\uFFFD\uFFFD"},[1]]""")
   }
 }
