@@ -5,7 +5,7 @@ import graft.values.JsonAlgebra
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.charset.StandardCharsets
-import scala.collection.immutable.TreeMap
+import scala.collection.immutable.{ArraySeq, TreeMap}
 import scala.jdk.CollectionConverters._
 
 /** The CEL function table: CEL's standard functions plus the reference's
@@ -101,10 +101,13 @@ private[cel] object Functions {
       if (t.isInstanceOf[VErr]) t
       else {
         val f = table.getOrElse(fn, null)
-        val vs = Vector.newBuilder[V]
-        vs += t
-        args.foreach(a => vs += Eval.eval(a, env))
-        invoke(fn, if (f != null && f.member) f else null, vs.result(), env)
+        // an exact-size AnyRef array, which the Vector wraps as it is
+        val vs = new Array[AnyRef](args.length + 1)
+        vs(0) = t
+        var i = 0
+        while (i < args.length) { vs(i + 1) = Eval.eval(args(i), env); i += 1 }
+        invoke(fn, if (f != null && f.member) f else null,
+          Vector.from(ArraySeq.unsafeWrapArray(vs)).asInstanceOf[Vector[V]], env)
       }
   }
 
