@@ -5,7 +5,7 @@ import scala.util.control.NoStackTrace
 /** The collections library of the reference (lib/collections.go) over
   * CEL values: the one implementation of collate, drop, drop_empty,
   * flatten, with/with_update/with_replace, zip, keys, values, min and
-  * max. CEL programs reach it through `Functions.method2`, and the
+  * max. CEL programs reach it through the `Functions` table, and the
   * json_* / v_* Column functions through [[graft.expressions.JsonKernel]]
   * (parse to V, one op, [[Eval.renderUtf8]]). No operator converts its
   * document to another value type, so every CEL value (bytes,

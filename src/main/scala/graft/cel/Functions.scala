@@ -42,23 +42,23 @@ private[cel] object Functions {
   private val Pure = true
   private val Impure = false
 
-  private def fn(name: String, member: Boolean, pure: Boolean, arities: Seq[Int])
+  private def declare(name: String, member: Boolean, pure: Boolean, arities: Seq[Int])
       (body: (Env, Vector[V]) => V): (String, Fn) =
     name -> new Fn(member, arities.foldLeft(0)((m, n) => m | (1 << n)), pure, body)
 
   // member functions by the number of values they take, target included
   private def m1(name: String, pure: Boolean)(f: V => V) =
-    fn(name, member = true, pure, Seq(1))((_, vs) => f(vs(0)))
+    declare(name, member = true, pure, Seq(1))((_, vs) => f(vs(0)))
   private def m2(name: String, pure: Boolean)(f: (V, V) => V) =
-    fn(name, member = true, pure, Seq(2))((_, vs) => f(vs(0), vs(1)))
+    declare(name, member = true, pure, Seq(2))((_, vs) => f(vs(0), vs(1)))
   private def m3(name: String, pure: Boolean)(f: (V, V, V) => V) =
-    fn(name, member = true, pure, Seq(3))((_, vs) => f(vs(0), vs(1), vs(2)))
+    declare(name, member = true, pure, Seq(3))((_, vs) => f(vs(0), vs(1), vs(2)))
   private def mv(name: String, pure: Boolean, arities: Int*)(body: (Env, Vector[V]) => V) =
-    fn(name, member = true, pure, arities)(body)
+    declare(name, member = true, pure, arities)(body)
   private def g1(name: String, pure: Boolean)(f: V => V) =
-    fn(name, member = false, pure, Seq(1))((_, vs) => f(vs(0)))
+    declare(name, member = false, pure, Seq(1))((_, vs) => f(vs(0)))
   private def gv(name: String, pure: Boolean, arities: Int*)(body: (Env, Vector[V]) => V) =
-    fn(name, member = false, pure, arities)(body)
+    declare(name, member = false, pure, arities)(body)
 
   /** Every function, by name. Declared library by library (one Go file
     * each under the reference's lib/), each group its own method so no

@@ -2,7 +2,7 @@ package graft
 
 import graft.functions._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{col, concat, hex => hexOf, length, lit, split, upper}
+import org.apache.spark.sql.functions.{col, concat, hex => hexOf, length, lit, split, unhex, upper}
 
 /** The SQL registrations (GraftFunctions.builders) and the Column API
   * (graft.functions): this spec runs every registered json_* / v_*
@@ -104,7 +104,7 @@ class SqlRegistrationSpec extends SparkSpec {
     ("rolling_fingerprint", "rolling_fingerprint(split(doc, ' '))",
       rolling_fingerprint(split(d, " "))),
     ("lang_id", "lang_id(split(doc, ' '))", lang_id(split(d, " "))),
-    ("gunzip", s"hex(gunzip(unhex('$gz')))", hexOf(gunzip(org.apache.spark.sql.functions.unhex(lit(gz))))),
+    ("gunzip", s"hex(gunzip(unhex('$gz')))", hexOf(gunzip(unhex(lit(gz))))),
     ("ndjson_docs", "ndjson_docs(cast(doc as binary))", ndjson_docs(bin)),
     ("rot13", "hex(rot13(cast(doc as binary)))", hexOf(rot13(bin))),
     ("csv_header", "csv_header(cast('a,b\\n1,2' as binary))", csv_header(lit("a,b\n1,2").cast("binary"))),
